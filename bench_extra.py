@@ -8,7 +8,6 @@ stages, without touching the driver contract.
 Usage:
   python bench_extra.py time q1 [q2 ...]      # best-of-N noop-sink timing
   python bench_extra.py explain LABEL q1 ...  # write plans/r08/<q>_<LABEL>.txt
-  python bench_extra.py jobs q1               # per-job wall times (setJobDescription)
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 (default 32), BENCH_EXTRA_REPS (default 3). Uses the same spread layout

@@ -18,4 +18,8 @@ No code is copied from the reference; every operator is re-derived from
 its observable contract (see SURVEY.md and output.json golden fixture).
 """
 
+from . import worker_imports as _worker_imports
+
 __version__ = "0.1.0"
+
+_worker_imports.install()

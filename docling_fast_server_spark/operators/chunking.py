@@ -67,6 +67,10 @@ def _tok_sql(col: str, tokenizer: str) -> str:
     if tokenizer == "bpe":
         from .textstats import BPE_RE
 
+        # Spark's string-literal parsing would rewrite these, silently
+        # diverging from the F.lit pattern _tok_arr passes
+        if "\\" in BPE_RE or "'" in BPE_RE:
+            raise ValueError(f"BPE_RE cannot be embedded in a SQL literal: {BPE_RE!r}")
         return f"regexp_extract_all({col}, '{BPE_RE}', 0)"
     raise ValueError(f"unknown tokenizer {tokenizer!r}")
 

@@ -189,7 +189,9 @@ import weakref as _weakref
 
 # unique suffixes for the session-scoped temp views the SQL-issued
 # pipeline stages register (names never reused -> no cross-thread
-# clobbering; a view is a name->plan catalog entry, effectively free)
+# clobbering). Each view pins its analyzed plan in the session catalog,
+# so clear_caches drops them: never earlier, because dropTempView also
+# uncaches the view's plan while queries may still read it.
 _VIEW_IDS = _itertools.count()
 
 _CACHES_LOCK = _threading.Lock()
@@ -204,6 +206,10 @@ _CACHES_LOCK = _threading.Lock()
 # session object). Sessions stopped properly are still swept eagerly by
 # _prune_stopped on every registry access.
 _LIVE_CACHES: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+# session -> names of the temp views registered by _register_view. Names
+# only, so the weak keys still collect; an abandoned session's views go
+# with it.
+_LIVE_VIEWS: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
 
 
 def _unpersist_handles(handles: list) -> int:
@@ -221,15 +227,16 @@ def _unpersist_handles(handles: list) -> int:
 
 def _prune_stopped() -> None:
     # caller holds _CACHES_LOCK
-    for sess in list(_LIVE_CACHES):
-        try:
-            stopped = sess._sc._jsc is None
-        except Exception:
-            stopped = True
-        if stopped:
-            # a stopped session's JVM side released its blocks already;
-            # dropping the handles is all the cleanup that remains
-            _LIVE_CACHES.pop(sess, None)
+    for registry in (_LIVE_CACHES, _LIVE_VIEWS):
+        for sess in list(registry):
+            try:
+                stopped = sess._sc._jsc is None
+            except Exception:
+                stopped = True
+            if stopped:
+                # a stopped session's JVM side released its blocks and
+                # views already; dropping the entry is all that remains
+                registry.pop(sess, None)
 
 
 def _register_handle(sess, handle) -> None:
@@ -258,25 +265,40 @@ def _register_cache(df: DataFrame) -> DataFrame:
     return df
 
 
+def _register_view(df: DataFrame, name: str) -> None:
+    df.createOrReplaceTempView(name)
+    with _CACHES_LOCK:
+        _LIVE_VIEWS.setdefault(df.sparkSession, []).append(name)
+
+
 def clear_caches(spark=None) -> int:
     """Unpersist every intermediate cached by dedup queries since the
-    last call — for ``spark``'s session only, or for every live session
-    when called with no argument (the single-session CLI/bench shape).
-    Returns the number of caches released."""
+    last call, and drop the temp views they registered — for ``spark``'s
+    session only, or for every live session when called with no argument
+    (the single-session CLI/bench shape). Returns the number of caches
+    released."""
     with _CACHES_LOCK:
         _prune_stopped()
         if spark is None:
             lists = [_LIVE_CACHES[s] for s in list(_LIVE_CACHES)]
+            views = [(s, _LIVE_VIEWS.pop(s)) for s in list(_LIVE_VIEWS)]
         else:
             found = _LIVE_CACHES.get(spark)
             lists = [found] if found is not None else []
+            names = _LIVE_VIEWS.pop(spark, None)
+            views = [(spark, names)] if names else []
         # drain in place: the per-session finalizer captured these exact
         # list objects, so they must stay the registry's live values
         drained: list = []
         for lst in lists:
             drained.extend(lst)
             lst.clear()
-    return _unpersist_handles(drained)
+    released = _unpersist_handles(drained)
+    for sess, names in views:
+        catalog = sess.catalog  # a py4j round trip per access
+        for name in names:
+            catalog.dropTempView(name)
+    return released
 
 
 def mutated_corpus(spark, sf_dir) -> DataFrame:
@@ -767,7 +789,7 @@ def _minhash_stages(corpus: DataFrame, bucket_cap: int):
             "coalesce(c_size, CAST(1 AS BIGINT)) AS csize",
         )
     )
-    tagged.createOrReplaceTempView(f"{tag}_tagged")
+    _register_view(tagged, f"{tag}_tagged")
     rep_sig = sess.sql(f"SELECT * FROM {tag}_tagged WHERE doc_id = rep")
     bands_sql = f"""
         SELECT doc_id, bk.band AS band, bk.key AS key
@@ -856,9 +878,9 @@ def _minhash_pairs_impl(
     # expansion as ONE sql statement over views of the cached frames
     sess = corpus.sparkSession
     tag = f"__mhp{next(_VIEW_IDS)}"
-    hsdf.createOrReplaceTempView(f"{tag}_hs")
-    tagged.createOrReplaceTempView(f"{tag}_tagged")
-    cand.createOrReplaceTempView(f"{tag}_cand")
+    _register_view(hsdf, f"{tag}_hs")
+    _register_view(tagged, f"{tag}_tagged")
+    _register_view(cand, f"{tag}_cand")
     pairs = sess.sql(f"""
         WITH ver AS (
             SELECT doc_a, doc_b, {_JACCARD_EXPR}

@@ -1,6 +1,7 @@
 """HybridChunker fidelity contracts (pdf_processor.py:44-69): heading
 context propagation, oversize-span splitting, whole-doc fallback."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from docling_fast_server_spark.operators.chunking import chunk_spans
@@ -395,3 +396,16 @@ def test_hof_expr_matches_column_reference(spark, sf_dir):
         assert any(r[0] == "doc-empty" for r in got)
     base.unpersist()  # shared-session hygiene: test_escaping asserts
     # zero persistent RDDs survive clear_caches
+
+
+def test_tok_sql_rejects_pattern_it_cannot_embed(monkeypatch):
+    """A backslash or quote in BPE_RE would be rewritten by Spark's SQL
+    string-literal parsing but not by the F.lit route."""
+    from docling_fast_server_spark.operators import chunking as C
+    from docling_fast_server_spark.operators import textstats
+
+    assert "regexp_extract_all" in C._tok_sql("t", "bpe")
+    for bad in (r"\w+|[^\w ]", "[A-Za-z']+"):
+        monkeypatch.setattr(textstats, "BPE_RE", bad)
+        with pytest.raises(ValueError, match="SQL literal"):
+            C._tok_sql("t", "bpe")

@@ -124,6 +124,20 @@ def test_dedup_clear_caches_releases_blocks(spark, sf_dir):
     assert dedup.clear_caches() == 0  # idempotent
 
 
+def test_dedup_clear_caches_drops_temp_views(spark, sf_dir):
+    """Each minhash build registers uniquely named temp views; a
+    long-lived session that builds many must not accumulate them."""
+    from docling_fast_server_spark.operators import dedup
+
+    corpus = dedup.mutated_corpus(spark, sf_dir)
+    n_tables = len(spark.catalog.listTables())
+    for _ in range(20):
+        dedup.minhash_pairs(corpus)
+        assert len(spark.catalog.listTables()) > n_tables
+        dedup.clear_caches(spark)
+        assert len(spark.catalog.listTables()) == n_tables
+
+
 def test_dedup_cache_registry_is_session_scoped(spark, sf_dir):
     """clear_caches(other_session) must not release THIS session's
     in-flight caches (ADVICE r04: the registry was a process-global

@@ -1,0 +1,106 @@
+"""The worker import guard: unchanged zip archives are not re-read on
+``importlib.invalidate_caches()``, changed ones are, and only Spark Python
+workers get the guard."""
+
+import importlib
+import sys
+import zipfile
+import zipimport
+
+import pytest
+
+from docling_fast_server_spark import worker_imports
+
+needs_eager_zipimport = pytest.mark.skipif(
+    sys.version_info >= (3, 12), reason="zipimport re-reads lazily from Python 3.12"
+)
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+
+
+@needs_eager_zipimport
+def test_unchanged_archive_not_reread_changed_one_is(tmp_path, monkeypatch):
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"dfss_zmod_a": "X = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    for name in ("dfss_zmod_a", "dfss_zmod_b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module("dfss_zmod_a").X == 1
+
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counting_read(path):
+        reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    monkeypatch.setattr(
+        zipimport.zipimporter,
+        "invalidate_caches",
+        worker_imports.skip_unchanged(zipimport.zipimporter.invalidate_caches),
+    )
+
+    importlib.invalidate_caches()  # first call reads: nothing recorded yet
+    assert reads.count(archive) == 1
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 1  # unchanged: not re-read
+
+    _write_zip(archive, {"dfss_zmod_a": "X = 1\n", "dfss_zmod_b": "Y = 2\n"})
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 2
+    assert importlib.import_module("dfss_zmod_b").Y == 2
+
+
+def test_driver_import_system_untouched():
+    assert worker_imports.install() is False
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
+@needs_eager_zipimport
+def test_guard_installed_in_worker_after_library_kernel(spark, sf_dir):
+    from docling_fast_server_spark.operators.dispatch import _extract_auto_arrow
+
+    driver_invalidate = zipimport.zipimporter.invalidate_caches
+
+    def probe(batches):
+        # Pickling this closure carries a library kernel, so unpickling it
+        # in the worker imports the package, as for every library kernel.
+        import pyarrow as pa
+
+        docs = sum(b.num_rows for b in _extract_auto_arrow(batches))
+        importlib.invalidate_caches()  # the worker's next task start
+        reads = []
+        read_directory = zipimport._read_directory
+
+        def counting_read(path):
+            reads.append(path)
+            return read_directory(path)
+
+        zipimport._read_directory = counting_read
+        try:
+            importlib.invalidate_caches()  # and the one after it
+        finally:
+            zipimport._read_directory = read_directory
+        guarded = zipimport.zipimporter.invalidate_caches.__module__ == worker_imports.__name__
+        yield pa.RecordBatch.from_pydict(
+            {"docs": [docs], "guarded": [guarded], "rereads": [len(reads)]}
+        )
+
+    from docling_fast_server_spark.corpus import docs_raw
+
+    raw = docs_raw(spark, sf_dir).select("doc_id", "spans").repartition(4)
+    rows = raw.mapInArrow(
+        probe, "docs long, guarded boolean, rereads long"
+    ).collect()
+
+    assert sum(r.docs for r in rows) == raw.count()
+    assert rows and all(r.guarded for r in rows)
+    assert all(r.rereads == 0 for r in rows)  # no archive changed in between
+    assert zipimport.zipimporter.invalidate_caches is driver_invalidate
+    assert driver_invalidate.__module__ == "zipimport"
