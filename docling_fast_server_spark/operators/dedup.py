@@ -1128,22 +1128,17 @@ ORACLE_DEDUP_SIMHASH = f"""
 """
 
 
-def simhash_hamming_pairs(spark, sf_dir):
-    """Near-dup pairs: hamming(simhash) <= HAMMING_MAX, blocked on 4
-    16-bit bands (pigeonhole: <=3 differing bits over 4 bands leaves at
-    least one band identical), so no all-pairs join exists at scale.
-    Buckets hotter than SIMHASH_BUCKET_CAP are suppressed entirely
-    (_drop_hot_buckets — deterministic, oracle-mirrored): a
-    duplicate-heavy corpus still concentrates its copies into shared
-    buckets, and suppression bounds the self-join's worst case;
-    bucket_tripwire() over the banded relation reports when it bites
-    (the signal to widen the fingerprint/bands further)."""
-    return hamming_pairs_from(simhash_signatures(spark, sf_dir))
-
-
 def hamming_pairs_from(sig: DataFrame) -> DataFrame:
-    """16-bit-banded hamming<=HAMMING_MAX pairs from a (doc_id, simhash)
-    relation (see simhash_hamming_pairs for the blocking rationale)."""
+    """Near-dup pairs of a (doc_id, simhash) relation: hamming(simhash)
+    <= HAMMING_MAX, blocked on 4 16-bit bands (pigeonhole: <=3 differing
+    bits over 4 bands leaves at least one band identical), so no
+    all-pairs join exists at scale. Buckets hotter than
+    SIMHASH_BUCKET_CAP are suppressed entirely (_drop_hot_buckets —
+    deterministic, oracle-mirrored): a duplicate-heavy corpus still
+    concentrates its copies into shared buckets, and suppression bounds
+    the self-join's worst case; bucket_tripwire() over the banded
+    relation reports when it bites (the signal to widen the
+    fingerprint/bands further)."""
     banded = sig.select(
         "doc_id",
         "simhash",

@@ -263,8 +263,8 @@ def _gen_extract_render_arrow(formats: tuple, skew: bool):
     queries need (doc_id, <serialization>) only, so rendering inside the
     same Python pass ships ONE string per document across the boundary
     instead of the whole spans array, and replaces the interpreted HOF
-    render projection. Renderers are byte-exact Python twins of the JVM
-    expressions (exports.render_doc_py; differential-tested)."""
+    render projection. exports.render_doc_py is compiled from the same
+    export SPEC as the JVM expressions (differential-tested)."""
     from ..corpus import doc_id_str, render_raw_spans
     from .exports import render_doc_py
 

@@ -6,14 +6,25 @@ dict/markdown/html) — all pure functions of the item tree in reading order
 (output.json:1 .files.markdown: '## ' per section_header, body order
 preserved; ImageRefMode.EMBEDDED inlines media by reference).
 
-Here they are pure functions of the spans array, built entirely from
-JVM-side expressions (transform + array_join inside whole-stage codegen):
-no Python in the hot path, so the export stage adds no Arrow round-trip.
+Here they are pure functions of the spans array, declared once in `SPEC`
+(per format: separator, prefix/suffix, one template per span kind and a
+default template) and compiled twice:
+  * to Spark SQL text (`_sql`) — `with_exports` is one projection parsed
+    JVM-side (transform + array_join inside whole-stage codegen), so the
+    export stage adds no Arrow round-trip;
+  * to Python source (`_py_template`), one lambda per (format, kind) — the fused
+    extract+render kernel (dispatch.gen_extract_render_auto) renders
+    inside its own Python pass via `render_doc_py`.
+Both compilations keep SQL semantics: a template containing a NULL field
+renders NULL, and array_join skips NULL renders (no separator).
+test_exports_fused_matches_jvm (real corpus) and test_exports_edge_cases
+(NULL / empty / multi-separator / escape-heavy spans) pin them equal.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from typing import NamedTuple
+
 from pyspark.sql import functions as F
 
 from ..model import (
@@ -27,251 +38,182 @@ from ..model import (
 )
 
 
-def _render_md(s: Column) -> Column:
-    return (
-        F.when(s["kind"] == K_SECTION_HEADER, F.concat(F.lit("## "), s["text"]))
-        .when(s["kind"] == K_TEXT, s["text"])
-        .when(s["kind"] == K_KEY_VALUE, F.concat(F.lit("- "), s["text"]))
-        .when(s["kind"] == K_CODE, F.concat(F.lit("```\n"), s["text"], F.lit("\n```")))
-        .when(s["kind"] == K_FORMULA, F.concat(F.lit("$$ "), s["text"], F.lit(" $$")))
-        .when(s["kind"] == K_TABLE, F.concat(F.lit("| "), s["text"], F.lit(" |")))
-        # coalesce: a ref-less picture (kernel-emittable — a <figure>
-        # with no <img src>) must still render, or the dropped span
-        # shifts every later offset on re-ingest (ADVICE r05); readers
-        # map the empty ref back to None
-        .when(
-            s["kind"] == K_PICTURE,
-            F.concat(
-                F.lit("![image]("), F.coalesce(s["media_ref"], F.lit("")), F.lit(")")
-            ),
-        )
-        .otherwise(F.coalesce(s["text"], F.lit("")))
-    )
+class Field(NamedTuple):
+    """A span field in a template, evaluated in this order: `cols`
+    coalesced left to right, then `or_` if all are NULL; `cut` keeps the
+    part before the first (1) / after the last (-1) ': '; `esc` applies
+    an escape chain (`json` also quotes, and renders NULL as `null`); a
+    value still NULL then renders as the string `null` when that is set,
+    else the whole template renders NULL."""
+
+    cols: tuple
+    or_: str | None = None
+    cut: int = 0
+    esc: str = ""
+    null: str | None = None
 
 
-def _xml_escape(c: Column) -> Column:
-    """Entity-escape element content (& first, then < and >) — all
-    JVM-side `replace` chains inside whole-stage codegen."""
-    c = F.replace(c, F.lit("&"), F.lit("&amp;"))
-    c = F.replace(c, F.lit("<"), F.lit("&lt;"))
-    return F.replace(c, F.lit(">"), F.lit("&gt;"))
+class Format(NamedTuple):
+    sep: str
+    kinds: dict  # span kind -> template: a tuple of str literals and Fields
+    default: tuple  # the template of every other kind
+    prefix: str = ""
+    suffix: str = ""
 
 
-def _attr_escape(c: Column) -> Column:
-    """Attribute-value escape: content escape + double-quote entity."""
-    return F.replace(_xml_escape(c), F.lit('"'), F.lit("&quot;"))
+# replace chains in order: & first for entities, backslash first for JSON.
+# Control characters are excluded by the span-text contract (words +
+# single spaces), so these make every export parse strictly.
+_XML = (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"))
+_ESC = {"xml": _XML, "attr": _XML + (('"', "&quot;"),), "json": (("\\", "\\\\"), ('"', '\\"'))}
 
+_T = Field(("text",))
+_XT = Field(("text",), esc="xml")
+# or_="": concat null-propagates, so a ref-less picture/table (kernel-
+# emittable — a <figure> with no <img src>) would drop and shift every
+# later offset on re-ingest (ADVICE r05); the readers map '' back to None
+_REF = Field(("media_ref",), or_="", esc="attr")
+_K = Field(("kind",))
 
-def _render_html(s: Column) -> Column:
-    text = _xml_escape(s["text"])
-    # coalesce: concat null-propagates, so a NULL ref would silently drop
-    # the whole table/picture element from the export (ADVICE r05); the
-    # html reader maps the empty attribute back to None
-    ref = _attr_escape(F.coalesce(s["media_ref"], F.lit("")))
-    # split the raw kv text first, escape each part for element content
-    kv_k = _xml_escape(F.substring_index(s["text"], ": ", 1))
-    kv_v = _xml_escape(F.substring_index(s["text"], ": ", -1))
-    return (
-        F.when(s["kind"] == K_SECTION_HEADER, F.concat(F.lit("<h2>"), text, F.lit("</h2>")))
-        .when(s["kind"] == K_TEXT, F.concat(F.lit("<p>"), text, F.lit("</p>")))
-        .when(
-            s["kind"] == K_KEY_VALUE,
-            F.concat(F.lit("<dl><dt>"), kv_k, F.lit("</dt><dd>"), kv_v, F.lit("</dd></dl>")),
-        )
-        .when(s["kind"] == K_CODE, F.concat(F.lit("<pre><code>"), text, F.lit("</code></pre>")))
-        .when(s["kind"] == K_FORMULA, F.concat(F.lit('<div class="math">'), text, F.lit("</div>")))
-        .when(
-            s["kind"] == K_TABLE,
-            F.concat(F.lit('<table data-ref="'), ref, F.lit('">'), text, F.lit("</table>")),
-        )
-        .when(s["kind"] == K_PICTURE, F.concat(F.lit('<img src="'), ref, F.lit('"/>')))
-        .otherwise(F.coalesce(text, F.lit("")))
-    )
-
-
-def _render_doctags(s: Column) -> Column:
+SPEC = {
+    "markdown": Format("\n\n", {
+        K_SECTION_HEADER: ("## ", _T),
+        K_TEXT: (_T,),
+        K_KEY_VALUE: ("- ", _T),
+        K_CODE: ("```\n", _T, "\n```"),
+        K_FORMULA: ("$$ ", _T, " $$"),
+        K_TABLE: ("| ", _T, " |"),
+        K_PICTURE: ("![image](", Field(("media_ref",), or_=""), ")"),
+    }, (Field(("text",), or_=""),)),
+    "html": Format("\n", {
+        K_SECTION_HEADER: ("<h2>", _XT, "</h2>"),
+        K_TEXT: ("<p>", _XT, "</p>"),
+        # split the raw kv text first, escape each part for element content
+        K_KEY_VALUE: ("<dl><dt>", Field(("text",), cut=1, esc="xml"),
+                      "</dt><dd>", Field(("text",), cut=-1, esc="xml"), "</dd></dl>"),
+        K_CODE: ("<pre><code>", _XT, "</code></pre>"),
+        K_FORMULA: ('<div class="math">', _XT, "</div>"),
+        K_TABLE: ('<table data-ref="', _REF, '">', _XT, "</table>"),
+        K_PICTURE: ('<img src="', _REF, '"/>'),
+    }, (Field(("text",), esc="xml", null=""),)),
     # body entity-escaped: a raw `<` or `&` in span text would make the
     # tag stream ambiguous for any downstream doctags consumer
-    body = _xml_escape(F.coalesce(s["text"], s["media_ref"], F.lit("")))
-    return F.concat(F.lit("<"), s["kind"], F.lit(">"), body, F.lit("</"), s["kind"], F.lit(">"))
-
-
-def _json_escape(c: Column) -> Column:
-    """JSON string-body escape: backslash FIRST, then double-quote.
-    Control characters are excluded by the span-text contract (words +
-    single spaces — the extraction kernels never emit them), so the two
-    replaces make every export parse with a strict JSON parser."""
-    c = F.replace(c, F.lit("\\"), F.lit("\\\\"))
-    return F.replace(c, F.lit('"'), F.lit('\\"'))
-
-
-def _render_json(s: Column) -> Column:
-    """Canonical one-line JSON per span (stable field order, nulls kept) —
-    engine-neutral so the DuckDB oracle can reproduce it with string
-    concatenation. The export_to_dict analog (pdf_processor.py:211)."""
-
-    def q(c: Column) -> Column:
-        return F.when(c.isNull(), F.lit("null")).otherwise(
-            F.concat(F.lit('"'), _json_escape(c), F.lit('"'))
-        )
-
-    return F.concat(
-        F.lit('{"kind":'), q(s["kind"]),
-        F.lit(',"text":'), q(s["text"]),
-        F.lit(',"media_ref":'), q(s["media_ref"]),
-        F.lit(',"offset":'), s["offset"].cast("string"),
-        F.lit("}"),
-    )
-
-
-def spans_to_markdown(spans: Column) -> Column:
-    return F.array_join(F.transform(spans, _render_md), "\n\n")
-
-
-def spans_to_html(spans: Column) -> Column:
-    return F.array_join(F.transform(spans, _render_html), "\n")
-
-
-def spans_to_doctags(spans: Column) -> Column:
-    return F.array_join(F.transform(spans, _render_doctags), "\n")
-
-
-def spans_to_json(spans: Column) -> Column:
-    return F.concat(F.lit("["), F.array_join(F.transform(spans, _render_json), ","), F.lit("]"))
+    "doctags": Format("\n", {}, (
+        "<", _K, ">", Field(("text", "media_ref"), or_="", esc="xml"), "</", _K, ">")),
+    # canonical one-line JSON per span (stable field order, nulls kept) —
+    # engine-neutral so the DuckDB oracle reproduces it with string
+    # concatenation. The export_to_dict analog (pdf_processor.py:211).
+    "doc_json": Format(",", {}, (
+        '{"kind":', Field(("kind",), esc="json"), ',"text":', Field(("text",), esc="json"),
+        ',"media_ref":', Field(("media_ref",), esc="json"), ',"offset":', Field(("offset",)), "}",
+    ), prefix="[", suffix="]"),
+}
 
 
 # ---------------------------------------------------------------------------
-# Python twins of the JVM renderers (r8) — used by the fused
-# extract+render kernel (dispatch.gen_extract_render_auto) so the export
-# queries serialize ONE string per document out of the Python boundary
-# instead of the whole spans array plus an interpreted HOF render pass.
-# Byte-exact mirrors of _render_* above (same branch order, same escape
-# chains, same substring_index / array_join-null semantics);
-# test_exports_fused_matches_jvm pins equality against with_exports on
-# the real corpus.
+# SPEC -> Spark SQL text; the lambda variable `s` is one span struct
 # ---------------------------------------------------------------------------
-def _xml_escape_py(s: str) -> str:
-    return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+def _sql_lit(v: str) -> str:
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'").replace("\n", "\\n") + "'"
 
 
-def _attr_escape_py(s: str) -> str:
-    return _xml_escape_py(s).replace('"', "&quot;")
+def _sql_field(f: Field) -> str:
+    cols = [f"s.`{c}`" for c in f.cols]
+    alts = cols + ([_sql_lit(f.or_)] if f.or_ is not None else [])
+    x = alts[0] if len(alts) == 1 else f"coalesce({', '.join(alts)})"
+    if f.cols == ("offset",):
+        x = f"CAST({x} AS STRING)"
+    if f.cut:
+        x = f"substring_index({x}, ': ', {f.cut})"
+    for a, b in _ESC.get(f.esc, ()):
+        x = f"replace({x}, {_sql_lit(a)}, {_sql_lit(b)})"
+    if f.esc == "json":
+        x = f"""CASE WHEN {cols[0]} IS NULL THEN 'null' ELSE concat('"', {x}, '"') END"""
+    return x if f.null is None else f"coalesce({x}, {_sql_lit(f.null)})"
 
 
-def _json_escape_py(s: str) -> str:
-    return s.replace("\\", "\\\\").replace('"', '\\"')
+def _sql_template(parts: tuple) -> str:
+    out = [_sql_lit(p) if isinstance(p, str) else _sql_field(p) for p in parts]
+    return out[0] if len(out) == 1 else f"concat({', '.join(out)})"
 
 
-def _render_md_py(kind, text, ref):
-    if kind == K_SECTION_HEADER:
-        return None if text is None else "## " + text
-    if kind == K_TEXT:
-        return text
-    if kind == K_KEY_VALUE:
-        return None if text is None else "- " + text
-    if kind == K_CODE:
-        return None if text is None else "```\n" + text + "\n```"
-    if kind == K_FORMULA:
-        return None if text is None else "$$ " + text + " $$"
-    if kind == K_TABLE:
-        return None if text is None else "| " + text + " |"
-    if kind == K_PICTURE:
-        return "![image](" + (ref or "") + ")"
-    return text or ""
-
-
-def _substring_index_py(s: str, delim: str, count: int) -> str:
-    # Spark substring_index: count=1 -> before the FIRST delim (whole
-    # string if absent); count=-1 -> after the LAST delim
-    if count == 1:
-        i = s.find(delim)
-        return s if i < 0 else s[:i]
-    i = s.rfind(delim)
-    return s if i < 0 else s[i + len(delim):]
-
-
-def _render_html_py(kind, text, ref):
-    e = _xml_escape_py
-    if kind == K_SECTION_HEADER:
-        return None if text is None else "<h2>" + e(text) + "</h2>"
-    if kind == K_TEXT:
-        return None if text is None else "<p>" + e(text) + "</p>"
-    if kind == K_KEY_VALUE:
-        if text is None:
-            return None
-        return (
-            "<dl><dt>" + e(_substring_index_py(text, ": ", 1))
-            + "</dt><dd>" + e(_substring_index_py(text, ": ", -1)) + "</dd></dl>"
+def _sql(fmt: Format, spans_col: str) -> str:
+    body = _sql_template(fmt.default)
+    if fmt.kinds:
+        whens = " ".join(
+            f"WHEN s.`kind` = {_sql_lit(k)} THEN {_sql_template(t)}" for k, t in fmt.kinds.items()
         )
-    if kind == K_CODE:
-        return None if text is None else "<pre><code>" + e(text) + "</code></pre>"
-    if kind == K_FORMULA:
-        return None if text is None else '<div class="math">' + e(text) + "</div>"
-    if kind == K_TABLE:
-        if text is None:
-            return None
-        return (
-            '<table data-ref="' + _attr_escape_py(ref or "") + '">'
-            + e(text) + "</table>"
-        )
-    if kind == K_PICTURE:
-        return '<img src="' + _attr_escape_py(ref or "") + '"/>'
-    return "" if text is None else e(text)
+        body = f"CASE {whens} ELSE {body} END"
+    x = f"array_join(transform({spans_col}, s -> {body}), {_sql_lit(fmt.sep)})"
+    if fmt.prefix or fmt.suffix:
+        x = f"concat({_sql_lit(fmt.prefix)}, {x}, {_sql_lit(fmt.suffix)})"
+    return x
 
 
-def _render_doctags_py(kind, text, ref):
-    body = text if text is not None else ref
-    return "<" + kind + ">" + _xml_escape_py(body or "") + "</" + kind + ">"
+# ---------------------------------------------------------------------------
+# SPEC -> Python source: one `lambda k, t, r, o` per (format, kind) with
+# the escape chains and NULL guards inlined (a closure per part renders
+# ~3x slower)
+# ---------------------------------------------------------------------------
+_PY_VAR = {"kind": "k", "text": "t", "media_ref": "r", "offset": "o"}
 
 
-def _render_json_py(kind, text, ref, offset):
-    def q(v):
-        return "null" if v is None else '"' + _json_escape_py(v) + '"'
+def _py_field(f: Field) -> tuple[str, str | None]:
+    """(expression, its NULL test — None when it is never NULL)."""
+    vs = [_PY_VAR[c] for c in f.cols]
+    alts = vs + ([repr(f.or_)] if f.or_ is not None else [])
+    x = alts[-1]
+    for v in reversed(alts[:-1]):
+        x = f"({v} if {v} is not None else {x})"
+    isnull = " and ".join(f"{v} is None" for v in vs) if f.or_ is None else None
+    if f.cols == ("offset",):
+        x = f"str({x})"
+    if f.cut:  # Spark substring_index(x, ': ', +-1)
+        x += ".partition(': ')[0]" if f.cut == 1 else ".rpartition(': ')[2]"
+    for a, b in _ESC.get(f.esc, ()):
+        x += f".replace({a!r}, {b!r})"
+    if f.esc == "json":
+        x = f"""'"' + {x} + '"'"""
+    null = "null" if f.esc == "json" else f.null
+    if isnull and null is not None:
+        x, isnull = f"({null!r} if {isnull} else {x})", None
+    return x, isnull
 
-    return (
-        '{"kind":' + q(kind) + ',"text":' + q(text)
-        + ',"media_ref":' + q(ref) + ',"offset":' + str(offset) + "}"
-    )
+
+def _py_template(parts: tuple):
+    exprs, guards = [], []
+    for p in parts:
+        x, isnull = (repr(p), None) if isinstance(p, str) else _py_field(p)
+        exprs.append(x)
+        if isnull and f"({isnull})" not in guards:
+            guards.append(f"({isnull})")
+    src = " + ".join(exprs)
+    if guards:
+        src = f"None if {' or '.join(guards)} else {src}"
+    return eval(f"lambda k, t, r, o: {src}")  # source built from SPEC only
+
+
+_PY = {
+    name: ({k: _py_template(t) for k, t in fmt.kinds.items()}, _py_template(fmt.default))
+    for name, fmt in SPEC.items()
+}
 
 
 def render_doc_py(fmt: str, kinds, texts, refs, offsets) -> str:
-    """One document's export string from parallel span lists — the
-    array_join semantics of the JVM path (null renders are SKIPPED, no
-    separator; a null doctags render cannot occur)."""
-    if fmt == "markdown":
-        parts = [_render_md_py(k, t, r) for k, t, r in zip(kinds, texts, refs)]
-        return "\n\n".join(p for p in parts if p is not None)
-    if fmt == "html":
-        parts = [_render_html_py(k, t, r) for k, t, r in zip(kinds, texts, refs)]
-        return "\n".join(p for p in parts if p is not None)
-    if fmt == "doctags":
-        return "\n".join(
-            _render_doctags_py(k, t, r) for k, t, r in zip(kinds, texts, refs)
-        )
-    if fmt == "doc_json":
-        return (
-            "["
-            + ",".join(
-                _render_json_py(k, t, r, o)
-                for k, t, r, o in zip(kinds, texts, refs, offsets)
-            )
-            + "]"
-        )
-    raise ValueError(f"unknown export format {fmt!r}")
+    """One document's export string from parallel span lists, with the
+    array_join semantics of the JVM path: NULL renders are SKIPPED (no
+    separator)."""
+    if fmt not in SPEC:
+        raise ValueError(f"unknown export format {fmt!r}")
+    spec, (fns, default) = SPEC[fmt], _PY[fmt]
+    parts = [fns.get(k, default)(k, t, r, o) for k, t, r, o in zip(kinds, texts, refs, offsets)]
+    return spec.prefix + spec.sep.join([p for p in parts if p is not None]) + spec.suffix
 
 
 def with_exports(df, spans_col: str = "spans"):
     """Fan out all four serializations — the get_output() analog
     (pdf_processor.py:203-224). One narrow projection, zero shuffles."""
-    s = F.col(spans_col)
-    return df.withColumns(
-        {
-            "markdown": spans_to_markdown(s),
-            "html": spans_to_html(s),
-            "doctags": spans_to_doctags(s),
-            "doc_json": spans_to_json(s),
-        }
-    )
+    return df.withColumns({name: F.expr(_sql(fmt, spans_col)) for name, fmt in SPEC.items()})
 
 
 EXPORT_FORMATS = ("markdown", "html", "doctags", "json")

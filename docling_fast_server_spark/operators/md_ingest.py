@@ -5,9 +5,9 @@ The reference's converter entry point is format-dispatched
 /root/reference/src/services/pdf_processor.py:176-189); docling's backend
 set includes a Markdown reader alongside PDF/HTML. This module is the
 Spark analog for the engine's own canonical markdown serialization
-(exports._render_md): a block-grammar parser mapping each block back to a
-span, so markdown documents — including every document this engine itself
-exported — can re-enter the pipeline as a first-class raw format.
+(exports.SPEC["markdown"]): a block-grammar parser mapping each block back
+to a span, so markdown documents — including every document this engine
+itself exported — can re-enter the pipeline as a first-class raw format.
 
 Canonical block grammar (blocks separated by blank lines, the "\\n\\n"
 join of the serializer; code fences contain single newlines only):
@@ -36,13 +36,11 @@ every span exactly EXCEPT
     user uploads fall back to the json/doctags/html readers, which have
     no such ambiguity (tests/test_md_ingest.py pins both cases).
 
-Vectorized as mapInPandas over Arrow batches; degrade-never-die per
+Vectorized as mapInArrow over Arrow batches; degrade-never-die per
 document like the other kernels.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 
@@ -97,36 +95,6 @@ def extract_markdown_document(markdown: str) -> list[dict]:
     return spans
 
 
-def _make_reader_kernel(reader):
-    """Shared degrade-never-die batch loop for every serialization
-    reader — one implementation so a fix (e.g. the per-doc type
-    validation above) cannot drift across formats."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, spans_col, methods, errors = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    out = reader(payload or "")
-                    method, err = METHOD_DEFAULT, None
-                except Exception as e:  # degrade, never die
-                    out, method, err = [], METHOD_FAILED, str(e)[:500]
-                ids.append(doc_id)
-                spans_col.append(out)
-                methods.append(method)
-                errors.append(err)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "spans": spans_col,
-                    "conversion_method": methods,
-                    "error": errors,
-                }
-            )
-
-    return run
-
-
 # ---------------------------------------------------------------------------
 # Vectorized reader path (round-5 verdict item 8). The markdown / doctags /
 # canonical-html grammars are line/block-regular, so the happy path parses a
@@ -138,9 +106,10 @@ def _make_reader_kernel(reader):
 # re-parsed by the per-doc loop, so degrade behavior — which doc fails,
 # with exactly which error string — is byte-identical by construction
 # (tests/test_reader_vectorized.py pins vector == per-doc on canonical,
-# edge, and malformed corpora). JSON stays per-document: its contract is a
-# strict recursive json.loads + per-field type validation, which has no
-# regular line grammar to lift.
+# edge, and malformed corpora). JSON has no vectorized parser, so every
+# json batch takes the per-doc loop: its contract is a strict recursive
+# json.loads + per-field type validation, with no regular line grammar to
+# lift.
 # ---------------------------------------------------------------------------
 
 def _explode_nonempty(pay: pd.Series, sep: str):
@@ -286,9 +255,9 @@ def _vparse_html_export(pay: pd.Series):
 
 def _perdoc_flat(pay: pd.Series, reader):
     """The degrade-never-die per-doc loop in flat-column form — the
-    fallback batch path of the Arrow kernel, and the only path that can
-    emit METHOD_FAILED rows. Same try/except shape as
-    _make_reader_kernel, so error strings are identical."""
+    fallback batch path of the Arrow kernel (the only path of a reader
+    with no vectorized parser), and the only path that can emit
+    METHOD_FAILED rows."""
     import numpy as np
 
     out_k: list = []
@@ -326,7 +295,7 @@ def _perdoc_flat(pay: pd.Series, reader):
 def _make_arrow_kernel(reader, vparse):
     """mapInArrow kernel: vectorized happy path, whole-batch per-doc
     fallback when vparse declines (rare by contract — canonical exports
-    always vectorize)."""
+    always vectorize) or is None."""
     import numpy as np
     import pyarrow as pa
 
@@ -339,7 +308,7 @@ def _make_arrow_kernel(reader, vparse):
         for b in batches:
             ids = b.column(0)
             pay = b.column(1).to_pandas().fillna("").reset_index(drop=True)
-            res = vparse(pay)
+            res = vparse(pay) if vparse is not None else None
             if res is not None:
                 k, t, r, off, counts = res
                 methods = pa.array([METHOD_DEFAULT] * len(pay), type=pa.string())
@@ -370,8 +339,6 @@ def _make_arrow_kernel(reader, vparse):
 
 def _reader_df(df, reader, col: str, vparse=None):
     sel = df.select("doc_id", df[col].alias("payload"))
-    if vparse is None:  # json: strict per-doc parse is the contract
-        return sel.mapInPandas(_make_reader_kernel(reader), schema=DOCS_EXTRACTED_SCHEMA)
     return sel.mapInArrow(_make_arrow_kernel(reader, vparse), schema=DOCS_EXTRACTED_SCHEMA)
 
 
@@ -384,7 +351,7 @@ def extract_markdown(df, md_col: str = "markdown"):
 # ---------------------------------------------------------------------------
 # doctags ingest — docling's native serialization is both exported AND
 # loadable (DocTags is the reference stack's own interchange format); the
-# round-4 entity escaping in exports._render_doctags is what makes this
+# round-4 entity escaping of exports.SPEC["doctags"] is what makes this
 # reader sound: the only raw `<` in a canonical stream are tag delimiters.
 # ---------------------------------------------------------------------------
 import re as _re
@@ -393,7 +360,7 @@ _DOCTAG_RE = _re.compile(r"^<([a-z_]+)>(.*)</\1>$")
 
 
 def _xml_unescape(s: str) -> str:
-    # exact inverse of exports._xml_escape (&amp; LAST — inverse order);
+    # exact inverse of the exports "xml" escape (&amp; LAST — inverse order);
     # shared by the doctags and html readers so the inverse-order
     # invariant lives in exactly one place
     return s.replace("&lt;", "<").replace("&gt;", ">").replace("&amp;", "&")
@@ -494,7 +461,7 @@ def extract_json(df, json_col: str = "doc_json"):
 
 # ---------------------------------------------------------------------------
 # html-export ingest — the 4th round-trip format (round-4 verdict item 3).
-# This parses the EXPORTER'S canonical HTML shape (exports._render_html:
+# This parses the EXPORTER'S canonical HTML shape (exports.SPEC["html"]:
 # <h2>/<p>/<dl>/<pre><code>/<div class="math">/<table data-ref>/<img>),
 # NOT arbitrary web pages — those go through the boilerplate-stripping
 # html_extract kernel. The reference's converter dispatches HTML as a
@@ -507,7 +474,7 @@ def extract_json(df, json_col: str = "doc_json"):
 #   * every `<` in element content is entity-escaped, so a raw `<` only
 #     ever starts a tag — one span per line, parsed with anchored
 #     patterns (span text carries no control characters by the span-text
-#     contract, see exports._json_escape);
+#     contract, see the exports escape chains);
 #   * a key_value span whose text contains MORE than one ": " separator
 #     is ambiguous in <dt>/<dd> form (the exporter splits on the
 #     first/last occurrence) — kernel kv text is "word: word", single
@@ -529,7 +496,7 @@ _html_unescape_content = _xml_unescape  # element content: same inverse
 
 
 def _html_unescape_attr(s: str) -> str:
-    # exact inverse of exports._attr_escape (&quot; first, then the
+    # exact inverse of the exports "attr" escape (&quot; first, then the
     # shared content inverse)
     return _xml_unescape(s.replace("&quot;", '"'))
 

@@ -58,16 +58,6 @@ _FORMULA_RE = re.compile(r"^\S+ = \S+ \+ \S+$")
 _MEDIA_KINDS = ("pdf_image", "pdf_table")
 
 
-def _parse_cells(raw_spans, include_media: bool, enrich: bool = True) -> list[tuple]:
-    """raw span dicts -> [(page, col, -top, kind, text, media_ref)] (the
-    dict-shaped API; delegates to the flat-column form the Arrow
-    dispatch kernel uses)."""
-    kinds = [s["kind"] for s in raw_spans]
-    texts = [s["text"] for s in raw_spans]
-    refs = [s["media_ref"] for s in raw_spans]
-    return _parse_cells_flat(kinds, texts, refs, 0, len(kinds), include_media, enrich)
-
-
 def _parse_cells_flat(
     kinds: list,
     texts: list,

@@ -146,7 +146,3 @@ SELECT 'doc-' || lpad(CAST(doc_id AS VARCHAR), 6, '0') AS doc_id,
        CAST(row_number() OVER (PARTITION BY doc_id ORDER BY i, rnk) - 1 AS INTEGER) AS "offset"
 FROM items
 """
-
-
-def doc_id_sql_expr(col: str = "doc_id") -> str:
-    return f"'doc-' || lpad(CAST({col} AS VARCHAR), 6, '0')"

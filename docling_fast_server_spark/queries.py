@@ -108,14 +108,6 @@ def q_export_markdown(spark, sf_dir):
     return gen_extract_render_auto(spark, sf_dir, ("markdown",))
 
 
-def q_export_html(spark, sf_dir):
-    return with_exports(extract_all(spark, sf_dir)).select("doc_id", "html")
-
-
-def q_export_doctags(spark, sf_dir):
-    return with_exports(extract_all(spark, sf_dir)).select("doc_id", "doctags")
-
-
 def q_export_html_doctags(spark, sf_dir):
     """FOLDED registry row (round-7: frees a slot for pipeline_e2e, the
     r3 ts_textstats pattern): both serializations in one per-doc
@@ -144,7 +136,7 @@ _MD_RENDER = """
     END
 """
 
-# DuckDB mirrors of exports._xml_escape / _attr_escape / _json_escape —
+# DuckDB mirrors of the xml / attr / json escape chains of exports.SPEC —
 # same replace chains, same order (& first for entities, \ first for JSON)
 def _sql_xml_esc(col: str) -> str:
     return f"replace(replace(replace({col}, '&', '&amp;'), '<', '&lt;'), '>', '&gt;')"

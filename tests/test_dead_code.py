@@ -1,0 +1,62 @@
+"""No dead library code: every top-level function and class of the
+package must be referenced somewhere in the repository's Python files
+(library, tests, benchmarks, scripts) besides its own definition.
+
+A reference is any identifier, attribute, imported name or identifier-
+shaped string constant (for getattr-style lookups) equal to the name;
+mentions in comments and docstrings do not count.
+"""
+
+import ast
+import subprocess
+from collections import Counter
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = "docling_fast_server_spark"
+
+
+def _py_files() -> list[Path]:
+    try:
+        out = subprocess.run(
+            ["git", "ls-files", "--cached", "--others", "--exclude-standard", "*.py"],
+            cwd=ROOT, capture_output=True, text=True, check=True,
+        ).stdout.split()
+        return [ROOT / f for f in out if (ROOT / f).exists()]
+    except (OSError, subprocess.CalledProcessError):  # not a git checkout
+        return [
+            p for p in ROOT.rglob("*.py")
+            if not any(q.startswith(".") for q in p.relative_to(ROOT).parts)
+        ]
+
+
+def _refs(tree: ast.AST) -> Counter:
+    refs: Counter = Counter()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            refs[n.id] += 1
+        elif isinstance(n, ast.Attribute):
+            refs[n.attr] += 1
+        elif isinstance(n, ast.alias):
+            refs[n.name.rsplit(".", 1)[-1]] += 1
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
+            refs[n.value] += 1
+    return refs
+
+
+def test_no_unreferenced_library_definitions():
+    refs: Counter = Counter()
+    defs = []  # (location, name, references inside its own definition)
+    for path in _py_files():
+        tree = ast.parse(path.read_text(), filename=str(path))
+        refs.update(_refs(tree))
+        rel = path.relative_to(ROOT)
+        if rel.parts[0] == PACKAGE:
+            defs += [
+                (f"{rel}:{n.lineno}", n.name, _refs(n)[n.name])
+                for n in tree.body
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            ]
+    assert len(defs) > 100, "library scan found too few definitions"
+    dead = [f"{where} {name}" for where, name, own in defs if refs[name] == own]
+    assert not dead, "unreferenced library definitions:\n" + "\n".join(dead)

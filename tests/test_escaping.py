@@ -15,7 +15,7 @@ import pyarrow as pa
 import pytest
 
 from docling_fast_server_spark.corpus import SPECIAL_EVERY, SPECIALS, expected_spans
-from docling_fast_server_spark.queries import q_export_html, q_export_json
+from docling_fast_server_spark.queries import q_export_html_doctags, q_export_json
 
 
 def _decorated_ids(documents_pdf):
@@ -48,7 +48,7 @@ def test_export_json_parses_with_real_parser(spark, sf_dir, documents_pdf):
 
 
 def test_export_html_entity_escapes_content(spark, sf_dir):
-    rows = q_export_html(spark, sf_dir).collect()
+    rows = q_export_html_doctags(spark, sf_dir).collect()
     # the decorated word renders as `"\&lt;&amp;` (raw quote+backslash are
     # legal in element content; < and & must become entities)
     escaped = SPECIALS.replace("&", "&amp;").replace("<", "&lt;")
@@ -206,3 +206,41 @@ def test_exports_fused_matches_jvm(spark, sf_dir):
         ).collect()
     }
     assert fused == jvm and len(fused) == 500
+
+
+def test_exports_edge_cases(spark):
+    """The JVM (with_exports) and Python (render_doc_py) compilations of
+    the export SPEC agree on spans the corpus never produces: NULL and
+    empty text/media_ref, a multi-separator kv text, escape-heavy
+    values, an unknown kind, an empty spans array — one span per
+    document, plus one document holding every span."""
+    from docling_fast_server_spark.operators.exports import SPEC, render_doc_py, with_exports
+
+    kinds = list(dict.fromkeys(k for fmt in SPEC.values() for k in fmt.kinds))
+    kinds.append("no_such_kind")
+    spans = [
+        (k, t, r, i)
+        for i, (k, t, r) in enumerate(
+            (k, t, r)
+            for k in kinds
+            for t in (None, "", "a: b: c", "x<&>\"'y")
+            for r in (None, "", 'm"<&>')
+        )
+    ]
+    docs = [(f"e{i:03d}", [(k, t, r, 0)]) for i, (k, t, r, _) in enumerate(spans)]
+    docs += [("all", spans), ("empty", [])]
+    df = spark.createDataFrame(
+        docs,
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    cols = list(SPEC)
+    jvm = {r["doc_id"]: tuple(r[c] for c in cols) for r in with_exports(df).collect()}
+    py = {
+        d: tuple(render_doc_py(c, *[[s[i] for s in sp] for i in range(4)]) for c in cols)
+        for d, sp in docs
+    }
+    assert len(jvm) == len(docs) and jvm == py
+    # the edge cases are real: NULL renders are skipped, not joined
+    assert jvm["empty"] == ("", "", "", "[]")
+    assert py["e000"][0] == ""  # section_header with NULL text
+

@@ -13,7 +13,12 @@ from docling_fast_server_spark.operators.md_ingest import (
 
 
 def test_pure_roundtrip(documents_pdf):
-    from docling_fast_server_spark.operators.exports import _render_md  # noqa: F401
+    from docling_fast_server_spark.operators.exports import SPEC, render_doc_py
+
+    # the hand renderer below covers exactly the kinds the spec templates
+    assert set(SPEC["markdown"].kinds) == {
+        "section_header", "text", "key_value_area", "code", "formula", "table", "picture"
+    }
 
     # Python-level: expected spans -> canonical md string -> parse back
     def render_md_py(spans):
@@ -38,7 +43,10 @@ def test_pure_roundtrip(documents_pdf):
         exp = expected_spans(int(did), text)
         if not exp:
             continue
-        got = extract_markdown_document(render_md_py(exp))
+        md = render_md_py(exp)
+        cols = [[s[f] for s in exp] for f in ("kind", "text", "media_ref", "offset")]
+        assert render_doc_py("markdown", *cols) == md, did
+        got = extract_markdown_document(md)
         want = [
             {**s, "media_ref": None if s["kind"] == "table" else s["media_ref"]}
             for s in exp
