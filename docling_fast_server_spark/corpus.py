@@ -54,6 +54,7 @@ from .model import (
     K_TABLE,
     K_TEXT,
     doc_id_str,
+    spans_array,
 )
 
 PARA_WORDS = 10
@@ -325,7 +326,18 @@ def _gen_batches(schema_cols: list[str], skew: bool):
     return gen
 
 
-def _gen_batches_arrow(out_schema, skew: bool):
+def skewed(doc_id: int, text: str) -> str:
+    """The size-skew rule of the Arrow datagen and the fused kernels
+    (the pandas reference _gen_batches keeps its own copy): every 50th
+    doc 30x, every other 10th doc 5x its text."""
+    if doc_id % 50 == 0:
+        return " ".join([text] * 30)
+    if doc_id % 10 == 0:
+        return " ".join([text] * 5)
+    return text
+
+
+def _gen_batches_arrow(skew: bool):
     """FLAT-COLUMN Arrow datagen (r8): identical per-document output to
     _gen_batches, assembled as flat child arrays + a ListArray offsets
     vector instead of a pandas object column of per-span dicts. The
@@ -337,11 +349,6 @@ def _gen_batches_arrow(out_schema, skew: bool):
     import pyarrow as pa
 
     def gen(batches):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        schema = to_arrow_schema(out_schema)
-        spans_t = schema.field("spans").type
-        struct_fields = [spans_t.value_type.field(i) for i in range(4)]
         for b in batches:
             ids = b.column(0).to_pylist()
             texts = b.column(1).to_pylist()
@@ -355,10 +362,7 @@ def _gen_batches_arrow(out_schema, skew: bool):
             for doc_id, text in zip(ids, texts):
                 doc_id = int(doc_id)
                 if skew:
-                    if doc_id % 50 == 0:
-                        text = " ".join([text] * 30)
-                    elif doc_id % 10 == 0:
-                        text = " ".join([text] * 5)
+                    text = skewed(doc_id, text)
                 spans = render_raw_spans(doc_id, text)
                 for s in spans:
                     k_l.append(s["kind"])
@@ -368,18 +372,8 @@ def _gen_batches_arrow(out_schema, skew: bool):
                 cum.append(cum[-1] + len(spans))
                 out_ids.append(doc_id_str(doc_id))
                 out_nchars.append(len(text))
-            vals = pa.StructArray.from_arrays(
-                [
-                    pa.array(k_l, type=pa.string()),
-                    pa.array(t_l, type=pa.string()),
-                    pa.array(r_l, type=pa.string()),
-                    pa.array(o_l, type=pa.int32()),
-                ],
-                fields=struct_fields,
-            )
-            spans_arr = pa.ListArray.from_arrays(pa.array(cum, type=pa.int32()), vals)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=pa.string()), spans_arr,
+                [pa.array(out_ids, type=pa.string()), spans_array(k_l, t_l, r_l, o_l, cum),
                  pa.array(out_nchars, type=pa.int32())],
                 names=["doc_id", "spans", "n_chars"],
             )
@@ -413,4 +407,4 @@ def docs_raw(spark, sf_dir: str, which: str = "all", skew: bool = False):
             T.StructField("n_chars", T.IntegerType(), False),
         ]
     )
-    return docs.mapInArrow(_gen_batches_arrow(out_schema, skew), schema=out_schema)
+    return docs.mapInArrow(_gen_batches_arrow(skew), schema=out_schema)

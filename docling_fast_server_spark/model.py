@@ -82,6 +82,27 @@ SPAN_STRUCT = T.StructType(
 
 SPANS_TYPE = T.ArrayType(SPAN_STRUCT, False)
 
+
+def spans_array(kinds, texts, refs, offsets, cum):
+    """The SPANS_TYPE Arrow column from flat per-span children (lists or
+    numpy arrays) and the per-document list boundaries `cum` (n_docs + 1
+    int32 values). The one place the engine builds a spans column: every
+    Arrow kernel marshals flat, with no per-span dict on either side."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    vals = pa.StructArray.from_arrays(
+        [
+            pa.array(kinds, type=pa.string()),
+            pa.array(texts, type=pa.string()),
+            pa.array(refs, type=pa.string()),
+            pa.array(offsets, type=pa.int32()),
+        ],
+        fields=list(to_arrow_type(SPANS_TYPE).value_type),
+    )
+    return pa.ListArray.from_arrays(pa.array(cum, type=pa.int32()), vals)
+
+
 DOCS_RAW_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),

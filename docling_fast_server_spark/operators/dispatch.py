@@ -3,25 +3,26 @@
 The reference routes every upload through one converter entry point that
 picks the pipeline per format (DocumentConverter with format_options,
 /root/reference/src/services/pdf_processor.py:176-189). The Spark analog:
-a single Arrow-batched map over the mixed corpus that dispatches per row
-on the raw span kind — one scan, one Arrow round-trip, no union of two
-branches re-reading the same table.
+one per-document dispatcher, `_extract_one`, driven by one per-batch
+loop, `_extract_docs`, under every extraction entry point — the mixed
+corpus (`extract_auto`, also the html-only and pdf-only registry rows),
+the fused datagen kernels, and the DFSB bytes path
+(sources/binary_pack.extract_binary).
 
 Marshaling is FLAT-COLUMN over ``mapInArrow``: the list<struct> spans
 column is read as its flat child arrays (``to_pylist`` on each field —
 one C-speed conversion per column) and rebuilt the same way
-(``pa.StructArray.from_arrays`` + ``pa.ListArray.from_arrays``), so no
-per-span Python dict ever crosses the Arrow boundary in either
-direction. The earlier ``mapInPandas`` form materialized ~15 input
-dicts + ~11 output dicts per document; at 32 cores that conversion
-layer cost more than the parsing kernels themselves (measured: 1.38 s
-identity round-trip vs 1.24 s for a full flat rebuild of the same
-160k-doc batch stream).
+(``model.spans_array``), so no per-span Python dict ever crosses the
+Arrow boundary in either direction. The earlier ``mapInPandas`` form
+materialized ~15 input dicts + ~11 output dicts per document; at 32
+cores that conversion layer cost more than the parsing kernels
+themselves (measured: 1.38 s identity round-trip vs 1.24 s for a full
+flat rebuild of the same 160k-doc batch stream).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pyarrow as pa
 
@@ -34,6 +35,8 @@ from ..model import (
     RAW_HTML_DOC,
     RAW_JSON,
     RAW_MARKDOWN,
+    doc_id_str,
+    spans_array,
 )
 from .html_extract import extract_html_document
 from .md_ingest import (
@@ -55,12 +58,6 @@ _DOC_READERS = {
 }
 
 
-def _arrow_schema():
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(DOCS_EXTRACTED_SCHEMA)
-
-
 def _extract_one(
     doc_id: str,
     kinds: list,
@@ -74,9 +71,7 @@ def _extract_one(
     out_o: list,
 ) -> tuple[int, str, str | None]:
     """Dispatch ONE document's raw spans [lo, hi) into the flat output
-    lists; returns (n_spans, method, err). Shared by the Arrow kernel
-    below and the fused datagen+extract kernel (corpus generation and
-    extraction in one Python pass — no intermediate Arrow round trip)."""
+    lists; returns (n_spans, method, err). Called only by _extract_docs."""
     mark = len(out_k)  # per-doc append barrier: the except branch
     # truncates back to it so a mid-append failure can never leak
     # orphan values into the NEXT document's span list (the cum
@@ -122,10 +117,45 @@ def _extract_one(
         return 0, METHOD_FAILED, str(e)[:500]
 
 
+def extracted_batch(ids, k, t, r, o, cum, methods, errors) -> pa.RecordBatch:
+    """One DOCS_EXTRACTED_SCHEMA batch from flat span children and
+    per-document columns; `ids` is a list or an Arrow string array."""
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(ids, type=pa.string()),
+            spans_array(k, t, r, o, cum),
+            pa.array(methods, type=pa.string()),
+            pa.array(errors, type=pa.string()),
+        ],
+        names=["doc_id", "spans", "conversion_method", "error"],
+    )
+
+
+def _extract_docs(ids: list, docs: Iterable) -> tuple:
+    """The one per-batch loop over _extract_one. `docs` yields, per
+    document, (kinds, texts, refs, lo, hi) over flat raw-span lists — or
+    the exception that stopped its raw bytes from being read, which
+    becomes a `failed` row. Returns the extracted_batch arguments after
+    `ids`."""
+    out_k: list = []
+    out_t: list = []
+    out_r: list = []
+    out_o: list = []
+    cum = [0]
+    methods: list = []
+    errors: list = []
+    for doc_id, doc in zip(ids, docs):
+        if isinstance(doc, Exception):
+            n, method, err = 0, METHOD_FAILED, str(doc)[:500]
+        else:
+            n, method, err = _extract_one(doc_id, *doc, out_k, out_t, out_r, out_o)
+        methods.append(method)
+        errors.append(err)
+        cum.append(cum[-1] + n)
+    return out_k, out_t, out_r, out_o, cum, methods, errors
+
+
 def _extract_auto_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    schema = _arrow_schema()
-    spans_t = schema.field("spans").type
-    struct_fields = [spans_t.value_type.field(i) for i in range(4)]
     for b in batches:
         ids = b.column(0).to_pylist()
         spans = b.column(1)
@@ -134,40 +164,8 @@ def _extract_auto_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Record
         kinds = sv.field("kind").to_pylist()
         texts = sv.field("text").to_pylist()
         refs = sv.field("media_ref").to_pylist()
-        out_k: list = []
-        out_t: list = []
-        out_r: list = []
-        out_o: list = []
-        cum = [0]
-        methods: list = []
-        errors: list = []
-        for i, doc_id in enumerate(ids):
-            n, method, err = _extract_one(
-                doc_id, kinds, texts, refs, offs[i], offs[i + 1],
-                out_k, out_t, out_r, out_o,
-            )
-            methods.append(method)
-            errors.append(err)
-            cum.append(cum[-1] + n)
-        vals = pa.StructArray.from_arrays(
-            [
-                pa.array(out_k, type=pa.string()),
-                pa.array(out_t, type=pa.string()),
-                pa.array(out_r, type=pa.string()),
-                pa.array(out_o, type=pa.int32()),
-            ],
-            fields=struct_fields,
-        )
-        spans_arr = pa.ListArray.from_arrays(pa.array(cum, type=pa.int32()), vals)
-        yield pa.RecordBatch.from_arrays(
-            [
-                b.column(0),
-                spans_arr,
-                pa.array(methods, type=pa.string()),
-                pa.array(errors, type=pa.string()),
-            ],
-            names=["doc_id", "spans", "conversion_method", "error"],
-        )
+        docs = ((kinds, texts, refs, offs[i], offs[i + 1]) for i in range(len(ids)))
+        yield extracted_batch(b.column(0), *_extract_docs(ids, docs))
 
 
 def extract_auto(df):
@@ -178,73 +176,44 @@ def extract_auto(df):
     )
 
 
+def _generated(batch: pa.RecordBatch, skew: bool) -> tuple[list, Iterator]:
+    """The datagen half of the fused kernels: a documents batch (doc_id
+    int, text) -> (doc_id strings, _extract_docs input). Each document's
+    raw spans are rendered as the loop reaches it and handed straight to
+    _extract_one, so they never cross the Arrow boundary."""
+    from ..corpus import render_raw_spans, skewed
+
+    nums = [int(d) for d in batch.column(0).to_pylist()]
+    texts = batch.column(1).to_pylist()
+
+    def docs():
+        for did, text in zip(nums, texts):
+            raw = render_raw_spans(did, skewed(did, text) if skew else text)
+            yield (
+                [s["kind"] for s in raw],
+                [s["text"] for s in raw],
+                [s["media_ref"] for s in raw],
+                0,
+                len(raw),
+            )
+
+    return [doc_id_str(d) for d in nums], docs()
+
+
 def _gen_extract_arrow(skew: bool):
     """FUSED corpus-generation + extraction kernel (r8): one Python pass
     per task instead of two chained mapInArrow nodes. The composed
     docs_raw -> extract_auto pipeline serializes every generated raw
     span Python -> Arrow -> JVM -> Arrow -> Python between the two
-    kernels; the raw spans exist only to be consumed by the dispatcher,
-    so the fused kernel hands each document's freshly generated span
-    lists straight to _extract_one. Output and dispatch logic are
-    byte-identical to the composed route (shared _extract_one;
-    test_extract.test_fused_gen_extract_matches_composed pins row
+    kernels; the raw spans exist only to be consumed by the dispatcher.
+    Output is byte-identical to the composed route (same _extract_docs
+    loop; test_extract.test_fused_gen_extract_matches_composed pins row
     equality, skewed and unskewed)."""
-    from ..corpus import doc_id_str, render_raw_spans
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        schema = _arrow_schema()
-        spans_t = schema.field("spans").type
-        struct_fields = [spans_t.value_type.field(i) for i in range(4)]
         for b in batches:
-            ids = b.column(0).to_pylist()
-            texts = b.column(1).to_pylist()
-            out_ids: list = []
-            out_k: list = []
-            out_t: list = []
-            out_r: list = []
-            out_o: list = []
-            cum = [0]
-            methods: list = []
-            errors: list = []
-            for raw_id, text in zip(ids, texts):
-                did = int(raw_id)
-                if skew:
-                    if did % 50 == 0:
-                        text = " ".join([text] * 30)
-                    elif did % 10 == 0:
-                        text = " ".join([text] * 5)
-                raw = render_raw_spans(did, text)
-                kinds = [s["kind"] for s in raw]
-                rtexts = [s["text"] for s in raw]
-                refs = [s["media_ref"] for s in raw]
-                doc_id = doc_id_str(did)
-                n, method, err = _extract_one(
-                    doc_id, kinds, rtexts, refs, 0, len(raw),
-                    out_k, out_t, out_r, out_o,
-                )
-                out_ids.append(doc_id)
-                methods.append(method)
-                errors.append(err)
-                cum.append(cum[-1] + n)
-            vals = pa.StructArray.from_arrays(
-                [
-                    pa.array(out_k, type=pa.string()),
-                    pa.array(out_t, type=pa.string()),
-                    pa.array(out_r, type=pa.string()),
-                    pa.array(out_o, type=pa.int32()),
-                ],
-                fields=struct_fields,
-            )
-            spans_arr = pa.ListArray.from_arrays(pa.array(cum, type=pa.int32()), vals)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=pa.string()),
-                    spans_arr,
-                    pa.array(methods, type=pa.string()),
-                    pa.array(errors, type=pa.string()),
-                ],
-                names=["doc_id", "spans", "conversion_method", "error"],
-            )
+            ids, docs = _generated(b, skew)
+            yield extracted_batch(ids, *_extract_docs(ids, docs))
 
     return gen
 
@@ -265,43 +234,19 @@ def _gen_extract_render_arrow(formats: tuple, skew: bool):
     instead of the whole spans array, and replaces the interpreted HOF
     render projection. exports.render_doc_py is compiled from the same
     export SPEC as the JVM expressions (differential-tested)."""
-    from ..corpus import doc_id_str, render_raw_spans
     from .exports import render_doc_py
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            ids = b.column(0).to_pylist()
-            texts = b.column(1).to_pylist()
-            out_ids: list = []
-            rendered: list[list] = [[] for _ in formats]
-            out_k: list = []
-            out_t: list = []
-            out_r: list = []
-            out_o: list = []
-            for raw_id, text in zip(ids, texts):
-                did = int(raw_id)
-                if skew:
-                    if did % 50 == 0:
-                        text = " ".join([text] * 30)
-                    elif did % 10 == 0:
-                        text = " ".join([text] * 5)
-                raw = render_raw_spans(did, text)
-                kinds = [s["kind"] for s in raw]
-                rtexts = [s["text"] for s in raw]
-                refs = [s["media_ref"] for s in raw]
-                doc_id = doc_id_str(did)
-                del out_k[:], out_t[:], out_r[:], out_o[:]
-                _extract_one(
-                    doc_id, kinds, rtexts, refs, 0, len(raw),
-                    out_k, out_t, out_r, out_o,
-                )
-                out_ids.append(doc_id)
-                for fi, fmt in enumerate(formats):
-                    rendered[fi].append(
-                        render_doc_py(fmt, out_k, out_t, out_r, out_o)
-                    )
+            ids, docs = _generated(b, skew)
+            k, t, r, o, cum, _, _ = _extract_docs(ids, docs)
+            bounds = list(zip(cum, cum[1:]))
+            rendered = [
+                [render_doc_py(fmt, k[a:z], t[a:z], r[a:z], o[a:z]) for a, z in bounds]
+                for fmt in formats
+            ]
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=pa.string())]
+                [pa.array(ids, type=pa.string())]
                 + [pa.array(col, type=pa.string()) for col in rendered],
                 names=["doc_id", *formats],
             )

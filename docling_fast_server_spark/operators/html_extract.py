@@ -15,21 +15,19 @@ output.json:1: h1-h6 -> section_header, p/div text -> text, dl ->
 key_value_area, table -> table (+media_ref), figure/img -> picture
 (+media_ref). Reading order = document order (the body.children traversal).
 
-Vectorized as mapInPandas over Arrow batches — the per-row Python of the
-reference (src/services/rq_tasks.py:10-53) is replaced by batch iteration
-inside the Python worker; no row-at-a-time Spark UDF.
+`extract_html_document` is the per-document function; it runs inside
+the one Arrow extraction kernel (operators/dispatch.py, `mapInArrow`),
+which iterates batches in the Python worker in place of the reference's
+per-row Python (src/services/rq_tasks.py:10-53); no row-at-a-time Spark
+UDF.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
-
 from ..model import (
-    DOCS_EXTRACTED_SCHEMA,
     MAX_SPANS_PER_DOC,
     K_CODE,
     K_FORMULA,
@@ -38,8 +36,6 @@ from ..model import (
     K_SECTION_HEADER,
     K_TABLE,
     K_TEXT,
-    METHOD_DEFAULT,
-    METHOD_FAILED,
 )
 
 _BLOCK_TAGS = {
@@ -676,32 +672,3 @@ def extract_html_document(doc_id: str, html: str) -> list[dict]:
         # the in-array chunker (model.MAX_SPANS_PER_DOC rationale)
         raise ValueError(f"document exceeds span ceiling ({len(spans)} spans)")
     return spans
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, spans_col, methods, errors = [], [], [], []
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            html_parts = [
-                s["text"] for s in spans if s["kind"] == "html" and s["text"]
-            ]
-            try:
-                out = extract_html_document(doc_id, "\n".join(html_parts))
-                method, err = METHOD_DEFAULT, None
-            except Exception as e:  # degrade, never die (K10 discipline)
-                out, method, err = [], METHOD_FAILED, str(e)[:500]
-            ids.append(doc_id)
-            spans_col.append(out)
-            methods.append(method)
-            errors.append(err)
-        yield pd.DataFrame(
-            {"doc_id": ids, "spans": spans_col, "conversion_method": methods, "error": errors}
-        )
-
-
-def extract_html(df):
-    """DataFrame(doc_id, spans raw) -> DataFrame(doc_id, spans extracted,
-    conversion_method, error). Narrow map stage — no shuffle."""
-    return df.select("doc_id", "spans").mapInPandas(
-        _extract_batches, schema=DOCS_EXTRACTED_SCHEMA
-    )

@@ -297,42 +297,21 @@ def _make_arrow_kernel(reader, vparse):
     fallback when vparse declines (rare by contract — canonical exports
     always vectorize) or is None."""
     import numpy as np
-    import pyarrow as pa
 
-    from .dispatch import _arrow_schema
+    from .dispatch import extracted_batch
 
     def run(batches):
-        schema = _arrow_schema()
-        spans_t = schema.field("spans").type
-        struct_fields = [spans_t.value_type.field(i) for i in range(4)]
         for b in batches:
-            ids = b.column(0)
             pay = b.column(1).to_pandas().fillna("").reset_index(drop=True)
             res = vparse(pay) if vparse is not None else None
             if res is not None:
                 k, t, r, off, counts = res
-                methods = pa.array([METHOD_DEFAULT] * len(pay), type=pa.string())
-                errors = pa.nulls(len(pay), type=pa.string())
+                methods, errors = [METHOD_DEFAULT] * len(pay), [None] * len(pay)
             else:
-                k, t, r, off, counts, m_l, e_l = _perdoc_flat(pay, reader)
-                methods = pa.array(m_l, type=pa.string())
-                errors = pa.array(e_l, type=pa.string())
-            vals = pa.StructArray.from_arrays(
-                [
-                    pa.array(k, type=pa.string()),
-                    pa.array(t, type=pa.string()),
-                    pa.array(r, type=pa.string()),
-                    pa.array(off.astype(np.int32), type=pa.int32()),
-                ],
-                fields=struct_fields,
-            )
+                k, t, r, off, counts, methods, errors = _perdoc_flat(pay, reader)
             cum = np.zeros(len(counts) + 1, dtype=np.int32)
             np.cumsum(counts, out=cum[1:])
-            spans_arr = pa.ListArray.from_arrays(pa.array(cum, type=pa.int32()), vals)
-            yield pa.RecordBatch.from_arrays(
-                [ids, spans_arr, methods, errors],
-                names=["doc_id", "spans", "conversion_method", "error"],
-            )
+            yield extracted_batch(b.column(0), k, t, r, off, cum, methods, errors)
 
     return run
 

@@ -21,21 +21,19 @@ the observable contract in output.json:1):
   pdf_processor.py:191-201 — degrade deterministically, never fail the
   task for one bad document.
 
-Vectorized as mapInPandas over Arrow batches (no per-row Python at the
-Spark level; the reference's one-file-at-a-time rq_tasks.py:10-53 is the
-anti-pattern this replaces).
+`extract_pdf_cells_flat` is the per-document function of the one Arrow
+extraction kernel (operators/dispatch.py, `mapInArrow`): flat columns
+in, flat columns out, no per-row Python at the Spark level (the
+reference's one-file-at-a-time rq_tasks.py:10-53 is the anti-pattern
+this replaces). `extract_pdf_document` wraps it for span dicts.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterator
-
-import pandas as pd
 
 from ..model import (
-    DOCS_EXTRACTED_SCHEMA,
     MAX_SPANS_PER_DOC,
     K_CODE,
     K_FORMULA,
@@ -45,7 +43,6 @@ from ..model import (
     K_TABLE,
     K_TEXT,
     METHOD_DEFAULT,
-    METHOD_FAILED,
     METHOD_LIMITED,
 )
 
@@ -141,29 +138,3 @@ def extract_pdf_document(raw_spans) -> tuple[list[dict], str]:
         for i, (_, _, _, k, t, m) in enumerate(cells)
     ]
     return spans, method
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, spans_col, methods, errors = [], [], [], []
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            try:
-                out, method = extract_pdf_document(spans)
-                err = None
-            except Exception as e:
-                out, method, err = [], METHOD_FAILED, str(e)[:500]
-            ids.append(doc_id)
-            spans_col.append(out)
-            methods.append(method)
-            errors.append(err)
-        yield pd.DataFrame(
-            {"doc_id": ids, "spans": spans_col, "conversion_method": methods, "error": errors}
-        )
-
-
-def extract_pdf(df):
-    """DataFrame(doc_id, spans raw pdf cells) -> extracted spans.
-    Narrow map stage — no shuffle."""
-    return df.select("doc_id", "spans").mapInPandas(
-        _extract_batches, schema=DOCS_EXTRACTED_SCHEMA
-    )

@@ -14,9 +14,8 @@ from pyspark.sql import functions as F
 from .corpus import DEGRADED_MOD, PIC_MOD, TBL_MOD, TBL_REM, docs_raw
 from .operators import dedup, relational, similarity, textstats
 from .operators.chunking import chunk_spans
+from .operators.dispatch import extract_auto, gen_extract_auto
 from .operators.exports import with_exports
-from .operators.html_extract import extract_html
-from .operators.pdf_layout import extract_pdf
 from .oracle import MAX_PARAS, expected_spans_sql
 
 
@@ -36,17 +35,15 @@ def extract_all(spark, sf_dir, skew: bool = False):
     composed docs_raw -> extract_auto route round-tripped every raw span
     through Arrow/JVM between its two kernels; gen_extract_auto is
     differential-tested row-equal). The flagship."""
-    from .operators.dispatch import gen_extract_auto
-
     return gen_extract_auto(spark, sf_dir, skew=skew)
 
 
 def q_extract_html_spans(spark, sf_dir):
-    return _exploded(extract_html(docs_raw(spark, sf_dir, which="html")))
+    return _exploded(extract_auto(docs_raw(spark, sf_dir, which="html")))
 
 
 def q_extract_pdf_spans(spark, sf_dir):
-    return _exploded(extract_pdf(docs_raw(spark, sf_dir, which="pdf")))
+    return _exploded(extract_auto(docs_raw(spark, sf_dir, which="pdf")))
 
 
 def q_extract_all_spans(spark, sf_dir):

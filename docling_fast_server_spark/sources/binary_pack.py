@@ -22,8 +22,9 @@ big-endian throughout. A payload that fails magic/bounds/utf-8 checks is
 a corrupt upload: the kernel emits a `failed` row (degrade-never-die,
 pdf_processor.py:191-201) instead of killing the task.
 
-Scale notes: packing and parsing are both narrow mapInPandas stages
-(Arrow-batched, zero shuffles); payload bytes never enter a shuffle key.
+Scale notes: packing (the fixture writer, ``mapInPandas``) and parsing
+(``mapInArrow``, the dispatch kernel's own per-document loop) are both
+narrow stages with zero shuffles; payload bytes never enter a shuffle key.
 At 100 TB the packed table is the ingest surface — bytes land once,
 columnar, splittable by row group, and every downstream stage is the
 same plan as the structured path.
@@ -35,13 +36,12 @@ import struct
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..model import (
     DOCS_EXTRACTED_SCHEMA,
-    METHOD_DEFAULT,
-    METHOD_FAILED,
     RAW_DOCTAGS,
     RAW_HTML,
     RAW_HTML_DOC,
@@ -51,6 +51,7 @@ from ..model import (
     RAW_PDF_IMAGE,
     RAW_PDF_TABLE,
 )
+from ..operators.dispatch import _extract_docs, extracted_batch
 
 MAGIC = b"DFSB"
 VERSION = 1
@@ -157,50 +158,34 @@ def pack_raw(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "spans").mapInPandas(_pack_batches, schema=PACKED_SCHEMA)
 
 
-def _extract_binary_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # imported here so the kernel closure ships cleanly to workers
-    from ..operators.dispatch import _DOC_READERS
-    from ..operators.html_extract import extract_html_document
-    from ..operators.pdf_layout import extract_pdf_document
+def _raw_columns(payload: bytes):
+    """One payload -> _extract_docs input: (kinds, texts, refs, 0, n),
+    or the error of an unreadable upload (a `failed` row)."""
+    try:
+        cells = unpack_cells(payload)
+    except Exception as e:  # degrade, never die
+        return e
+    return (
+        [c["kind"] for c in cells],
+        [c["text"] for c in cells],
+        [c["media_ref"] for c in cells],
+        0,
+        len(cells),
+    )
 
-    for pdf in batches:
-        ids, spans_col, methods, errors = [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            try:
-                spans = unpack_cells(bytes(payload))
-                if len(spans) > 0 and spans[0]["kind"] == RAW_HTML:
-                    html = "\n".join(
-                        s["text"] for s in spans if s["kind"] == RAW_HTML and s["text"]
-                    )
-                    out = extract_html_document(doc_id, html)
-                    method, err = METHOD_DEFAULT, None
-                elif len(spans) > 0 and spans[0]["kind"] in _DOC_READERS:
-                    reader, joiner = _DOC_READERS[spans[0]["kind"]]
-                    fmt = spans[0]["kind"]
-                    parts = [s["text"] for s in spans if s["kind"] == fmt and s["text"]]
-                    if joiner is None and len(parts) > 1:
-                        raise ValueError(f"{fmt}: expected one payload span")
-                    out = reader((joiner or "").join(parts))
-                    method, err = METHOD_DEFAULT, None
-                else:
-                    out, method = extract_pdf_document(spans)
-                    err = None
-            except Exception as e:
-                out, method, err = [], METHOD_FAILED, str(e)[:500]
-            ids.append(doc_id)
-            spans_col.append(out)
-            methods.append(method)
-            errors.append(err)
-        yield pd.DataFrame(
-            {"doc_id": ids, "spans": spans_col, "conversion_method": methods, "error": errors}
-        )
+
+def _extract_binary_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for b in batches:
+        ids = b.column(0).to_pylist()
+        docs = map(_raw_columns, b.column(1).to_pylist())
+        yield extracted_batch(b.column(0), *_extract_docs(ids, docs))
 
 
 def extract_binary(df: DataFrame) -> DataFrame:
     """DataFrame(doc_id, payload binary) -> extracted spans. Parses the
     DFSB container from raw bytes inside the kernel (the reference's
-    bytes-in contract), then runs the same per-document layout pipeline
-    as dispatch.extract_auto. Narrow map stage — zero shuffles."""
-    return df.select("doc_id", "payload").mapInPandas(
-        _extract_binary_batches, schema=DOCS_EXTRACTED_SCHEMA
+    bytes-in contract), then runs the same per-document loop as
+    dispatch.extract_auto. Narrow map stage — zero shuffles."""
+    return df.select("doc_id", "payload").mapInArrow(
+        _extract_binary_arrow, schema=DOCS_EXTRACTED_SCHEMA
     )

@@ -34,7 +34,7 @@ def stream_extract(
 ):
     """Start the streaming extraction; returns the StreamingQuery.
     One file-arrival = one micro-batch of documents; the kernel is the
-    same narrow mapInPandas as the batch path."""
+    same narrow mapInArrow as the batch path."""
     raw = (
         spark.readStream.schema(DOCS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", "8")

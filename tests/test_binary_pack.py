@@ -46,19 +46,29 @@ def test_corrupt_payload_raises(mutate):
 
 
 def test_binary_kernel_matches_structured(spark, sf_dir):
-    """extract_binary(pack_raw(raw)) == extract_auto(raw) row for row —
-    the bytes path adds serialization, not semantics."""
-    raw = docs_raw(spark, sf_dir, which="all")
-    via_bytes = {
-        r["doc_id"]: (r["spans"], r["conversion_method"])
-        for r in extract_binary(pack_raw(raw)).collect()
-    }
-    via_rows = {
-        r["doc_id"]: (r["spans"], r["conversion_method"])
-        for r in extract_auto(raw).collect()
-    }
+    """extract_binary(pack_raw(raw)) == extract_auto(raw) row for row,
+    error text included — the bytes path adds serialization, not
+    semantics. One extra document carries two json_doc payloads, which
+    both routes must fail with the same error."""
+    from docling_fast_server_spark.model import DOCS_RAW_SCHEMA
+
+    two_json = spark.createDataFrame(
+        [("doc-twojson", [("json_doc", "[]", None, 0), ("json_doc", "[]", None, 1)])],
+        DOCS_RAW_SCHEMA,
+    )
+    raw = docs_raw(spark, sf_dir, which="all").select("doc_id", "spans").unionByName(two_json)
+
+    def rows(df):
+        return {
+            r["doc_id"]: (r["spans"], r["conversion_method"], r["error"])
+            for r in df.collect()
+        }
+
+    via_bytes = rows(extract_binary(pack_raw(raw)))
+    via_rows = rows(extract_auto(raw))
     assert via_bytes == via_rows
-    assert all(m != "failed" for _, m in via_bytes.values())
+    assert via_bytes.pop("doc-twojson")[1] == "failed"
+    assert all(m != "failed" for _, m, _ in via_bytes.values())
 
 
 def test_corrupt_payload_degrades_to_failed_row(spark):

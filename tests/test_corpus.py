@@ -105,7 +105,7 @@ def test_arrow_datagen_matches_pandas(spark, sf_dir):
     )
     for skew in (False, True):
         arrow = docs.mapInArrow(
-            C._gen_batches_arrow(out_schema, skew), schema=out_schema
+            C._gen_batches_arrow(skew), schema=out_schema
         )
         pandas = docs.mapInPandas(
             C._gen_batches([f.name for f in out_schema.fields], skew),

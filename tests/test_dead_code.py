@@ -60,3 +60,26 @@ def test_no_unreferenced_library_definitions():
     assert len(defs) > 100, "library scan found too few definitions"
     dead = [f"{where} {name}" for where, name, own in defs if refs[name] == own]
     assert not dead, "unreferenced library definitions:\n" + "\n".join(dead)
+
+
+def test_spans_column_made_in_one_place():
+    """The Arrow spans column is assembled in one place:
+    pa.ListArray/StructArray.from_arrays are called only inside
+    model.spans_array."""
+    sites = []
+    for path in sorted((ROOT / PACKAGE).rglob("*.py")):
+        rel = str(path.relative_to(ROOT))
+        for top in ast.parse(path.read_text(), filename=rel).body:
+            for n in ast.walk(top):
+                f = n.func if isinstance(n, ast.Call) else None
+                if (
+                    isinstance(f, ast.Attribute)
+                    and f.attr == "from_arrays"
+                    and isinstance(f.value, ast.Attribute)
+                    and f.value.attr in ("ListArray", "StructArray")
+                ):
+                    sites.append((rel, getattr(top, "name", None), f.value.attr))
+    assert sorted(sites) == [
+        (f"{PACKAGE}/model.py", "spans_array", "ListArray"),
+        (f"{PACKAGE}/model.py", "spans_array", "StructArray"),
+    ], sites

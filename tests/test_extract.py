@@ -75,22 +75,22 @@ def test_multicolumn_reading_order():
 
 
 def test_extract_dataframes_roundtrip(spark, sf_dir):
-    """End-to-end through Spark mapInPandas on a small slice."""
+    """End-to-end through the Spark Arrow kernel on a small slice of
+    each format."""
     from pyspark.sql import functions as F
 
     from docling_fast_server_spark.corpus import docs_raw
-    from docling_fast_server_spark.operators.html_extract import extract_html
-    from docling_fast_server_spark.operators.pdf_layout import extract_pdf
+    from docling_fast_server_spark.operators.dispatch import extract_auto
 
     raw_html = docs_raw(spark, sf_dir, which="html").limit(20)
-    out = extract_html(raw_html).withColumn("n", F.size("spans"))
+    out = extract_auto(raw_html).withColumn("n", F.size("spans"))
     rows = out.collect()
     assert len(rows) == 20
     assert all(r["conversion_method"] == "default" for r in rows)
     assert all(r["n"] > 0 for r in rows)
 
     raw_pdf = docs_raw(spark, sf_dir, which="pdf").limit(20)
-    rows = extract_pdf(raw_pdf).collect()
+    rows = extract_auto(raw_pdf).collect()
     assert len(rows) == 20
     assert all(r["conversion_method"] in ("default", "limited") for r in rows)
 

@@ -202,9 +202,30 @@ def test_binary_extraction_plan_is_shuffle_free(spark, sf_dir):
 
     plan = _plan(extract_binary(pack_raw(docs_raw(spark, sf_dir))))
     assert "Exchange" not in plan, plan
-    # pack + parse+extract are MapInPandas; datagen is Arrow since r8
-    assert plan.count("MapInPandas") == 2
-    assert plan.count("MapInArrow") + plan.count("PythonMapInArrow") == 1
+    # only the fixture writer (pack_raw) is MapInPandas; datagen and
+    # parse+extract are the flat-column Arrow kernels
+    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") + plan.count("PythonMapInArrow") == 2
+
+
+def test_extraction_rows_use_no_pandas_kernel(spark, sf_dir):
+    """Every extraction registry row runs the one Arrow dispatch kernel:
+    no MapInPandas in the optimized plan, except the bytes row's fixture
+    writer (pack_raw), which makes its input rather than extracting."""
+    import __spark_entry__ as e
+
+    qs = e.queries()
+    for name in (
+        "extract_html_spans",
+        "extract_pdf_spans",
+        "extract_all_spans",
+        "extract_binary_spans",
+    ):
+        plan = qs[name](spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+        pandas_nodes = [l for l in plan.splitlines() if "MapInPandas" in l]
+        allowed = 1 if name == "extract_binary_spans" else 0
+        assert len(pandas_nodes) == allowed, f"{name}:\n{plan}"
+        assert all("_pack_batches" in l for l in pandas_nodes), f"{name}:\n{plan}"
 
 
 def test_similarity_topk_pushdown_and_broadcasts(spark, sf_dir):
