@@ -4,20 +4,22 @@ The reference carries media as document items with refs (pictures/tables
 pools, /root/reference/output.json:1) and classifies/describes them
 (pdf_processor.py:135-141, picture classification + remote captioning).
 Here media payloads are opaque BinaryType columns keyed by media_ref, with
-decode / feature-extract implemented over mapInPandas so the Spark-side
-plumbing (schema, partitioning, Arrow batch shape) is real and tested.
+synthesis / feature-extract / transform kernels over mapInArrow so the
+Spark-side plumbing (schema, partitioning, Arrow batch shape) is real
+and tested.
 
 Every synthesized payload decodes through a REAL parser (BMP; PNG via
 zlib inflate; GIF via variable-width LZW; baseline JPEG via Huffman +
-IDCT; CSV tables via stdlib csv), so no deterministic stand-in remains:
-a payload in any OTHER format raises ValueError exactly like a malformed
-container (the per-row degrade contract) rather than fabricating
-features. Foreign formats are supported by swapping a real batch
-decoder (PIL/libvips) in through the injection seam — the `decoder`
-parameter of extract_media_features / transform_media replaces the
-whole dispatch; the surrounding Spark code does not change. The remote
-captioning analog (K7) stays excluded, as the reference itself runs
-without it (pdf_processor.py:144-166 limited pipeline).
+IDCT; CSV tables via stdlib csv), all behind one per-payload decode,
+_decode_one. A payload in any OTHER format raises ValueError exactly
+like a malformed container rather than fabricating features, and that
+error is not degraded per row: it fails the whole query, loudly.
+Foreign formats are supported by injecting a real decoder (PIL/libvips)
+as the `decoder` parameter of extract_media_features / transform_media
+— one contract, (media_kind, payload) -> (width, height, stream) — and
+the surrounding Spark code does not change. The remote captioning
+analog (K7) stays excluded, as the reference itself runs without it
+(pdf_processor.py:144-166 limited pipeline).
 """
 
 from __future__ import annotations
@@ -25,8 +27,7 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -91,11 +92,6 @@ def _decode_bmp_pixels(b: bytes) -> tuple[int, int, bytes]:
         px += b[offset + r * rowsize : offset + r * rowsize + 3 * w]
     return w, height, bytes(px)
 
-
-def _decode_bmp(b: bytes) -> tuple[int, int, int]:
-    """(width, height, sum of decoded pixel bytes) — see _decode_bmp_pixels."""
-    w, h, px = _decode_bmp_pixels(b)
-    return w, h, sum(px)
 
 
 # ---------------------------------------------------------------------------
@@ -244,11 +240,6 @@ def _decode_png_pixels(b: bytes) -> tuple[int, int, bytes]:
         prev = row
     return w, h, bytes(px)
 
-
-def _decode_png(b: bytes) -> tuple[int, int, int]:
-    """(width, height, sum of decoded pixel bytes) — see _decode_png_pixels."""
-    w, h, px = _decode_png_pixels(b)
-    return w, h, sum(px)
 
 
 # ---------------------------------------------------------------------------
@@ -446,11 +437,6 @@ def _decode_gif_pixels(b: bytes) -> tuple[int, int, bytes]:
         px += table[3 * i : 3 * i + 3]
     return w, h, bytes(px)
 
-
-def _decode_gif(b: bytes) -> tuple[int, int, int]:
-    """(width, height, sum of decoded RGB bytes) — see _decode_gif_pixels."""
-    w, h, px = _decode_gif_pixels(b)
-    return w, h, sum(px)
 
 
 # ---------------------------------------------------------------------------
@@ -836,11 +822,6 @@ def _decode_jpeg_pixels(b: bytes) -> tuple[int, int, bytes]:
     return w, h, np.repeat(gray.reshape(-1), 3).tobytes()
 
 
-def _decode_jpeg(b: bytes) -> tuple[int, int, int]:
-    """(width, height, sum of decoded RGB bytes) — see _decode_jpeg_pixels."""
-    w, h, px = _decode_jpeg_pixels(b)
-    return w, h, int(sum(px))
-
 
 # ---------------------------------------------------------------------------
 # real TABLE container (CSV, stdlib csv module) — table-kind media rows
@@ -857,10 +838,10 @@ def _decode_jpeg(b: bytes) -> tuple[int, int, int]:
 #   cell k (row-major) = 'v' + str((seed + 7k) % 100)  (2 or 3 bytes)
 #   file = stream + rows*cols separator bytes ((cols-1) commas + 1
 #          newline per row)
-# Degrade contract: non-UTF-8, empty, and ragged (inconsistent column
-# count) containers raise ValueError. Like JPEG's entropy stream, CSV
-# carries no checksum, so a corruption that still parses as a rectangular
-# table is indistinguishable from data by design.
+# Non-UTF-8, empty, and ragged (inconsistent column count) containers
+# raise ValueError, which fails the query (see _decode_one). Like JPEG's
+# entropy stream, CSV carries no checksum, so a corruption that still
+# parses as a rectangular table is indistinguishable from data by design.
 # ---------------------------------------------------------------------------
 import csv as _csv
 import io as _io
@@ -903,10 +884,78 @@ def _decode_table_cells(b: bytes) -> tuple[int, int, bytes]:
     return ncols, len(rows), stream
 
 
-def _decode_table(b: bytes) -> tuple[int, int, int]:
-    """(n_cols, n_rows, sum of decoded cell-text bytes)."""
-    w, h, stream = _decode_table_cells(b)
-    return w, h, sum(stream)
+# ---------------------------------------------------------------------------
+# the media kernels: one encoder tuple, one per-payload decode, one
+# per-batch decode loop, and flat Arrow batches in and out (mapInArrow)
+# ---------------------------------------------------------------------------
+_IMAGE_ENCODERS = (_encode_bmp, _encode_png, _encode_jpeg, _encode_gif)  # seed % 4
+
+_IMAGE_DECODERS = (  # magic bytes -> decoder; the prefixes are disjoint
+    (b"BM", _decode_bmp_pixels),
+    (b"\x89PNG\r\n\x1a\n", _decode_png_pixels),
+    (b"GIF87a", _decode_gif_pixels),
+    (b"GIF89a", _decode_gif_pixels),
+    (b"\xff\xd8", _decode_jpeg_pixels),
+)
+
+_ARROW_TYPES = {
+    "string": pa.string(),
+    "binary": pa.binary(),
+    "integer": pa.int32(),
+    "long": pa.int64(),
+}
+
+
+def _rows_batch(rows: list, schema: T.StructType) -> pa.RecordBatch:
+    """One `schema` Arrow batch from per-row tuples in field order."""
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(c, type=_ARROW_TYPES[f.dataType.typeName()])
+            for c, f in zip(cols, schema.fields)
+        ],
+        names=schema.fieldNames(),
+    )
+
+
+def _decode_one(kind: str, payload: bytes) -> tuple[int, int, bytes]:
+    """The one per-payload media decode -> (width, height, stream),
+    routed on the TYPED media_kind column (decode by declared content
+    type): table rows through the csv parser (columns, rows, cell
+    texts), image rows by magic bytes through the codec parsers (decoded
+    pixel bytes). Any other image format raises ValueError like a
+    malformed container; neither is degraded per row — the error escapes
+    the kernel and fails the query."""
+    if kind != "image":
+        return _decode_table_cells(payload)
+    for magic, decode in _IMAGE_DECODERS:
+        if payload.startswith(magic):
+            return decode(payload)
+    raise ValueError("unsupported image container (inject a real decoder)")
+
+
+def _decoded(batch: pa.RecordBatch, decode) -> Iterator[tuple]:
+    """The one per-batch decode loop: per media row, (media_ref,
+    media_kind, payload, (width, height, stream))."""
+    refs, kinds, payloads = (
+        batch.column(c).to_pylist() for c in ("media_ref", "media_kind", "payload")
+    )
+    for ref, kind, payload in zip(refs, kinds, payloads):
+        yield ref, kind, payload, decode(kind, payload)
+
+
+def _media_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for b in batches:
+        rows = []
+        refs, kinds = b.column("media_ref").to_pylist(), b.column("kind").to_pylist()
+        for ref, kind in zip(refs, kinds):
+            seed = sum(ref.encode())
+            if kind == "picture":
+                kind, payload = "image", _IMAGE_ENCODERS[seed % 4](seed)
+            else:
+                kind, payload = "table", _encode_table_csv(seed)
+            rows.append((ref, kind, payload, len(payload)))
+        yield _rows_batch(rows, MEDIA_SCHEMA)
 
 
 def synthesize_media_table(spark, extracted: DataFrame) -> DataFrame:
@@ -922,164 +971,34 @@ def synthesize_media_table(spark, extracted: DataFrame) -> DataFrame:
         .filter(F.col("media_ref").isNotNull())
         .distinct()
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, kind in zip(pdf["media_ref"], pdf["kind"]):
-                seed = sum(ref.encode())
-                if kind == "picture":
-                    if seed % 4 == 0:
-                        payload = _encode_bmp(seed)
-                    elif seed % 4 == 1:
-                        payload = _encode_png(seed)
-                    elif seed % 4 == 2:
-                        payload = _encode_jpeg(seed)
-                    else:
-                        payload = _encode_gif(seed)
-                else:
-                    payload = _encode_table_csv(seed)
-                rows.append(
-                    {
-                        "media_ref": ref,
-                        "media_kind": "image" if kind == "picture" else "table",
-                        "payload": payload,
-                        "n_bytes": len(payload),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return refs.mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return refs.mapInArrow(_media_arrow, schema=MEDIA_SCHEMA)
 
 
-def _decode_image_batch(payloads: pd.Series) -> pd.DataFrame:
-    """Batch decode: BMP, PNG, GIF, and JPEG payloads take the REAL
-    parsers (_decode_bmp / _decode_png / _decode_gif / _decode_jpeg —
-    width/height from the headers, checksum = sum of decoded pixel bytes,
-    PNG through genuine zlib inflate + filter reversal, GIF through
-    genuine LZW inflate + palette expansion, JPEG through genuine Huffman
-    entropy decode + IDCT); any other format raises ValueError like a
-    malformed container — the per-row degrade contract (a production
-    build swaps a PIL/libvips batch decoder in through the `decoder`
-    injection seam for those formats)."""
-    out = {"width": [], "height": [], "checksum": []}
-    for p in payloads:
-        b = bytes(p)
-        if b[:2] == b"BM":
-            w, h, csum = _decode_bmp(b)
-        elif b[:8] == b"\x89PNG\r\n\x1a\n":
-            w, h, csum = _decode_png(b)
-        elif b[:6] in (b"GIF87a", b"GIF89a"):
-            w, h, csum = _decode_gif(b)
-        elif b[:2] == b"\xff\xd8":
-            w, h, csum = _decode_jpeg(b)
-        else:
-            raise ValueError("unsupported image container (inject a real decoder)")
-        out["width"].append(w)
-        out["height"].append(h)
-        out["checksum"].append(csum)
-    return pd.DataFrame(out)
+def _features_arrow(decode):
+    """Features kernel over `decode`: checksum = sum of the decoded stream."""
 
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            rows = _decoded(b, decode)
+            yield _rows_batch(
+                [(ref, kind, w, h, sum(s)) for ref, kind, _, (w, h, s) in rows],
+                FEATURE_SCHEMA,
+            )
 
-def _decode_table_batch(payloads: pd.Series) -> pd.DataFrame:
-    """Batch decode for table-kind media: REAL csv parse per payload
-    (width = columns, height = rows, checksum = sum of decoded
-    cell-text bytes)."""
-    out = {"width": [], "height": [], "checksum": []}
-    for p in payloads:
-        w, h, csum = _decode_table(bytes(p))
-        out["width"].append(w)
-        out["height"].append(h)
-        out["checksum"].append(csum)
-    return pd.DataFrame(out)
-
-
-def _decode_by_kind(pdf: pd.DataFrame, image_fn, table_fn) -> pd.DataFrame:
-    """Default decode dispatch on the TYPED metadata column — the
-    object-store reality (decode is routed by declared content type,
-    not by sniffing): image rows through the codec decoders, table rows
-    through the csv parser, order preserved."""
-    is_img = (pdf["media_kind"] == "image").to_numpy()
-    parts = []
-    if is_img.any():
-        parts.append(image_fn(pdf.loc[is_img, "payload"]).set_index(pdf.index[is_img]))
-    if (~is_img).any():
-        parts.append(
-            table_fn(pdf.loc[~is_img, "payload"]).set_index(pdf.index[~is_img])
-        )
-    if not parts:  # zero-row Arrow batch: pd.concat([]) would raise
-        return image_fn(pdf["payload"])
-    return pd.concat(parts).loc[pdf.index]
-
-
-def _decode_pixels_batch(payloads: pd.Series) -> pd.DataFrame:
-    """Batch decode to the DECODED byte stream: BMP/PNG/GIF/JPEG payloads
-    take the real parsers (_decode_*_pixels); any other format raises
-    ValueError like a malformed container (per-row degrade contract).
-    Production swaps a PIL/libvips batch decoder in through the
-    injection seam, returning the same (width, height, pixels) frame."""
-    out = {"width": [], "height": [], "pixels": []}
-    for p in payloads:
-        b = bytes(p)
-        if b[:2] == b"BM":
-            w, h, px = _decode_bmp_pixels(b)
-        elif b[:8] == b"\x89PNG\r\n\x1a\n":
-            w, h, px = _decode_png_pixels(b)
-        elif b[:6] in (b"GIF87a", b"GIF89a"):
-            w, h, px = _decode_gif_pixels(b)
-        elif b[:2] == b"\xff\xd8":
-            w, h, px = _decode_jpeg_pixels(b)
-        else:
-            raise ValueError("unsupported image container (inject a real decoder)")
-        out["width"].append(w)
-        out["height"].append(h)
-        out["pixels"].append(px)
-    return pd.DataFrame(out)
-
-
-def _decode_table_pixels_batch(payloads: pd.Series) -> pd.DataFrame:
-    """Table analog of _decode_pixels_batch: the decoded stream is the
-    concatenated cell texts (content, not container)."""
-    out = {"width": [], "height": [], "pixels": []}
-    for p in payloads:
-        w, h, stream = _decode_table_cells(bytes(p))
-        out["width"].append(w)
-        out["height"].append(h)
-        out["pixels"].append(stream)
-    return pd.DataFrame(out)
+    return run
 
 
 def extract_media_features(media: DataFrame, decoder=None) -> DataFrame:
-    """Media table -> per-media features via mapInPandas (Arrow-batched;
-    one Python worker init per executor — the warmup pattern).
+    """Media table -> per-media (width, height, checksum) via mapInArrow.
 
-    `decoder` is the production swap-in seam: any callable
-    (payloads: pd.Series) -> pd.DataFrame[width, height, checksum] — a
-    PIL/libvips batch decoder in production, replacing the ENTIRE
-    default dispatch when provided. The default routes on the typed
-    media_kind column (_decode_by_kind): image rows through the codec
-    decoders, table rows through the real csv parser. The seam is
-    itself tested with an injected decoder
-    (test_multimodal.test_decoder_injection_seam), so swapping the real
-    one in changes no Spark-side code."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decoder is not None:
-                feats = decoder(pdf["payload"])
-            else:
-                feats = _decode_by_kind(pdf, _decode_image_batch, _decode_table_batch)
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "media_kind": pdf["media_kind"],
-                    "width": feats["width"].astype("int32"),
-                    "height": feats["height"].astype("int32"),
-                    "checksum": feats["checksum"].astype("int64"),
-                }
-            )
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
+    `decoder` is the production swap-in seam: a callable
+    (media_kind, payload: bytes) -> (width, height, stream), e.g. a
+    PIL/libvips decoder, that replaces _decode_one when given. The seam
+    is tested with an injected decoder
+    (test_multimodal.test_decoder_injection_seam)."""
+    return media.mapInArrow(
+        _features_arrow(decoder or _decode_one), schema=FEATURE_SCHEMA
+    )
 
 
 def q_media_inventory(spark, sf_dir):
@@ -1240,10 +1159,11 @@ def oracle_media_features() -> str:
 # ---------------------------------------------------------------------------
 # resize + frame-sample transform kernel — the remaining multimodal
 # plumbing (schema, Arrow batch shape, integer-exact geometry) over the
-# REAL decoded streams (same codec dispatch + degrade contract as decode)
+# REAL decoded streams (the same _decode_one, and the same loud failure
+# on a payload it rejects)
 # ---------------------------------------------------------------------------
 RESIZE_MAX_DIM = 128
-FRAME_BYTES = 64  # treat the payload as a sequence of 64-byte "frames"
+FRAME_BYTES = 64  # treat the decoded stream as a sequence of 64-byte "frames"
 FRAME_STRIDE = 4  # keep every 4th frame
 
 
@@ -1262,83 +1182,59 @@ TRANSFORMS_SCHEMA = T.StructType(
 )
 
 
-def transform_media(
-    media: DataFrame,
-    max_dim: int = RESIZE_MAX_DIM,
-    frame_bytes: int = FRAME_BYTES,
-    stride: int = FRAME_STRIDE,
-    decoder=None,
-) -> DataFrame:
-    """Resize geometry + frame sampling in ONE Arrow-batched pass (the
-    per-payload work shares the decode, and a single registry row keeps
-    the whole query surface inside the driver gate's 50-entry check
-    budget — round 2 registered resize and frame-sample as entries 51
-    and 52, the only two operators the gate never checked).
+def _transform_row(ref: str, payload: bytes, w: int, h: int, stream: bytes) -> tuple:
+    """One TRANSFORMS_SCHEMA row: bounded-box resize geometry, the
+    payload size scaled by the area ratio, and every FRAME_STRIDE-th
+    FRAME_BYTES frame of the decoded stream summed."""
+    big = max(w, h)
+    if big <= RESIZE_MAX_DIM:
+        nw, nh = w, h
+    else:
+        nw, nh = w * RESIZE_MAX_DIM // big, h * RESIZE_MAX_DIM // big
+    n_frames = len(stream) // FRAME_BYTES
+    sampled = range(0, n_frames, FRAME_STRIDE)
+    csum = sum(sum(stream[f * FRAME_BYTES : (f + 1) * FRAME_BYTES]) for f in sampled)
+    resized = max(1, len(payload) * (nw * nh) // (w * h))
+    return ref, w, h, nw, nh, resized, n_frames, len(sampled), csum
 
-    Frame sampling runs over the DECODED byte stream (r5 verdict item
-    3): the observable contract is content, not container — the
-    reference's picture pipeline exposes decoded items, not file bytes
+
+def _transforms_arrow(decode):
+    """Transforms kernel over `decode` (see _transform_row)."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            yield _rows_batch(
+                [_transform_row(ref, p, *d) for ref, _, p, d in _decoded(b, decode)],
+                TRANSFORMS_SCHEMA,
+            )
+
+    return run
+
+
+def transform_media(media: DataFrame, decoder=None) -> DataFrame:
+    """Resize geometry + frame sampling in ONE Arrow-batched pass that
+    shares the decode (one registry row for both transforms).
+
+    Frame sampling runs over the DECODED byte stream: the observable
+    contract is content, not container — the reference's picture
+    pipeline exposes decoded items, not file bytes
     (/root/reference/output.json:1 .pictures) — and decoded bytes have
     a closed form for EVERY codec (BMP/PNG/GIF pixel k is
     (seed + 7k) % 256; JPEG rows follow the flat-block law), so the
     DuckDB oracle value-checks all four container formats, with no
-    format sniffing anywhere. Non-container payloads pass through the
-    identity decode (their bytes ARE the stream).
-    ``decoder``: (payloads) -> DataFrame[width, height, pixels] — the
-    production PIL/libvips swap-in seam."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TRANSFORMS_SCHEMA.fields]
-        for pdf in batches:
-            if decoder is not None:
-                feats = decoder(pdf["payload"])
-            else:
-                feats = _decode_by_kind(
-                    pdf, _decode_pixels_batch, _decode_table_pixels_batch
-                )
-            out = {k: [] for k in cols}
-            for ref, p, w, h, px in zip(
-                pdf["media_ref"],
-                pdf["payload"],
-                feats["width"],
-                feats["height"],
-                feats["pixels"],
-            ):
-                w, h = int(w), int(h)
-                big = max(w, h)
-                if big <= max_dim:
-                    nw, nh = w, h
-                else:
-                    nw, nh = w * max_dim // big, h * max_dim // big
-                n = len(bytes(p))
-                b = bytes(px)
-                n_frames = len(b) // frame_bytes
-                sampled = range(0, n_frames, stride)
-                csum = sum(
-                    sum(b[f * frame_bytes : (f + 1) * frame_bytes]) for f in sampled
-                )
-                out["media_ref"].append(ref)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["new_width"].append(nw)
-                out["new_height"].append(nh)
-                out["n_bytes_resized"].append(max(1, n * (nw * nh) // (w * h)))
-                out["n_frames"].append(n_frames)
-                out["n_sampled"].append(len(sampled))
-                out["sample_checksum"].append(csum)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=TRANSFORMS_SCHEMA)
+    format sniffing anywhere. ``decoder``: the same seam as
+    extract_media_features."""
+    return media.mapInArrow(
+        _transforms_arrow(decoder or _decode_one), schema=TRANSFORMS_SCHEMA
+    )
 
 
 def q_media_transforms(spark, sf_dir):
     """Resize/frame-sample over EVERY media row — BMP, PNG, GIF, JPEG
-    images and CSV tables alike. Since r6 the frame sampler reads the
-    DECODED stream (transform_media), whose bytes are closed-form for
-    every container, so the DuckDB oracle value-checks the full table
-    with no format sniffing (r5 verdict item 3; the r5 query filtered
-    PNGs out by magic because file-domain sampling hit their CRC/adler
-    words)."""
+    images and CSV tables alike. The frame sampler reads the DECODED
+    stream (transform_media), whose bytes are closed-form for every
+    container, so the DuckDB oracle value-checks the full table with no
+    format sniffing."""
     from ..queries import extract_all
 
     media = synthesize_media_table(spark, extract_all(spark, sf_dir))

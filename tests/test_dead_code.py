@@ -83,3 +83,18 @@ def test_spans_column_made_in_one_place():
         (f"{PACKAGE}/model.py", "spans_array", "ListArray"),
         (f"{PACKAGE}/model.py", "spans_array", "StructArray"),
     ], sites
+
+
+def test_pandas_map_only_in_the_fixture_writer():
+    """The package's kernels run over Arrow batches: .mapInPandas( is
+    called only inside binary_pack.pack_raw, the fixture writer that
+    makes the bytes path's input."""
+    sites = []
+    for path in sorted((ROOT / PACKAGE).rglob("*.py")):
+        rel = str(path.relative_to(ROOT))
+        for top in ast.parse(path.read_text(), filename=rel).body:
+            for n in ast.walk(top):
+                f = n.func if isinstance(n, ast.Call) else None
+                if isinstance(f, ast.Attribute) and f.attr == "mapInPandas":
+                    sites.append((rel, getattr(top, "name", None)))
+    assert sites == [(f"{PACKAGE}/sources/binary_pack.py", "pack_raw")], sites

@@ -228,6 +228,19 @@ def test_extraction_rows_use_no_pandas_kernel(spark, sf_dir):
         assert all("_pack_batches" in l for l in pandas_nodes), f"{name}:\n{plan}"
 
 
+def test_media_rows_use_no_pandas_kernel(spark, sf_dir):
+    """The media registry rows (synthesis, features, transforms) run
+    their kernels over Arrow batches: no MapInPandas in the optimized
+    plan."""
+    import __spark_entry__ as e
+
+    qs = e.queries()
+    for name in ("media_inventory", "media_features", "media_transforms"):
+        plan = qs[name](spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+        assert "MapInPandas" not in plan, f"{name}:\n{plan}"
+        assert "MapInArrow" in plan, f"{name}:\n{plan}"
+
+
 def test_similarity_topk_pushdown_and_broadcasts(spark, sf_dir):
     """All three similarity strategies must keep the rank<=k pushdown
     (WindowGroupLimit) and broadcast their small side; none may add

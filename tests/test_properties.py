@@ -318,13 +318,13 @@ def test_poly_hash_unicode_safe_and_cross_engine(spark):
 def test_png_decoder_roundtrip_any_image(w, h, seed, filters, level):
     """Property: for ANY pixel grid, ANY per-row filter assignment
     (all five public types), and ANY deflate level, a spec-conformant
-    PNG encodes such that _decode_png recovers exact dims and the exact
+    PNG encodes such that _decode_png_pixels recovers exact dims and the exact
     decoded pixel sum. The production encoder only emits filters 0-2 at
     level 0 — this pins the decoder's full generality."""
     import struct
     import zlib
 
-    from docling_fast_server_spark.operators.multimodal import _decode_png
+    from docling_fast_server_spark.operators.multimodal import _decode_png_pixels
 
     rng = random.Random(seed)
     stride = 3 * w
@@ -365,7 +365,8 @@ def test_png_decoder_roundtrip_any_image(w, h, seed, filters, level):
         + chunk(b"IDAT", zlib.compress(bytes(raw), level))
         + chunk(b"IEND", b"")
     )
-    assert _decode_png(f) == (w, h, sum(sum(r) for r in pix))
+    dw, dh, px = _decode_png_pixels(f)
+    assert (dw, dh, sum(px)) == (w, h, sum(sum(r) for r in pix))
 
 
 def test_banded_buckets_kernel_matches_hof_reference(spark, sf_dir):
