@@ -14,9 +14,16 @@ Mirrokni, Rastogi, Vassilvitskii, "Connected Components in MapReduce
 and Beyond", ACM SoCC'14 — the algorithm behind GraphFrames/GraphX CC).
 Edge-list-only: every round is one map-side-combinable groupBy(min)
 plus one join over (id, id) edges, converging in O(log^2 n) rounds.
-There is no vertex-centric state, no driver-side graph and no collect;
-the driver loop iterates over ROUNDS, never rows, so the operator
-scales to 10^12 edges exactly as far as a groupBy/join does.
+There is no vertex-centric state; the driver loop iterates over ROUNDS,
+never rows, so the operator scales to 10^12 edges exactly as far as a
+groupBy/join does.
+
+Size route: every round costs about two Spark jobs whatever the edge
+count, so a small graph is not worth distributing. `connected_components`
+counts the edge list first; at or under DRIVER_EDGES edges it collects
+the list as Arrow and labels it on the driver with a union-find (one
+count job plus one collect, no checkpoint files, no lineage cut), and
+only above the constant does it run the rounds described here.
 
 Memory/lineage discipline for the iteration — the part that makes
 iterative DataFrame algorithms viable at all: each round references
@@ -46,14 +53,24 @@ answer).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .dedup import (
     MINHASH_BUCKET_CAP,
+    _register_cache,
     _register_handle,
     minhash_pairs,
     mutated_corpus,
 )
+
+# Edge lists of at most this many rows are labelled on the driver (see
+# connected_components): 2^16 (id, id) pairs are about 1 MiB of Arrow
+# and take well under a second of union-find, while the rounds route
+# spends ~2 jobs per large/small-star cycle (24 jobs for a 59-edge
+# near-dup graph).
+DRIVER_EDGES = 1 << 16
 
 
 def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -277,6 +294,41 @@ def cc_fixpoint(
     )
 
 
+def _min_root_labels(src: list, dst: list) -> tuple[list, list]:
+    """(nodes, components) of the edge list src[i]--dst[i]: a
+    path-halving union-find whose root is always the minimum id of its
+    set. A None endpoint adds no edge, and None itself is labelled None
+    (the rounds route's null group)."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    has_null = False
+    for u, v in zip(src, dst):
+        has_null |= u is None or v is None
+        roots = sorted({find(x) for x in (u, v) if x is not None})
+        if len(roots) == 2:
+            parent[roots[1]] = roots[0]
+    nodes = list(parent)
+    comps = [find(n) for n in nodes]
+    if has_null:
+        nodes.append(None)
+        comps.append(None)
+    return nodes, comps
+
+
+def _ids(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both endpoint columns stacked as one `node` column."""
+    return edges.select(F.col(src).alias("node")).unionAll(
+        edges.select(F.col(dst).alias("node"))
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
@@ -286,15 +338,46 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) for every node appearing in `edges`, where
     component = the minimum node id reachable from it. Nodes whose only
-    edges are self-loops are their own component. Works for any
-    orderable id type (the tests run int64; string ids order
-    lexicographically)."""
-    stars, _ = cc_fixpoint(edges, src, dst, max_rounds, checkpoint_interval)
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionAll(edges.select(F.col(dst).alias("node")))
-        .distinct()
+    edges are self-loops are their own component; a null endpoint adds
+    no edge and yields one (null, null) row. Works for any orderable id
+    type (the tests run int64; string ids order lexicographically); both
+    columns come out as the wider of the two endpoint types.
+
+    Routes on the edge count (module docstring): at most DRIVER_EDGES
+    edges are labelled on the driver and returned as a local Arrow-built
+    frame; above it the large/small-star rounds run, and only there do
+    `max_rounds` and `checkpoint_interval` apply. The (src, dst)
+    projection is persisted once and registered for clear_caches, so the
+    count, the collect or the rounds seed, and the node list all read
+    one evaluation of `edges`."""
+    id_field = _ids(edges, src, dst).schema["node"]
+    proj = _register_cache(
+        edges.select(
+            F.col(src).cast(id_field.dataType).alias(src),
+            F.col(dst).cast(id_field.dataType).alias(dst),
+        )
     )
+    # one job that also fills the cache; DataFrame.count() would add an
+    # AQE aggregate stage (3 jobs on a 4-partition input)
+    if proj._jdf.queryExecution().toRdd().count() <= DRIVER_EDGES:
+        tbl = proj.toArrow()
+        nodes, comps = _min_root_labels(
+            tbl.column(src).to_pylist(), tbl.column(dst).to_pylist()
+        )
+        id_type = tbl.schema.field(src).type
+        return proj.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "node": pa.array(nodes, id_type),
+                    "component": pa.array(comps, id_type),
+                }
+            ),
+            StructType(
+                [id_field, StructField("component", id_field.dataType, True)]
+            ),
+        )
+    stars, _ = cc_fixpoint(proj, src, dst, max_rounds, checkpoint_interval)
+    nodes = _ids(proj, src, dst).distinct()
     members = stars.select(F.col("u").alias("node"), F.col("v").alias("cmp"))
     return (
         nodes.join(members, "node", "left")
@@ -318,12 +401,16 @@ def dedup_clusters(
     Production entry point, so it requires-or-defaults a RELIABLE
     checkpoint directory (ensure_checkpoint_dir): a multi-round fixpoint
     running on localCheckpoint blocks alone dies with the first lost
-    executor; `checkpoint_dir` overrides the default."""
+    executor; `checkpoint_dir` overrides the default. The rounds, and
+    so the directory, are used only above DRIVER_EDGES pairs; a smaller
+    pair graph is labelled on the driver and writes no checkpoint
+    files (its one collect is retried from intact lineage)."""
     ensure_checkpoint_dir(spark, checkpoint_dir)
     corpus = mutated_corpus(spark, sf_dir)
     pairs = minhash_pairs(corpus, bucket_cap)
-    # interval 1 = the fully durable fixpoint (see cc_fixpoint): every
-    # round file-backed, block loss recovers instead of failing the run
+    # above DRIVER_EDGES, interval 1 = the fully durable fixpoint (see
+    # cc_fixpoint): every round file-backed, block loss recovers instead
+    # of failing the run
     labels = connected_components(pairs, checkpoint_interval=1)
     return (
         corpus.select(F.col("doc_id").alias("node"))
@@ -372,7 +459,8 @@ def update_clusters(
     (queue_manager.py:917-929) rather than rescanning the job table.
 
     Production entry point — requires-or-defaults a RELIABLE checkpoint
-    directory exactly like dedup_clusters."""
+    directory exactly like dedup_clusters; `max_rounds` and
+    `checkpoint_interval` apply only above DRIVER_EDGES edges."""
     ensure_checkpoint_dir(labels.sparkSession, checkpoint_dir)
     prev = labels.select(
         F.col("node").alias(src), F.col("component").alias(dst)

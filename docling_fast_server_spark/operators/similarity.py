@@ -109,6 +109,11 @@ def _norm(a):
 # ~ 10k vectors at the n^2/QUERY_MOD pair count. Both forms are
 # bit-identical (IEEE left-to-right association from a 0.0 seed), so the
 # route can never change a result — pinned by test_dot_route_equivalence.
+# The "fixed per-execution codegen cost" above was measured while the
+# generated-class cache held Spark's default 100 entries and evicted the
+# scored stage's class between executions; session.get_spark now sizes
+# the cache to hold it, so a repeated execution may no longer pay the
+# compile and the crossover is due a re-measurement (ROADMAP).
 CODEGEN_MIN_ROWS = 10_000
 
 

@@ -66,6 +66,14 @@ def get_spark(
         # same discipline: one compute thread per python worker
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.python.worker.reuse", "true")
+        # generated-class cache sized to the working set, so a repeated
+        # plan reuses its compiled class instead of recompiling it with
+        # Janino and re-JITting it: the 50-query registry at sf0.001
+        # generates about 570 distinct classes, and a perfbench
+        # corpus_prep pass recompiles 174 classes at the default of 100
+        # entries and none at 2048. Static conf: only the builder can
+        # set it.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
     )
     if warehouse:
         b = b.config("spark.sql.warehouse.dir", warehouse)

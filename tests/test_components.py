@@ -6,7 +6,15 @@ pytest-gated the same way bucket_tripwire is: the oracle lives inside
 the test (DuckDB WITH RECURSIVE min-label closure over the identical
 edge list), which checks VALUES, not just row counts — stronger than
 the driver's rows-only fallback for iterative operators.
+
+connected_components routes on the edge count: graphs of at most
+DRIVER_EDGES edges are labelled on the driver, larger ones run the
+large/small-star rounds. Every test graph here is small, so the oracle
+differentials run each case under both ROUTES, forcing the rounds route
+by lowering the constant below any edge count.
 """
+
+import contextlib
 
 import duckdb
 import pandas as pd
@@ -42,15 +50,38 @@ def _oracle_cc(edge_rows):
     return sorted((int(n), int(c)) for n, c in out)
 
 
-def _spark_cc(spark, edge_rows, **kw):
+ROUTES = ("driver", "rounds")
+
+
+@contextlib.contextmanager
+def _route(route):
+    """Run connected_components on the named route: "driver" keeps the
+    module constant; "rounds" lowers it below any edge count (the empty
+    graph included)."""
+    with pytest.MonkeyPatch.context() as mp:
+        if route == "rounds":
+            mp.setattr(components, "DRIVER_EDGES", -1)
+        yield
+
+
+def _cc_rows(df, route="driver", **kw):
+    """(output schema, (node, component) rows sorted with null last) of
+    connected_components on the named route."""
+    try:
+        with _route(route):
+            out = components.connected_components(df, **kw)
+            schema, rows = out.schema, out.collect()
+    finally:
+        dedup.clear_caches(df.sparkSession)
+    key = lambda r: (r[0] is None, r[0] or 0)  # noqa: E731
+    return schema, sorted(((r["node"], r["component"]) for r in rows), key=key)
+
+
+def _spark_cc(spark, edge_rows, route="driver", **kw):
     df = spark.createDataFrame(
         pd.DataFrame(edge_rows, columns=["doc_a", "doc_b"])
     )
-    try:
-        got = components.connected_components(df, **kw).collect()
-    finally:
-        dedup.clear_caches(spark)
-    return sorted((int(r["node"]), int(r["component"])) for r in got)
+    return [(int(n), int(c)) for n, c in _cc_rows(df, route, **kw)[1]]
 
 
 def test_cc_matches_oracle_on_pseudo_random_graph(spark):
@@ -60,7 +91,8 @@ def test_cc_matches_oracle_on_pseudo_random_graph(spark):
     edges = [((i * 7919) % 300, (i * 104729) % 300) for i in range(180)]
     edges += [(b, a) for a, b in edges[:40]]  # reversed duplicates
     edges += [(n, n) for n in (900, 901)]  # self-loop-only nodes
-    assert _spark_cc(spark, edges) == _oracle_cc(edges)
+    for route in ROUTES:
+        assert _spark_cc(spark, edges, route) == _oracle_cc(edges), route
 
 
 def test_cc_chain_worst_diameter(spark):
@@ -82,14 +114,12 @@ def test_cc_chain_worst_diameter(spark):
 
 def test_cc_clique_star_and_empty(spark):
     clique = [(a, b) for a in range(20) for b in range(a + 1, 20)]
-    assert _spark_cc(spark, clique) == [(i, 0) for i in range(20)]
     star = [(7, v) for v in range(8, 40)]
-    assert _spark_cc(spark, star) == _oracle_cc(star)
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    try:
-        assert components.connected_components(empty).count() == 0
-    finally:
-        dedup.clear_caches(spark)
+    for route in ROUTES:
+        assert _spark_cc(spark, clique, route) == [(i, 0) for i in range(20)]
+        assert _spark_cc(spark, star, route) == _oracle_cc(star), route
+        assert _cc_rows(empty, route)[1] == [], route
 
 
 def test_cc_orientation_and_duplication_invariant(spark):
@@ -97,7 +127,8 @@ def test_cc_orientation_and_duplication_invariant(spark):
     encoding: reversing and duplicating every edge changes nothing."""
     base = [((i * 31) % 97, (i * 57) % 97) for i in range(60)]
     noisy = base + [(b, a) for a, b in base] + base
-    assert _spark_cc(spark, base) == _spark_cc(spark, noisy)
+    for route in ROUTES:
+        assert _spark_cc(spark, base, route) == _spark_cc(spark, noisy, route)
 
 
 def _restore_checkpoint_dir(sc, prev):
@@ -114,13 +145,14 @@ def _restore_checkpoint_dir(sc, prev):
 
 def test_cc_checkpoint_path(spark, tmp_path):
     """With a checkpoint dir configured (the production setting) the
-    periodic reliable checkpoint engages and the result is unchanged."""
+    periodic reliable checkpoint of the rounds route engages and the
+    result is unchanged."""
     sc = spark.sparkContext
     prev = sc.getCheckpointDir()
     sc.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
         edges = [(i, i + 1) for i in range(120)]
-        got = _spark_cc(spark, edges, checkpoint_interval=2)
+        got = _spark_cc(spark, edges, "rounds", checkpoint_interval=2)
         assert got == [(i, 0) for i in range(121)]
     finally:
         _restore_checkpoint_dir(sc, prev)
@@ -270,18 +302,75 @@ def test_cc_string_ids(spark):
     edges = [("doc-003", "doc-001"), ("doc-001", "doc-002"),
              ("doc-010", "doc-011"), ("doc-020", "doc-020")]
     df = spark.createDataFrame(edges, "doc_a string, doc_b string")
+    for route in ROUTES:
+        assert _cc_rows(df, route)[1] == [
+            ("doc-001", "doc-001"), ("doc-002", "doc-001"),
+            ("doc-003", "doc-001"), ("doc-010", "doc-010"),
+            ("doc-011", "doc-010"), ("doc-020", "doc-020"),
+        ], route
+
+
+def test_cc_null_endpoints_and_schema_agree_across_routes(spark):
+    """A null endpoint adds no edge, and null itself comes out as one
+    (null, null) row on both routes. Both routes also give the same
+    output schema: the wider endpoint type (int widens to long) and the
+    endpoints' nullability for `node`, whether or not they are
+    nullable."""
+    df = spark.createDataFrame(
+        [(1, None), (None, None), (3, 4), (4, 5), (None, 7), (8, 8)],
+        "doc_a int, doc_b long",
+    )
+    want = [(1, 1), (3, 3), (4, 3), (5, 3), (7, 7), (8, 8), (None, None)]
+    got = {route: _cc_rows(df, route) for route in ROUTES}
+    assert got["driver"] == got["rounds"]
+    schema, rows = got["driver"]
+    assert rows == want
+    assert [f.dataType.typeName() for f in schema] == ["long", "long"]
+    chain = spark.range(6).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    )
+    assert not any(f.nullable for f in chain.schema)
+    got = {route: _cc_rows(chain, route) for route in ROUTES}
+    assert got["driver"] == got["rounds"]
+    assert got["driver"][1] == [(i, 0) for i in range(7)]
+
+
+def test_cc_small_route_runs_two_jobs_and_leaves_nothing(spark, tmp_path):
+    """Under DRIVER_EDGES edges, with a checkpoint dir configured (as
+    the production entry points have): connected_components runs at
+    most two Spark jobs before the caller's action (the count that fills
+    the projection's cache, then the Arrow collect), writes no
+    checkpoint file, and once clear_caches has run no persisted RDD is
+    left."""
+    import os
+    import uuid
+
+    sc = spark.sparkContext
+    prev = sc.getCheckpointDir()
+    ckpt = tmp_path / "ckpt_small"
+    sc.setCheckpointDir(str(ckpt))
+    dedup.clear_caches(spark)
+    jsc = sc._jsc.sc()
+    base = jsc.getPersistentRDDs().size()
+    edges = [(i, i + 1) for i in range(100)] + [(500, 501)]
+    df = spark.createDataFrame(pd.DataFrame(edges, columns=["doc_a", "doc_b"]))
+    group = f"cc-small-{uuid.uuid4().hex[:8]}"
     try:
-        got = sorted(
-            (r["node"], r["component"])
-            for r in components.connected_components(df).collect()
-        )
+        sc.setJobGroup(group, "connected_components small route")
+        try:
+            out = components.connected_components(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        got = sorted((r["node"], r["component"]) for r in out.collect())
     finally:
         dedup.clear_caches(spark)
-    assert got == [
-        ("doc-001", "doc-001"), ("doc-002", "doc-001"),
-        ("doc-003", "doc-001"), ("doc-010", "doc-010"),
-        ("doc-011", "doc-010"), ("doc-020", "doc-020"),
-    ]
+        _restore_checkpoint_dir(sc, prev)
+    assert got == _oracle_cc(edges)
+    assert n_jobs <= 2, n_jobs
+    assert jsc.getPersistentRDDs().size() == base
+    files = [os.path.join(r, f) for r, _, fs in os.walk(ckpt) for f in fs]
+    assert files == [], files
 
 
 def test_cc_plan_is_constant_size_across_rounds(spark):
@@ -326,23 +415,26 @@ def test_cc_hypothesis_differential_vs_oracle(spark):
     )
     @given(edges=st.lists(edge, min_size=1, max_size=40))
     def check(edges):
-        assert _spark_cc(spark, edges) == _oracle_cc(edges)
+        want = _oracle_cc(edges)
+        for route in ROUTES:
+            assert _spark_cc(spark, edges, route) == want, route
 
     check()
 
 
 def test_cc_releases_all_blocks(spark):
     """localCheckpoint pins RDD blocks that df.unpersist() cannot free;
-    the loop must release each round's blocks itself and register the
-    fixpoint frame's for clear_caches — NOTHING may survive the clear
-    (the same zero-leftover contract test_escaping pins for dedup)."""
+    the rounds loop must release each round's blocks itself and register
+    the fixpoint frame's for clear_caches — NOTHING may survive the
+    clear (the same zero-leftover contract test_escaping pins for
+    dedup)."""
     from docling_fast_server_spark.operators import dedup as dd
 
     dd.clear_caches()
     jsc = spark.sparkContext._jsc.sc()
     base = jsc.getPersistentRDDs().size()
     edges = [(i, i + 1) for i in range(150)]
-    got = _spark_cc(spark, edges)  # clears caches in its finally
+    got = _spark_cc(spark, edges, "rounds")  # clears caches in its finally
     assert got == [(i, 0) for i in range(151)]
     assert jsc.getPersistentRDDs().size() == base
 
@@ -373,31 +465,35 @@ def test_update_clusters_incremental_equals_batch(spark):
     labels_old = spark.createDataFrame(
         pd.DataFrame(old, columns=["doc_a", "doc_b"])
     )
-    try:
-        prev = components.connected_components(labels_old)
-        upd = components.update_clusters(
-            prev,
-            spark.createDataFrame(
-                pd.DataFrame(delta, columns=["doc_a", "doc_b"])
-            ),
-        )
-        got = sorted(
-            (int(r["node"]), int(r["component"])) for r in upd.collect()
-        )
-        # incremental convergence is fast: the union of stars + 3 edges
-        # must fix in far fewer cycles than the original chain needed
-        prev_edges = prev.select(
-            F.col("node").alias("doc_a"), F.col("component").alias("doc_b")
-        ).unionByName(
-            spark.createDataFrame(
-                pd.DataFrame(delta, columns=["doc_a", "doc_b"])
+    for route in ROUTES:
+        try:
+            with _route(route):
+                prev = components.connected_components(labels_old)
+                upd = components.update_clusters(
+                    prev,
+                    spark.createDataFrame(
+                        pd.DataFrame(delta, columns=["doc_a", "doc_b"])
+                    ),
+                )
+                got = sorted(
+                    (int(r["node"]), int(r["component"]))
+                    for r in upd.collect()
+                )
+            # incremental convergence is fast: the union of stars + 3
+            # edges must fix in far fewer cycles than the original chain
+            # needed
+            prev_edges = prev.select(
+                F.col("node").alias("doc_a"), F.col("component").alias("doc_b")
+            ).unionByName(
+                spark.createDataFrame(
+                    pd.DataFrame(delta, columns=["doc_a", "doc_b"])
+                )
             )
-        )
-        _, rounds = components.cc_fixpoint(prev_edges)
-    finally:
-        dedup.clear_caches(spark)
-    assert got == _oracle_cc(old + delta)
-    assert rounds <= 3, rounds
+            _, rounds = components.cc_fixpoint(prev_edges)
+        finally:
+            dedup.clear_caches(spark)
+        assert got == _oracle_cc(old + delta), route
+        assert rounds <= 3, (route, rounds)
 
 
 def test_dedup_clusters_end_to_end(spark, sf_dir):

@@ -121,7 +121,8 @@ def test_real_bmp_decode_path(spark, sf_dir):
     for height in (hh, -hh):
         ih = struct.pack("<IiiHHIIiiII", 40, w, height, 1, 24, 0, 0, 0, 0, 0, 0)
         assert _summed(_decode_bmp_pixels(fh + ih + rows)) == (w, hh, px)
-    # malformed containers raise (degrade path), never mis-decode
+    # malformed containers raise ValueError (which fails the media
+    # query: there is no per-row degrade), never mis-decode
     import pytest as _pytest
 
     for bad in (b"BM" + b"\0" * 10, _encode_bmp(3)[:60]):
@@ -202,7 +203,8 @@ def test_real_png_decode_path(spark, sf_dir):
     )
     assert _summed(_decode_png_pixels(f)) == (w, h, sum(sum(r) for r in pix))
 
-    # malformed containers raise (degrade path), never mis-decode
+    # malformed containers raise ValueError (which fails the media
+    # query: there is no per-row degrade), never mis-decode
     import pytest as _pytest
 
     bad_crc = bytearray(_encode_png(5))
@@ -254,9 +256,11 @@ def test_transform_media_handles_png(spark, sf_dir):
 
 
 def test_png_malformed_always_valueerror_never_struct_error():
-    """The degrade contract: EVERY malformed container raises ValueError
-    (a struct.error would escape the per-document boundary and kill the
-    task). Cases from review: truncated CRC field, short IHDR data,
+    """EVERY malformed container raises ValueError, the decoders' one
+    error contract, never a struct.error or another internal exception.
+    Either way the error fails the media query (there is no per-row
+    degrade); the contract keeps the failure's type and message
+    meaningful. Cases from review: truncated CRC field, short IHDR data,
     dimension bombs, over-long inflate streams."""
     import struct
     import zlib
