@@ -37,13 +37,10 @@ Logical item spec (shared with oracle.py — keep in sync!):
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 from html import escape as _html_escape  # module-level: render_html runs
 # once per document in the datagen hot path (a function-local import
 # re-resolves the module dict per call — same rationale as
 # html_extract's module-level unescape)
-
-import pandas as pd
 
 from .model import (
     K_CODE,
@@ -297,39 +294,12 @@ def render_raw_spans(doc_id: int, text: str) -> list[dict]:
 # ---------------------------------------------------------------------------
 
 
-def _gen_batches(schema_cols: list[str], skew: bool):
-    """pandas reference implementation (kept for the differential test);
-    the hot path is _gen_batches_arrow below."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                if skew:
-                    # size-skew mirroring the reference's doc-size bands
-                    # (tests/test_runpod_medium_ocr.py:25-37; DEPLOYMENT_GUIDE
-                    # 1-50 vs 50+ page classes): a few huge skew-makers.
-                    if doc_id % 50 == 0:
-                        text = " ".join([text] * 30)
-                    elif doc_id % 10 == 0:
-                        text = " ".join([text] * 5)
-                out.append(
-                    {
-                        "doc_id": doc_id_str(doc_id),
-                        "spans": render_raw_spans(doc_id, text),
-                        "n_chars": len(text),
-                    }
-                )
-            yield pd.DataFrame(out, columns=schema_cols)
-
-    return gen
-
-
 def skewed(doc_id: int, text: str) -> str:
-    """The size-skew rule of the Arrow datagen and the fused kernels
-    (the pandas reference _gen_batches keeps its own copy): every 50th
-    doc 30x, every other 10th doc 5x its text."""
+    """The size-skew rule of the Arrow datagen and the fused kernels,
+    mirroring the reference's doc-size bands
+    (tests/test_runpod_medium_ocr.py:25-37; DEPLOYMENT_GUIDE 1-50 vs 50+
+    page classes): every 50th doc 30x, every other 10th doc 5x its
+    text."""
     if doc_id % 50 == 0:
         return " ".join([text] * 30)
     if doc_id % 10 == 0:
@@ -338,14 +308,14 @@ def skewed(doc_id: int, text: str) -> str:
 
 
 def _gen_batches_arrow(skew: bool):
-    """FLAT-COLUMN Arrow datagen (r8): identical per-document output to
-    _gen_batches, assembled as flat child arrays + a ListArray offsets
-    vector instead of a pandas object column of per-span dicts. The
-    pandas route converted every span through a Python dict -> pandas
-    object cell -> Arrow struct walk (~0.4 s of the ~0.65 s datagen
-    stage at sf0.1); the same marshaling discipline as
-    operators/dispatch.py. Differential-tested equal to the pandas
-    reference (test_corpus.test_arrow_datagen_matches_pandas)."""
+    """FLAT-COLUMN Arrow datagen (r8): render_raw_spans per document
+    (after the skew rule when skew=True), assembled as flat child arrays
+    + a ListArray offsets vector instead of a pandas object column of
+    per-span dicts. A pandas route converts every span through a Python
+    dict -> pandas object cell -> Arrow struct walk (~0.4 s of the
+    ~0.65 s datagen stage at sf0.1); the same marshaling discipline as
+    operators/dispatch.py. Differential-tested against render_raw_spans
+    (test_corpus.test_arrow_datagen_matches_pandas)."""
     import pyarrow as pa
 
     def gen(batches):

@@ -78,13 +78,47 @@ def _tok_sql(col: str, tokenizer: str) -> str:
 def _chunk_spans_hof(
     df, budget: int = DEFAULT_BUDGET, spans_col: str = "spans", tokenizer: str = "ws"
 ):
-    """SQL-string build of the zero-shuffle HOF chunker (r8): the three
-    selects below are the same expression trees _chunk_spans_hof_cols
-    constructs through the Column API, parsed JVM-side in one call each
-    instead of ~150 py4j round-trips (~0.25-0.35 s of driver latency per
-    bench rep). Differential-tested row-equal to the Column reference
-    (test_chunking.test_hof_expr_matches_column_reference); semantics
-    documented on the reference below."""
+    """DataFrame(doc_id, spans, ...) -> DataFrame(doc_id, chunk_idx,
+    heading, chunk_text, n_tokens, n_spans).
+
+    ZERO-SHUFFLE chunker: the spans already arrive as one ordered array
+    per document, so heading propagation, piece explosion, the running
+    token count and the chunk grouping are all computed WITHIN that
+    array by higher-order functions — no Window, no groupBy, no
+    Exchange of any kind, making the whole extract -> chunk pipeline a
+    single narrow stage at any corpus size. The three selects are SQL
+    strings parsed JVM-side in one call each (r8: the same trees built
+    through the Column API cost ~150 py4j round-trips, ~0.25-0.35 s of
+    driver latency per bench rep). Differential-tested row-equal to the
+    row-window route (test_chunking.test_hof_expr_matches_column_reference).
+
+    The fold carries (current heading, running token total, items); a
+    piece p of a span whose earlier spans total C tokens lands in chunk
+    floor((C + p*budget)/budget) — identical to the row-windowed
+    cumulative-sum definition because every non-final piece holds
+    exactly `budget` tokens. Chunk indices are contiguous from 0, so
+    chunks are materialized by filtering the piece array per index
+    (pieces stay in (offset, piece_i) order: first member = the
+    arg-min-ord_key piece whose heading the chunk reports). The
+    heading's IS NOT NULL guard keeps the oracle's IGNORE NULLS
+    semantics: a header with NULL text keeps the previous heading.
+
+    Ordering contract: relies on per-document offset UNIQUENESS, which
+    the extraction kernels guarantee (offsets are the dense span index,
+    corpus.expected_spans) and tests assert at the extraction boundary
+    (test_chunking.test_offsets_unique_per_doc). A document with no
+    chunkable pieces (empty/NULL spans) still emits exactly one empty
+    chunk row — the whole-doc fallback of pdf_processor.py:60-69.
+
+    Per-document cost is O(spans^2) struct copies (the prefix fold
+    rebuilds its items array per span) + O(pieces x chunks) scans (each
+    chunk filters the piece array) — all cheap JVM element operations
+    with no re-tokenization, single-threaded WITHIN one document. At
+    the production budget (~hundreds of tokens) a pathological
+    1000-page / 10^4-span document costs ~10^8 element touches, tens of
+    ms — far below what shipping the corpus through a shuffle costs,
+    and the LPT size-descending partition order (plans/pipeline) already
+    schedules such stragglers first."""
     B = budget
 
     def ntok(s: str) -> str:
@@ -146,6 +180,12 @@ def _chunk_spans_hof(
         f"CAST(size(array_distinct(transform({mem}, m -> m.offset))) AS BIGINT) "
         f"AS n_spans)"
     )
+    # the highest chunk actually opened by a piece — NOT floor((total-1)/B):
+    # a trailing zero-token media piece at an exact budget boundary opens
+    # one more (empty-text) chunk, exactly as the row-windowed cumulative
+    # sum does. Indices below it are all non-empty (consecutive pieces'
+    # cum_before differ by at most B, so every budget window below the
+    # max is crossed by some piece).
     max_idx = (
         "coalesce(array_max(transform(pieces, x -> x.chunk_idx)), CAST(0 AS BIGINT))"
     )
@@ -165,181 +205,6 @@ def _chunk_spans_hof(
         "c.chunk_text AS chunk_text",
         "c.n_tokens AS n_tokens",
         "c.n_spans AS n_spans",
-    )
-
-
-def _chunk_spans_hof_cols(
-    df, budget: int = DEFAULT_BUDGET, spans_col: str = "spans", tokenizer: str = "ws"
-):
-    """DataFrame(doc_id, spans, ...) -> DataFrame(doc_id, chunk_idx,
-    heading, chunk_text, n_tokens, n_spans).
-
-    ZERO-SHUFFLE chunker: the spans already arrive as one ordered array
-    per document, so heading propagation, piece explosion, the running
-    token count and the chunk grouping are all computed WITHIN that
-    array by higher-order functions — no Window, no groupBy, no
-    Exchange of any kind, making the whole extract -> chunk pipeline a
-    single narrow stage at any corpus size. (Rounds 1-2 exploded spans
-    to rows and re-partitioned by doc_id for two windows + a groupBy —
-    the last full-payload shuffle in the flagship pipeline.)
-
-    The fold carries (current heading, running token total, items); a
-    piece p of a span whose earlier spans total C tokens lands in chunk
-    floor((C + p*budget)/budget) — identical to the row-windowed
-    cumulative-sum definition because every non-final piece holds
-    exactly `budget` tokens. Chunk indices are contiguous from 0, so
-    chunks are materialized by filtering the piece array per index
-    (pieces stay in (offset, piece_i) order: first member = the
-    arg-min-ord_key piece whose heading the chunk reports).
-
-    Ordering contract: relies on per-document offset UNIQUENESS, which
-    the extraction kernels guarantee (offsets are the dense span index,
-    corpus.expected_spans) and tests assert at the extraction boundary
-    (test_chunking.test_offsets_unique_per_doc). A document with no
-    chunkable pieces (empty/NULL spans) still emits exactly one empty
-    chunk row — the whole-doc fallback of pdf_processor.py:60-69.
-
-    Per-document cost is O(spans^2) struct copies (the prefix fold
-    rebuilds its items array per span) + O(pieces x chunks) scans (each
-    chunk filters the piece array) — all cheap JVM element operations
-    with no re-tokenization, single-threaded WITHIN one document. At
-    the production budget (~hundreds of tokens) a pathological
-    1000-page / 10^4-span document costs ~10^8 element touches, tens of
-    ms — far below what shipping the corpus through a shuffle costs,
-    and the LPT size-descending partition order (plans/pipeline) already
-    schedules such stragglers first."""
-    B = budget
-
-    def tok(c):
-        return _tok_arr(c, tokenizer)
-
-    def ntok(s):
-        return (
-            F.when(s["text"].isNull(), F.lit(0).cast("long"))
-            .otherwise(F.size(tok(s["text"])).cast("long"))
-        )
-
-    items_t = (
-        "array<struct<offset:int,heading:string,n_tok:bigint,"
-        "text:string,cum_before:bigint>>"
-    )
-    enr_init = F.expr(
-        "struct(CAST('' AS STRING) AS heading, CAST(0 AS BIGINT) AS cum, "
-        f"CAST(array() AS {items_t}) AS items)"
-    )
-
-    def enr_merge(acc, s):
-        # isNotNull guard preserves the old last(ignorenulls=True) /
-        # oracle IGNORE NULLS semantics: a header with NULL text (never
-        # emitted by our kernels, but allowed by the schema) must keep
-        # the previous heading, not poison every later span with NULL
-        heading = F.when(
-            (s["kind"] == K_SECTION_HEADER) & s["text"].isNotNull(), s["text"]
-        ).otherwise(acc["heading"])
-        return F.struct(
-            heading.alias("heading"),
-            (acc["cum"] + ntok(s)).alias("cum"),
-            F.concat(
-                acc["items"],
-                F.array(
-                    F.struct(
-                        s["offset"].alias("offset"),
-                        heading.alias("heading"),
-                        ntok(s).alias("n_tok"),
-                        s["text"].alias("text"),
-                        acc["cum"].alias("cum_before"),
-                    )
-                ),
-            ).alias("items"),
-        )
-
-    sorted_spans = F.array_sort(
-        F.col(spans_col), lambda a, b: a["offset"] - b["offset"]
-    )
-    d = df.select(
-        "doc_id", F.aggregate(sorted_spans, enr_init, enr_merge).alias("enr")
-    )
-
-    def piece_rows(it):
-        n_pieces = F.greatest(F.ceil(it["n_tok"] / B), F.lit(1).cast("long"))
-        return F.transform(
-            F.sequence(F.lit(0).cast("long"), n_pieces - 1),
-            lambda p: F.struct(
-                F.floor((it["cum_before"] + p * B) / B).cast("long").alias("chunk_idx"),
-                it["offset"].alias("offset"),
-                it["heading"].alias("heading"),
-                F.when(it["text"].isNull(), F.lit(None).cast("string"))
-                .otherwise(
-                    F.array_join(
-                        F.slice(tok(it["text"]), (p * B + 1).cast("int"), B), " "
-                    )
-                )
-                .alias("p_text"),
-                F.when(it["text"].isNull(), F.lit(0).cast("long"))
-                .otherwise(F.least(F.lit(B).cast("long"), it["n_tok"] - p * B))
-                .alias("p_tok"),
-            ),
-        )
-
-    d = d.select(
-        "doc_id",
-        F.flatten(F.transform(F.col("enr")["items"], piece_rows)).alias("pieces"),
-    )
-
-    pieces = F.col("pieces")
-
-    def chunk_of(ci):
-        mem = F.filter(pieces, lambda x: x["chunk_idx"] == ci)
-        return F.struct(
-            ci.cast("int").alias("chunk_idx"),
-            F.element_at(mem, 1)["heading"].alias("heading"),
-            F.array_join(
-                F.transform(
-                    F.filter(mem, lambda m: m["p_text"].isNotNull()),
-                    lambda m: m["p_text"],
-                ),
-                " ",
-            ).alias("chunk_text"),
-            F.aggregate(mem, F.lit(0).cast("long"), lambda a, m: a + m["p_tok"]).alias(
-                "n_tokens"
-            ),
-            F.size(F.array_distinct(F.transform(mem, lambda m: m["offset"])))
-            .cast("long")
-            .alias("n_spans"),
-        )
-
-    # the highest chunk actually opened by a piece — NOT floor((total-1)/B):
-    # a trailing zero-token media piece at an exact budget boundary opens
-    # one more (empty-text) chunk, exactly as the row-windowed cumulative
-    # sum did. Indices below it are all non-empty (consecutive pieces'
-    # cum_before differ by at most B, so every budget window below the
-    # max is crossed by some piece).
-    max_idx = F.coalesce(
-        F.array_max(F.transform(pieces, lambda x: x["chunk_idx"])),
-        F.lit(0).cast("long"),
-    )
-    fallback = F.array(
-        F.struct(
-            F.lit(0).cast("int").alias("chunk_idx"),
-            F.lit("").alias("heading"),
-            F.lit("").alias("chunk_text"),
-            F.lit(0).cast("long").alias("n_tokens"),
-            F.lit(0).cast("long").alias("n_spans"),
-        )
-    )
-    chunks = F.when(
-        F.coalesce(F.size(pieces), F.lit(0)) == 0, fallback
-    ).otherwise(F.transform(F.sequence(F.lit(0).cast("long"), max_idx), chunk_of))
-    return (
-        d.select("doc_id", F.explode(chunks).alias("c"))
-        .select(
-            "doc_id",
-            F.col("c.chunk_idx").alias("chunk_idx"),
-            F.col("c.heading").alias("heading"),
-            F.col("c.chunk_text").alias("chunk_text"),
-            F.col("c.n_tokens").alias("n_tokens"),
-            F.col("c.n_spans").alias("n_spans"),
-        )
     )
 
 

@@ -404,26 +404,6 @@ def poly_hash_sql(col: str, base: int = POLY_B, mod: int = POLY_P) -> str:
     )
 
 
-def _doc_hashsets_hof(corpus: DataFrame) -> DataFrame:
-    """(doc_id, hs) via pure higher-order functions — split, transform to
-    shingle strings, poly-hash each, array_distinct. This is the
-    REFERENCE implementation for the vectorized kernel below (the
-    differential test pins kernel == HOF on real corpora and adversarial
-    whitespace/unicode cases); the hot path is _doc_hashsets. Narrow: no
-    repartition, text never rides any exchange."""
-    w = F.split(F.col("text"), " ")
-    sh_arr = F.transform(
-        F.sequence(F.lit(0), F.size(w) - SHINGLE),
-        lambda i: F.concat_ws(
-            " ", F.element_at(w, i + 1), F.element_at(w, i + 2), F.element_at(w, i + 3)
-        ),
-    )
-    # single-param lambda wrapper: PySpark derives the HOF lambda arity
-    # from the Python signature, and poly_hash now has (col, base, mod)
-    hs = F.array_distinct(F.transform(sh_arr, lambda s: poly_hash(s)))
-    return corpus.filter(F.size(w) >= SHINGLE).select("doc_id", hs.alias("hs"))
-
-
 # rolling-hash precompute, cached per worker: powers of POLY_B and of its
 # modular inverse (POLY_P is prime), extended geometrically on demand
 _ROLL_CACHE: dict = {}
@@ -452,9 +432,10 @@ def _roll_tables(n: int):
 
 def _hashset_one(text: str):
     """Distinct shingle-hash set of one document, first-occurrence order —
-    integer-identical to the HOF path: the Horner fold of a substring
-    equals prefix[e] - prefix[s]*B^(e-s) (mod P), so all shingle hashes
-    come from one vectorized prefix pass over the character codes.
+    integer-identical to poly_hash over each shingle: the Horner fold of
+    a substring equals prefix[e] - prefix[s]*B^(e-s) (mod P), so all
+    shingle hashes come from one vectorized prefix pass over the
+    character codes.
     Intermediates stay int64-safe: each cumsum term is < P (< 2^30), so
     the raw cumsum overflows only past ~2^33 characters; mod-muls are
     products of two residues < P ~ 2^30."""
@@ -495,14 +476,15 @@ def _doc_hashsets(corpus: DataFrame) -> DataFrame:
     Implemented as an Arrow-batched mapInArrow kernel computing the
     polynomial shingle hashes as a vectorized ROLLING hash (prefix
     hashes + modular inverse of the base; POLY_P is prime) —
-    bit-identical to the HOF reference `_doc_hashsets_hof` (differential-
-    tested), because Horner's intermediate reductions never change the
-    final residue. The HOF form's per-character aggregate lambda is
-    CodegenFallback — interpreted, one boxed eval per character (sf1:
-    73 s for 3M shingles; the kernel does the same work in a few numpy
-    passes per document). Still a NARROW map: no repartition, full text
-    never rides any exchange (plan-asserted in test_plans), downstream
-    wide ops shuffle only int64 hashes and ids."""
+    bit-identical to the oracle's per-position shingle hashes
+    (hashsets_sql; test_dedup_skew pins the first-occurrence order),
+    because Horner's intermediate reductions never change the final
+    residue. A higher-order-function form's per-character aggregate
+    lambda is CodegenFallback — interpreted, one boxed eval per
+    character (sf1: 73 s for 3M shingles; the kernel does the same work
+    in a few numpy passes per document). Still a NARROW map: no
+    repartition, full text never rides any exchange (plan-asserted in
+    test_plans), downstream wide ops shuffle only int64 hashes and ids."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
@@ -555,11 +537,6 @@ def hashsets_sql(src: str = "corpus") -> str:
 
 
 HASHSETS_SQL = hashsets_sql()
-
-
-def _uhash(j: int, h):
-    """Universal hash j over an int64 hash column, intermediates < 2^39."""
-    return ((F.lit(HASH_A[j]) * h + F.lit(HASH_B[j])) % P_HASH) * MIXP % P_HASH
 
 
 def _uhash_sql(j: int, col: str) -> str:
@@ -615,15 +592,6 @@ SETF_B1, SETF_P1 = 131, 70_407_420_121_028_779
 SETF_B2, SETF_P2 = 137, 67_323_883_473_392_501
 
 
-def _set_fold(col, base: int, mod: int):
-    """Order-independent set hash: Horner fold over array_sort(col)."""
-    return F.aggregate(
-        F.array_sort(col),
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * base + x) % mod,
-    )
-
-
 def _set_fold_sql(col: str, base: int, mod: int) -> str:
     return (
         f"list_reduce(list_prepend(CAST(0 AS BIGINT), list_sort({col})), "
@@ -631,41 +599,13 @@ def _set_fold_sql(col: str, base: int, mod: int) -> str:
     )
 
 
-def _cliques(corpus: DataFrame) -> DataFrame:
-    """(doc_id, rep): hash-set-identity clique membership over the
-    shingleable corpus; rep = min(doc_id) per clique. Diagnostics/test
-    surface — the window form here is the semantic reference;
-    _minhash_stages computes the same tagging as a filtered
-    groupBy(min, count) + AQE-broadcast join (map-side combinable, no
-    corpus-wide sort; measured equal-or-faster at sf0.1 and strictly
-    cheaper at scale on healthy corpora)."""
-    from pyspark.sql import Window
-
-    hsdf = _doc_hashsets(corpus)
-    keyed = hsdf.select(
-        "doc_id",
-        _set_fold(F.col("hs"), SETF_B1, SETF_P1).alias("f1"),
-        _set_fold(F.col("hs"), SETF_B2, SETF_P2).alias("f2"),
-    )
-    w = Window.partitionBy("f1", "f2")
-    return keyed.select("doc_id", F.min("doc_id").over(w).alias("rep"))
-
-
-def _sig_col(j: int):
-    # a plain closure: a `lambda h, j=j` would have two parameters and
-    # PySpark would bind the second to the array index column
-    return F.array_min(F.transform(F.col("hs"), lambda h: _uhash(j, h))).alias(f"h{j}")
-
-
-# r8 build-cost twins of _sig_col/_set_fold/_band_structs for the HOT
-# query path: module-level SQL strings parsed JVM-side in ONE call per
-# selectExpr. Constructing the same trees through the Python Column API
-# costs ~2 ms of py4j latency PER OPERATOR (measured: the minhash build
-# alone was 0.93-0.96 s per bench rep, pure driver latency inside the
-# timed region). The parsed expressions are the identical Catalyst trees
-# — test_dedup_skew still builds the naive pipeline from the Column
-# helpers above and pins output equality, and test_minhash_expr_twins
-# pins the twin columns value-equal to the helper columns directly.
+# signature, set-fold and band-key expressions as module-level SQL
+# strings, parsed JVM-side in ONE call per selectExpr. Building the same
+# trees through the Python Column API costs ~2 ms of py4j latency PER
+# OPERATOR (r8, measured: the minhash build alone was 0.93-0.96 s per
+# bench rep, pure driver latency inside the timed region). The DuckDB
+# mirrors (_SIG_COLS_SQL, _set_fold_sql, _BANDS_SQL) spell the same
+# arithmetic; test_dedup_skew and the oracle parity rows pin equality.
 _SIG_EXPRS = [
     f"array_min(transform(hs, uh -> (({HASH_A[j]} * uh + {HASH_B[j]}) % {P_HASH})"
     f" * {MIXP} % {P_HASH})) AS h{j}"
@@ -689,24 +629,12 @@ _BAND_STRUCT_EXPRS = ", ".join(
 )
 
 
-def _band_structs():
-    # built lazily: classic PySpark Column construction needs a live JVM,
-    # so module import must stay Column-free
-    return [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                ":", *[F.col(f"h{j}") for j in range(b * BAND_ROWS, (b + 1) * BAND_ROWS)]
-            ).alias("key"),
-        )
-        for b in range(N_BANDS)
-    ]
-
-
 def _minhash_stages(corpus: DataFrame, bucket_cap: int):
     """Shared candidate-generation stages: returns (hsdf, tagged,
-    rep_sig, cand) where tagged = (doc_id, signature, rep, csize) and
-    cand is the DISTINCT rep-level candidate pair set. Identical
+    rep_sig, cand, bands) where tagged = (doc_id, signature, rep,
+    csize), cand is the DISTINCT rep-level candidate pair set and bands
+    = (doc_id, band, key) is the uncapped rep-level banding the cap and
+    the tripwire read. Identical
     hash SET => identical signature and buckets (and covers identical
     text as a special case), so banding one representative per
     set-identity clique loses nothing — and a 10k-deep duplicate clique
@@ -755,7 +683,7 @@ def _minhash_stages(corpus: DataFrame, bucket_cap: int):
     # minhash build even after the expression trees became SQL strings.
     # The SQL parses to the identical logical plans (HAVING == agg +
     # filter, LEFT ANTI JOIN USING == left_anti, JOIN USING == the
-    # using-columns join); test_dedup_skew's naive-pipeline differential
+    # using-columns join); test_dedup_skew's uncollapsed-oracle differential
     # and the oracle parity rows pin output equality. View names are
     # uniqued per build so concurrent threads sharing a session cannot
     # clobber each other's lineage.

@@ -534,7 +534,7 @@ def sample_slot(col):
     pre-reduced mod SAMPLE_P BEFORE the multiply — (id % P) * (MIX % P)
     < 2^40 — so the slot is identical for ANY doc_id: a raw doc_id * MIX
     exceeds int64 once doc_id > ~3.5e9, where Spark wraps silently and
-    DuckDB errors (the same bounded-mix discipline as dedup._uhash).
+    DuckDB errors (the same bounded-mix discipline as dedup._uhash_sql).
     Mathematically equal to (doc_id * MIX) % P for every doc_id below the
     overflow point, so the sample itself is unchanged."""
     return ((col % SAMPLE_P) * (SAMPLE_MIX % SAMPLE_P) % SAMPLE_P) % SAMPLE_PCT_MOD

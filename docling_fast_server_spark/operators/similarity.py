@@ -256,7 +256,7 @@ def plane_values(n_planes: int) -> list[list[float]]:
 
 
 def planes_sql(n_planes: int) -> str:
-    """DuckDB CTE body reproducing _planes(n_planes) bit-exactly."""
+    """DuckDB CTE body reproducing plane_values(n_planes) bit-exactly."""
     return f"""
         SELECT CAST(p AS INTEGER) AS p,
                list_transform(range({DIM}), d -> CAST(((1 + (p*{DIM}+d) * {_MIX}) % 97) - 48 AS DOUBLE)) AS h
@@ -264,50 +264,19 @@ def planes_sql(n_planes: int) -> str:
     """
 
 
-def banded_buckets_hof(spark, vecs: DataFrame, bands: int, ppb: int) -> DataFrame:
-    """(vec_id, v, band, key) via pure higher-order functions — the
-    REFERENCE implementation for the vectorized kernel below
-    (differential-tested equal); the hot path is banded_buckets. The
-    planes are deterministic literals (plane_values): no plane table, no
-    crossJoin, no groupBy — zero exchanges before the candidate join.
-    (Round 2 exploded each row x(bands*ppb) against a broadcast plane
-    table and re-grouped on (vec_id, band), shuffling bands*n rows each
-    carrying the full vector.)"""
-    planes = plane_values(bands * ppb)
-
-    def _key(b: int):
-        key = F.lit(0)
-        for j in range(ppb):
-            arr = F.array(*[F.lit(w) for w in planes[b * ppb + j]])
-            key = key + F.when(_dot_hof(F.col("v"), arr) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        return key.cast("int")
-
-    bk = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(b).cast("int").alias("band"), _key(b).alias("key"))
-                for b in range(bands)
-            ]
-        )
-    )
-    all_keys = F.array(*[_key(b) for b in range(bands)])
-    return vecs.select("vec_id", "v", bk.alias("bk"), all_keys.alias("keys")).select(
-        "vec_id", "v", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"), "keys"
-    )
-
-
 def banded_buckets(spark, vecs: DataFrame, bands: int, ppb: int) -> DataFrame:
     """(vec_id, v, band, key): per-band sign-bit LSH key over bands*ppb
-    deterministic hyperplanes, as an Arrow-batched mapInArrow kernel.
+    deterministic hyperplanes (plane_values: pure literals, no plane
+    table, no join), as an Arrow-batched mapInArrow kernel.
 
-    The HOF reference (banded_buckets_hof) evaluates one interpreted
+    A higher-order-function form evaluates one interpreted
     aggregate(zip_with) fold per plane per row — bands*ppb*DIM boxed
     evals plus a DIM-array allocation each (sf1: 60 planes x 119k
     vectors on the embedding path). The kernel computes every plane dot
     in DIM vectorized passes with LEFT-TO-RIGHT accumulation (acc +=
-    V[:,i]*plane[i], seeded by the first product — associating exactly
-    like the HOF fold from its 0.0 seed), so each sign bit and band key
-    is bit-identical; a differential test pins kernel == HOF. Scaling a
+    V[:,i]*plane[i], seeded by the first product), so each sign bit and
+    band key matches the oracle's banded_buckets_sql; a differential
+    test pins kernel == oracle at both plane configurations. Scaling a
     vector by a positive constant never flips a sign bit, so
     exact-scaled near-duplicates always share every band key. Still
     narrow: no exchange before the candidate join, at any corpus size;

@@ -369,12 +369,15 @@ def test_auto_route_warns_on_unmaterialized_kernel_input(spark, sf_dir):
 
 
 def test_hof_expr_matches_column_reference(spark, sf_dir):
-    """The r8 SQL-string build of the HOF chunker must be row-identical
-    to the Column-API reference on the real extracted corpus (both
-    tokenizers), including the empty-spans whole-doc fallback."""
+    """The SQL-string HOF chunker (route='hof') must be row-identical to
+    the engine's other route, the row-window chunker (route='window'),
+    on the real extracted corpus with both tokenizers, over every
+    document with non-empty spans. A document with empty spans, which
+    only the HOF route serves, must yield exactly the whole-doc
+    fallback row."""
     from pyspark.sql import functions as F
 
-    from docling_fast_server_spark.operators import chunking as C
+    from docling_fast_server_spark.operators.chunking import chunk_spans
     from docling_fast_server_spark.queries import extract_all
 
     base = extract_all(spark, sf_dir).persist()
@@ -387,13 +390,19 @@ def test_hof_expr_matches_column_reference(spark, sf_dir):
             F.lit(None).cast("string").alias("error"),
         )
     )
+    has_spans = F.coalesce(F.size("spans"), F.lit(0)) > 0
+    empty_ids = {r.doc_id for r in with_empty.filter(~has_spans).collect()}
     for tokenizer, budget in (("ws", 8), ("bpe", 10)):
-        got = sorted(map(tuple, C._chunk_spans_hof(
-            with_empty, budget=budget, tokenizer=tokenizer).collect()))
-        want = sorted(map(tuple, C._chunk_spans_hof_cols(
-            with_empty, budget=budget, tokenizer=tokenizer).collect()))
-        assert got == want and len(got) > 500
-        assert any(r[0] == "doc-empty" for r in got)
+        got = sorted(map(tuple, chunk_spans(
+            with_empty, budget=budget, tokenizer=tokenizer, route="hof").collect()))
+        want = sorted(map(tuple, chunk_spans(
+            with_empty.filter(has_spans), budget=budget, tokenizer=tokenizer,
+            route="window").collect()))
+        assert [r for r in got if r[0] not in empty_ids] == want and len(want) > 500
+        assert [r for r in got if r[0] in empty_ids] == [
+            (d, 0, "", "", 0, 0) for d in sorted(empty_ids)
+        ]
+        assert "doc-empty" in empty_ids
     base.unpersist()  # shared-session hygiene: test_escaping asserts
     # zero persistent RDDs survive clear_caches
 

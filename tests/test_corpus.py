@@ -86,35 +86,33 @@ def test_oracle_sql_matches_python_expectation(sf_dir, documents_pdf):
         assert g == w, f"oracle mismatch: {g} != {w}"
 
 
-def test_arrow_datagen_matches_pandas(spark, sf_dir):
-    """The r8 flat-column Arrow datagen must produce row-identical output
-    to the pandas reference (_gen_batches), skewed and unskewed."""
-    from pyspark.sql import types as T
+def test_arrow_datagen_matches_pandas(spark, sf_dir, documents_pdf):
+    """The flat-column Arrow datagen (docs_raw) must produce, for every
+    document, exactly the pure-Python spec: render_raw_spans of its
+    text, with n_chars its length, unskewed and skewed. The skew rule is
+    written out here, independently of the library's copy."""
+    from docling_fast_server_spark.corpus import docs_raw, render_raw_spans
 
-    from docling_fast_server_spark import corpus as C
-    from docling_fast_server_spark.model import SPANS_TYPE
-    from docling_fast_server_spark.tables import read_table
+    def skew_rule(doc_id, text):
+        if doc_id % 50 == 0:
+            return " ".join([text] * 30)
+        if doc_id % 10 == 0:
+            return " ".join([text] * 5)
+        return text
 
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("spans", SPANS_TYPE, False),
-            T.StructField("n_chars", T.IntegerType(), False),
-        ]
-    )
     for skew in (False, True):
-        arrow = docs.mapInArrow(
-            C._gen_batches_arrow(skew), schema=out_schema
+        got = sorted(
+            (r.doc_id, tuple(map(tuple, r.spans)), r.n_chars)
+            for r in docs_raw(spark, sf_dir, skew=skew).collect()
         )
-        pandas = docs.mapInPandas(
-            C._gen_batches([f.name for f in out_schema.fields], skew),
-            schema=out_schema,
-        )
-        a = sorted(
-            (r.doc_id, tuple(map(tuple, r.spans)), r.n_chars) for r in arrow.collect()
-        )
-        p = sorted(
-            (r.doc_id, tuple(map(tuple, r.spans)), r.n_chars) for r in pandas.collect()
-        )
-        assert a == p and len(a) == 500
+        want = []
+        for doc_id, text in documents_pdf:
+            if skew:
+                text = skew_rule(doc_id, text)
+            spans = tuple(
+                (s["kind"], s["text"], s["media_ref"], s["offset"])
+                for s in render_raw_spans(doc_id, text)
+            )
+            want.append((doc_id_str(doc_id), spans, len(text)))
+        assert got == sorted(want) and len(got) == 500
+    assert any(doc_id % 50 == 0 for doc_id, _ in documents_pdf)

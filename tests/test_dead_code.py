@@ -62,6 +62,58 @@ def test_no_unreferenced_library_definitions():
     assert not dead, "unreferenced library definitions:\n" + "\n".join(dead)
 
 
+# Public entry points that only the test suite exercises today. A name
+# joins this set only as public API; a slow reference build of a hot path
+# kept just so a test can diff against it does not belong in the library
+# (differentials compare an engine route with the DuckDB oracle or with
+# the engine's other route).
+TEST_ONLY_PUBLIC_API = {
+    "bloom_route_counts",
+    "bucketed_join",
+    "dedup_survivors",
+    "expire_snapshots",
+    "extract_pdf_document",
+    "list_snapshots",
+    "overwrite_table",
+    "read_export_spans",
+    "read_table_asof",
+    "remove_orphan_staging",
+    "rollback_table",
+    "run_dedup",
+    "salted_join",
+    "stateful_sessionize",
+    "stream_extract",
+    "streaming_dedup_exact",
+    "windowed_method_counts",
+    "write_bucketed",
+    "write_exports_partitioned",
+}
+
+
+def test_no_library_definition_called_only_by_tests():
+    """The top-level library definitions referenced from tests/ and from
+    nowhere else (the package, scripts, perfbench/ and bench*.py all
+    count as real callers) are exactly TEST_ONLY_PUBLIC_API."""
+    real: Counter = Counter()
+    in_tests: Counter = Counter()
+    defs = []  # (name, references inside its own definition)
+    for path in _py_files():
+        tree = ast.parse(path.read_text(), filename=str(path))
+        rel = path.relative_to(ROOT)
+        (in_tests if rel.parts[0] == "tests" else real).update(_refs(tree))
+        if rel.parts[0] == PACKAGE:
+            defs += [
+                (n.name, _refs(n)[n.name])
+                for n in tree.body
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            ]
+    test_only = {name for name, own in defs if real[name] == own and in_tests[name]}
+    assert test_only == TEST_ONLY_PUBLIC_API, (
+        f"called only from tests, not listed: {sorted(test_only - TEST_ONLY_PUBLIC_API)}; "
+        f"listed, but no longer test-only: {sorted(TEST_ONLY_PUBLIC_API - test_only)}"
+    )
+
+
 def test_spans_column_made_in_one_place():
     """The Arrow spans column is assembled in one place:
     pa.ListArray/StructArray.from_arrays are called only inside

@@ -55,40 +55,44 @@ def test_intra_clique_pairs_expand_exactly(spark, sf_dir):
 
 
 def test_clique_collapse_preserves_uncollapsed_output(spark, sf_dir):
-    """minhash_pairs == the r5 uncollapsed/uncapped pipeline on the gate
-    corpus (identical text => identical signature => identical buckets,
-    so collapse+expansion is a pure refactor of candidate generation)."""
+    """minhash_pairs == an uncollapsed, uncapped DuckDB mirror on the
+    gate corpus: the oracle's hash-set, signature and band CTEs over
+    EVERY document, band self-join, distinct, exact Jaccard >=
+    threshold (identical hash set => identical signature => identical
+    buckets, so collapse+expansion is a pure refactor of candidate
+    generation)."""
+    import duckdb
+
     corpus = dedup.mutated_corpus(spark, sf_dir)
     try:
-        hsdf = dedup._doc_hashsets(corpus)
-        sig = hsdf.select(
-            "doc_id", *[dedup._sig_col(j) for j in range(dedup.MINHASH_K)]
-        )
-        bands = sig.select(
-            "doc_id", F.explode(F.array(*dedup._band_structs())).alias("bk")
-        ).select("doc_id", "bk.band", "bk.key")
-        naive_cand = (
-            bands.alias("x")
-            .join(bands.alias("y"), ["band", "key"])
-            .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-            .select(
-                F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-            )
-            .distinct()
-        )
-        naive = {
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in dedup._verify_jaccard(hsdf, naive_cand)
-            .filter(F.col("jaccard") >= dedup.JACCARD_THRESHOLD)
-            .collect()
-        }
-        guarded = {
+        guarded = sorted(
             (r.doc_a, r.doc_b, r.jaccard)
             for r in dedup.minhash_pairs(corpus).collect()
-        }
+        )
     finally:
         dedup.clear_caches(spark)
-    assert guarded == naive
+    sql = f"""
+        WITH corpus AS ({dedup.MUTATED_SQL}),
+        hsets AS ({dedup.HASHSETS_SQL}),
+        sig AS (SELECT doc_id, {dedup._SIG_COLS_SQL} FROM hsets),
+        bands AS ({dedup._BANDS_SQL}),
+        pairs AS (
+            SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+            FROM bands x JOIN bands y ON x.band = y.band AND x.key = y.key
+            WHERE x.doc_id < y.doc_id
+        ),
+        {dedup._VERIFY_SQL}
+        SELECT doc_a, doc_b,
+               round(CAST(n_shared AS DOUBLE) / (na + nb - n_shared), 4) AS jaccard
+        FROM verified
+        WHERE round(CAST(n_shared AS DOUBLE) / (na + nb - n_shared), 4)
+              >= {dedup.JACCARD_THRESHOLD}
+    """
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
+    naive = sorted(con.execute(sql).fetchall())
+    con.close()
+    assert guarded == naive and naive
 
 
 def test_bucket_cap_bounds_near_dup_families(spark, sf_dir):
@@ -130,17 +134,11 @@ def test_tripwire_reports_capped_buckets(spark):
 def test_gate_scale_buckets_stay_under_caps(spark, sf_dir):
     """At gate scale no cap may bite (the guards are tripwires, not
     routine truncation): max minhash bucket after clique collapse must
-    sit far below MINHASH_BUCKET_CAP."""
+    sit far below MINHASH_BUCKET_CAP. Reads the engine's own rep-level
+    banding, the fifth value of _minhash_stages."""
     corpus = dedup.mutated_corpus(spark, sf_dir)
     try:
-        hsdf = dedup._doc_hashsets(corpus)
-        member = dedup._cliques(corpus)
-        sig = hsdf.select(
-            "doc_id", *[dedup._sig_col(j) for j in range(dedup.MINHASH_K)]
-        ).join(member.filter(F.col("doc_id") == F.col("rep")).select("doc_id"), "doc_id")
-        bands = sig.select(
-            "doc_id", F.explode(F.array(*dedup._band_structs())).alias("bk")
-        ).select("doc_id", "bk.band", "bk.key")
+        *_, bands = dedup._minhash_stages(corpus, dedup.MINHASH_BUCKET_CAP)
         worst = (
             dedup.bucket_tripwire(bands, dedup.MINHASH_BUCKET_CAP)
             .agg(F.max("max_bucket").alias("m"), F.sum("suppressed_members").alias("c"))
@@ -175,10 +173,7 @@ def test_tripwire_matches_duckdb_oracle(spark, sf_dir):
 
     corpus = dedup.mutated_corpus(spark, sf_dir)
     try:
-        _, _, rep_sig, _, _ = dedup._minhash_stages(corpus, MINHASH_BUCKET_CAP)
-        bands = rep_sig.select(
-            "doc_id", F.explode(F.array(*dedup._band_structs())).alias("bk")
-        ).select("doc_id", "bk.band", "bk.key")
+        *_, bands = dedup._minhash_stages(corpus, MINHASH_BUCKET_CAP)
         got = sorted(
             (r.band, r.n_buckets, r.max_bucket, r.over_cap_buckets, r.suppressed_members)
             for r in dedup.bucket_tripwire(bands, MINHASH_BUCKET_CAP).collect()
@@ -213,14 +208,34 @@ def test_tripwire_matches_duckdb_oracle(spark, sf_dir):
 
 def test_hashset_kernel_matches_hof_reference(spark, sf_dir):
     """The vectorized rolling-hash mapInArrow kernel must be integer-
-    identical to the pure-HOF reference on the real mutated corpus AND
-    on adversarial whitespace/unicode/duplicate-shingle cases (first-
-    occurrence distinct order included)."""
-    from docling_fast_server_spark.operators import dedup
+    identical to the DuckDB oracle's per-position shingle hashes
+    (poly_hash_sql over _SHINGLE_EXPR_SQL, first occurrences kept in
+    order) on the real mutated corpus AND on adversarial whitespace/
+    unicode/duplicate-shingle cases: the same values in the same
+    first-occurrence order."""
+    import duckdb
 
+    def per_position_sql(src):
+        return f"""
+            SELECT doc_id, list_transform(range(len(w) - {dedup.SHINGLE - 1}),
+                     shi -> {dedup.poly_hash_sql(dedup._SHINGLE_EXPR_SQL)}) AS hs
+            FROM (SELECT doc_id, string_split(text, ' ') AS w FROM {src})
+            WHERE len(w) >= {dedup.SHINGLE}
+        """
+
+    def first_occurrences(hs):
+        return list(dict.fromkeys(hs))
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
     corpus = dedup.mutated_corpus(spark, sf_dir)
     got = {r.doc_id: list(r.hs) for r in dedup._doc_hashsets(corpus).collect()}
-    want = {r.doc_id: list(r.hs) for r in dedup._doc_hashsets_hof(corpus).collect()}
+    want = {
+        d: first_occurrences(hs)
+        for d, hs in con.execute(
+            f"WITH corpus AS ({dedup.MUTATED_SQL}) {per_position_sql('corpus')}"
+        ).fetchall()
+    }
     assert got == want and len(got) > 0
 
     cases = [
@@ -234,6 +249,12 @@ def test_hashset_kernel_matches_hof_reference(spark, sf_dir):
     ]
     df = spark.createDataFrame(cases, "doc_id long, text string")
     got = {r.doc_id: list(r.hs) for r in dedup._doc_hashsets(df).collect()}
-    want = {r.doc_id: list(r.hs) for r in dedup._doc_hashsets_hof(df).collect()}
+    con.execute("CREATE TABLE cases (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO cases VALUES (?, ?)", cases)
+    want = {
+        d: first_occurrences(hs)
+        for d, hs in con.execute(per_position_sql("cases")).fetchall()
+    }
+    con.close()
     assert got == want
-    assert 7 not in got
+    assert 7 not in got and len(got) == 6

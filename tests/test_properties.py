@@ -371,12 +371,20 @@ def test_png_decoder_roundtrip_any_image(w, h, seed, filters, level):
 
 def test_banded_buckets_kernel_matches_hof_reference(spark, sf_dir):
     """The vectorized banding kernel (numpy left-to-right plane dots)
-    must produce bit-identical (vec_id, band, key, v) rows to the pure
-    HOF reference at BOTH production plane configurations."""
+    must produce the oracle's rows: per (vec_id, band), the same key,
+    the same all-band key vector and the same v as the DuckDB
+    planes_sql + banded_buckets_sql CTEs, at BOTH production plane
+    configurations."""
+    import duckdb
+
     from docling_fast_server_spark.operators import dedup
     from docling_fast_server_spark.operators import similarity as S
 
     vecs = S._vecs(spark, sf_dir)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
+    )
     for bands, ppb in [
         (S.ANN_BANDS, S.ANN_PLANES_PER_BAND),
         (dedup.EMB_BANDS, dedup.EMB_PLANES_PER_BAND),
@@ -385,11 +393,26 @@ def test_banded_buckets_kernel_matches_hof_reference(spark, sf_dir):
             (r.vec_id, r.band): (r.key, tuple(r.keys), tuple(r.v))
             for r in S.banded_buckets(spark, vecs, bands, ppb).collect()
         }
+        rows = con.execute(f"""
+            WITH vecs AS (
+                SELECT vec_id, list_transform(embedding, e -> CAST(e AS DOUBLE)) AS v
+                FROM embeddings
+            ),
+            planes AS ({S.planes_sql(bands * ppb)}),
+            banded AS ({S.banded_buckets_sql(bands, ppb)})
+            SELECT vec_id, band, key, v,
+                   list(key) OVER (
+                       PARTITION BY vec_id ORDER BY band
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
+                   ) AS keys
+            FROM banded
+        """).fetchall()
         want = {
-            (r.vec_id, r.band): (r.key, tuple(r.keys), tuple(r.v))
-            for r in S.banded_buckets_hof(spark, vecs, bands, ppb).collect()
+            (vec_id, band): (key, tuple(keys), tuple(v))
+            for vec_id, band, key, v, keys in rows
         }
-        assert got == want and len(got) > 0
+        assert got == want and len(got) == len(rows) > 0
+    con.close()
 
 
 def test_dot_route_equivalence(spark, sf_dir):
