@@ -7,7 +7,7 @@ stages, without touching the driver contract.
 
 Usage:
   python bench_extra.py time q1 [q2 ...]      # best-of-N noop-sink timing
-  python bench_extra.py explain LABEL q1 ...  # write plans/r08/<q>_<LABEL>.txt
+  python bench_extra.py explain LABEL q1 ...  # write plans/<LABEL>/<q>.txt
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 (default 32), BENCH_EXTRA_REPS (default 3). Uses the same spread layout
@@ -102,14 +102,15 @@ def cmd_explain(label: str, names: list[str]) -> None:
     spread = _spread_dir()
     qs = entry_mod.queries()
     spark = _session()
-    os.makedirs("plans/r08", exist_ok=True)
+    out_dir = os.path.join("plans", label)
+    os.makedirs(out_dir, exist_ok=True)
     for name in names:
         qdir = _configure(spark, name, spread)
         df = qs[name](spark, qdir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = f"plans/r08/{name}_{label}.txt"
+        path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(plan)
         n_exchange = plan.count("Exchange")

@@ -10,10 +10,21 @@ to resume it.
 
 Resume semantics (the find_duplicate_job / 409 analog,
 queue_manager.py:917-929 and ocr.py:99-103): a re-run anti-joins the
-input against already-committed doc_ids and processes only the remainder;
-the write path is append-only with job-commit atomicity, so re-executed
+input against already-committed doc_ids and processes only the remainder.
+The committed doc_ids are the output table's manifest key set
+(sources.io.committed_keys: one key column, read from the key files the
+commit manifests reference), not a plain read of the table, which would
+also see the rows of a writer that crashed before its manifest publish.
+The write path is append-only with job-commit atomicity, so re-executed
 tasks never double-write (Spark's parquet commit protocol stages and
 renames — the atomic-write discipline of queue_manager.py:527-541).
+
+The lineage rows (lineage_summary) are NOT counted on the write: they are
+aggregated from a read-back of the files the run's commit added, one
+aggregate-and-append job pair per run, so they count what committed even
+when a racing writer's commit dropped some of this run's rows. The
+commit's own row and key counts are observed on its staging writes
+(sources.io.merge_append_table).
 """
 
 from __future__ import annotations
@@ -56,7 +67,8 @@ def lineage_summary(extracted_with_meta: DataFrame) -> DataFrame:
 
 
 def anti_join_committed(raw: DataFrame, committed_doc_ids: DataFrame) -> DataFrame:
-    """The resume operator: keep only docs not yet committed."""
-    return raw.join(
-        committed_doc_ids.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
+    """The resume operator: keep only docs not yet committed. No distinct
+    on the committed side: a left-anti join's result does not depend on
+    duplicate right-side keys, and the aggregate would only add a shuffle
+    stage in front of the join."""
+    return raw.join(committed_doc_ids.select("doc_id"), "doc_id", "left_anti")

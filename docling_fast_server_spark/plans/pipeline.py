@@ -28,7 +28,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.bloom import bloom_prune_anti_join
 from ..operators.dispatch import extract_auto
 from ..operators.lineage import anti_join_committed, lineage_summary, with_partition_metrics
-from ..sources.io import append_table, merge_append_table, read_table, table_exists
+from ..sources.io import (
+    append_table,
+    committed_keys,
+    merge_append_table,
+    read_table,
+    table_exists,
+)
 
 
 # an explicit repartition/coalesce node with a known partition count,
@@ -111,7 +117,9 @@ def _input_splits(df: DataFrame) -> int:
       Spark's own split-packing formula over its file listing;
     - anything wider — joins, aggregates, global sorts: e.g. the resume
       path's anti-join, whose inputFiles() would conflate BOTH scans'
-      listings — falls back to the RDD hop, which is always correct."""
+      listings — falls back to the RDD hop, which is always correct but
+      executes the plan's shuffle stages once just to count (which is
+      why run_extraction probes its scan, not the anti-join)."""
     nodes = _plan_nodes(df)
     for name, stripped in nodes:
         if name in ("Repartition", "RepartitionByExpression"):
@@ -136,6 +144,19 @@ def _input_splits(df: DataFrame) -> int:
     return df.rdd.getNumPartitions()
 
 
+def _spread_mode(layout: DataFrame, partitions: int | None, mode: str) -> str:
+    """Resolve mode='auto' to 'always' or 'never' from `layout`'s split
+    count against the target partition count."""
+    if mode not in ("auto", "always", "never"):
+        raise ValueError(f"unknown spread mode {mode!r}")
+    if mode != "auto":
+        return mode
+    target = partitions or int(
+        layout.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    return "never" if _input_splits(layout) >= target else "always"
+
+
 def spread_by_size(
     raw: DataFrame, partitions: int | None = None, mode: str = "auto"
 ) -> DataFrame:
@@ -153,19 +174,12 @@ def spread_by_size(
     inputs); mode='never' trusts the input layout entirely."""
     size_col = "n_chars" if "n_chars" in raw.columns else None
     df = raw if size_col else raw.withColumn("n_chars", F.size("spans"))
-    if mode not in ("auto", "always", "never"):
-        raise ValueError(f"unknown spread mode {mode!r}")
-    if mode != "always":
-        target = partitions or int(
-            raw.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    if _spread_mode(df, partitions, mode) == "always":
+        df = (
+            df.repartition(partitions, F.col("doc_id"))
+            if partitions
+            else df.repartition(F.col("doc_id"))
         )
-        if mode == "never" or _input_splits(df) >= target:
-            return df.sortWithinPartitions(F.desc("n_chars"))
-    df = (
-        df.repartition(partitions, F.col("doc_id"))
-        if partitions
-        else df.repartition(F.col("doc_id"))
-    )
     return df.sortWithinPartitions(F.desc("n_chars"))
 
 
@@ -179,19 +193,26 @@ def _commit_readback(spark: SparkSession, out_path: str, commit, run_id: str) ->
     analog writes per-job rows and never rescans history
     (/root/reference/src/services/job_db.py:129-161).
 
-    Falls back to the run_id-filtered full read when the commit carries
-    no file list (Iceberg path — the catalog prunes there) and to an
-    empty frame when the commit added nothing."""
+    The files are read with the schema the commit wrote them with
+    (CommitResult.schema), so building the frame runs no job; the
+    lineage aggregate over it is the read-back's only work. Falls back
+    to the run_id-filtered full read when the commit carries no file
+    list (Iceberg path — the catalog prunes there) and to an empty frame
+    when the commit added nothing."""
     files = getattr(commit, "files", None)
+    schema = getattr(commit, "schema", None)
     if files is None:
         return read_table(spark, out_path).filter(F.col("run_id") == run_id)
     if not files:  # fully-duplicate input: zero rows committed this run
+        if schema is not None:
+            return spark.createDataFrame([], schema)
         return read_table(spark, out_path).filter(F.lit(False))
     abs_out = os.path.abspath(out_path.rstrip("/"))
+    reader = spark.read.schema(schema) if schema is not None else spark.read
     # every row in these files carries THIS run's run_id (they are this
     # commit's own staged output), so no filter is needed — but keep it
     # as a cheap belt-and-braces predicate (pushed down, prunes nothing)
-    return spark.read.parquet(*[os.path.join(abs_out, f) for f in files]).filter(
+    return reader.parquet(*[os.path.join(abs_out, f) for f in files]).filter(
         F.col("run_id") == run_id
     )
 
@@ -287,9 +308,18 @@ def run_extraction(
 ) -> str:
     """Execute (or resume) one extraction run. Returns the run_id.
 
-    Idempotent: docs already present in out_path are skipped via
+    Idempotent: docs already committed to out_path are skipped via
     anti-join (the content-hash duplicate suppression of
-    queue_manager.py:917-929); the append commits atomically.
+    queue_manager.py:917-929); the append commits atomically. The
+    committed set is the table's manifest key set (io.committed_keys),
+    the set the merge commit itself checks against: rows a crashed
+    writer left without a manifest are NOT committed, so their documents
+    are extracted again. A table with no commit history (Iceberg, plain
+    appends) is read whole instead.
+
+    The spread decision reads `raw`'s scan layout, not the anti-join's:
+    an anti-join only removes rows, and probing the join would execute
+    its shuffle stages once just to count partitions.
 
     resume_strategy: "anti" (default) is the plain left-anti join;
     "bloom" routes through operators.bloom.bloom_prune_anti_join — a
@@ -299,25 +329,34 @@ def run_extraction(
     backfill).
 
     ONE materialization of the extracted output (the staged commit
-    inside merge_append_table); the lineage aggregate is then derived
-    from a READ-BACK of this run's committed rows, scanning ONLY the
-    files this commit added (CommitResult.files — the cumulative table
-    is never rescanned, so lineage cost stays O(run) as the table grows
-    to 10^12 docs) — one cheap extra scan instead of round 3's eager
-    full-payload localCheckpoint, which
-    doubled the job's storage footprint at scale just to sever plan
-    lineage for a second evaluation. Read-back lineage is also the more
-    honest audit: it counts what actually COMMITTED (a raced writer's
-    dropped duplicates are not double-counted)."""
+    inside merge_append_table). The jobs a run leaves are: the staged
+    write (with the resume's key-set broadcast), the distinct-key write,
+    the overlap count under the commit lock (skipped on a first commit),
+    and the lineage aggregate's write. The commit's row and key counts
+    are observed on its two writes; no count action and no
+    schema-inference read runs. The lineage counters (doc, span, error
+    and tier counts per partition) come from a READ-BACK of this run's
+    committed rows, scanning ONLY the files this commit added
+    (CommitResult.files, read with CommitResult.schema — the cumulative
+    table is never rescanned, so lineage cost stays O(run) as the table
+    grows to 10^12 docs) instead of round 3's eager full-payload
+    localCheckpoint, which doubled the job's storage footprint at scale
+    just to sever plan lineage for a second evaluation. They stay on the
+    read-back because it is the more honest audit: it counts what
+    actually COMMITTED (a raced writer's dropped duplicates are not
+    double-counted), which a counter on the staged write cannot know."""
     run_id = run_id or uuid.uuid4().hex[:12]
     todo = raw
     if resume and table_exists(spark, out_path):
-        committed_prev = read_table(spark, out_path)
+        committed_prev = committed_keys(spark, out_path, raw.schema["doc_id"])
+        if committed_prev is None:
+            committed_prev = read_table(spark, out_path)
         if resume_strategy == "bloom":
             todo = bloom_prune_anti_join(raw, committed_prev, key="doc_id")
         else:
             todo = anti_join_committed(raw, committed_prev)
-    extracted = extract_auto(spread_by_size(todo, partitions, mode=spread))
+    mode = _spread_mode(raw, partitions, spread)  # raw's layout, not the anti-join's
+    extracted = extract_auto(spread_by_size(todo, partitions, mode=mode))
     with_meta = with_partition_metrics(extracted, run_id)
     # MERGE-grade commit: the anti-join above closes the common resume
     # case, but two runs overlapping in time both snapshot the table

@@ -74,6 +74,13 @@ def get_spark(
         # entries and none at 2048. Static conf: only the builder can
         # set it.
         .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # ...and the generated source does not carry the whole-stage
+        # codegen stage id in its class name. With the id in it, a
+        # corpus_prep pass repeated in one session sometimes compiled a
+        # scan-filter-aggregate stage's class again
+        # (tests/test_codegen_cache.py failed 2 of 6 runs after its
+        # neighbouring tests; 10 of 10 passed with this setting)
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if warehouse:
         b = b.config("spark.sql.warehouse.dir", warehouse)

@@ -24,7 +24,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def _has_iceberg(spark: SparkSession) -> bool:
@@ -302,13 +303,16 @@ def _keys_dir(commits_dir: str) -> str:
     return os.path.join(commits_dir, "keys")
 
 
-def _committed_keys_df(spark: SparkSession, commits_dir: str, entries: list[dict]):
+def _committed_keys_df(
+    spark: SparkSession, commits_dir: str, entries: list[dict], schema: StructType
+):
     """The committed key set as a DataFrame — read DISTRIBUTIVELY from
     the per-commit key parquet files each manifest references (the
     Iceberg-metadata analog). Returns None for an empty history. No key
     ever passes through the driver: round 2 pulled every committed key
     into a Python set and rebuilt a DataFrame from it driver-side,
-    which caps the protocol at driver memory."""
+    which caps the protocol at driver memory. `schema` is the one key
+    column the writers stage, so the read runs no schema-inference job."""
     legacy = [e for e in entries if "keys" in e and "key_files" not in e]
     if legacy:  # pragma: no cover — defensive: silently treating a
         # pre-key-file table as empty would re-admit every committed key
@@ -324,7 +328,30 @@ def _committed_keys_df(spark: SparkSession, commits_dir: str, entries: list[dict
     ]
     if not paths:
         return None
-    return spark.read.parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def committed_keys(spark: SparkSession, path: str, key_field: StructField):
+    """The key set a merge-committed parquet table has published, as a
+    one-column frame: the key files its manifests reference, the same
+    set merge_append_table's overlap check trusts (empty when no manifest
+    is published yet). A plain read of the table is NOT that set: it
+    also sees the `merge-*` files of a writer that crashed before its
+    manifest publish, which the next commit's GC deletes — a resume that
+    skipped those documents would lose them. None when `path` keeps no
+    commit history (an Iceberg table, or one written only by plain
+    appends); the caller then reads the table itself."""
+    if _has_iceberg(spark) and not path.startswith("/"):
+        return None
+    commits_dir = os.path.join(os.path.abspath(path.rstrip("/")), "_commits")
+    if not os.path.isdir(commits_dir):
+        return None
+    keys = _committed_keys_df(
+        spark, commits_dir, _read_manifests(commits_dir), StructType([key_field])
+    )
+    if keys is None:  # no manifest yet: the empty key set
+        keys = spark.range(0).select(F.lit(None).cast(key_field.dataType).alias(key_field.name))
+    return keys
 
 
 def _gc_uncommitted(path: str, commits_dir: str, entries: list[dict]) -> None:
@@ -457,15 +484,19 @@ class CommitResult(int):
       (empty/fully-duplicate input) or on the Iceberg path (the catalog
       snapshot is the identity there).
     files: table-relative data-file names this commit added ([] when
-      nothing committed; None on the Iceberg path)."""
+      nothing committed; None on the Iceberg path).
+    schema: the schema those files were written with, so a read-back
+      needs no schema-inference job (None on the Iceberg path)."""
 
     commit_id: str | None
     files: list | None
+    schema: StructType | None
 
-    def __new__(cls, n: int, commit_id=None, files=None):
+    def __new__(cls, n: int, commit_id=None, files=None, schema=None):
         self = super().__new__(cls, n)
         self.commit_id = commit_id
         self.files = files
+        self.schema = schema
         return self
 
 
@@ -484,36 +515,45 @@ def merge_append_table(df: DataFrame, path: str, key: str = "doc_id") -> "Commit
 
     Parquet fallback — optimistic commit with a manifest, the same
     protocol Iceberg runs in its metadata layer:
-      1. stage data files, this commit's distinct-key parquet, and both
-         counts OUTSIDE the lock, in SIBLING temp dirs (never inside
-         `path`: a concurrent _swap_table holds the commit lock while it
-         renames `path` away and back, and a mkdtemp/makedirs landing in
-         that two-rename window would recreate a skeleton table and fail
-         the swapper's rename ENOTEMPTY — ADVICE r03; the table
-         directory is only ever mutated while holding the lock);
+      1. stage the data files and this commit's distinct-key parquet
+         OUTSIDE the lock, in SIBLING temp dirs (never inside `path`: a
+         concurrent _swap_table holds the commit lock while it renames
+         `path` away and back, and a mkdtemp/makedirs landing in that
+         two-rename window would recreate a skeleton table and fail the
+         swapper's rename ENOTEMPTY — ADVICE r03; the table directory is
+         only ever mutated while holding the lock). Both counts come
+         from the writes: n_rows is observed (DataFrame.observe) on the
+         data write and n_keys on the key write, so staging runs those
+         two writes and nothing else — no count action, and no
+         schema-inference job (the key write reads the staged files with
+         the schema it just wrote);
       2. take the table commit lock (atomic POSIX mkdir + heartbeat,
          the catalog analog);
       3. under the lock, garbage-collect files left by crashed commits
          (merge-prefixed files no manifest references), then COUNT the
          overlap of the staged keys with the committed key set — the
          per-commit key PARQUET files referenced by the manifests, fully
-         distributed (no key ever passes through the driver). This is
-         the ONLY Spark action under the lock on the no-overlap path
-         (zero on a first commit), so writers no longer serialize on
-         lock hold time proportional to staged data;
+         distributed (no key ever passes through the driver). This
+         count is the race check, so it stays a read of what is
+         committed NOW, not a write-side counter; it is the ONLY Spark
+         action under the lock on the no-overlap path (zero on a first
+         commit), so writers no longer serialize on lock hold time
+         proportional to staged data;
       4. no overlap -> rename the staged part files into the table under
          commit-unique `merge-<id>-` names, rename the key parquet in,
          then publish the manifest entry via atomic rename LAST;
       5. overlap (a racing writer committed some of our keys first) ->
          RELEASE the lock, rewrite the staging without the committed
-         keys outside it, and retry from (2) — optimistic concurrency,
-         exactly the catalog-level conflict-retry Iceberg runs.
+         keys outside it (counts observed on the rewrite, as in 1), and
+         retry from (2) — optimistic concurrency, exactly the
+         catalog-level conflict-retry Iceberg runs.
     A crash before (4) leaves only sibling temp dirs; a crash inside
     (4) leaves merge-prefixed files no manifest references — invisible
     to manifest-driven readers immediately, and swept for plain
     spark.read.parquet readers by the next commit's GC pass (3).
     Returns a CommitResult: the committed row count (int-compatible)
-    annotated with commit_id + the data-file names this commit added."""
+    annotated with commit_id + the data-file names this commit added
+    and the schema they were written with."""
     import shutil
     import tempfile
     import uuid as _uuid
@@ -547,6 +587,15 @@ def merge_append_table(df: DataFrame, path: str, key: str = "doc_id") -> "Commit
         raise
 
 
+def _write_counted(df: DataFrame, path: str) -> int:
+    """Write `df` as parquet to `path` and return its row count, observed
+    on the write job itself instead of by a second action over the
+    written files."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    return obs.get["n"]
+
+
 def _merge_commit(
     spark, df: DataFrame, abs_path: str, parent: str, commits_dir: str, key: str, scratch: list
 ) -> int:
@@ -566,13 +615,14 @@ def _merge_commit(
         scratch.append(d)
         return d
 
+    # every read below is of files this commit wrote or of key files of
+    # the same one-column shape, so each gets its schema passed in
+    kschema = StructType([df.schema[key]])
     staging = _mkscratch("dfss-stage-")
-    df.write.mode("overwrite").parquet(staging)
-    staged = spark.read.parquet(staging)
+    n_rows = _write_counted(df, staging)
+    staged = spark.read.schema(df.schema).parquet(staging)
     kstage = _mkscratch("dfss-kstage-")
-    staged.select(key).distinct().write.mode("overwrite").parquet(kstage)
-    n_rows = staged.count()
-    n_keys = spark.read.parquet(kstage).count()
+    n_keys = _write_counted(staged.select(key).distinct(), kstage)
 
     for _attempt in range(10):  # optimistic conflict-retry bound
         # keepalive: a writer parked here behind contention keeps its
@@ -584,16 +634,16 @@ def _merge_commit(
             os.makedirs(_keys_dir(commits_dir), exist_ok=True)
             entries = _read_manifests(commits_dir)
             _gc_uncommitted(abs_path, commits_dir, entries)
-            committed = _committed_keys_df(spark, commits_dir, entries)
+            committed = _committed_keys_df(spark, commits_dir, entries, kschema)
             n_overlap = 0
             if committed is not None and n_keys > 0:
-                staged_keys = spark.read.parquet(kstage).select(key)
+                staged_keys = spark.read.schema(kschema).parquet(kstage)
                 n_overlap = staged_keys.join(committed, key, "left_semi").count()
             if n_overlap == 0:
                 if n_keys == 0:
                     shutil.rmtree(staging)
                     shutil.rmtree(kstage)
-                    return CommitResult(0, commit_id=None, files=[])
+                    return CommitResult(0, commit_id=None, files=[], schema=staged.schema)
                 commit_id = _uuid.uuid4().hex[:12]
                 held()  # fencing AFTER all Spark work (the long stall
                 # window): nothing irreversible has happened yet, so a
@@ -631,33 +681,27 @@ def _merge_commit(
                     },
                 )
                 spark.catalog.refreshByPath(abs_path)
-                return CommitResult(n_rows, commit_id=commit_id, files=data_files)
-            # overlap with a racing commit: remember the committed-key
-            # files we saw; the rewrite runs AFTER the lock is released
-            overlap_key_paths = [
-                os.path.join(_keys_dir(commits_dir), f)
-                for e in entries
-                for f in e.get("key_files", [])
-            ]
-        # (5) rewrite outside the lock against the snapshot we saw; any
-        # commit landing after that snapshot is caught by the next
-        # attempt's overlap count. The snapshotted key FILES can vanish
-        # under a concurrent lock-held rollback/retention/compaction —
-        # that just invalidates this attempt's snapshot, so re-enter the
-        # loop and re-read under the lock instead of crashing mid-retry.
+                return CommitResult(
+                    n_rows, commit_id=commit_id, files=data_files, schema=staged.schema
+                )
+        # (5) overlap with a racing commit: rewrite outside the lock
+        # against the committed-key snapshot seen under it (`committed`
+        # is bound to those key files); any commit landing after that
+        # snapshot is caught by the next attempt's overlap count. The
+        # snapshotted key FILES can vanish under a concurrent lock-held
+        # rollback/retention/compaction — that just invalidates this
+        # attempt's snapshot, so re-enter the loop and re-read under the
+        # lock instead of crashing mid-retry.
         filtered = _mkscratch("dfss-stage-")
         try:
-            seen = spark.read.parquet(*overlap_key_paths).select(key)
-            staged.join(seen, key, "left_anti").write.mode("overwrite").parquet(filtered)
+            n_rows = _write_counted(staged.join(committed, key, "left_anti"), filtered)
         except Exception:
             shutil.rmtree(filtered, ignore_errors=True)
             continue
         shutil.rmtree(staging)
         staging = filtered
-        staged = spark.read.parquet(staging)
-        staged.select(key).distinct().write.mode("overwrite").parquet(kstage)
-        n_rows = staged.count()
-        n_keys = spark.read.parquet(kstage).count()
+        staged = spark.read.schema(df.schema).parquet(staging)
+        n_keys = _write_counted(staged.select(key).distinct(), kstage)
     raise RuntimeError(
         f"merge_append_table({abs_path}): still conflicting after 10 "
         "optimistic retries — pathological commit contention"

@@ -215,3 +215,46 @@ def test_two_process_race_survivor_steals_dead_writers_lock(spark, tmp_path):
     assert merge_append_table(replay, out) == 40
     assert merge_append_table(replay, out) == 0
     assert spark.read.parquet(out).count() == 55
+
+
+def test_resume_reextracts_docs_a_crashed_writer_left_unmanifested(spark, sf_dir, tmp_path):
+    """A writer killed between its data-file renames and its manifest
+    publish leaves `merge-*` files whose rows no manifest commits (the
+    state test_sigkilled_writer_mid_commit_recovers produces; here the
+    dead writer's files are copied in). A resume must treat those
+    documents as NOT committed: its own commit GCs the files, so a
+    resume that skipped their documents would lose them. Every document
+    ends up committed exactly once, and the lineage counts each once."""
+    import shutil
+
+    from docling_fast_server_spark.corpus import docs_raw
+    from docling_fast_server_spark.plans.pipeline import run_extraction
+
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    raw = docs_raw(spark, sf_dir, which="all")
+    total = raw.count()
+    half = raw.filter(F.col("doc_id") < "doc-000250")
+    n_half = half.count()
+    run_extraction(spark, half, out, lin, run_id="half", partitions=4)
+
+    # the dead writer: 50 other documents, extracted and renamed into the
+    # table under merge-* names, manifest never published
+    dead = str(tmp_path / "dead")
+    orphan_docs = raw.filter(F.col("doc_id").between("doc-000250", "doc-000299"))
+    assert orphan_docs.count() == 50
+    run_extraction(spark, orphan_docs, dead, str(tmp_path / "dead_lineage"),
+                   run_id="dead", partitions=2)
+    for f in os.listdir(dead):
+        if f.startswith("merge-") and f.endswith(".parquet"):
+            shutil.copy(os.path.join(dead, f), os.path.join(out, f"merge-deadbeef0000-{f}"))
+    spark.catalog.refreshByPath(out)
+    assert spark.read.parquet(out).count() == n_half + 50  # a plain read sees them
+
+    run_extraction(spark, raw, out, lin, run_id="resume", partitions=4)
+    spark.catalog.refreshByPath(out)
+    back = spark.read.parquet(out)
+    assert back.count() == total
+    assert back.select("doc_id").distinct().count() == total
+    assert not [f for f in os.listdir(out) if f.startswith("merge-deadbeef0000-")]
+    docs = spark.read.parquet(lin).agg(F.sum("doc_count")).collect()[0][0]
+    assert docs == total

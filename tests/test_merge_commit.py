@@ -234,6 +234,42 @@ def test_lock_holds_at_most_one_spark_action(spark, tmp_path, monkeypatch):
     assert back.select("doc_id").distinct().count() == 300
 
 
+def test_observed_counts_match_the_committed_rows(spark, tmp_path):
+    """merge_append_table takes n_rows and n_keys from observers on its
+    two staging writes instead of count actions. CommitResult, the
+    manifest's n_keys and a read-back count of the commit's files must
+    agree on duplicate doc_ids (n_rows != n_keys), an empty frame, a
+    fully duplicate frame and the overlap-retry path."""
+    import os
+
+    from docling_fast_server_spark.sources.io import _read_manifests
+
+    path = str(tmp_path / "t")
+    commits = os.path.join(path, "_commits")
+
+    def frame(ids, v):
+        return spark.createDataFrame([(f"d{i}", v) for i in ids], "doc_id string, v string")
+
+    def check(commit, n_rows, n_keys):
+        assert commit == n_rows
+        entry = [e for e in _read_manifests(commits) if e["commit_id"] == commit.commit_id]
+        assert len(entry) == 1 and entry[0]["n_keys"] == n_keys
+        back = spark.read.parquet(*[os.path.join(path, f) for f in commit.files])
+        assert back.count() == n_rows
+        assert back.select("doc_id").distinct().count() == n_keys
+
+    check(merge_append_table(frame([0, 1, 1, 2, 3, 3], "a"), path), 6, 4)
+    for empty in (frame([], "e"), frame([0, 1, 2, 3], "f")):  # empty, fully duplicate
+        c = merge_append_table(empty, path)
+        assert c == 0 and c.commit_id is None and c.files == []
+        assert len(_read_manifests(commits)) == 1
+    # keys 2 and 3 are committed: the overlap count trips and the retry
+    # rewrites the staging without them, re-observing both counts
+    check(merge_append_table(frame([2, 3, 4, 4, 5], "g"), path), 3, 2)
+    spark.catalog.refreshByPath(path)
+    assert spark.read.parquet(path).count() == 6 + 3
+
+
 def test_no_scratch_leak_on_failure(spark, tmp_path, monkeypatch):
     """An in-process failure anywhere in the merge protocol must not
     strand sibling dfss-stage-*/dfss-kstage-* dirs next to the table."""

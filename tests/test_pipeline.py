@@ -367,3 +367,64 @@ def test_run_dedup_surfaces_diagnostics_unconditionally(spark, sf_dir, tmp_path)
     assert met["n_dropped"] > 0
     assert met["n_docs"] - met["n_dropped"] == met["n_clusters"] == n_kept
     assert n_kept_after == n_kept  # MERGE sink: zero new rows on re-run
+
+
+# ---------------------------------------------------------------------------
+# commit + resume run only the jobs that do work: no schema inference on
+# the files the commit just wrote, no count actions, no .rdd hop
+# ---------------------------------------------------------------------------
+JOB_BUDGET = 16
+
+
+def test_commit_and_resume_run_no_bookkeeping_jobs(spark, sf_dir, workdir, monkeypatch):
+    """A commit then a resume over a pre-written raw table (the ingest
+    layout) runs at most JOB_BUDGET jobs. The same pass once ran 36:
+    9 schema-inference jobs (1 task each, launched from
+    inside a DataFrameReader call) on files the commit had just written,
+    4 count actions, and an .rdd hop that executed the anti-join's stages
+    once before the write ran them again."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    raw_path = os.path.join(workdir, "raw")
+    docs_raw(spark, sf_dir, which="all").repartition(8).write.parquet(raw_path)
+    raw = spark.read.parquet(raw_path)
+    out, lin = os.path.join(workdir, "out"), os.path.join(workdir, "lineage")
+
+    hops = []
+    real_rdd = ClassicDataFrame.__dict__["rdd"]
+
+    def spy_rdd(self):
+        hops.append(self)
+        return real_rdd.__get__(self, type(self))
+
+    monkeypatch.setattr(ClassicDataFrame, "rdd", property(spy_rdd))
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    group = "commit-resume-job-budget"
+    jsc.listenerBus().waitUntilEmpty()
+    sc.setJobGroup(group, group)
+    try:
+        run_extraction(spark, raw.filter(F.col("doc_id") < "doc-000250"), out, lin, run_id="c")
+        run_extraction(spark, raw, out, lin, run_id="r")
+    finally:
+        jsc.listenerBus().waitUntilEmpty()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    store, tracker = jsc.statusStore(), sc.statusTracker()
+
+    def started_in_reader(sid) -> bool:
+        try:
+            return "DataFrameReader." in store.lastStageAttempt(sid).details()
+        except Py4JJavaError:  # a skipped stage never reaches the store
+            return False
+
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    inference = [
+        jid for jid in jobs for sid in tracker.getJobInfo(jid).stageIds if started_in_reader(sid)
+    ]
+    assert not inference, f"schema-inference jobs {inference}"
+    assert not hops, "an .rdd hop ran"
+    assert len(jobs) <= JOB_BUDGET, (len(jobs), jobs)
+    assert read_table(spark, out).count() == raw.count()
