@@ -6,7 +6,7 @@ as an idiomatic Spark DataFrame pipeline:
 
 - per-document conversion kernel (PDF layout parse, reading-order
   reconstruction, block labeling, table structure, HTML boilerplate strip)
-  as vectorized Arrow/pandas UDFs — reference kernel:
+  as Arrow UDFs (mapInArrow kernels) — reference kernel:
   src/services/pdf_processor.py:168-224;
 - exports (markdown/html/doctags/json) and hybrid chunking as pure
   functions of the span array — reference: pdf_processor.py:203-224;

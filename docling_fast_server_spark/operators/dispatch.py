@@ -6,8 +6,8 @@ picks the pipeline per format (DocumentConverter with format_options,
 one per-document dispatcher, `_extract_one`, driven by one per-batch
 loop, `_extract_docs`, under every extraction entry point — the mixed
 corpus (`extract_auto`, also the html-only and pdf-only registry rows),
-the fused datagen kernels, and the DFSB bytes path
-(sources/binary_pack.extract_binary).
+the serialization readers (md_ingest.extract_payload), the fused datagen
+kernels, and the DFSB bytes path (sources/binary_pack.extract_binary).
 
 Marshaling is FLAT-COLUMN over ``mapInArrow``: the list<struct> spans
 column is read as its flat child arrays (``to_pylist`` on each field —

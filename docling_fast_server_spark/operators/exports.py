@@ -35,6 +35,10 @@ from ..model import (
     K_SECTION_HEADER,
     K_TABLE,
     K_TEXT,
+    RAW_DOCTAGS,
+    RAW_HTML_DOC,
+    RAW_JSON,
+    RAW_MARKDOWN,
 )
 
 
@@ -218,6 +222,8 @@ def with_exports(df, spans_col: str = "spans"):
 
 EXPORT_FORMATS = ("markdown", "html", "doctags", "json")
 _FORMAT_COL = {"markdown": "markdown", "html": "html", "doctags": "doctags", "json": "doc_json"}
+# export format -> the raw kind its serialization reader is dispatched on
+_FORMAT_RAW_KIND = {"markdown": RAW_MARKDOWN, "html": RAW_HTML_DOC, "doctags": RAW_DOCTAGS, "json": RAW_JSON}
 
 
 def melt_exports(df, spans_col: str = "spans"):
@@ -261,24 +267,13 @@ def read_export_spans(spark, path: str, fmt: str):
     first-class raw input, with each format's documented lossiness
     (json and html are exact; html keeps table media_refs via
     data-ref)."""
-    from .md_ingest import (
-        extract_doctags,
-        extract_html_export,
-        extract_json,
-        extract_markdown,
-    )
+    from .md_ingest import extract_payload
 
-    readers = {
-        "markdown": extract_markdown,
-        "doctags": extract_doctags,
-        "json": extract_json,
-        "html": extract_html_export,
-    }
-    if fmt not in readers:
-        raise ValueError(f"no reader for export format {fmt!r} (have {sorted(readers)})")
+    if fmt not in _FORMAT_RAW_KIND:
+        raise ValueError(f"no reader for export format {fmt!r} (have {sorted(_FORMAT_RAW_KIND)})")
     part = (
         spark.read.parquet(path)
         .filter(F.col("format") == fmt)
         .select("doc_id", "payload")
     )
-    return readers[fmt](part, "payload")
+    return extract_payload(part, "payload", _FORMAT_RAW_KIND[fmt])

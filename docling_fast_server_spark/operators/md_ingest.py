@@ -36,16 +36,16 @@ every span exactly EXCEPT
     user uploads fall back to the json/doctags/html readers, which have
     no such ambiguity (tests/test_md_ingest.py pins both cases).
 
-Vectorized as mapInArrow over Arrow batches; degrade-never-die per
-document like the other kernels.
+The DataFrame readers run in the dispatch kernel (`extract_payload` ->
+dispatch.extract_auto); degrade-never-die per document like every other
+format.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from pyspark.sql import functions as F
 
 from ..model import (
-    DOCS_EXTRACTED_SCHEMA,
     K_CODE,
     K_FORMULA,
     K_KEY_VALUE,
@@ -54,8 +54,10 @@ from ..model import (
     K_TABLE,
     K_TEXT,
     MAX_SPANS_PER_DOC,
-    METHOD_DEFAULT,
-    METHOD_FAILED,
+    RAW_DOCTAGS,
+    RAW_HTML_DOC,
+    RAW_JSON,
+    RAW_MARKDOWN,
 )
 
 
@@ -95,236 +97,28 @@ def extract_markdown_document(markdown: str) -> list[dict]:
     return spans
 
 
-# ---------------------------------------------------------------------------
-# Vectorized reader path (round-5 verdict item 8). The markdown / doctags /
-# canonical-html grammars are line/block-regular, so the happy path parses a
-# whole Arrow batch with pandas str ops + numpy mask dispatch and rebuilds
-# the list<struct> spans column from flat arrays — no per-DOCUMENT Python
-# loop, no per-span dict, mirroring dispatch.py's flat-column marshaling.
-# The per-document readers above stay the semantic definition: any batch
-# containing a doc that trips a guard (malformed line, span ceiling) is
-# re-parsed by the per-doc loop, so degrade behavior — which doc fails,
-# with exactly which error string — is byte-identical by construction
-# (tests/test_reader_vectorized.py pins vector == per-doc on canonical,
-# edge, and malformed corpora). JSON has no vectorized parser, so every
-# json batch takes the per-doc loop: its contract is a strict recursive
-# json.loads + per-field type validation, with no regular line grammar to
-# lift.
-# ---------------------------------------------------------------------------
+def extract_payload(df, col: str, raw_kind: str):
+    """DataFrame(doc_id, <col>) -> DataFrame(doc_id, spans,
+    conversion_method, error): each payload becomes a one-span raw
+    document of `raw_kind` and runs in the dispatch kernel
+    (dispatch.extract_auto), the one Arrow kernel and degrade loop of
+    every extraction entry point. Narrow map stage — no shuffle."""
+    from .dispatch import extract_auto  # dispatch imports this module
 
-def _explode_nonempty(pay: pd.Series, sep: str):
-    """Split every payload on sep and explode, dropping the empty
-    separators exactly as the per-doc readers' `if line == "": continue`.
-    Returns (doc_idx int64 ndarray, values str Series with RangeIndex)."""
-    ex = pay.str.split(sep).explode()
-    ex = ex[ex.notna() & (ex != "")]
-    return ex.index.to_numpy(), ex.reset_index(drop=True)
-
-
-def _within_doc_offsets(doc_idx, n_docs: int):
-    """counts per doc + 0-based within-doc offsets for rows grouped by
-    doc in order (explode preserves both orders)."""
-    import numpy as np
-
-    counts = np.bincount(doc_idx, minlength=n_docs)
-    starts = np.zeros(n_docs, dtype=np.int64)
-    if n_docs > 1:
-        np.cumsum(counts[:-1], out=starts[1:])
-    off = np.arange(len(doc_idx), dtype=np.int64) - np.repeat(starts, counts)
-    return counts, off
-
-
-def _v_unescape(s: pd.Series) -> pd.Series:
-    # vectorized _xml_unescape — same replacement order (&amp; LAST)
-    return (
-        s.str.replace("&lt;", "<", regex=False)
-        .str.replace("&gt;", ">", regex=False)
-        .str.replace("&amp;", "&", regex=False)
+    span = F.struct(
+        F.lit(raw_kind).alias("kind"),
+        df[col].alias("text"),
+        F.lit(None).cast("string").alias("media_ref"),
+        F.lit(0).alias("offset"),
     )
-
-
-def _v_unescape_attr(s: pd.Series) -> pd.Series:
-    # vectorized _html_unescape_attr — &quot; first, then content inverse
-    return _v_unescape(s.str.replace("&quot;", '"', regex=False))
-
-
-def _empty_to_none(s: pd.Series):
-    """'' -> None on an object ndarray (the exporter's NULL-ref coalesce
-    inverse, applied vectorized)."""
-    arr = s.to_numpy(dtype=object).copy()
-    arr[arr == ""] = None
-    return arr
-
-
-def _vparse_markdown(pay: pd.Series):
-    """Vectorized extract_markdown_document over a payload batch.
-    Returns (kind, text, ref object ndarrays, offsets, counts) or None
-    when any doc needs the per-doc fallback (only the span ceiling —
-    every block classifies, default kind is text)."""
-    import numpy as np
-
-    didx, v = _explode_nonempty(pay, "\n\n")
-    counts, off = _within_doc_offsets(didx, len(pay))
-    if len(counts) and counts.max(initial=0) > MAX_SPANS_PER_DOC:
-        return None
-    n = len(v)
-    kind = np.full(n, K_TEXT, dtype=object)
-    text = v.to_numpy(dtype=object).copy()
-    ref = np.full(n, None, dtype=object)
-    rem = np.ones(n, dtype=bool)
-    # same precedence as _parse_block's if-chain; identical slice bounds
-    for cond, k, lo, hi in (
-        (v.str.startswith("## "), K_SECTION_HEADER, 3, None),
-        (v.str.startswith("- "), K_KEY_VALUE, 2, None),
-        (v.str.startswith("```\n") & v.str.endswith("\n```"), K_CODE, 4, -4),
-        (v.str.startswith("$$ ") & v.str.endswith(" $$"), K_FORMULA, 3, -3),
-        (v.str.startswith("| ") & v.str.endswith(" |"), K_TABLE, 2, -2),
-    ):
-        m = cond.to_numpy() & rem
-        if m.any():
-            kind[m] = k
-            text[m] = v[m].str.slice(lo, hi).to_numpy(dtype=object)
-            rem &= ~m
-    m = (v.str.startswith("![image](") & v.str.endswith(")")).to_numpy() & rem
-    if m.any():
-        kind[m] = K_PICTURE
-        text[m] = None
-        ref[m] = _empty_to_none(v[m].str.slice(9, -1))
-    return kind, text, ref, off, counts
-
-
-def _vparse_doctags(pay: pd.Series):
-    """Vectorized extract_doctags_document; None on any malformed line
-    or span-ceiling doc (whole-batch per-doc fallback)."""
-    import numpy as np
-
-    didx, v = _explode_nonempty(pay, "\n")
-    counts, off = _within_doc_offsets(didx, len(pay))
-    if len(counts) and counts.max(initial=0) > MAX_SPANS_PER_DOC:
-        return None
-    ext = v.str.extract(_DOCTAG_RE)
-    if ext[0].isna().any():
-        return None  # some line failed the grammar -> exact per-doc errors
-    kind = ext[0].to_numpy(dtype=object)
-    body = _v_unescape(ext[1])
-    text = body.to_numpy(dtype=object).copy()
-    ref = np.full(len(v), None, dtype=object)
-    is_pic = kind == K_PICTURE
-    if is_pic.any():
-        text[is_pic] = None
-        ref[is_pic] = _empty_to_none(body[is_pic])
-    return kind, text, ref, off, counts
-
-
-def _vparse_html_export(pay: pd.Series):
-    """Vectorized extract_html_export_document; None on any line no
-    canonical pattern matches or a span-ceiling doc."""
-    import numpy as np
-
-    didx, v = _explode_nonempty(pay, "\n")
-    counts, off = _within_doc_offsets(didx, len(pay))
-    if len(counts) and counts.max(initial=0) > MAX_SPANS_PER_DOC:
-        return None
-    n = len(v)
-    kind = np.full(n, None, dtype=object)
-    text = np.full(n, None, dtype=object)
-    ref = np.full(n, None, dtype=object)
-    rem = np.ones(n, dtype=bool)
-    for rx, k in _HTML_LINE_RES:  # same first-match-wins order
-        m = v.str.match(rx).to_numpy() & rem
-        if not m.any():
-            continue
-        sub = v[m].str.extract(rx)
-        kind[m] = k
-        if k == K_KEY_VALUE:
-            text[m] = (
-                _v_unescape(sub[0]) + ": " + _v_unescape(sub[1])
-            ).to_numpy(dtype=object)
-        elif k == K_TABLE:
-            ref[m] = _empty_to_none(_v_unescape_attr(sub[0]))
-            text[m] = _v_unescape(sub[1]).to_numpy(dtype=object)
-        elif k == K_PICTURE:
-            ref[m] = _empty_to_none(_v_unescape_attr(sub[0]))
-        else:
-            text[m] = _v_unescape(sub[0]).to_numpy(dtype=object)
-        rem &= ~m
-    if rem.any():
-        return None  # malformed canonical-html line -> exact per-doc errors
-    return kind, text, ref, off, counts
-
-
-def _perdoc_flat(pay: pd.Series, reader):
-    """The degrade-never-die per-doc loop in flat-column form — the
-    fallback batch path of the Arrow kernel (the only path of a reader
-    with no vectorized parser), and the only path that can emit
-    METHOD_FAILED rows."""
-    import numpy as np
-
-    out_k: list = []
-    out_t: list = []
-    out_r: list = []
-    out_o: list = []
-    counts = np.zeros(len(pay), dtype=np.int64)
-    methods: list = []
-    errors: list = []
-    for i, payload in enumerate(pay):
-        try:
-            out = reader(payload or "")
-            method, err = METHOD_DEFAULT, None
-        except Exception as e:  # degrade, never die
-            out, method, err = [], METHOD_FAILED, str(e)[:500]
-        counts[i] = len(out)
-        for s in out:
-            out_k.append(s["kind"])
-            out_t.append(s["text"])
-            out_r.append(s["media_ref"])
-            out_o.append(s["offset"])
-        methods.append(method)
-        errors.append(err)
-    return (
-        np.array(out_k, dtype=object),
-        np.array(out_t, dtype=object),
-        np.array(out_r, dtype=object),
-        np.array(out_o, dtype=np.int64),
-        counts,
-        methods,
-        errors,
-    )
-
-
-def _make_arrow_kernel(reader, vparse):
-    """mapInArrow kernel: vectorized happy path, whole-batch per-doc
-    fallback when vparse declines (rare by contract — canonical exports
-    always vectorize) or is None."""
-    import numpy as np
-
-    from .dispatch import extracted_batch
-
-    def run(batches):
-        for b in batches:
-            pay = b.column(1).to_pandas().fillna("").reset_index(drop=True)
-            res = vparse(pay) if vparse is not None else None
-            if res is not None:
-                k, t, r, off, counts = res
-                methods, errors = [METHOD_DEFAULT] * len(pay), [None] * len(pay)
-            else:
-                k, t, r, off, counts, methods, errors = _perdoc_flat(pay, reader)
-            cum = np.zeros(len(counts) + 1, dtype=np.int32)
-            np.cumsum(counts, out=cum[1:])
-            yield extracted_batch(b.column(0), k, t, r, off, cum, methods, errors)
-
-    return run
-
-
-def _reader_df(df, reader, col: str, vparse=None):
-    sel = df.select("doc_id", df[col].alias("payload"))
-    return sel.mapInArrow(_make_arrow_kernel(reader, vparse), schema=DOCS_EXTRACTED_SCHEMA)
+    return extract_auto(df.select("doc_id", F.array(span).alias("spans")))
 
 
 def extract_markdown(df, md_col: str = "markdown"):
     """DataFrame(doc_id, <md_col>) -> DataFrame(doc_id, spans,
-    conversion_method, error). Narrow map stage — no shuffle."""
-    return _reader_df(df, extract_markdown_document, md_col, _vparse_markdown)
+    conversion_method, error), parsed by extract_markdown_document in the
+    dispatch kernel."""
+    return extract_payload(df, md_col, RAW_MARKDOWN)
 
 
 # ---------------------------------------------------------------------------
@@ -345,9 +139,6 @@ def _xml_unescape(s: str) -> str:
     return s.replace("&lt;", "<").replace("&gt;", ">").replace("&amp;", "&")
 
 
-_doctags_unescape = _xml_unescape  # historical name, same contract
-
-
 def extract_doctags_document(doctags: str) -> list[dict]:
     """Canonical doctags stream -> ordered spans. Recovers picture
     media_refs exactly (their body IS the ref); table refs are lossy in
@@ -360,7 +151,7 @@ def extract_doctags_document(doctags: str) -> list[dict]:
         m = _DOCTAG_RE.match(line)
         if not m:
             raise ValueError(f"malformed doctags line: {line[:80]!r}")
-        kind, body = m.group(1), _doctags_unescape(m.group(2))
+        kind, body = m.group(1), _xml_unescape(m.group(2))
         if kind == K_PICTURE:
             # '' = the exporter's coalesce of a NULL ref; not
             # kernel-emittable, so None is the exact inverse
@@ -376,8 +167,9 @@ def extract_doctags_document(doctags: str) -> list[dict]:
 
 
 def extract_doctags(df, dt_col: str = "doctags"):
-    """DataFrame(doc_id, <dt_col>) -> extracted spans. Narrow map stage."""
-    return _reader_df(df, extract_doctags_document, dt_col, _vparse_doctags)
+    """DataFrame(doc_id, <dt_col>) -> extracted spans, parsed by
+    extract_doctags_document in the dispatch kernel."""
+    return extract_payload(df, dt_col, RAW_DOCTAGS)
 
 
 # ---------------------------------------------------------------------------
@@ -430,12 +222,13 @@ def extract_json_document(doc_json: str) -> list[dict]:
 
 def extract_json(df, json_col: str = "doc_json"):
     """DataFrame(doc_id, <json_col>) -> extracted spans — the lossless
-    serialization reader. Narrow map stage.
+    serialization reader, parsed by extract_json_document in the
+    dispatch kernel.
 
     Note the empty-payload semantics: a NULL/empty json payload is a
     MALFORMED document (json.loads("") raises) and degrades to failed,
     while empty markdown/doctags payloads are valid empty documents."""
-    return _reader_df(df, extract_json_document, json_col)
+    return extract_payload(df, json_col, RAW_JSON)
 
 
 # ---------------------------------------------------------------------------
@@ -471,9 +264,6 @@ _HTML_LINE_RES = [
 ]
 
 
-_html_unescape_content = _xml_unescape  # element content: same inverse
-
-
 def _html_unescape_attr(s: str) -> str:
     # exact inverse of the exports "attr" escape (&quot; first, then the
     # shared content inverse)
@@ -492,17 +282,17 @@ def extract_html_export_document(html: str) -> list[dict]:
             if not m:
                 continue
             if kind == K_KEY_VALUE:
-                text = f"{_html_unescape_content(m.group(1))}: {_html_unescape_content(m.group(2))}"
+                text = f"{_xml_unescape(m.group(1))}: {_xml_unescape(m.group(2))}"
                 ref = None
             elif kind == K_TABLE:
                 # empty attr = the exporter's coalesce of a NULL ref
                 # ('' is not kernel-emittable -> None is exact inverse)
                 ref = _html_unescape_attr(m.group(1)) or None
-                text = _html_unescape_content(m.group(2))
+                text = _xml_unescape(m.group(2))
             elif kind == K_PICTURE:
                 text, ref = None, _html_unescape_attr(m.group(1)) or None
             else:
-                text, ref = _html_unescape_content(m.group(1)), None
+                text, ref = _xml_unescape(m.group(1)), None
             spans.append(
                 {"kind": kind, "text": text, "media_ref": ref, "offset": len(spans)}
             )
@@ -515,6 +305,7 @@ def extract_html_export_document(html: str) -> list[dict]:
 
 
 def extract_html_export(df, html_col: str = "html"):
-    """DataFrame(doc_id, <html_col>) -> extracted spans. Narrow map
-    stage — the canonical-HTML serialization reader."""
-    return _reader_df(df, extract_html_export_document, html_col, _vparse_html_export)
+    """DataFrame(doc_id, <html_col>) -> extracted spans — the
+    canonical-HTML serialization reader, parsed by
+    extract_html_export_document in the dispatch kernel."""
+    return extract_payload(df, html_col, RAW_HTML_DOC)

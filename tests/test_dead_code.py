@@ -72,6 +72,10 @@ TEST_ONLY_PUBLIC_API = {
     "bucketed_join",
     "dedup_survivors",
     "expire_snapshots",
+    "extract_doctags",
+    "extract_html_export",
+    "extract_json",
+    "extract_markdown",
     "extract_pdf_document",
     "list_snapshots",
     "overwrite_table",
@@ -135,6 +139,17 @@ def test_spans_column_made_in_one_place():
         (f"{PACKAGE}/model.py", "spans_array", "ListArray"),
         (f"{PACKAGE}/model.py", "spans_array", "StructArray"),
     ], sites
+
+
+def test_one_degrade_loop():
+    """Only the dispatch kernel turns a document's exception into a
+    `failed` row: METHOD_FAILED is referenced in the package only where
+    it is defined (model.py) and in operators/dispatch.py."""
+    sites = set()
+    for path in sorted((ROOT / PACKAGE).rglob("*.py")):
+        if "METHOD_FAILED" in _refs(ast.parse(path.read_text(), filename=str(path))):
+            sites.add(str(path.relative_to(ROOT)))
+    assert sites == {f"{PACKAGE}/model.py", f"{PACKAGE}/operators/dispatch.py"}, sites
 
 
 def test_pandas_map_only_in_the_fixture_writer():

@@ -228,6 +228,21 @@ def test_extraction_rows_use_no_pandas_kernel(spark, sf_dir):
         assert all("_pack_batches" in l for l in pandas_nodes), f"{name}:\n{plan}"
 
 
+def test_serialization_readers_run_the_dispatch_kernel(spark):
+    """The four serialization readers run the one extraction kernel:
+    exactly one MapInArrow node, `_extract_auto_arrow`, and no
+    MapInPandas."""
+    from docling_fast_server_spark.operators import md_ingest as mi
+
+    df = spark.createDataFrame([("d0", "x")], "doc_id string, payload string")
+    for op in (mi.extract_markdown, mi.extract_doctags, mi.extract_json, mi.extract_html_export):
+        plan = op(df, "payload")._jdf.queryExecution().optimizedPlan().toString()
+        arrow_nodes = [l for l in plan.splitlines() if "MapInArrow" in l]
+        assert len(arrow_nodes) == 1, f"{op.__name__}:\n{plan}"
+        assert "_extract_auto_arrow" in arrow_nodes[0], f"{op.__name__}:\n{plan}"
+        assert "MapInPandas" not in plan, f"{op.__name__}:\n{plan}"
+
+
 def test_media_rows_use_no_pandas_kernel(spark, sf_dir):
     """The media registry rows (synthesis, features, transforms) run
     their kernels over Arrow batches: no MapInPandas in the optimized

@@ -1,25 +1,21 @@
-"""Vectorized serialization readers (round-5 verdict item 8).
+"""Serialization readers in the dispatch kernel.
 
-Pins the contract stated in md_ingest.py's vectorized-path banner: the
-mapInArrow batch parse is BYTE-IDENTICAL to the per-document readers on
-canonical, edge, and malformed corpora — the per-doc functions stay the
-semantic definition, the vector path is only an execution strategy.
-
-Three layers:
-  * parser level — _vparse_* output == extract_*_document output on a
-    corpus of canonical + edge documents (no Spark);
-  * fallback level — any guard-tripping doc makes _vparse_* decline
-    (return None) so the per-doc loop owns ALL degrade behavior;
-  * Spark level — mixed good+malformed batches through extract_markdown /
-    extract_doctags / extract_html_export equal the per-doc kernel's
-    rows exactly (spans, conversion_method, error string), and the happy
-    path provably never enters the per-doc loop (seam injection).
+extract_markdown / extract_doctags / extract_json / extract_html_export
+run each payload as a one-span raw document through
+dispatch.extract_auto. The per-document readers (extract_*_document) are
+the one definition of each grammar, so a reader's Spark rows must equal
+the driver-side result of its per-document reader: the spans of
+``reader(payload or "")``, or ``(failed, str(e)[:500])`` when it raises.
+The batches mix canonical, edge, malformed, over-ceiling and NULL
+payloads, so the degrade rows (which doc fails, with exactly which error
+string) are checked too.
 """
 
-import pandas as pd
+import json
+
 import pytest
 
-from docling_fast_server_spark.model import MAX_SPANS_PER_DOC, METHOD_FAILED
+from docling_fast_server_spark.model import MAX_SPANS_PER_DOC, METHOD_DEFAULT, METHOD_FAILED
 from docling_fast_server_spark.operators import md_ingest as mi
 
 # ---------------------------------------------------------------------------
@@ -42,7 +38,7 @@ DT_DOCS = [
     "<picture>m1</picture>\n<picture></picture>\n<table>c1 c2</table>",
     "",
     "<text>x</text>\n\n<text>y</text>",  # blank lines skipped
-    "<text>a</text><text>b</text>",  # greedy body: ONE span, both per-doc & vector
+    "<text>a</text><text>b</text>",  # greedy body: ONE span
 ]
 
 HTML_DOCS = [
@@ -53,140 +49,93 @@ HTML_DOCS = [
     "",
 ]
 
-CASES = [
-    (MD_DOCS, mi._vparse_markdown, mi.extract_markdown_document, mi.extract_markdown, "markdown"),
-    (DT_DOCS, mi._vparse_doctags, mi.extract_doctags_document, mi.extract_doctags, "doctags"),
-    (HTML_DOCS, mi._vparse_html_export, mi.extract_html_export_document, mi.extract_html_export, "html"),
+
+def _json_span(i, kind="text", text="t", ref=None):
+    return {"kind": kind, "text": text, "media_ref": ref, "offset": i}
+
+
+JSON_DOCS = [
+    json.dumps(
+        [
+            _json_span(0, "section_header", "Head"),
+            _json_span(1, "text", 'a "q" \\ <b> & c'),
+            _json_span(2, "table", "c1 c2", "t1"),
+            _json_span(3, "picture", None, "m1"),
+        ]
+    ),
+    "[]",  # valid empty document
+    json.dumps([_json_span(7), _json_span(2)]),  # offsets need not be dense
 ]
 
+CASES = [
+    (MD_DOCS, mi.extract_markdown_document, mi.extract_markdown, "markdown"),
+    (DT_DOCS, mi.extract_doctags_document, mi.extract_doctags, "doctags"),
+    (HTML_DOCS, mi.extract_html_export_document, mi.extract_html_export, "html"),
+    (JSON_DOCS, mi.extract_json_document, mi.extract_json, "json"),
+]
+IDS = [c[-1] for c in CASES]
+
 MALFORMED = {
-    "markdown": None,  # every md block classifies; only the ceiling declines
+    "markdown": None,  # every md block classifies; only the ceiling fails
     "doctags": "<text>x</text>\nbroken line",
     "html": "<h2>ok</h2>\n<badline>",
+    "json": json.dumps([_json_span(0, text=123)]),
 }
 
 
-def _vflatten(res, n):
-    kind, text, ref, off, counts = res
-    out, pos = [], 0
-    for i in range(n):
-        spans = []
-        for _ in range(int(counts[i])):
-            spans.append(
-                {
-                    "kind": kind[pos],
-                    "text": text[pos],
-                    "media_ref": ref[pos],
-                    "offset": int(off[pos]),
-                }
-            )
-            pos += 1
-        out.append(spans)
-    assert pos == len(kind)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# parser level
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.parametrize("docs,vparse,perdoc,_op,name", CASES, ids=[c[-1] for c in CASES])
-def test_vector_equals_perdoc(docs, vparse, perdoc, _op, name):
-    res = vparse(pd.Series(docs))
-    assert res is not None, f"{name}: canonical corpus must vectorize"
-    assert _vflatten(res, len(docs)) == [perdoc(d) for d in docs]
-
-
-@pytest.mark.parametrize("docs,vparse,perdoc,_op,name", CASES, ids=[c[-1] for c in CASES])
-def test_ceiling_declines_to_perdoc(docs, vparse, perdoc, _op, name):
+def _over_ceiling(name: str) -> str:
+    n = MAX_SPANS_PER_DOC + 1
+    if name == "json":
+        return json.dumps([_json_span(i) for i in range(n)])
     sep = "\n\n" if name == "markdown" else "\n"
     unit = {"markdown": "t", "doctags": "<text>t</text>", "html": "<p>t</p>"}[name]
-    big = sep.join([unit] * (MAX_SPANS_PER_DOC + 1))
-    assert vparse(pd.Series([big, docs[0]])) is None
+    return sep.join([unit] * n)
+
+
+@pytest.mark.parametrize("docs,perdoc,_op,name", CASES, ids=IDS)
+def test_ceiling_declines_to_perdoc(docs, perdoc, _op, name):
     with pytest.raises(ValueError, match="span ceiling"):
-        perdoc(big)
-
-
-@pytest.mark.parametrize("name", ["doctags", "html"])
-def test_malformed_line_declines(name):
-    vparse = {"doctags": mi._vparse_doctags, "html": mi._vparse_html_export}[name]
-    assert vparse(pd.Series([MALFORMED[name]])) is None
-
-
-def test_empty_batch_vectorizes():
-    for vparse in (mi._vparse_markdown, mi._vparse_doctags, mi._vparse_html_export):
-        res = vparse(pd.Series([], dtype=object))
-        assert res is not None and _vflatten(res, 0) == []
+        perdoc(_over_ceiling(name))
 
 
 # ---------------------------------------------------------------------------
-# Spark level — vector kernel rows == per-doc kernel rows, including the
-# degrade rows of a mixed good+malformed+oversize batch.
+# Spark level — the entry point's rows == the per-document reader's result,
+# including the degrade rows of a mixed good+malformed+oversize batch.
 # ---------------------------------------------------------------------------
 
 
-def _rows(df):
-    return sorted(
-        (
-            r["doc_id"],
-            tuple(
-                (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in (r["spans"] or [])
-            ),
-            r["conversion_method"],
-            r["error"],
-        )
-        for r in df.collect()
-    )
+def _spans(spans) -> tuple:
+    return tuple((s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans)
 
 
-@pytest.mark.parametrize("docs,vparse,perdoc,op,name", CASES, ids=[c[-1] for c in CASES])
-def test_spark_rows_match_perdoc_kernel(spark, docs, vparse, perdoc, op, name):
-    sep = "\n\n" if name == "markdown" else "\n"
-    unit = {"markdown": "t", "doctags": "<text>t</text>", "html": "<p>t</p>"}[name]
-    corpus = list(docs) + [sep.join([unit] * (MAX_SPANS_PER_DOC + 1))]
+def _driver_row(doc_id, payload, reader):
+    try:
+        return (doc_id, _spans(reader(payload or "")), METHOD_DEFAULT, None)
+    except Exception as e:
+        return (doc_id, (), METHOD_FAILED, str(e)[:500])
+
+
+@pytest.mark.parametrize("docs,perdoc,op,name", CASES, ids=IDS)
+def test_spark_rows_match_perdoc_kernel(spark, docs, perdoc, op, name):
+    corpus = list(docs) + [_over_ceiling(name)]
     if MALFORMED[name]:
         corpus.append(MALFORMED[name])
     data = [(f"d{i:03d}", p) for i, p in enumerate(corpus)] + [("dnull", None)]
     df = spark.createDataFrame(data, "doc_id string, payload string")
 
-    got = _rows(op(df, "payload"))
-    want = _rows(mi._reader_df(df, perdoc, "payload"))  # vparse=None -> per-doc kernel
-    assert got == want
-    # the degrade rows really exist (the mixed batch exercised the fallback):
-    # the oversize doc always fails; doctags/html add the malformed-line doc
-    failed = [r for r in got if r[2] == METHOD_FAILED]
-    assert len(failed) == (2 if MALFORMED[name] else 1)
-    assert all("span ceiling" in r[3] or "malformed" in r[3] for r in failed)
-    # NULL payload is a VALID empty doc for these three formats
-    assert any(r[0] == "dnull" and r[2] != METHOD_FAILED and r[1] == () for r in got)
-
-
-def test_happy_path_never_enters_perdoc_loop(spark):
-    """Seam injection: on an all-canonical corpus the Arrow kernel must
-    not enter the per-doc fallback (the vectorized path is real, not a
-    façade). The `reader` argument is only ever called by _perdoc_flat,
-    and _perdoc_flat converts its exceptions into METHOD_FAILED rows —
-    so wiring a reader that always raises and asserting zero degrade
-    rows proves the fallback never ran. (A driver-side monkeypatch
-    cannot pin this: module-level functions are re-imported unpatched
-    inside Spark's Python workers.)"""
-
-    def boom(_payload):  # pragma: no cover - tripwire
-        raise AssertionError("per-doc fallback entered on canonical corpus")
-
-    df = spark.createDataFrame(
-        [(f"d{i}", p) for i, p in enumerate(MD_DOCS)], "doc_id string, payload string"
+    got = sorted(
+        (r["doc_id"], _spans(r["spans"]), r["conversion_method"], r["error"])
+        for r in op(df, "payload").collect()
     )
-    out = mi._reader_df(df, boom, "payload", mi._vparse_markdown)
-    assert out.count() == len(MD_DOCS)
-    assert out.filter(out.error.isNotNull()).count() == 0
-    # sanity: the tripwire DOES fire when the batch contains a decliner
-    df2 = df.unionAll(
-        spark.createDataFrame(
-            [("dbad", "\n\n".join(["t"] * (MAX_SPANS_PER_DOC + 1)))],
-            "doc_id string, payload string",
-        )
-    ).coalesce(1)
-    out2 = mi._reader_df(df2, boom, "payload", mi._vparse_markdown)
-    assert out2.filter(out2.error.contains("fallback entered")).count() == len(MD_DOCS) + 1
+    assert got == sorted(_driver_row(d, p, perdoc) for d, p in data)
+    # the degrade rows really exist: the oversize doc always fails, and
+    # doctags/html/json add the malformed doc
+    failed = {r[0]: r[3] for r in got if r[2] == METHOD_FAILED}
+    failed.pop("dnull", None)
+    assert len(failed) == (2 if MALFORMED[name] else 1)
+    assert "span ceiling" in failed[f"d{len(docs):03d}"]
+    # a NULL payload is a valid empty doc, except for json, where the
+    # empty payload is malformed (json.loads("") raises)
+    (null_row,) = [r for r in got if r[0] == "dnull"]
+    assert null_row[1] == ()
+    assert (null_row[2] == METHOD_FAILED) == (name == "json")

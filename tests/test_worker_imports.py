@@ -3,13 +3,17 @@
 workers get the guard."""
 
 import importlib
+import subprocess
 import sys
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pytest
 
 from docling_fast_server_spark import worker_imports
+
+ROOT = Path(__file__).resolve().parent.parent
 
 needs_eager_zipimport = pytest.mark.skipif(
     sys.version_info >= (3, 12), reason="zipimport re-reads lazily from Python 3.12"
@@ -55,6 +59,16 @@ def test_unchanged_archive_not_reread_changed_one_is(tmp_path, monkeypatch):
     importlib.invalidate_caches()
     assert reads.count(archive) == 2
     assert importlib.import_module("dfss_zmod_b").Y == 2
+
+
+def test_extraction_kernel_imports_no_pandas():
+    """A Python worker that unpickles the extraction kernel imports
+    `operators.dispatch`; that import chain loads no pandas."""
+    probe = "import sys, docling_fast_server_spark.operators.dispatch; print('pandas' in sys.modules)"
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=ROOT, capture_output=True, text=True, check=True
+    ).stdout
+    assert out.strip() == "False"
 
 
 def test_driver_import_system_untouched():
