@@ -24,7 +24,12 @@ exactly reproducible by the DuckDB oracle:
             even on a duplicate-heavy crawl corpus. Round 1 built a
             global distinct-shingle dictionary (distinct + two rank
             windows + executor-wide broadcast) which is billions of rows
-            at scale; it is gone.
+            at scale; it is gone. Size route: up to DRIVER_DOCS hash
+            sets and DRIVER_PAIRS bucket pairs, the cliques, bands, cap
+            and candidate pairs are computed on the driver from one
+            Arrow collect of the signatures (6 jobs per call instead of
+            ~25); verify and expansion stay Spark statements on both
+            routes.
 - simhash:  idf-weighted sign-sum over mixed universal hashes -> 64-bit
             fingerprint, 16-bit-banded pigeonhole blocking for hamming<=3
             pairs. Document frequency is keyed on the int64 shingle hash
@@ -629,24 +634,56 @@ _BAND_STRUCT_EXPRS = ", ".join(
 )
 
 
-def _minhash_stages(corpus: DataFrame, bucket_cap: int):
-    """Shared candidate-generation stages: returns (hsdf, tagged,
-    rep_sig, cand, bands) where tagged = (doc_id, signature, rep,
-    csize), cand is the DISTINCT rep-level candidate pair set and bands
-    = (doc_id, band, key) is the uncapped rep-level banding the cap and
-    the tripwire read. Identical
-    hash SET => identical signature and buckets (and covers identical
-    text as a special case), so banding one representative per
-    set-identity clique loses nothing — and a 10k-deep duplicate clique
-    contributes ONE banded row instead of C(10k, 2) candidate pairs
-    (test_dedup_skew pins this).
+# The driver route of _minhash_stages runs 6 jobs per
+# minhash_pairs_with_diag call where the Spark route runs ~24, but its
+# banding and pair building are single-threaded Python on the driver.
+# Both bounds are measured crossovers (local[4], 4-vCPU VM, 4 GiB driver
+# heap, median of 2-3 calls after a warm-up, each call
+# minhash_pairs_with_diag + noop write + tripwire collect):
+# - DRIVER_DOCS bounds the hash-set rows collected (11 int64 each).
+#   Random 20-60-word texts with 10% near and 4% exact copies, driver
+#   vs Spark route: 131k docs 20.8 vs 34.4 CPU-s, 7.4 vs 9.6 s wall;
+#   262k docs 52.2 vs 58.2 CPU-s but 17.4 vs 16.6 s wall.
+# - DRIVER_PAIRS bounds the candidate pairs the driver would build,
+#   counted as the sum of C(n, 2) over the kept buckets of every band
+#   before any is built. Near-dup families of 1000 docs among 20k random
+#   ones: 1 family (~0.88M) 18.7 vs 21.4 CPU-s, 6.3 vs 7.6 s wall;
+#   4 families (~3.5M) 53.1 vs 37.8 CPU-s, 18.8 vs 11.2 s wall.
+#   Unbounded, a corpus under DRIVER_DOCS of near-dup families just
+#   under the bucket cap would make the driver build ~N_BANDS *
+#   C(bucket_cap, 2) pairs per family and hold them as a local relation.
+DRIVER_DOCS = 1 << 17
+DRIVER_PAIRS = 1 << 20
 
-    Both hsdf and member feed several consumers (signatures + both verify
-    sides; rep filter + three expansion joins), so each is persisted once
-    (MEMORY_AND_DISK — hash sets are ~10% of corpus bytes and spill
-    instead of OOMing; membership is three int64s/doc). Lifecycle:
-    registered for clear_caches() — the caller frees them after
-    consuming the result."""
+
+def _minhash_stages(corpus: DataFrame, bucket_cap: int):
+    """Shared candidate-generation stages: returns (hsdf, tagged, cand,
+    trip) where hsdf = (doc_id, hs) is the cached hash-set frame, tagged
+    = (doc_id, rep, csize) maps every document to its set-identity
+    clique's representative (min doc_id) and size, cand is the DISTINCT
+    rep-level candidate pair set (doc_a < doc_b) after the bucket cap,
+    and trip holds the bucket_tripwire rows of the uncapped rep-level
+    banding. Identical hash SET => identical signature and buckets (and
+    covers identical text as a special case), so banding one
+    representative per set-identity clique loses nothing — and a
+    10k-deep duplicate clique contributes ONE banded row instead of
+    C(10k, 2) candidate pairs (test_dedup_skew pins this).
+
+    Routes on the hash-set row count, as connected_components routes on
+    its edge count: one job counts the cached frame and so fills the
+    cache. At most DRIVER_DOCS rows are collected as Arrow (doc_id, the
+    signature and the two set folds — never hs) and tagged, cand and
+    trip are computed on the driver (_driver_stages) and come back as
+    local frames, unless the buckets would yield more than DRIVER_PAIRS
+    pairs; otherwise the Spark statements below run. Both routes
+    evaluate the signature and fold expressions in Spark, and both feed
+    the one verify/expansion statement of minhash_pairs_with_diag.
+
+    hsdf is persisted once (MEMORY_AND_DISK — hash sets are ~10% of
+    corpus bytes and spill instead of OOMing), and on the Spark route so
+    is tagged (rep filter + two expansion joins). Lifecycle: registered
+    for clear_caches() — the caller frees them after consuming the
+    result."""
     # coalesce (narrow, NO shuffle) the cached hash sets to the
     # cluster's parallelism: the scan layout can carry hundreds of tiny
     # splits (one per file), and every downstream stage that probes the
@@ -658,23 +695,35 @@ def _minhash_stages(corpus: DataFrame, bucket_cap: int):
     par = max(corpus.sparkSession.sparkContext.defaultParallelism, 1)
     hsdf = _register_cache(_doc_hashsets(corpus).coalesce(par))
     # signatures + clique fold in ONE narrow projection off the cached
-    # hash sets. Clique tagging (rep = min(doc_id), csize) is a
-    # groupBy(f1,f2) FILTERED to non-singleton cliques, joined back —
-    # NOT a window (round-6 verdict item 2): the aggregate is map-side
-    # combinable and its exchange ships one slim partial row per
-    # distinct fold pair, where the window formulation sort-shuffled
-    # the corpus's full 11-int64 rows (measured ~0.5 s at sf0.1). The
-    # filtered clique list holds one row per REAL duplicate clique —
-    # tiny on healthy corpora, so AQE broadcasts the join and the
-    # signature side never shuffles; on a duplicate-heavy crawl it
-    # degrades to a sort-merge join, which is exactly the old window's
-    # cost. Unmatched rows are singletons: rep = self, csize = 1.
-    # `tagged` feeds the rep filter plus the two membership-expansion
-    # joins, so it is persisted too (10 longs/doc after dropping the
-    # fold keys). Keeping the consumer count low matters: concurrent
-    # AQE stages race to materialize a cold cache, each re-running its
-    # lineage from the previous cache — measured at ~0.35 s per racing
-    # consumer at sf0.1.
+    # hash sets, on both routes
+    combined = hsdf.selectExpr(
+        "doc_id",
+        *_SIG_EXPRS,
+        _set_fold_expr(SETF_B1, SETF_P1, "f1"),
+        _set_fold_expr(SETF_B2, SETF_P2, "f2"),
+    )
+    # one job that also fills the cache; DataFrame.count() would add an
+    # AQE aggregate stage
+    if hsdf._jdf.queryExecution().toRdd().count() <= DRIVER_DOCS:
+        stages = _driver_stages(combined, bucket_cap)
+        if stages is not None:
+            return (hsdf, *stages)
+    # Clique tagging (rep = min(doc_id), csize) is a groupBy(f1,f2)
+    # FILTERED to non-singleton cliques, joined back — NOT a window
+    # (round-6 verdict item 2): the aggregate is map-side combinable and
+    # its exchange ships one slim partial row per distinct fold pair,
+    # where the window formulation sort-shuffled the corpus's full
+    # 11-int64 rows (measured ~0.5 s at sf0.1). The filtered clique list
+    # holds one row per REAL duplicate clique — tiny on healthy corpora,
+    # so AQE broadcasts the join and the signature side never shuffles;
+    # on a duplicate-heavy crawl it degrades to a sort-merge join, which
+    # is exactly the old window's cost. Unmatched rows are singletons:
+    # rep = self, csize = 1. `tagged` feeds the rep filter plus the two
+    # membership-expansion joins, so it is persisted too (10 longs/doc
+    # after dropping the fold keys). Keeping the consumer count low
+    # matters: concurrent AQE stages race to materialize a cold cache,
+    # each re-running its lineage from the previous cache — measured at
+    # ~0.35 s per racing consumer at sf0.1.
     # r8: the stages below are issued as a handful of spark.sql
     # statements over temp views of the two cached frames instead of
     # ~70 chained DataFrame calls. Every classic DataFrame method is a
@@ -695,12 +744,6 @@ def _minhash_stages(corpus: DataFrame, bucket_cap: int):
     # when the composed dedup_clusters fixpoint re-materializes the
     # stages under AQE; the expression trees are SQL strings already,
     # so the residual cost is a handful of DataFrame calls.
-    combined = hsdf.selectExpr(
-        "doc_id",
-        *_SIG_EXPRS,
-        _set_fold_expr(SETF_B1, SETF_P1, "f1"),
-        _set_fold_expr(SETF_B2, SETF_P2, "f2"),
-    )
     cliq = (
         combined.groupBy("f1", "f2")
         .agg(
@@ -718,7 +761,6 @@ def _minhash_stages(corpus: DataFrame, bucket_cap: int):
         )
     )
     _register_view(tagged, f"{tag}_tagged")
-    rep_sig = sess.sql(f"SELECT * FROM {tag}_tagged WHERE doc_id = rep")
     bands_sql = f"""
         SELECT doc_id, bk.band AS band, bk.key AS key
         FROM (SELECT doc_id, explode(array({_BAND_STRUCT_EXPRS})) AS bk
@@ -742,7 +784,99 @@ def _minhash_stages(corpus: DataFrame, bucket_cap: int):
           ON x.band = y.band AND x.key = y.key
         WHERE x.doc_a < y.doc_b
     """)
-    return hsdf, tagged, rep_sig, cand, bands
+    return hsdf, tagged, cand, bucket_tripwire(bands, bucket_cap)
+
+
+_TRIP_COLS = ("band", "n_buckets", "max_bucket", "over_cap_buckets", "suppressed_members")
+
+
+def _driver_stages(combined: DataFrame, bucket_cap: int):
+    """(tagged, cand, trip) of _minhash_stages from ONE Arrow collect of
+    the signature frame (doc_id, h0..h7, f1, f2), with the Spark route's
+    semantics: rep = min doc_id per (f1, f2) clique (the document itself
+    where that is null), bands over the reps only, a bucket of more than
+    ``bucket_cap`` reps dropped whole, and the distinct rep pairs with
+    doc_a < doc_b. A band key is the tuple of its BAND_ROWS signature
+    values: the same equality as the concat_ws string key, since the
+    values are non-null integers. Pairs are formed over dense ranks of
+    the rep ids (equal ids share a rank, order is kept), so they dedupe
+    as int64 codes whatever the id type. The frames keep the input's
+    doc_id type and bucket_tripwire's schema. The candidate set is the
+    one the Spark route's band join emits. Returns None, having built no
+    pair, when the sum of C(n, 2) over the kept buckets of every band
+    exceeds DRIVER_PAIRS: the caller then takes the Spark route."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    sig = combined.toArrow()
+    cliques = sig.group_by(["f1", "f2"]).aggregate(
+        [("doc_id", "min"), ("doc_id", "count", pc.CountOptions("all"))]
+    )
+    sig = sig.join(cliques, ["f1", "f2"])
+    rep = pc.coalesce(sig["doc_id_min"], sig["doc_id"])
+    reps = sig.filter(pc.equal(sig["doc_id"], rep))
+    rank = pc.rank(reps["doc_id"].combine_chunks(), tiebreaker="dense")  # 1-based
+    ids = pc.unique(reps["doc_id"])
+    ids = ids.take(pc.sort_indices(ids))
+    n = max(len(ids), 1)
+    buckets, trip_rows, n_pairs = [], [], 0
+    for b in range(N_BANDS):
+        cols = _H_COLS[b * BAND_ROWS : (b + 1) * BAND_ROWS]
+        members = (
+            reps.select(cols).append_column("r", rank)
+            .group_by(cols).aggregate([("r", "list")])["r_list"]
+        )
+        sizes = pc.list_value_length(members).to_numpy().astype(np.int64)
+        if not len(sizes):
+            continue
+        hot = sizes > bucket_cap
+        trip_rows.append((b, len(sizes), sizes.max(), hot.sum(), sizes[hot].sum()))
+        kept = np.flatnonzero(~hot & (sizes > 1))
+        n_pairs += int((sizes[kept] * (sizes[kept] - 1) // 2).sum())
+        buckets.append((members, kept))
+    if n_pairs > DRIVER_PAIRS:
+        return None
+    codes = []
+    for members, kept in buckets:
+        for i in kept:
+            m = np.unique(members[int(i)].values.to_numpy()).astype(np.int64) - 1
+            a, c = np.triu_indices(len(m), 1)
+            codes.append(m[a] * n + m[c])
+    codes = np.unique(np.concatenate(codes)) if codes else np.empty(0, np.int64)
+
+    sess = combined.sparkSession
+    id_field = combined.schema["doc_id"]
+    id_type, nullable = id_field.dataType, id_field.nullable
+    tagged = sess.createDataFrame(
+        pa.table({"doc_id": sig["doc_id"], "rep": rep, "csize": sig["doc_id_count"]}),
+        T.StructType(
+            [
+                id_field,
+                T.StructField("rep", id_type, nullable),
+                T.StructField("csize", T.LongType(), False),
+            ]
+        ),
+    )
+    cand = sess.createDataFrame(
+        pa.table({"doc_a": ids.take(codes // n), "doc_b": ids.take(codes % n)}),
+        T.StructType(
+            [T.StructField("doc_a", id_type, nullable), T.StructField("doc_b", id_type, nullable)]
+        ),
+    )
+    trip_cols = list(zip(*trip_rows)) or [()] * len(_TRIP_COLS)
+    trip = sess.createDataFrame(
+        pa.table({k: pa.array(v, pa.int64()) for k, v in zip(_TRIP_COLS, trip_cols)}),
+        T.StructType(
+            [
+                T.StructField("band", T.IntegerType(), False),
+                T.StructField("n_buckets", T.LongType(), False),
+            ]
+            + [T.StructField(name, T.LongType(), True) for name in _TRIP_COLS[2:]]
+        ),
+    )
+    return tagged, cand, trip
 
 
 def minhash_candidate_pairs(
@@ -750,22 +884,7 @@ def minhash_candidate_pairs(
 ) -> DataFrame:
     """The rep-level candidate pair set alone — the stage whose size the
     skew guards bound (exposed for tests/diagnostics)."""
-    _, _, _, cand, _ = _minhash_stages(corpus, bucket_cap)
-    return cand
-
-
-def minhash_pairs_with_diag(
-    corpus: DataFrame, bucket_cap: int = MINHASH_BUCKET_CAP
-) -> tuple[DataFrame, DataFrame]:
-    """(verified pairs, bucket_tripwire rows) off ONE pipeline pass —
-    the banded relation is built once and both outputs read the same
-    cached stages, so surfacing the diagnostics costs one extra partial
-    aggregation, never a second corpus scan. The production entry points
-    (plans.pipeline.run_dedup) append the tripwire UNCONDITIONALLY, the
-    way the reference surfaces queue stats on every status call
-    (queue_manager.py:853-858)."""
-    pairs, bands = _minhash_pairs_impl(corpus, bucket_cap)
-    return pairs, bucket_tripwire(bands, bucket_cap)
+    return _minhash_stages(corpus, bucket_cap)[2]
 
 
 def minhash_pairs(
@@ -777,33 +896,40 @@ def minhash_pairs(
 
     Plan shape: signatures are narrow (array_min of a transform over the
     per-doc hash set); set-identity cliques collapse to representatives
-    before banding (_minhash_stages); the only corpus-wide shuffles
-    carry ids and int64 hashes; verification is per-candidate-pair
-    array_intersect (_verify_jaccard) at the REP level, then verified
-    pairs expand back through clique membership: cross-clique members
-    inherit the rep pair's jaccard (identical hash sets), intra-clique
-    pairs are jaccard 1.0 by construction.
+    before banding (_minhash_stages, on the driver under its size
+    bounds); the only corpus-wide shuffles carry ids and int64
+    hashes; verification is per-candidate-pair array_intersect at the
+    REP level, then verified pairs expand back through clique
+    membership: cross-clique members inherit the rep pair's jaccard
+    (identical hash sets), intra-clique pairs are jaccard 1.0 by
+    construction.
 
     Expansion is a SINGLE two-join branch: the verified rep pairs plus a
-    diagonal (rep, rep, 1.0) row per non-singleton clique (csize rides
-    the clique window for free, so the diagonal comes off the banding
-    path with no extra aggregate or self-join) joined to membership on
-    both ends. The pair filter keeps a<b on the diagonal (each unordered
-    intra pair once) and every cross combination (cliques are disjoint
-    so a != b always; least/greatest normalizes the order). AQE
-    broadcasts the tiny rep-pair side, so membership never shuffles
-    here."""
-    pairs, _ = _minhash_pairs_impl(corpus, bucket_cap)
-    return pairs
+    diagonal (rep, rep, 1.0) row per non-singleton clique (read off
+    tagged's csize, so it needs no extra aggregate or self-join) joined
+    to membership on both ends. The pair filter keeps a<b on the
+    diagonal (each unordered intra pair once) and every cross
+    combination (cliques are disjoint so a != b always; least/greatest
+    normalizes the order). AQE broadcasts the tiny rep-pair side, so
+    membership never shuffles here."""
+    return minhash_pairs_with_diag(corpus, bucket_cap)[0]
 
 
-def _minhash_pairs_impl(
-    corpus: DataFrame, bucket_cap: int
+def minhash_pairs_with_diag(
+    corpus: DataFrame, bucket_cap: int = MINHASH_BUCKET_CAP
 ) -> tuple[DataFrame, DataFrame]:
-    """(pairs, banded) — shared by minhash_pairs and the diag variant."""
-    hsdf, tagged, rep_sig, cand, bands = _minhash_stages(corpus, bucket_cap)
-    # same rationale as _minhash_stages: verify + diagonal + membership
-    # expansion as ONE sql statement over views of the cached frames
+    """(verified pairs, bucket_tripwire rows) off ONE pipeline pass —
+    both outputs read the same cached stages, so surfacing the
+    diagnostics never costs a second corpus scan: on the driver route
+    the tripwire rows are computed with the candidates, on the Spark
+    route they are per-band aggregates over the banded relation the cap
+    reads. The production entry points (plans.pipeline.run_dedup) append
+    the tripwire UNCONDITIONALLY, the way the reference surfaces queue
+    stats on every status call (queue_manager.py:853-858)."""
+    hsdf, tagged, cand, trip = _minhash_stages(corpus, bucket_cap)
+    # verify + diagonal + membership expansion as ONE sql statement over
+    # views of the stage frames (same rationale as _minhash_stages), on
+    # both routes
     sess = corpus.sparkSession
     tag = f"__mhp{next(_VIEW_IDS)}"
     _register_view(hsdf, f"{tag}_hs")
@@ -835,7 +961,7 @@ def _minhash_pairs_impl(
         )
         WHERE (a < b) OR ((NOT (doc_a = doc_b)) AND (a > b))
     """)
-    return pairs, bands
+    return pairs, trip
 
 
 def q_dedup_minhash(spark, sf_dir):

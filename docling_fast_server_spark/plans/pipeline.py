@@ -239,8 +239,10 @@ def run_dedup(
     suppressed_members / over_cap_buckets / max_bucket from the banded
     LSH relation (bucket_tripwire) and n_docs / n_clusters / n_dropped /
     max_cluster_size from the cluster assignment (cluster_stats). All
-    derived off the SAME cached pipeline pass as the pairs themselves —
-    one extra partial aggregation, never a second corpus scan. Returns
+    derived off the SAME cached pipeline pass as the pairs themselves
+    (minhash_pairs_with_diag: computed with the candidates on the
+    driver route, per-band aggregates of the banding on the Spark
+    route), never a second corpus scan. Returns
     the run_id; caller releases the registered caches (dedup
     clear_caches) after consuming any further outputs."""
     from ..operators.components import (

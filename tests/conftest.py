@@ -33,3 +33,22 @@ def documents_pdf(sf_dir):
     ).fetchall()
     con.close()
     return rows
+
+
+@pytest.fixture
+def minhash_routes():
+    """`for route in minhash_routes(): ...` runs the loop body once per
+    route of dedup's minhash stages, "driver" then "spark". The minhash
+    family routes on the hash-set row count (dedup.DRIVER_DOCS) and every
+    test corpus is under it, so "spark" lowers the constant below any
+    count, the empty corpus included."""
+    from docling_fast_server_spark.operators import dedup
+
+    def routes():
+        for route in ("driver", "spark"):
+            with pytest.MonkeyPatch.context() as mp:
+                if route == "spark":
+                    mp.setattr(dedup, "DRIVER_DOCS", -1)
+                yield route
+
+    return routes

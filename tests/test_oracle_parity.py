@@ -37,10 +37,18 @@ def _canon(rows, colnames):
 
 
 NAMES = sorted(entry_mod.queries().keys())
+# rows built on dedup's minhash stages, which route on the hash-set row
+# count (dedup.DRIVER_DOCS): each is checked on both routes
+MINHASH_ROWS = ("dedup_minhash", "dedup_clusters", "pipeline_e2e")
 
 
 @pytest.mark.parametrize("name", NAMES)
-def test_query_matches_oracle(spark, sf_dir, name):
+def test_query_matches_oracle(spark, sf_dir, name, minhash_routes):
+    for route in minhash_routes() if name in MINHASH_ROWS else ["default"]:
+        _check_query(spark, sf_dir, name, f"{name} ({route} route)")
+
+
+def _check_query(spark, sf_dir, name, label):
     q = entry_mod.queries()[name]
     o = entry_mod.oracle_sql().get(name)
     sdf = q(spark, sf_dir)
@@ -54,11 +62,11 @@ def test_query_matches_oracle(spark, sf_dir, name):
     dcols = [d[0] for d in cur.description]
     drows = cur.fetchall()
     con.close()
-    assert sorted(scols) == sorted(dcols), f"{name}: columns {scols} vs {dcols}"
-    assert len(srows) == len(drows), f"{name}: rows {len(srows)} vs {len(drows)}"
+    assert sorted(scols) == sorted(dcols), f"{label}: columns {scols} vs {dcols}"
+    assert len(srows) == len(drows), f"{label}: rows {len(srows)} vs {len(drows)}"
     sc, dc = _canon(srows, scols), _canon(drows, dcols)
     for i, (a, b) in enumerate(zip(sc, dc)):
-        assert a == b, f"{name}: first mismatch at canon row {i}: {a} vs {b}"
+        assert a == b, f"{label}: first mismatch at canon row {i}: {a} vs {b}"
 
 
 def test_entry_smoke(spark):

@@ -120,25 +120,37 @@ def test_fingerprint_plan_is_narrow(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
-def test_minhash_plan_has_no_dictionary(spark, sf_dir):
+def test_minhash_plan_has_no_dictionary(spark, sf_dir, minhash_routes):
     """dedup_minhash signatures are narrow higher-order projections: no
     broadcast of a distinct-shingle relation (the round-1 rank
     dictionary stays gone), no Python eval. The ONLY Window allowed is
     the r6 per-bucket skew cap, recognizable by its (band, key)
     partition spec — any other Window would mean a dictionary or
-    per-doc ranking crept back in."""
+    per-doc ranking crept back in. Checked on both minhash routes: the
+    Spark route aggregates cliques, hot buckets and candidates in the
+    plan; the driver route hands the plan its tagged and candidate
+    frames as local relations."""
     import __spark_entry__ as e
 
-    plan = _plan(e.queries()["dedup_minhash"](spark, sf_dir))
-    for line in plan.splitlines():
-        if "Window" in line:
-            # also allowed: the clique-rep min window over the set-fold
-            # pair (f1, f2) — the other r6 skew guard
-            assert ("band" in line and "key" in line) or (
-                "f1" in line and "f2" in line
-            ), line
-    assert "BatchEvalPython" not in plan
-    assert "HashAggregate" in plan  # verify-stage counts
+    from docling_fast_server_spark.operators import dedup
+
+    for route in minhash_routes():
+        try:
+            plan = _plan(e.queries()["dedup_minhash"](spark, sf_dir))
+        finally:
+            dedup.clear_caches(spark)
+        for line in plan.splitlines():
+            if "Window" in line:
+                # also allowed: the clique-rep min window over the set-fold
+                # pair (f1, f2) — the other r6 skew guard
+                assert ("band" in line and "key" in line) or (
+                    "f1" in line and "f2" in line
+                ), line
+        assert "BatchEvalPython" not in plan
+        if route == "spark":
+            assert "HashAggregate" in plan  # clique, hot-bucket, distinct
+        else:
+            assert "LocalTableScan" in plan, plan
 
 
 def test_dedup_family_never_shuffles_text(spark, sf_dir):
