@@ -86,7 +86,7 @@ def _chunk_spans_hof(
     token count and the chunk grouping are all computed WITHIN that
     array by higher-order functions — no Window, no groupBy, no
     Exchange of any kind, making the whole extract -> chunk pipeline a
-    single narrow stage at any corpus size. The three selects are SQL
+    single narrow stage at any corpus size. The selects are SQL
     strings parsed JVM-side in one call each (r8: the same trees built
     through the Column API cost ~150 py4j round-trips, ~0.25-0.35 s of
     driver latency per bench rep). Differential-tested row-equal to the
@@ -96,9 +96,10 @@ def _chunk_spans_hof(
     piece p of a span whose earlier spans total C tokens lands in chunk
     floor((C + p*budget)/budget) — identical to the row-windowed
     cumulative-sum definition because every non-final piece holds
-    exactly `budget` tokens. Chunk indices are contiguous from 0, so
-    chunks are materialized by filtering the piece array per index
-    (pieces stay in (offset, piece_i) order: first member = the
+    exactly `budget` tokens. Chunk indices are contiguous from 0 and
+    never decrease along the piece array, so each chunk is one slice of
+    it, from where chunk_idx changes to the next change (pieces stay in
+    (offset, piece_i) order: first member = the
     arg-min-ord_key piece whose heading the chunk reports). The
     heading's IS NOT NULL guard keeps the oracle's IGNORE NULLS
     semantics: a header with NULL text keeps the previous heading.
@@ -111,13 +112,14 @@ def _chunk_spans_hof(
     chunk row — the whole-doc fallback of pdf_processor.py:60-69.
 
     Per-document cost is O(spans^2) struct copies (the prefix fold
-    rebuilds its items array per span) + O(pieces x chunks) scans (each
-    chunk filters the piece array) — all cheap JVM element operations
-    with no re-tokenization, single-threaded WITHIN one document. At
-    the production budget (~hundreds of tokens) a pathological
-    1000-page / 10^4-span document costs ~10^8 element touches, tens of
-    ms — far below what shipping the corpus through a shuffle costs,
-    and the LPT size-descending partition order (plans/pipeline) already
+    rebuilds its items array per span) + O(pieces) for chunk assembly
+    (one pass finds the chunk starts, and each piece lands in exactly
+    one slice) — all cheap JVM element operations with no
+    re-tokenization, single-threaded WITHIN one document. At the
+    production budget (~hundreds of tokens) a pathological 1000-page /
+    10^4-span document costs ~10^8 element touches, tens of ms — far
+    below what shipping the corpus through a shuffle costs, and the LPT
+    size-descending partition order (plans/pipeline) already
     schedules such stragglers first."""
     B = budget
 
@@ -170,24 +172,30 @@ def _chunk_spans_hof(
         "doc_id", f"flatten(transform(enr.items, it -> {piece_rows})) AS pieces"
     )
 
-    mem = "filter(pieces, x -> x.chunk_idx = ci)"
-    chunk_of = (
-        f"struct(CAST(ci AS INT) AS chunk_idx, "
-        f"element_at({mem}, 1).heading AS heading, "
-        f"array_join(transform(filter({mem}, m -> m.p_text IS NOT NULL), "
-        f"m -> m.p_text), ' ') AS chunk_text, "
-        f"aggregate({mem}, CAST(0 AS BIGINT), (a, m) -> a + m.p_tok) AS n_tokens, "
-        f"CAST(size(array_distinct(transform({mem}, m -> m.offset))) AS BIGINT) "
-        f"AS n_spans)"
-    )
-    # the highest chunk actually opened by a piece — NOT floor((total-1)/B):
-    # a trailing zero-token media piece at an exact budget boundary opens
+    # pieces are in (offset, piece_i) order, so chunk_idx never decreases
+    # along the array and each chunk is the contiguous run of pieces from
+    # one 1-based start (where chunk_idx changes) to the next. Indices
+    # are contiguous from 0: consecutive pieces' cum_before differ by at
+    # most B, so no budget window below the last one opened is skipped.
+    # A trailing zero-token media piece at an exact budget boundary opens
     # one more (empty-text) chunk, exactly as the row-windowed cumulative
-    # sum does. Indices below it are all non-empty (consecutive pieces'
-    # cum_before differ by at most B, so every budget window below the
-    # max is crossed by some piece).
-    max_idx = (
-        "coalesce(array_max(transform(pieces, x -> x.chunk_idx)), CAST(0 AS BIGINT))"
+    # sum does. The size guard is needed: sequence(1, 0) counts down.
+    starts = (
+        "CASE WHEN coalesce(size(pieces), 0) > 0 THEN "
+        "filter(sequence(1, size(pieces)), i -> CASE WHEN i = 1 THEN true ELSE "
+        "element_at(pieces, i).chunk_idx <> element_at(pieces, i - 1).chunk_idx END) "
+        "END AS starts"
+    )
+    d = d.selectExpr("doc_id", "pieces", starts)
+
+    stop = "CASE WHEN j + 1 < size(starts) THEN starts[j + 1] ELSE size(pieces) + 1 END"
+    chunk_of = (
+        "struct(CAST(m[0].chunk_idx AS INT) AS chunk_idx, m[0].heading AS heading, "
+        "array_join(transform(filter(m, x -> x.p_text IS NOT NULL), "
+        "x -> x.p_text), ' ') AS chunk_text, "
+        "aggregate(m, CAST(0 AS BIGINT), (a, x) -> a + x.p_tok) AS n_tokens, "
+        "CAST(size(array_distinct(transform(m, x -> x.offset))) AS BIGINT) "
+        "AS n_spans)"
     )
     fallback = (
         "array(struct(CAST(0 AS INT) AS chunk_idx, '' AS heading, "
@@ -196,7 +204,8 @@ def _chunk_spans_hof(
     )
     chunks = (
         f"CASE WHEN coalesce(size(pieces), 0) = 0 THEN {fallback} "
-        f"ELSE transform(sequence(CAST(0 AS BIGINT), {max_idx}), ci -> {chunk_of}) END"
+        f"ELSE transform(transform(starts, (s, j) -> slice(pieces, s, ({stop}) - s)), "
+        f"m -> {chunk_of}) END"
     )
     return d.selectExpr("doc_id", f"explode({chunks}) AS c").selectExpr(
         "doc_id",

@@ -15,14 +15,17 @@ table loses — P(candidate) = 1 - (1 - p_band)^bands where
 p_band = (1 - theta/pi)^b for vectors at angle theta. With 4x4 this is
 ~0.95 for cos≈0.9 neighbors and ~1-1e-7 for near-duplicates.
 
-Both variants are pure DataFrame code and exactly reproducible in DuckDB
-— the dot product is an UNROLLED fixed-DIM sum of array-element products
-(plain arithmetic inside whole-stage codegen; the earlier
-aggregate(zip_with(...)) form is CodegenFallback — every evaluation
-interpreted two lambdas and allocated a DIM-element array, which at sf1
-made the vector family ~60x slower than DuckDB), and per-vector norms
+Brute force scores in one Arrow kernel (brute_topk); the LSH and IVF
+variants are pure DataFrame code. All three are exactly reproducible in
+DuckDB. The brute kernel folds each dot and norm left to right from 0.0
+over DIM in numpy, the same IEEE operations in the same order as the
+aggregate(zip_with(...)) fold, so its cosines are bit-identical to it. In
+the DataFrame variants the per-PAIR dot is routed by table size
+(_route_dot): an UNROLLED fixed-DIM sum of array-element products (plain
+arithmetic inside whole-stage codegen) at scale, the interpreted
+aggregate(zip_with(...)) fold below CODEGEN_MIN_ROWS; per-vector norms
 are computed ONCE per row before any candidate join instead of once per
-candidate pair. Both rewrites are bit-identical: the unrolled sum folds
+candidate pair. Both dot forms are bit-identical: the unrolled sum folds
 left-to-right exactly like the aggregate seeded with 0.0, and the norm
 is the same expression over the same values — including
 the deterministic pseudo-random hyperplanes: h_p[d] = ((1 + (p*64+d) *
@@ -109,22 +112,26 @@ def _norm(a):
 # ~ 10k vectors at the n^2/QUERY_MOD pair count. Both forms are
 # bit-identical (IEEE left-to-right association from a 0.0 seed), so the
 # route can never change a result — pinned by test_dot_route_equivalence.
-# The "fixed per-execution codegen cost" above was measured while the
-# generated-class cache held Spark's default 100 entries and evicted the
-# scored stage's class between executions; session.get_spark now sizes
-# the cache to hold it, so a repeated execution may no longer pay the
-# compile and the crossover is due a re-measurement (ROADMAP).
+# Re-measured with session.get_spark's 2048-entry generated-class cache,
+# both routes' classes cached (perfbench corpus_prep inputs, 2,000
+# vectors, the scored brute top-k of the time, local[4], 4-vCPU VM,
+# median of 8 executions): the unrolled dot costs 2.83 task-CPU-s per
+# execution against 0.49 for the HOF dot. The compile tax was not the
+# gap, so the constant stays.
 CODEGEN_MIN_ROWS = 10_000
 
 
 def _parquet_num_rows(path: str) -> int | None:
     """Row count from parquet footers (driver-side metadata only, no
     Spark job — the same information a table catalog serves for free).
-    Returns None when the path is not locally statable (non-local FS);
-    callers then take the codegen route, the safe-at-scale default."""
+    A ``file:`` URI is read as the local path it names. Returns None
+    when the path is not locally statable (non-local FS); callers then
+    take the codegen route, the safe-at-scale default."""
     import glob as _glob
     import os as _os
+    import re as _re
 
+    path = _re.sub(r"^file:(//)?", "", path)
     try:
         import pyarrow.parquet as _pq
 
@@ -184,40 +191,140 @@ def _rank_topk(scored, k: int):
     )
 
 
-def brute_topk(vecs: DataFrame, query_filter, k: int = TOPK, dot: str | None = None) -> DataFrame:
+# The kernel emits, per query and Arrow batch, the rows whose cosine is
+# at least the batch's k-th best minus this margin. Spark's HALF_UP
+# round(., 3) is monotone and moves a value by at most 0.0005, so a row
+# more than 0.001 below the k-th best rounds strictly below k rows of its
+# own batch and can never reach the top k.
+_TOPK_MARGIN = 0.002
+_BLOCK_CELLS = 1 << 16  # query-block x batch-row scores held at once
+
+
+def _vec_matrix(ids, varr):
+    """(ids, V): the int64 ids and the (n, DIM) float64 matrix of an
+    Arrow id column and list<float|double> vector column (float widens
+    to double exactly, as Spark's cast does). A null id, a null
+    vector, a vector that is not DIM long or one holding a null element
+    raises a ValueError that names the vec_id: the SQL forms would score
+    such a row NULL, silently."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if ids.null_count:
+        raise ValueError("brute_topk: a vec_id is NULL")
+    ids_np = ids.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    lens = pc.list_value_length(varr)
+    bad = pc.fill_null(pc.not_equal(lens, DIM), True)
+    if pc.any(bad).as_py():
+        i = pc.index(bad, True).as_py()
+        n = lens[i].as_py()
+        raise ValueError(
+            f"brute_topk: vector of vec_id {ids_np[i]} is "
+            f"{'NULL' if n is None else f'{n} long'}, not {DIM} long"
+        )
+    flat = varr.flatten()
+    if flat.null_count:
+        i = pc.list_parent_indices(varr)[pc.index(pc.is_null(flat), True).as_py()]
+        raise ValueError(f"brute_topk: vector of vec_id {ids_np[i.as_py()]} holds a NULL")
+    V = flat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return ids_np, V.reshape(len(ids_np), DIM)
+
+
+def _fold_norms(ids, V):
+    """Per-row sqrt of the left-to-right sum of squares from 0.0 (the
+    _norm_sql fold); a zero norm raises a ValueError that names the
+    vec_id, where the SQL form divides by zero."""
+    import numpy as np
+
+    s = np.zeros(len(V))
+    for i in range(DIM):
+        s += V[:, i] * V[:, i]
+    nrm = np.sqrt(s)
+    if len(nrm) and not nrm.all():
+        raise ValueError(f"brute_topk: vector of vec_id {ids[np.argmin(nrm)]} has norm 0")
+    return nrm
+
+
+def brute_topk(vecs: DataFrame, query_filter, k: int = TOPK) -> DataFrame:
     """Exact cosine top-k of every query_filter row against the full
-    table. Query side is tiny -> broadcast; the scan side stays
+    table. The query rows are collected to the driver once (one job,
+    with toArrow) and ride the kernel's closure; the scan side stays
     partition-parallel via the input layout (no repartition — a
     production table is thousands of splits; the bench materializes the
-    same layout). ``dot`` picks the per-pair dot route ('unrolled' — the
-    codegen at-scale default — or 'hof'; see _route_dot; both forms are
-    bit-identical). Output (q_id, neighbor_id, rank, cos_sim)."""
-    dot = dot or "unrolled"
-    queries = vecs.filter(query_filter).selectExpr(
-        "vec_id AS q_id", "v AS qv", f"{_norm_sql('v')} AS qn"
+    same layout).
+
+    One mapInArrow kernel scores each Arrow batch against every query,
+    in query blocks with in-place numpy ops: dot and norms are folded
+    left to right from 0.0 over DIM (never BLAS or np.dot, which
+    reassociate the sum), cos = dot / (qn * nrm), and self pairs are
+    dropped. Per query it emits only the rows within _TOPK_MARGIN of the
+    batch's k-th best, so Spark's round(cos, 3) and the _rank_topk window
+    see a few rows per query and batch instead of every pair. Output
+    (q_id, neighbor_id, rank, cos_sim)."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    sel = vecs.select("vec_id", "v")
+    qt = sel.filter(query_filter).toArrow().combine_chunks()
+    qids, Q = _vec_matrix(qt.column(0).combine_chunks(), qt.column(1).combine_chunks())
+    qn = _fold_norms(qids, Q)
+    id_t = sel.schema["vec_id"].dataType
+    out_schema = T.StructType(
+        [
+            T.StructField("q_id", id_t),
+            T.StructField("neighbor_id", id_t),
+            T.StructField("cos", T.DoubleType()),
+        ]
     )
-    scored = (
-        vecs.selectExpr("vec_id", "v", f"{_norm_sql('v')} AS nrm")
-        .crossJoin(F.broadcast(queries))
-        .filter("NOT (vec_id = q_id)")
-        .selectExpr(
-            "q_id",
-            "vec_id AS neighbor_id",
-            # one dot per pair; norms precomputed per ROW (same doubles,
-            # qn*nrm preserves the dot/(norm_a*norm_b) multiplication order)
-            f"round(({_dot_sql(dot, 'qv', 'v')}) / (qn * nrm), 3) AS cos3",
-        )
+    arrow_id = pa.int32() if isinstance(id_t, T.IntegerType) else pa.int64()
+
+    def _score_topk(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0 or len(qids) == 0 or k < 1:
+                continue
+            ids, V = _vec_matrix(batch.column(0), batch.column(1))
+            nrm = _fold_norms(ids, V)
+            VT = np.ascontiguousarray(V.T)
+            b = max(1, _BLOCK_CELLS // n)
+            out_q, out_v, out_c = [], [], []
+            for q0 in range(0, len(qids), b):
+                Qb, qid_b = Q[q0 : q0 + b], qids[q0 : q0 + b]
+                C = np.zeros((len(Qb), n))
+                tmp = np.empty_like(C)
+                for i in range(DIM):
+                    np.multiply(Qb[:, i : i + 1], VT[i], out=tmp)
+                    C += tmp
+                C /= np.multiply.outer(qn[q0 : q0 + b], nrm)
+                is_self = qid_b[:, None] == ids[None, :]
+                ranked = np.where(is_self, -np.inf, C)
+                if n > k:
+                    kth = np.partition(ranked, n - k, axis=1)[:, n - k]
+                else:
+                    kth = np.full(len(Qb), -np.inf)
+                keep = (ranked >= (kth - _TOPK_MARGIN)[:, None]) | np.isnan(C)
+                qi, vi = np.nonzero(keep & ~is_self)
+                out_q.append(qid_b[qi])
+                out_v.append(ids[vi])
+                out_c.append(C[qi, vi])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate(out_q), type=arrow_id),
+                    pa.array(np.concatenate(out_v), type=arrow_id),
+                    pa.array(np.concatenate(out_c), type=pa.float64()),
+                ],
+                names=["q_id", "neighbor_id", "cos"],
+            )
+
+    scored = sel.mapInArrow(_score_topk, schema=out_schema).selectExpr(
+        "q_id", "neighbor_id", "round(cos, 3) AS cos3"
     )
     return _rank_topk(scored, k)
 
 
 def q_sim_topk_brute(spark, sf_dir):
-    return brute_topk(
-        _vecs(spark, sf_dir),
-        F.col("vec_id") % QUERY_MOD == 0,
-        TOPK,
-        dot=_route_dot(sf_dir),
-    )
+    return brute_topk(_vecs(spark, sf_dir), F.col("vec_id") % QUERY_MOD == 0, TOPK)
 
 
 ORACLE_SIM_TOPK_BRUTE = f"""
@@ -356,7 +463,8 @@ def lsh_topk(
     the query side is broadcast. Output (q_id, neighbor_id, rank,
     cos_sim) — approximate by construction; the oracle reproduces the
     same buckets so results match exactly. ``dot`` routes the per-pair
-    dot exactly as in brute_topk (bit-identical either way)."""
+    dot ('unrolled' — the codegen at-scale default — or 'hof'; see
+    _route_dot; both forms are bit-identical)."""
     dot = dot or "unrolled"
     banded = banded_buckets(spark, vecs, bands, ppb).selectExpr(
         "*", f"{_norm_sql('v')} AS nrm"

@@ -418,3 +418,91 @@ def test_tok_sql_rejects_pattern_it_cannot_embed(monkeypatch):
         monkeypatch.setattr(textstats, "BPE_RE", bad)
         with pytest.raises(ValueError, match="SQL literal"):
             C._tok_sql("t", "bpe")
+
+
+def _edge_docs():
+    """Documents at the edges of the chunk assembly: no spans, NULL spans,
+    a trailing zero-token media piece at an exact budget boundary (and
+    one in the middle), and one of 300 spans mixing headers (some with
+    NULL text), media and oversize texts. No empty-string text: under
+    the BPE tokenizer Spark joins its empty token list to '' where DuckDB
+    gives NULL, so engine and oracle differ there whatever the assembly."""
+    import random
+
+    rng = random.Random(1207)
+    big = []
+    for i in range(300):
+        kind = rng.choice(["text", "text", "text", "section_header", "picture"])
+        if kind == "picture":
+            big.append((kind, None, f"media://big/{i}"))
+        elif kind == "section_header" and i % 7 == 0:
+            big.append((kind, None, None))
+        else:
+            n = rng.choice([1, 2, 3, 5, 8, 13, 21])
+            big.append((kind, " ".join(f"t{i}_{j}" for j in range(n)), None))
+    return [
+        ("e-empty", []),
+        ("e-null", None),
+        ("e-trailing-media", [("text", "a b c", None), ("picture", None, "media://t/0")]),
+        (
+            "e-boundary-media",
+            [
+                ("section_header", "H", None),
+                ("text", "a b", None),
+                ("picture", None, "media://b/0"),
+                ("text", "c d e f", None),
+            ],
+        ),
+        ("e-big", big),
+    ]
+
+
+def test_chunk_slices_match_window_route_and_oracle(spark, monkeypatch):
+    """The slice-based chunk assembly against the row-window route and the
+    DuckDB chunk oracle on edge documents, at budgets 3 and 8 and with
+    the BPE tokenizer. Empty and NULL spans yield the whole-doc fallback
+    row, which neither the window route nor the oracle emits."""
+    import duckdb
+
+    from docling_fast_server_spark import queries
+    from docling_fast_server_spark.operators.textstats import BPE_RE
+
+    docs = _edge_docs()
+    rows = [
+        (d, None if spans is None else [
+            {"kind": k, "text": t, "media_ref": m, "offset": i} for i, (k, t, m) in enumerate(spans)
+        ])
+        for d, spans in docs
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    )
+    con = duckdb.connect()
+    con.execute('CREATE TABLE edge_spans (doc_id VARCHAR, kind VARCHAR, text VARCHAR, media_ref VARCHAR, "offset" INTEGER)')
+    con.executemany(
+        "INSERT INTO edge_spans VALUES (?, ?, ?, ?, ?)",
+        [(d, k, t, m, i) for d, spans in docs for i, (k, t, m) in enumerate(spans or [])],
+    )
+    monkeypatch.setattr(
+        queries, "expected_spans_sql", lambda which: 'SELECT doc_id, kind, text, media_ref, "offset" FROM edge_spans'
+    )
+    fallback = [("e-empty", 0, "", "", 0, 0), ("e-null", 0, "", "", 0, 0)]
+    for budget, tokenizer, tok_sql in (
+        (3, "ws", "string_split(text, ' ')"),
+        (8, "ws", "string_split(text, ' ')"),
+        (5, "bpe", f"regexp_extract_all(text, '{BPE_RE}')"),
+    ):
+        got = sorted(map(tuple, chunk_spans(df, budget=budget, tokenizer=tokenizer, route="hof").collect()))
+        window = sorted(map(tuple, chunk_spans(
+            df.filter(F.coalesce(F.size("spans"), F.lit(0)) > 0),
+            budget=budget, tokenizer=tokenizer, route="window").collect()))
+        oracle = sorted(con.execute(queries._oracle_chunks(budget, tok_sql)).fetchall())
+        assert got == sorted(window + fallback), (budget, tokenizer)
+        assert got == sorted(oracle + fallback), (budget, tokenizer)
+        by_doc = {}
+        for r in got:
+            by_doc.setdefault(r[0], []).append(r)
+        if budget == 3:
+            assert by_doc["e-trailing-media"][-1] == ("e-trailing-media", 1, "", "", 0, 1)
+        assert len(by_doc["e-big"]) > 20
+    con.close()

@@ -270,13 +270,20 @@ def test_media_rows_use_no_pandas_kernel(spark, sf_dir):
 
 def test_similarity_topk_pushdown_and_broadcasts(spark, sf_dir):
     """All three similarity strategies must keep the rank<=k pushdown
-    (WindowGroupLimit) and broadcast their small side; none may add
-    Python evaluation."""
+    (WindowGroupLimit) and add no row-at-a-time Python evaluation. The
+    ANN strategies broadcast their small side; brute force scores in one
+    Arrow kernel against the collected query rows, with no join at all."""
     import __spark_entry__ as e
 
     qs = e.queries()
     for name in ("sim_topk_brute", "sim_ann_lsh", "sim_ann_ivf"):
         plan = _plan(qs[name](spark, sf_dir))
         assert "WindowGroupLimit" in plan, name
-        assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" in plan, name
         assert "BatchEvalPython" not in plan, name
+        if name == "sim_topk_brute":
+            arrow_nodes = [l for l in plan.splitlines() if "MapInArrow" in l]
+            assert len(arrow_nodes) == 1 and "_score_topk" in arrow_nodes[0], plan
+            assert "BroadcastNestedLoopJoin" not in plan, plan
+            assert "CartesianProduct" not in plan, plan
+        else:
+            assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" in plan, name

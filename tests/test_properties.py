@@ -431,10 +431,19 @@ def test_dot_route_equivalence(spark, sf_dir):
 
     vecs = S._vecs(spark, sf_dir)
     qf = F.col("vec_id") % S.QUERY_MOD == 0
-    for q in (
-        lambda dot: S.brute_topk(vecs, qf, S.TOPK, dot=dot),
-        lambda dot: S.lsh_topk(spark, vecs, qf, dot=dot),
-    ):
-        hof = sorted(map(tuple, q("hof").collect()))
-        unrolled = sorted(map(tuple, q("unrolled").collect()))
-        assert hof == unrolled and len(hof) > 0
+    hof = sorted(map(tuple, S.lsh_topk(spark, vecs, qf, dot="hof").collect()))
+    unrolled = sorted(map(tuple, S.lsh_topk(spark, vecs, qf, dot="unrolled").collect()))
+    assert hof == unrolled and len(hof) > 0
+
+
+def test_route_dot_reads_file_uri(sf_dir):
+    """A file:// table location is a local path: its footers are read,
+    so a small table keeps the HOF route instead of falling to the
+    unrolled codegen dot."""
+    import os
+
+    from docling_fast_server_spark.operators import similarity as S
+
+    uri = f"file://{os.path.abspath(sf_dir)}"
+    assert S._parquet_num_rows(f"{uri}/embeddings.parquet") == 500
+    assert S._route_dot(uri) == "hof"

@@ -1,7 +1,9 @@
 """The worker import guard: unchanged zip archives are not re-read on
 ``importlib.invalidate_caches()``, changed ones are, and only Spark Python
-workers get the guard."""
+workers get the guard. The worker's garbage-collector hook freezes only
+after a full collection between tasks, and only workers get it."""
 
+import gc
 import importlib
 import subprocess
 import sys
@@ -118,3 +120,48 @@ def test_guard_installed_in_worker_after_library_kernel(spark, sf_dir):
     assert all(r.rereads == 0 for r in rows)  # no archive changed in between
     assert zipimport.zipimporter.invalidate_caches is driver_invalidate
     assert driver_invalidate.__module__ == "zipimport"
+
+
+def test_gc_hook_freezes_only_after_a_full_collection_between_tasks(monkeypatch):
+    from pyspark.taskcontext import TaskContext
+
+    before = gc.get_freeze_count()
+    try:
+        worker_imports.freeze_between_tasks("stop", {"generation": 1})
+        worker_imports.freeze_between_tasks("start", {"generation": 2})
+        assert gc.get_freeze_count() == before
+        with monkeypatch.context() as m:  # a task is running
+            m.setattr(TaskContext, "get", classmethod(lambda cls: object()))
+            worker_imports.freeze_between_tasks("stop", {"generation": 2})
+        assert gc.get_freeze_count() == before
+        worker_imports.freeze_between_tasks("stop", {"generation": 2})
+        assert gc.get_freeze_count() > before
+    finally:
+        gc.unfreeze()
+
+
+def test_gc_hook_installed_in_worker_not_on_driver(spark, sf_dir):
+    from docling_fast_server_spark.corpus import docs_raw
+    from docling_fast_server_spark.operators.dispatch import _extract_auto_arrow
+
+    def probe(batches):
+        import pyarrow as pa
+
+        docs = sum(b.num_rows for b in _extract_auto_arrow(batches))
+        frozen = gc.get_freeze_count()
+        gc.collect()  # during a task: freezes nothing
+        yield pa.RecordBatch.from_pydict(
+            {
+                "docs": [docs],
+                "hooked": [worker_imports.freeze_between_tasks in gc.callbacks],
+                "froze": [gc.get_freeze_count() != frozen],
+            }
+        )
+
+    raw = docs_raw(spark, sf_dir).select("doc_id", "spans").repartition(4)
+    rows = raw.mapInArrow(probe, "docs long, hooked boolean, froze boolean").collect()
+
+    assert sum(r.docs for r in rows) == raw.count()
+    assert rows and all(r.hooked for r in rows)
+    assert not any(r.froze for r in rows)
+    assert worker_imports.freeze_between_tasks not in gc.callbacks
