@@ -152,11 +152,19 @@ def _chunk_spans_hof(
     )
     d = df.selectExpr("doc_id", enr)
 
-    p_text = (
-        "CASE WHEN it.text IS NULL THEN CAST(NULL AS STRING) ELSE "
+    p_join = (
         f"array_join(slice({_tok_sql('it.text', tokenizer)}, "
-        f"CAST(p * {B} + 1 AS INT), {B}), ' ') END"
+        f"CAST(p * {B} + 1 AS INT), {B}), ' ')"
     )
+    if tokenizer == "bpe":
+        # a text with no BPE token (e.g. '') has one piece with an empty
+        # token list, joined to '' in Spark but to NULL in DuckDB, and
+        # the chunk text skips NULL pieces: '' would add a stray space.
+        # BPE tokens are never empty, so NULLIF maps exactly the
+        # empty-list pieces. The ws split of '' is [''], joined to '' on
+        # both engines, so the ws SQL stays as it is.
+        p_join = f"nullif({p_join}, '')"
+    p_text = f"CASE WHEN it.text IS NULL THEN CAST(NULL AS STRING) ELSE {p_join} END"
     p_tok = (
         "CASE WHEN it.text IS NULL THEN CAST(0 AS BIGINT) ELSE "
         f"least(CAST({B} AS BIGINT), it.n_tok - p * {B}) END"
@@ -281,6 +289,11 @@ def _chunk_spans_window(
         F.coalesce(F.sum(ntok).over(prev), F.lit(0).cast("long")).alias("cum_before"),
     )
     n_pieces = F.greatest(F.ceil(F.col("n_tok") / B), F.lit(1).cast("long"))
+    p_join = F.array_join(
+        F.slice(tok(F.col("text")), (F.col("piece_i") * B + 1).cast("int"), B), " "
+    )
+    if tokenizer == "bpe":  # an empty-list piece is NULL (see _chunk_spans_hof)
+        p_join = F.nullif(p_join, F.lit(""))
     pieces = rows.select(
         "doc_id",
         "offset",
@@ -298,12 +311,7 @@ def _chunk_spans_window(
         .alias("chunk_idx"),
         (F.col("offset").cast("long") * _KEY_SHIFT + F.col("piece_i")).alias("ord_key"),
         F.when(F.col("text").isNull(), F.lit(None).cast("string"))
-        .otherwise(
-            F.array_join(
-                F.slice(tok(F.col("text")), (F.col("piece_i") * B + 1).cast("int"), B),
-                " ",
-            )
-        )
+        .otherwise(p_join)
         .alias("p_text"),
         F.when(F.col("text").isNull(), F.lit(0).cast("long"))
         .otherwise(F.least(F.lit(B).cast("long"), F.col("n_tok") - F.col("piece_i") * B))

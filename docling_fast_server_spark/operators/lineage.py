@@ -20,9 +20,11 @@ tasks never double-write (Spark's parquet commit protocol stages and
 renames — the atomic-write discipline of queue_manager.py:527-541).
 
 The lineage rows (lineage_summary) are NOT counted on the write: they are
-aggregated from a read-back of the files the run's commit added, one
-aggregate-and-append job pair per run, so they count what committed even
-when a racing writer's commit dropped some of this run's rows. The
+aggregated from a read-back of the files the run's commit added, so they
+count what committed even when a racing writer's commit dropped some of
+this run's rows. Under sources.io.ONE_TASK_ROWS committed rows the
+aggregate and its append are one job of one task (no exchange); above
+it, an aggregate-and-append job pair. The
 commit's own row and key counts are observed on its staging writes
 (sources.io.merge_append_table).
 """

@@ -30,6 +30,7 @@ from ..operators.dispatch import extract_auto
 from ..operators.lineage import anti_join_committed, lineage_summary, with_partition_metrics
 from ..sources.io import (
     append_table,
+    coalesce_small,
     committed_keys,
     merge_append_table,
     read_table,
@@ -195,7 +196,9 @@ def _commit_readback(spark: SparkSession, out_path: str, commit, run_id: str) ->
 
     The files are read with the schema the commit wrote them with
     (CommitResult.schema), so building the frame runs no job; the
-    lineage aggregate over it is the read-back's only work. Falls back
+    lineage aggregate over it is the read-back's only work, one task
+    with no exchange at or under io.ONE_TASK_ROWS committed rows
+    (io.coalesce_small). Falls back
     to the run_id-filtered full read when the commit carries no file
     list (Iceberg path — the catalog prunes there) and to an empty frame
     when the commit added nothing."""
@@ -212,9 +215,10 @@ def _commit_readback(spark: SparkSession, out_path: str, commit, run_id: str) ->
     # every row in these files carries THIS run's run_id (they are this
     # commit's own staged output), so no filter is needed — but keep it
     # as a cheap belt-and-braces predicate (pushed down, prunes nothing)
-    return reader.parquet(*[os.path.join(abs_out, f) for f in files]).filter(
+    back = reader.parquet(*[os.path.join(abs_out, f) for f in files]).filter(
         F.col("run_id") == run_id
     )
+    return coalesce_small(back, commit)
 
 
 def run_dedup(
@@ -332,11 +336,16 @@ def run_extraction(
 
     ONE materialization of the extracted output (the staged commit
     inside merge_append_table). The jobs a run leaves are: the staged
-    write (with the resume's key-set broadcast), the distinct-key write,
-    the overlap count under the commit lock (skipped on a first commit),
-    and the lineage aggregate's write. The commit's row and key counts
-    are observed on its two writes; no count action and no
-    schema-inference read runs. The lineage counters (doc, span, error
+    write (with the resume's key-set broadcast), the distinct-key write
+    and the lineage aggregate's write. The overlap count under the
+    commit lock runs only when a key file was published since the
+    resume's committed_keys snapshot (a racing writer, a compaction):
+    the anti-join already removed every key that snapshot lists. The
+    commit's row and key counts are observed on its two writes; no
+    count action and no schema-inference read runs. At or under
+    io.ONE_TASK_ROWS committed rows the key and lineage aggregates each
+    run as one task over the files just written, with no exchange, so
+    a small run writes no shuffle bytes. The lineage counters (doc, span, error
     and tier counts per partition) come from a READ-BACK of this run's
     committed rows, scanning ONLY the files this commit added
     (CommitResult.files, read with CommitResult.schema — the cumulative
@@ -348,11 +357,13 @@ def run_extraction(
     actually COMMITTED (a raced writer's dropped duplicates are not
     double-counted), which a counter on the staged write cannot know."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    todo = raw
+    todo, snapshot = raw, None
     if resume and table_exists(spark, out_path):
-        committed_prev = committed_keys(spark, out_path, raw.schema["doc_id"])
-        if committed_prev is None:
+        published = committed_keys(spark, out_path, raw.schema["doc_id"])
+        if published is None:
             committed_prev = read_table(spark, out_path)
+        else:
+            committed_prev, snapshot = published
         if resume_strategy == "bloom":
             todo = bloom_prune_anti_join(raw, committed_prev, key="doc_id")
         else:
@@ -363,12 +374,15 @@ def run_extraction(
     # MERGE-grade commit: the anti-join above closes the common resume
     # case, but two runs overlapping in time both snapshot the table
     # before either commits — merge_append_table drops the loser's
-    # duplicates at commit time (Iceberg MERGE INTO in production).
+    # duplicates at commit time (Iceberg MERGE INTO in production). Both
+    # resume strategies leave exactly the keys outside `snapshot`, so the
+    # commit counts the overlap only if a key file was published since.
     commit = merge_append_table(
         with_meta.select(
             "doc_id", "spans", "conversion_method", "error", "run_id", "partition_id"
         ),
         out_path,
+        snapshot=snapshot,
     )
     if not table_exists(spark, out_path):
         # nothing ever committed (empty input on a fresh table: the merge

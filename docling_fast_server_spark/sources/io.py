@@ -84,6 +84,26 @@ def append_table(df: DataFrame, path: str) -> None:
 from contextlib import contextmanager
 
 
+# Committed rows at or under which a commit's distinct-key aggregate, and
+# run_extraction's lineage aggregate over the commit's read-back, run in
+# one task with no exchange (coalesce_small); above it they run shuffled
+# over every core. The one-task route always costs less CPU (no shuffle),
+# but it gives up the scan's parallelism. The constant is the lower of the
+# two wall-time crossovers, measured on local[4] (4-vCPU VM) over 4 staged
+# files of extracted sf0.01 documents (~11 spans each). Median wall s of 4,
+# one task against shuffled:
+#   rows   key write      lineage aggregate + write
+#   2^12   0.131 / 0.140  0.208 / 0.209
+#   2^13   0.099 / 0.122  0.188 / 0.188
+#   2^14   0.091 / 0.105  0.217 / 0.193
+#   2^16   0.119 / 0.134  0.437 / 0.239
+#   2^17   0.173 / 0.180  0.699 / 0.310
+#   2^18   0.281 / 0.194  1.253 / 0.450
+#   2^20   1.058 / 0.453  4.513 / 1.330
+# The lineage aggregate reads every span, so it crosses first (2^13, where
+# the key write crosses between 2^17 and 2^18).
+ONE_TASK_ROWS = 1 << 13
+
 LOCK_STALE_S = 300  # a holder whose heartbeat stopped 5 min ago is dead
 _HEARTBEAT_S = LOCK_STALE_S / 10  # holder refreshes lock mtime this often
 
@@ -331,27 +351,44 @@ def _committed_keys_df(
     return spark.read.schema(schema).parquet(*paths)
 
 
+class KeySnapshot:
+    """The key files one committed_keys read covered: the base snapshot
+    of an optimistic commit. A frame anti-joined against that read holds
+    no key of these files. Key files are immutable and commit-named, and
+    a rollback or expire_snapshots only removes or re-lists them, so
+    while the manifests list no key file outside this set the staged
+    keys cannot overlap the committed ones and merge_append_table skips
+    its overlap count. Built only by committed_keys."""
+
+    __slots__ = ("commits_dir", "key", "files")
+
+    def __init__(self, commits_dir: str, key: str, files: frozenset):
+        self.commits_dir, self.key, self.files = commits_dir, key, files
+
+
 def committed_keys(spark: SparkSession, path: str, key_field: StructField):
-    """The key set a merge-committed parquet table has published, as a
-    one-column frame: the key files its manifests reference, the same
-    set merge_append_table's overlap check trusts (empty when no manifest
-    is published yet). A plain read of the table is NOT that set: it
-    also sees the `merge-*` files of a writer that crashed before its
-    manifest publish, which the next commit's GC deletes — a resume that
-    skipped those documents would lose them. None when `path` keeps no
-    commit history (an Iceberg table, or one written only by plain
-    appends); the caller then reads the table itself."""
+    """The key set a merge-committed parquet table has published, as
+    (one-column frame, KeySnapshot): the key files its manifests
+    reference, the same set merge_append_table's overlap check trusts
+    (empty when no manifest is published yet). A plain read of the table
+    is NOT that set: it also sees the `merge-*` files of a writer that
+    crashed before its manifest publish, which the next commit's GC
+    deletes — a resume that skipped those documents would lose them.
+    Pass the snapshot to merge_append_table with a frame anti-joined
+    against the key frame. None when `path` keeps no commit history (an
+    Iceberg table, or one written only by plain appends); the caller
+    then reads the table itself."""
     if _has_iceberg(spark) and not path.startswith("/"):
         return None
     commits_dir = os.path.join(os.path.abspath(path.rstrip("/")), "_commits")
     if not os.path.isdir(commits_dir):
         return None
-    keys = _committed_keys_df(
-        spark, commits_dir, _read_manifests(commits_dir), StructType([key_field])
-    )
+    entries = _read_manifests(commits_dir)
+    keys = _committed_keys_df(spark, commits_dir, entries, StructType([key_field]))
     if keys is None:  # no manifest yet: the empty key set
         keys = spark.range(0).select(F.lit(None).cast(key_field.dataType).alias(key_field.name))
-    return keys
+    files = frozenset(f for e in entries for f in e.get("key_files", []))
+    return keys, KeySnapshot(commits_dir, key_field.name, files)
 
 
 def _gc_uncommitted(path: str, commits_dir: str, entries: list[dict]) -> None:
@@ -500,7 +537,9 @@ class CommitResult(int):
         return self
 
 
-def merge_append_table(df: DataFrame, path: str, key: str = "doc_id") -> "CommitResult":
+def merge_append_table(
+    df: DataFrame, path: str, key: str = "doc_id", snapshot: KeySnapshot | None = None
+) -> "CommitResult":
     """MERGE-grade idempotent append: rows whose `key` is already
     committed are dropped AT COMMIT TIME, so two OVERLAPPING writers can
     both stage the same document and only one copy becomes visible — the
@@ -526,7 +565,9 @@ def merge_append_table(df: DataFrame, path: str, key: str = "doc_id") -> "Commit
          data write and n_keys on the key write, so staging runs those
          two writes and nothing else — no count action, and no
          schema-inference job (the key write reads the staged files with
-         the schema it just wrote);
+         the schema it just wrote). At or under ONE_TASK_ROWS staged
+         rows the distinct keys are aggregated in one task, with no
+         exchange;
       2. take the table commit lock (atomic POSIX mkdir + heartbeat,
          the catalog analog);
       3. under the lock, garbage-collect files left by crashed commits
@@ -535,10 +576,16 @@ def merge_append_table(df: DataFrame, path: str, key: str = "doc_id") -> "Commit
          per-commit key PARQUET files referenced by the manifests, fully
          distributed (no key ever passes through the driver). This
          count is the race check, so it stays a read of what is
-         committed NOW, not a write-side counter; it is the ONLY Spark
-         action under the lock on the no-overlap path (zero on a first
-         commit), so writers no longer serialize on lock hold time
-         proportional to staged data;
+         committed NOW, not a write-side counter. It runs only when the
+         manifests list a key file outside `snapshot` (the KeySnapshot
+         of the committed_keys read `df` was anti-joined against) and
+         outside the snapshots a retry's rewrite anti-joined against:
+         the keys of those files cannot be staged, so with nothing
+         published since, the overlap is empty by construction (the
+         Iceberg check that no conflicting snapshot landed since the
+         base one). It is the ONLY Spark action under the lock (none on
+         a first commit or a resume nothing raced), so writers do not
+         serialize on lock hold time proportional to staged data;
       4. no overlap -> rename the staged part files into the table under
          commit-unique `merge-<id>-` names, rename the key parquet in,
          then publish the manifest entry via atomic rename LAST;
@@ -572,6 +619,16 @@ def merge_append_table(df: DataFrame, path: str, key: str = "doc_id") -> "Commit
     abs_path = os.path.abspath(path.rstrip("/"))
     parent = os.path.dirname(abs_path)
     commits_dir = os.path.join(abs_path, "_commits")
+    disjoint = frozenset()
+    if snapshot is not None:
+        if not isinstance(snapshot, KeySnapshot):
+            raise TypeError(f"snapshot must come from committed_keys, got {type(snapshot)}")
+        if (snapshot.commits_dir, snapshot.key) != (commits_dir, key):
+            raise ValueError(
+                f"snapshot of {snapshot.commits_dir} on {snapshot.key!r} does "
+                f"not describe {commits_dir} on {key!r}"
+            )
+        disjoint = snapshot.files
 
     # (1) all staged-data Spark work, outside the lock, outside `path`.
     # Every sibling scratch dir is REGISTERED so no in-process exception
@@ -580,7 +637,7 @@ def merge_append_table(df: DataFrame, path: str, key: str = "doc_id") -> "Commit
     # remove_orphan_staging (the Iceberg remove_orphan_files analog).
     scratch: list[str] = []
     try:
-        return _merge_commit(spark, df, abs_path, parent, commits_dir, key, scratch)
+        return _merge_commit(spark, df, abs_path, parent, commits_dir, key, scratch, disjoint)
     except BaseException:
         for d in scratch:
             shutil.rmtree(d, ignore_errors=True)
@@ -596,13 +653,35 @@ def _write_counted(df: DataFrame, path: str) -> int:
     return obs.get["n"]
 
 
+def coalesce_small(df: DataFrame, n_rows: int) -> DataFrame:
+    """`df`, a scan of `n_rows` rows of files just written, coalesced to
+    one partition when n_rows <= ONE_TASK_ROWS: an aggregate over it
+    then has a SinglePartition child, so the planner adds no exchange
+    and the aggregate runs as one job of one task. Above the constant
+    `df` is returned as is and the aggregate runs shuffled."""
+    return df.coalesce(1) if n_rows <= ONE_TASK_ROWS else df
+
+
+def _distinct_keys(df: DataFrame, key: str, n_rows: int) -> DataFrame:
+    """The distinct `key` values of `df` (see coalesce_small)."""
+    return coalesce_small(df.select(key), n_rows).distinct()
+
+
 def _merge_commit(
-    spark, df: DataFrame, abs_path: str, parent: str, commits_dir: str, key: str, scratch: list
+    spark,
+    df: DataFrame,
+    abs_path: str,
+    parent: str,
+    commits_dir: str,
+    key: str,
+    scratch: list,
+    disjoint: frozenset,
 ) -> int:
     """merge_append_table's parquet protocol body; `scratch` collects
     every sibling temp dir for the caller's exception cleanup (a dir
     already consumed by the commit is rmtree'd here and the redundant
-    cleanup is a no-op)."""
+    cleanup is a no-op). `disjoint` names the key files whose keys no
+    staged row holds; it grows with each retry's rewrite."""
     import shutil
     import tempfile
     import uuid as _uuid
@@ -622,7 +701,7 @@ def _merge_commit(
     n_rows = _write_counted(df, staging)
     staged = spark.read.schema(df.schema).parquet(staging)
     kstage = _mkscratch("dfss-kstage-")
-    n_keys = _write_counted(staged.select(key).distinct(), kstage)
+    n_keys = _write_counted(_distinct_keys(staged, key, n_rows), kstage)
 
     for _attempt in range(10):  # optimistic conflict-retry bound
         # keepalive: a writer parked here behind contention keeps its
@@ -635,8 +714,9 @@ def _merge_commit(
             entries = _read_manifests(commits_dir)
             _gc_uncommitted(abs_path, commits_dir, entries)
             committed = _committed_keys_df(spark, commits_dir, entries, kschema)
+            listed = frozenset(f for e in entries for f in e.get("key_files", []))
             n_overlap = 0
-            if committed is not None and n_keys > 0:
+            if committed is not None and n_keys > 0 and not listed <= disjoint:
                 staged_keys = spark.read.schema(kschema).parquet(kstage)
                 n_overlap = staged_keys.join(committed, key, "left_semi").count()
             if n_overlap == 0:
@@ -686,8 +766,9 @@ def _merge_commit(
                 )
         # (5) overlap with a racing commit: rewrite outside the lock
         # against the committed-key snapshot seen under it (`committed`
-        # is bound to those key files); any commit landing after that
-        # snapshot is caught by the next attempt's overlap count. The
+        # is bound to those key files, which join `disjoint` once the
+        # rewrite succeeds); any commit landing after that snapshot is
+        # caught by the next attempt's overlap count. The
         # snapshotted key FILES can vanish under a concurrent lock-held
         # rollback/retention/compaction — that just invalidates this
         # attempt's snapshot, so re-enter the loop and re-read under the
@@ -700,8 +781,9 @@ def _merge_commit(
             continue
         shutil.rmtree(staging)
         staging = filtered
+        disjoint = disjoint | listed
         staged = spark.read.schema(df.schema).parquet(staging)
-        n_keys = _write_counted(staged.select(key).distinct(), kstage)
+        n_keys = _write_counted(_distinct_keys(staged, key, n_rows), kstage)
     raise RuntimeError(
         f"merge_append_table({abs_path}): still conflicting after 10 "
         "optimistic retries — pathological commit contention"
@@ -859,8 +941,7 @@ def _swap_table(spark: SparkSession, path: str, transform) -> tuple[int, int]:
         df = spark.read.parquet(abs_path)
         n_before = df.count()
         staging = tempfile.mkdtemp(prefix="dfss-staging-", dir=parent)
-        transform(df).write.mode("overwrite").parquet(staging)
-        n_after = spark.read.parquet(staging).count()
+        n_after = _write_counted(transform(df), staging)
         _swap(staging)
         return n_before, n_after
 
@@ -876,7 +957,8 @@ def _swap_table(spark: SparkSession, path: str, transform) -> tuple[int, int]:
             df = spark.read.parquet(abs_path)
         n_before = df.count()
         staging = tempfile.mkdtemp(prefix="dfss-staging-", dir=parent)
-        transform(df).write.mode("overwrite").parquet(staging)
+        new_df = transform(df)
+        n_after = _write_counted(new_df, staging)
         commit_id = _uuid.uuid4().hex[:12]
         data_files = []
         for f in sorted(os.listdir(staging)):
@@ -887,11 +969,11 @@ def _swap_table(spark: SparkSession, path: str, transform) -> tuple[int, int]:
         new_commits = os.path.join(staging, "_commits")
         os.makedirs(_keys_dir(new_commits), exist_ok=True)
         kstage = tempfile.mkdtemp(prefix=".dfss-kstage-", dir=staging)
-        new_data = spark.read.parquet(*[os.path.join(staging, f) for f in data_files])
-        n_after = new_data.count()
-        new_data.select(key).distinct().write.mode("overwrite").parquet(kstage)
+        new_data = spark.read.schema(new_df.schema).parquet(
+            *[os.path.join(staging, f) for f in data_files]
+        )
+        n_keys = _write_counted(_distinct_keys(new_data, key, n_after), kstage)
         key_files = []
-        n_keys = spark.read.parquet(kstage).count()
         for f in sorted(os.listdir(kstage)):
             if f.endswith(".parquet"):
                 name = f"keys-{commit_id}-{f}"

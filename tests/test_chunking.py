@@ -98,7 +98,9 @@ def test_offsets_unique_per_doc(spark, sf_dir):
 def _model_chunks(spans, B, tokenizer="ws"):
     """Independent Python model of the chunker contract (the row-window
     formulation the oracle uses): running heading, piece explosion with
-    actual cumulative token counts, floor(cum/B) chunk assignment."""
+    actual cumulative token counts, floor(cum/B) chunk assignment. A
+    piece of no tokens (a BPE-tokenized empty text) joins to NULL, as
+    DuckDB's array_to_string of an empty list does."""
     import re
 
     def toks(t):
@@ -114,7 +116,8 @@ def _model_chunks(spans, B, tokenizer="ws"):
         tk = [] if s["text"] is None else toks(s["text"])
         n = 0 if s["text"] is None else len(tk)
         for p in range(max(-(-n // B), 1)):
-            ptext = None if s["text"] is None else " ".join(tk[p * B : (p + 1) * B])
+            ptk = tk[p * B : (p + 1) * B]
+            ptext = None if s["text"] is None or not ptk else " ".join(ptk)
             ptok = 0 if s["text"] is None else min(B, n - p * B)
             pieces.append((cum // B, heading, s["offset"], ptext, ptok))
             cum += ptok
@@ -424,9 +427,9 @@ def _edge_docs():
     """Documents at the edges of the chunk assembly: no spans, NULL spans,
     a trailing zero-token media piece at an exact budget boundary (and
     one in the middle), and one of 300 spans mixing headers (some with
-    NULL text), media and oversize texts. No empty-string text: under
-    the BPE tokenizer Spark joins its empty token list to '' where DuckDB
-    gives NULL, so engine and oracle differ there whatever the assembly."""
+    NULL text), media and oversize texts; and one with empty-string
+    texts, to which the BPE tokenizer gives an empty token list: it must
+    add no separator to the chunk text, as in the oracle."""
     import random
 
     rng = random.Random(1207)
@@ -454,6 +457,10 @@ def _edge_docs():
             ],
         ),
         ("e-big", big),
+        (
+            "e-empty-text",
+            [("text", "", None), ("text", "a b", None), ("text", "", None), ("text", "c", None)],
+        ),
     ]
 
 

@@ -180,26 +180,30 @@ def test_compaction_does_not_promote_crashed_commit_orphans(spark, tmp_path):
     assert merge_append_table(a, out) == 0  # replay still a no-op
 
 
-def test_lock_holds_at_most_one_spark_action(spark, tmp_path, monkeypatch):
-    """Round-4 verdict item 4: staged-data Spark work happens BEFORE the
-    commit lock; under the lock the only action is the overlap count (0
-    on a first commit), so lock hold time no longer scales with staged
-    data."""
+def _spy_lock(monkeypatch, before=None):
+    """Count driver-side ACTION calls (count, parquet write) made while
+    each commit lock is held, one entry per lock hold (jobs are the wrong
+    unit: AQE splits one action into several jobs). `before`, if given,
+    runs once just before the first lock is taken: it lands in the gap
+    between a writer's staging and its commit, and may itself commit."""
     from contextlib import contextmanager
 
-    from pyspark.sql import DataFrame, functions as F
+    # the classic DataFrame overrides count: patching the base class
+    # would count nothing
+    from pyspark.sql.classic.dataframe import DataFrame
     from pyspark.sql.readwriter import DataFrameWriter
 
     from docling_fast_server_spark.sources import io as io_mod
 
     real = io_mod._commit_lock
     counts = []
+    pending = [before] if before else []
     real_count, real_pq = DataFrame.count, DataFrameWriter.parquet
 
     @contextmanager
     def spy(commits_dir, keepalive=()):
-        # count driver-side ACTION calls while the lock is held (jobs are
-        # the wrong unit: AQE splits one action into several jobs)
+        if pending:
+            pending.pop()()  # nested commits below take the real lock path
         calls = {"n": 0}
 
         def counting(df_self):
@@ -219,6 +223,18 @@ def test_lock_holds_at_most_one_spark_action(spark, tmp_path, monkeypatch):
         counts.append(calls["n"])
 
     monkeypatch.setattr(io_mod, "_commit_lock", spy)
+    return counts
+
+
+def test_lock_holds_at_most_one_spark_action(spark, sf_dir, tmp_path, monkeypatch):
+    """Round-4 verdict item 4: staged-data Spark work happens BEFORE the
+    commit lock; under the lock the only action is the overlap count (0
+    on a first commit), so lock hold time no longer scales with staged
+    data. A resume through run_extraction takes none: it anti-joined the
+    key files its commit finds listed."""
+    from docling_fast_server_spark.sources import io as io_mod
+
+    counts = _spy_lock(monkeypatch)
     path = str(tmp_path / "t")
     d1 = spark.range(200).select(F.col("id").alias("doc_id"), F.lit("a").alias("v"))
     assert io_mod.merge_append_table(d1, path) == 200
@@ -232,6 +248,114 @@ def test_lock_holds_at_most_one_spark_action(spark, tmp_path, monkeypatch):
     back = spark.read.parquet(path)
     assert back.count() == 300
     assert back.select("doc_id").distinct().count() == 300
+
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    raw = docs_raw(spark, sf_dir, which="html")
+    run_extraction(spark, raw.filter(F.col("doc_id") < "doc-000250"), out, lin, run_id="c")
+    del counts[:]
+    run_extraction(spark, raw, out, lin, run_id="r")
+    assert counts == [0], counts
+    assert _dup_count(spark, out) == 0
+    assert spark.read.parquet(out).count() == raw.count()
+
+
+def _resume_with_gap(spark, tmp_path, monkeypatch, commits, gap):
+    """Commit the (lo, hi) key ranges in `commits`, take the committed
+    key snapshot, anti-join d0-d29 against it and commit the rest with
+    the snapshot while `gap(path)` lands between staging and the lock.
+    Returns (the commit's result, the actions of each of its lock
+    holds, the table path)."""
+    from pyspark.sql.types import StringType, StructField
+
+    from docling_fast_server_spark.sources.io import committed_keys
+
+    path = str(tmp_path / "t")
+
+    def frame(lo, hi, v):
+        return spark.createDataFrame([(f"d{i:02d}", v) for i in range(lo, hi)], "doc_id string, v string")
+
+    for lo, hi in commits:
+        merge_append_table(frame(lo, hi, "base"), path)
+    keys, snapshot = committed_keys(spark, path, StructField("doc_id", StringType()))
+    todo = frame(0, 30, "resume").join(keys, "doc_id", "left_anti")
+    gap_end = []
+
+    def run_gap():
+        gap(path)
+        gap_end.append(len(counts))  # the lock holds the gap itself took
+
+    counts = _spy_lock(monkeypatch, before=run_gap)
+    result = merge_append_table(todo, path, snapshot=snapshot)
+    return result, counts[gap_end[0]:], path
+
+
+def test_racing_commit_since_the_snapshot_runs_the_overlap_count(spark, tmp_path, monkeypatch):
+    """A writer that commits overlapping keys after the resume's snapshot
+    publishes a key file the snapshot does not list: the overlap count
+    runs, the retry drops those keys (and counts nothing more: its
+    rewrite anti-joined the racer's key file), and no key is doubled."""
+
+    def racer(path):
+        rows = [(f"d{i:02d}", "racer") for i in range(15, 25)]
+        assert merge_append_table(spark.createDataFrame(rows, "doc_id string, v string"), path) == 10
+
+    result, counts, path = _resume_with_gap(spark, tmp_path, monkeypatch, [(0, 10)], racer)
+    assert counts == [1, 0], counts
+    assert result == 10  # d10-d14 and d25-d29
+    rows = {r["doc_id"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert len(rows) == 30 and _dup_count(spark, path) == 0
+    assert {rows[f"d{i}"] for i in range(15, 25)} == {"racer"}
+
+
+def test_rollback_or_expiry_since_the_snapshot_keeps_the_skip(spark, tmp_path, monkeypatch):
+    """A rollback only removes key files and expire_snapshots re-lists
+    the same names, so the manifests still list nothing outside the
+    snapshot: the commit runs no Spark action under its lock, and the
+    table holds each key once."""
+    from docling_fast_server_spark.sources.io import expire_snapshots, rollback_table
+
+    for gap, n_rows in (
+        (lambda path: rollback_table(spark, path, 1), 20),  # d0-d9 + d20-d29
+        (lambda path: expire_snapshots(path, keep_last=0), 30),
+    ):
+        sub = tmp_path / str(n_rows)
+        sub.mkdir()
+        result, counts, path = _resume_with_gap(spark, sub, monkeypatch, [(0, 10), (10, 20)], gap)
+        assert counts == [0], counts
+        assert result == 10
+        assert spark.read.parquet(path).count() == n_rows
+        assert _dup_count(spark, path) == 0
+
+
+def test_compaction_since_the_snapshot_runs_the_overlap_count(spark, tmp_path, monkeypatch):
+    """compact_table publishes the same keys under new key-file names, so
+    the snapshot no longer covers the listing and the count runs."""
+    from docling_fast_server_spark.sources.io import compact_table
+
+    result, counts, path = _resume_with_gap(
+        spark, tmp_path, monkeypatch, [(0, 10)], lambda path: compact_table(spark, path, 1)
+    )
+    assert counts == [1], counts
+    assert result == 20
+    assert spark.read.parquet(path).count() == 30 and _dup_count(spark, path) == 0
+
+
+def test_snapshot_of_another_table_is_refused(spark, tmp_path):
+    from pyspark.sql.types import StringType, StructField
+
+    import pytest
+
+    from docling_fast_server_spark.sources.io import committed_keys
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    df = spark.createDataFrame([("d1", 1)], "doc_id string, v int")
+    merge_append_table(df, a)
+    merge_append_table(df, b)
+    _keys, snapshot = committed_keys(spark, a, StructField("doc_id", StringType()))
+    with pytest.raises(ValueError, match="does not describe"):
+        merge_append_table(df, b, snapshot=snapshot)
+    with pytest.raises(TypeError):
+        merge_append_table(df, a, snapshot=frozenset())
 
 
 def test_observed_counts_match_the_committed_rows(spark, tmp_path):

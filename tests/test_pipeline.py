@@ -373,7 +373,7 @@ def test_run_dedup_surfaces_diagnostics_unconditionally(spark, sf_dir, tmp_path)
 # commit + resume run only the jobs that do work: no schema inference on
 # the files the commit just wrote, no count actions, no .rdd hop
 # ---------------------------------------------------------------------------
-JOB_BUDGET = 16
+JOB_BUDGET = 9
 
 
 def test_commit_and_resume_run_no_bookkeeping_jobs(spark, sf_dir, workdir, monkeypatch):
@@ -382,7 +382,9 @@ def test_commit_and_resume_run_no_bookkeeping_jobs(spark, sf_dir, workdir, monke
     9 schema-inference jobs (1 task each, launched from
     inside a DataFrameReader call) on files the commit had just written,
     4 count actions, and an .rdd hop that executed the anti-join's stages
-    once before the write ran them again."""
+    once before the write ran them again. It then ran 16, with the
+    resume's overlap count under the commit lock (nothing had raced it)
+    and the shuffled key and lineage aggregates of a 250-row commit."""
     from py4j.protocol import Py4JJavaError
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
@@ -428,3 +430,53 @@ def test_commit_and_resume_run_no_bookkeeping_jobs(spark, sf_dir, workdir, monke
     assert not hops, "an .rdd hop ran"
     assert len(jobs) <= JOB_BUDGET, (len(jobs), jobs)
     assert read_table(spark, out).count() == raw.count()
+
+
+def test_one_task_and_shuffled_aggregates_agree(spark, sf_dir, workdir, monkeypatch):
+    """At or under io.ONE_TASK_ROWS the commit's distinct-key write and
+    the lineage aggregate over its read-back run with no Exchange;
+    lowering the constant below any count forces today's shuffled plans.
+    Both routes publish the same key set and manifest n_keys (duplicate
+    doc_ids included) and the same lineage rows."""
+    from docling_fast_server_spark.plans import pipeline
+    from docling_fast_server_spark.sources import io as io_mod
+
+    raw = docs_raw(spark, sf_dir, which="all")
+    raw = raw.unionByName(raw.filter(F.col("doc_id") < "doc-000007"))  # 7 doubled keys
+    real_write, real_append = io_mod._write_counted, pipeline.append_table
+
+    def has_exchange(df):
+        return "Exchange" in df._jdf.queryExecution().executedPlan().toString()
+
+    got = {}
+    for route, limit in (("one", io_mod.ONE_TASK_ROWS), ("shuffled", -1)):
+        monkeypatch.setattr(io_mod, "ONE_TASK_ROWS", limit)
+        plans = []
+        monkeypatch.setattr(io_mod, "_write_counted", lambda df, p: (
+            plans.append(has_exchange(df)) if df.columns == ["doc_id"] else None,
+            real_write(df, p),
+        )[1])
+        monkeypatch.setattr(pipeline, "append_table", lambda df, p: (
+            plans.append(has_exchange(df)), real_append(df, p)
+        )[1])
+        os.makedirs(os.path.join(workdir, route))
+        out, lin = os.path.join(workdir, route, "out"), os.path.join(workdir, route, "lin")
+        run_extraction(spark, raw.filter(F.col("doc_id") < "doc-000250"), out, lin,
+                       run_id="c", partitions=4)
+        run_extraction(spark, raw, out, lin, run_id="r", partitions=4)
+        # key write + lineage write, once per call
+        assert plans == [route == "shuffled"] * 4, (route, plans)
+        entries = io_mod._read_manifests(os.path.join(out, "_commits"))
+        keys = spark.read.parquet(*[
+            os.path.join(out, "_commits", "keys", f) for e in entries for f in e["key_files"]
+        ])
+        lineage = spark.read.parquet(lin).drop("started_at", "ended_at")
+        got[route] = (
+            sorted(r[0] for r in keys.collect()),
+            [e["n_keys"] for e in entries],
+            sorted(map(tuple, lineage.collect())),
+        )
+    n_keys = raw.select("doc_id").distinct().count()
+    assert len(got["one"][0]) == n_keys and sum(got["one"][1]) == n_keys
+    assert sum(r[3] for r in got["one"][2]) == raw.count()  # doc_count counts the doubles
+    assert got["one"] == got["shuffled"]
