@@ -203,7 +203,7 @@ def _spy_lock(monkeypatch, before=None):
     @contextmanager
     def spy(commits_dir, keepalive=()):
         if pending:
-            pending.pop()()  # nested commits below take the real lock path
+            pending.pop()()  # its own commits find `pending` empty
         calls = {"n": 0}
 
         def counting(df_self):
