@@ -211,7 +211,8 @@ def cmd_cpu(workload: str, seed: int, passes: int) -> None:
     session, environment and warm-up passes), then PASSES more passes,
     and print per span the median wall time and process-tree CPU split
     into task threads, JIT compiler threads, exited threads, GC, py4j,
-    the rest of the JVM, the Python workers and the driver's Python.
+    the rest of the JVM, the Python workers and the driver's Python,
+    then one row per recorded pass (total, task, JIT and worker CPU).
     Reads /proc, so Linux only; perfbench/ is imported, not changed."""
     import shutil
     import statistics
@@ -254,6 +255,11 @@ def cmd_cpu(workload: str, seed: int, passes: int) -> None:
     for name, rows in tr.rows.items():
         med[name] = {c: statistics.median(r[c] for r in rows) for c in cols}
         print(f"{name:<36}" + "".join(f"{med[name][c]:>10.3f}" for c in cols))
+    # timed passes sit on a JIT warm-up slope that the medians hide
+    pass_cols = ("total", "task", "jit", "workers")
+    print(f"{'pass':<36}" + "".join(f"{c:>10}" for c in pass_cols))
+    for k, row in enumerate(tr.rows["pass"], start=wl.warmup_passes):
+        print(f"{k:<36}" + "".join(f"{row[c]:>10.3f}" for c in pass_cols))
     print(json.dumps({"workload": workload, "seed": seed, "passes": passes, "spans": med}))
 
 

@@ -55,13 +55,14 @@ EXTRACTED_KINDS = (
 
 # Per-document span ceiling enforced at the extraction boundary: a doc
 # whose extraction yields more spans degrades to `failed` (degrade-never-
-# die), because downstream in-array operators (the zero-shuffle chunker's
-# prefix fold) are quadratic in span count and a 10^5-span document would
-# become a minutes-long single-task straggler. 20k spans ≈ a 2000-page
+# die). Every downstream per-document operator handles a document's whole
+# span array in one row (one task), so the ceiling bounds that row's size
+# and the single-task straggler it can cause. 20k spans ≈ a 2000-page
 # document — beyond the reference's own operating envelope (its size
 # classes stop at 50+ pages, tests/test_runpod_medium_ocr.py:25-37).
-# Oversized stored tables bypass the kernels; chunking.chunk_spans
-# route='auto' windows those instead.
+# Stored tables that bypass the kernels may hold bigger documents; the
+# chunker is linear in spans + tokens, so it takes them without a
+# separate route.
 MAX_SPANS_PER_DOC = 20_000
 
 # conversion methods — the two-tier pipeline of the reference

@@ -116,8 +116,8 @@ EXACT_STEP = 200_000  # exact copies
 #      surface through the OR-construction's other bands unless those
 #      are equally hot). Deterministic, expressible as one map-side-
 #      combinable count + an anti-join AQE broadcasts (the hot list is
-#      empty on healthy corpora), and the chunker's MAX_SPANS_PER_DOC
-#      pattern applied to buckets: bucket_tripwire() reports how often
+#      empty on healthy corpora), and the extraction boundary's
+#      MAX_SPANS_PER_DOC pattern applied to buckets: bucket_tripwire() reports how often
 #      the cap bites so a pipeline can surface the counter next to its
 #      lineage metrics instead of failing silently.
 # Cap sizing: minhash buckets (post-collapse) share a 4-row signature

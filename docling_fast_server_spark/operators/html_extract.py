@@ -668,7 +668,7 @@ def extract_html_document(doc_id: str, html: str) -> list[dict]:
         spans = _tree_extract(html, doc_num)
     if len(spans) > MAX_SPANS_PER_DOC:
         # extraction-boundary ceiling: callers degrade this doc to
-        # `failed` rather than feeding a quadratic-cost span array to
-        # the in-array chunker (model.MAX_SPANS_PER_DOC rationale)
+        # `failed` rather than emitting an oversized one-row span array
+        # (model.MAX_SPANS_PER_DOC rationale)
         raise ValueError(f"document exceeds span ceiling ({len(spans)} spans)")
     return spans

@@ -122,7 +122,7 @@ def extract_pdf_cells_flat(
     if len(cells) > MAX_SPANS_PER_DOC:
         # extraction-boundary ceiling (model.MAX_SPANS_PER_DOC): raised
         # past the limited retry, so the batch loop degrades the doc to
-        # `failed` instead of emitting a quadratic-cost span array
+        # `failed` instead of emitting an oversized span array
         raise ValueError(f"document exceeds span ceiling ({len(cells)} spans)")
     return cells, method
 

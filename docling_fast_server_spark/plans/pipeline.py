@@ -23,6 +23,8 @@ import os
 import re
 import uuid
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.bloom import bloom_prune_anti_join
@@ -301,6 +303,37 @@ def run_dedup(
     return run_id
 
 
+# A resume's anti-join reads the committed key files lazily, at the staged
+# write. A compaction or retention rewrite (_swap_table), or the commit GC
+# after a rollback, can delete a file of that snapshot first; the staged
+# write then fails on the missing file and run_extraction snapshots again.
+_STALE_SNAPSHOT_RETRIES = 3
+
+
+def _lost_file_under(err: Exception, path: str) -> bool:
+    """Whether `err` is a Spark read failing on a missing file under `path`."""
+    msg = str(err)
+    return ("FILE_NOT_EXIST" in msg or "FileNotFoundException" in msg) and (
+        os.path.abspath(path.rstrip("/")) + "/" in msg
+    )
+
+
+def _todo(spark, raw: DataFrame, out_path: str, resume: bool, resume_strategy: str):
+    """(raw minus the committed documents, the KeySnapshot they were
+    anti-joined against or None): the run's input."""
+    if not (resume and table_exists(spark, out_path)):
+        return raw, None
+    snapshot = None
+    published = committed_keys(spark, out_path, raw.schema["doc_id"])
+    if published is None:
+        committed_prev = read_table(spark, out_path)
+    else:
+        committed_prev, snapshot = published
+    if resume_strategy == "bloom":
+        return bloom_prune_anti_join(raw, committed_prev, key="doc_id"), snapshot
+    return anti_join_committed(raw, committed_prev), snapshot
+
+
 def run_extraction(
     spark: SparkSession,
     raw: DataFrame,
@@ -321,7 +354,10 @@ def run_extraction(
     the set the merge commit itself checks against: rows a crashed
     writer left without a manifest are NOT committed, so their documents
     are extracted again. A table with no commit history (Iceberg, plain
-    appends) is read whole instead.
+    appends) is read whole instead. When a file that snapshot read is
+    gone by the staged write (a compaction, retention rewrite or rollback
+    GC landed in between), the run snapshots again and retries, up to
+    _STALE_SNAPSHOT_RETRIES times; any other error is raised as is.
 
     The spread decision reads `raw`'s scan layout, not the anti-join's:
     an anti-join only removes rows, and probing the join would execute
@@ -357,33 +393,29 @@ def run_extraction(
     actually COMMITTED (a raced writer's dropped duplicates are not
     double-counted), which a counter on the staged write cannot know."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    todo, snapshot = raw, None
-    if resume and table_exists(spark, out_path):
-        published = committed_keys(spark, out_path, raw.schema["doc_id"])
-        if published is None:
-            committed_prev = read_table(spark, out_path)
-        else:
-            committed_prev, snapshot = published
-        if resume_strategy == "bloom":
-            todo = bloom_prune_anti_join(raw, committed_prev, key="doc_id")
-        else:
-            todo = anti_join_committed(raw, committed_prev)
     mode = _spread_mode(raw, partitions, spread)  # raw's layout, not the anti-join's
-    extracted = extract_auto(spread_by_size(todo, partitions, mode=mode))
-    with_meta = with_partition_metrics(extracted, run_id)
-    # MERGE-grade commit: the anti-join above closes the common resume
-    # case, but two runs overlapping in time both snapshot the table
-    # before either commits — merge_append_table drops the loser's
-    # duplicates at commit time (Iceberg MERGE INTO in production). Both
-    # resume strategies leave exactly the keys outside `snapshot`, so the
-    # commit counts the overlap only if a key file was published since.
-    commit = merge_append_table(
-        with_meta.select(
-            "doc_id", "spans", "conversion_method", "error", "run_id", "partition_id"
-        ),
-        out_path,
-        snapshot=snapshot,
-    )
+    for attempt in range(_STALE_SNAPSHOT_RETRIES + 1):
+        todo, snapshot = _todo(spark, raw, out_path, resume, resume_strategy)
+        extracted = extract_auto(spread_by_size(todo, partitions, mode=mode))
+        with_meta = with_partition_metrics(extracted, run_id)
+        # MERGE-grade commit: _todo's anti-join closes the common resume
+        # case, but two runs overlapping in time both snapshot the table
+        # before either commits — merge_append_table drops the loser's
+        # duplicates at commit time (Iceberg MERGE INTO in production). Both
+        # resume strategies leave exactly the keys outside `snapshot`, so the
+        # commit counts the overlap only if a key file was published since.
+        try:
+            commit = merge_append_table(
+                with_meta.select(
+                    "doc_id", "spans", "conversion_method", "error", "run_id", "partition_id"
+                ),
+                out_path,
+                snapshot=snapshot,
+            )
+            break
+        except (Py4JJavaError, PySparkException) as e:
+            if attempt == _STALE_SNAPSHOT_RETRIES or not _lost_file_under(e, out_path):
+                raise
     if not table_exists(spark, out_path):
         # nothing ever committed (empty input on a fresh table: the merge
         # bootstrap leaves only <out>/_commits, no data files) — a plain

@@ -208,11 +208,9 @@ CHUNK_BPE_BUDGET = 10  # BPE tokens per chunk (~1.2x whitespace tokens on
 
 
 def q_chunks(spark, sf_dir):
-    # route='hof': kernel-fed input is span-ceiling-guaranteed
-    # (model.MAX_SPANS_PER_DOC enforced at the extraction boundary), so
-    # the zero-shuffle in-array chunker is sound AND the fused
-    # extract -> chunk plan stays one narrow stage (route='auto' would
-    # re-execute the extraction kernel once per routing branch)
+    # the fused extraction kernel feeds the chunking kernel directly:
+    # extract -> chunk is one narrow stage (test_plans asserts it).
+    # route='auto' and 'hof' run the same kernel.
     return chunk_spans(extract_all(spark, sf_dir), budget=CHUNK_BUDGET, route="hof")
 
 
@@ -228,8 +226,8 @@ def q_chunks_bpe(spark, sf_dir):
 
 
 _KEY_SHIFT = 1 << 20  # oracle-only piece ordering key (offset * 2^20 +
-# piece_i): the Spark chunker now orders by array position within each
-# document (zero-shuffle HOF form), so this composite key exists solely
+# piece_i): the Spark chunker walks each document's pieces in (offset,
+# piece_i) order inside its kernel, so this composite key exists solely
 # so the SQL row-window formulation reproduces the identical order —
 # valid because offsets and piece indices stay far below 2^20
 

@@ -33,7 +33,7 @@ def main() -> None:
         "  Scan -> MapInArrow [-> Generate]),",
         "- scans: `PushedFilters` + pruned `ReadSchema`,",
         "- dims (hash params, hyperplanes, query vectors): `BroadcastHashJoin`/`BroadcastNestedLoopJoin`,",
-        "- chunking (hof route): **zero Exchange** (Scan -> fused MapInArrow -> Generate),",
+        "- chunking: **zero Exchange** (Scan -> fused MapInArrow -> chunking MapInArrow),",
         "- dedup_minhash: NO distinct-shingle dictionary stages — signatures are",
         "  narrow `array_min(transform(...))` projections; the only wide ops are",
         "  the band self-join and the candidate-verify joins,",

@@ -7,17 +7,18 @@ from pyspark.sql import functions as F
 from docling_fast_server_spark.operators.chunking import chunk_spans
 
 
+_SPANS_DDL = "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+
+
+def _spans(items, offsets=None):
+    """(kind, text, media_ref) triples -> span dicts, at `offsets` (default
+    the dense index)."""
+    offsets = range(len(items)) if offsets is None else offsets
+    return [{"kind": k, "text": t, "media_ref": m, "offset": o} for (k, t, m), o in zip(items, offsets)]
+
+
 def _doc(spark, doc_id, spans):
-    rows = [
-        (doc_id, [
-            {"kind": k, "text": t, "media_ref": m, "offset": i}
-            for i, (k, t, m) in enumerate(spans)
-        ])
-    ]
-    return spark.createDataFrame(
-        rows,
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
+    return spark.createDataFrame([(doc_id, _spans(spans))], _SPANS_DDL)
 
 
 def test_heading_context_propagates(spark):
@@ -77,10 +78,10 @@ def test_media_spans_kept_but_textless(spark):
 
 
 def test_offsets_unique_per_doc(spark, sf_dir):
-    """Extraction-boundary contract the chunker's ord_key (offset * 2^20
-    + piece_i) depends on: span offsets are unique within a document
-    (they are the dense span index by construction; a duplicate would
-    make chunk piece order nondeterministic and undercount n_spans)."""
+    """Extraction-boundary contract the chunker's piece order depends on:
+    span offsets are unique within a document (they are the dense span
+    index by construction; a duplicate would make chunk piece order
+    depend on input order and undercount n_spans)."""
     from pyspark.sql import functions as F
 
     from docling_fast_server_spark.queries import extract_all
@@ -111,7 +112,7 @@ def _model_chunks(spans, B, tokenizer="ws"):
     spans = sorted(spans, key=lambda s: s["offset"])
     heading, cum, pieces = "", 0, []
     for s in spans:
-        if s["kind"] == "section_header":
+        if s["kind"] == "section_header" and s["text"] is not None:
             heading = s["text"]
         tk = [] if s["text"] is None else toks(s["text"])
         n = 0 if s["text"] is None else len(tk)
@@ -201,26 +202,48 @@ def test_chunker_matches_model_on_arbitrary_spans(spark):
 
 
 # ---------------------------------------------------------------------------
-# round-4 verdict item 6: quadratic-fold tripwire — the row-window
-# formulation must exist, match the HOF exactly, and absorb pathological
-# >20k-span documents that the in-array prefix fold would turn into a
-# minutes-long single task.
+# the kernel against the DuckDB chunk oracle (queries._oracle_chunks, the
+# row-window formulation of the same contract) plus the whole-doc fallback
+# row, which the oracle does not emit
 # ---------------------------------------------------------------------------
-def _multi_doc(spark, docs):
-    rows = [
-        (
-            doc_id,
-            [
-                {"kind": k, "text": t, "media_ref": m, "offset": i}
-                for i, (k, t, m) in enumerate(spans)
-            ],
-        )
-        for doc_id, spans in docs
-    ]
-    return spark.createDataFrame(
-        rows,
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+def _tok_sql(tokenizer):
+    from docling_fast_server_spark.operators.textstats import BPE_RE
+
+    return "string_split(text, ' ')" if tokenizer == "ws" else f"regexp_extract_all(text, '{BPE_RE}')"
+
+
+def _oracle_rows(monkeypatch, docs, budget, tokenizer):
+    """The oracle's chunk rows for `docs` ((doc_id, span dicts or None)
+    pairs), with one fallback row per document of empty or NULL spans,
+    sorted."""
+    import duckdb
+
+    from docling_fast_server_spark import queries
+
+    con = duckdb.connect()
+    con.execute(
+        'CREATE TABLE spans_in (doc_id VARCHAR, kind VARCHAR, text VARCHAR, media_ref VARCHAR, "offset" INTEGER)'
     )
+    rows = [(d, s["kind"], s["text"], s["media_ref"], s["offset"]) for d, spans in docs for s in spans or []]
+    if rows:
+        con.executemany("INSERT INTO spans_in VALUES (?, ?, ?, ?, ?)", rows)
+    monkeypatch.setattr(
+        queries, "expected_spans_sql", lambda which: 'SELECT doc_id, kind, text, media_ref, "offset" FROM spans_in'
+    )
+    got = con.execute(queries._oracle_chunks(budget, _tok_sql(tokenizer))).fetchall()
+    con.close()
+    return sorted(got + [(d, 0, "", "", 0, 0) for d, spans in docs if not spans])
+
+
+def _assert_matches_oracle(spark, monkeypatch, docs, route="auto"):
+    """chunk_spans over `docs` equals the oracle at budgets 3, 5 and 8
+    with both tokenizers."""
+    df = spark.createDataFrame(docs, _SPANS_DDL)
+    for tokenizer in ("ws", "bpe"):
+        for budget in (3, 5, 8):
+            got = sorted(map(tuple, chunk_spans(df, budget=budget, tokenizer=tokenizer, route=route).collect()))
+            want = _oracle_rows(monkeypatch, docs, budget, tokenizer)
+            assert got == want, (budget, tokenizer, got, want)
 
 
 _MIXED_DOCS = [
@@ -247,66 +270,42 @@ _MIXED_DOCS = [
 ]
 
 
-def test_window_route_matches_hof(spark):
-    df = _multi_doc(spark, [d for d in _MIXED_DOCS if d[1]])  # non-empty docs
-    for tokenizer in ("ws", "bpe"):
-        a = sorted(
-            map(tuple, chunk_spans(df, budget=5, tokenizer=tokenizer, route="hof").collect())
-        )
-        b = sorted(
-            map(tuple, chunk_spans(df, budget=5, tokenizer=tokenizer, route="window").collect())
-        )
-        assert a == b
 
 
-def test_auto_route_equals_hof_across_the_ceiling(spark):
-    """auto with a tiny ceiling forces some docs through each branch;
-    output must equal the pure HOF run (including the empty-doc fallback,
-    which always takes the HOF branch)."""
-    df = _multi_doc(spark, _MIXED_DOCS)
-    a = sorted(map(tuple, chunk_spans(df, budget=5, route="hof").collect()))
-    b = sorted(map(tuple, chunk_spans(df, budget=5, route="auto", hof_max_spans=3).collect()))
-    assert a == b
+def _mixed_docs():
+    return [(d, _spans(items)) for d, items in _MIXED_DOCS]
 
 
-def _ref_chunks(spans, B):
-    """Independent Python model of the chunk semantics."""
-    heading, cum, pieces = "", 0, []
-    for s in sorted(spans, key=lambda s: s["offset"]):
-        if s["kind"] == "section_header" and s["text"] is not None:
-            heading = s["text"]
-        toks = s["text"].split(" ") if s["text"] is not None else None
-        ntok = len(toks) if toks is not None else 0
-        for p in range(max((ntok + B - 1) // B, 1)):
-            pieces.append(
-                (
-                    s["offset"],
-                    p,
-                    (cum + p * B) // B,
-                    heading,
-                    " ".join(toks[p * B : (p + 1) * B]) if toks is not None else None,
-                    min(B, ntok - p * B) if toks is not None else 0,
-                )
-            )
-        cum += ntok
-    out = {}
-    for off, p, ci, hd, pt, ptok in pieces:
-        c = out.setdefault(ci, {"heading": hd, "texts": [], "n_tokens": 0, "offsets": set()})
-        if pt is not None:
-            c["texts"].append(pt)
-        c["n_tokens"] += ptok
-        c["offsets"].add(off)
-    return {
-        ci: (c["heading"], " ".join(c["texts"]), c["n_tokens"], len(c["offsets"]))
-        for ci, c in out.items()
-    }
+def test_mixed_docs_match_oracle(spark, monkeypatch):
+    _assert_matches_oracle(spark, monkeypatch, _mixed_docs())
 
 
-def test_big_doc_completes_via_window_route(spark):
-    """A >20k-span document goes through the row-window fallback under
-    route='auto' and produces exactly the reference chunking — instead of
-    an O(spans^2) fold straggler."""
-    n = 25_000
+def test_auto_route_equals_hof_across_the_ceiling(spark, monkeypatch):
+    """route 'auto' and 'hof' run the one kernel (callers pass either), on
+    documents below and above model.MAX_SPANS_PER_DOC alike: both equal
+    the oracle. Any other route, and an unknown tokenizer, fail at the
+    call."""
+    from docling_fast_server_spark.model import MAX_SPANS_PER_DOC
+
+    over = [
+        ("section_header", f"H{i}", None) if i % 900 == 0 else ("text", f"w{i} x{i} y", None)
+        for i in range(MAX_SPANS_PER_DOC + 1)
+    ]
+    docs = _mixed_docs() + [("d-over-ceiling", _spans(over))]
+    for route in ("auto", "hof"):
+        _assert_matches_oracle(spark, monkeypatch, docs, route=route)
+    df = spark.createDataFrame(_mixed_docs(), _SPANS_DDL)
+    with pytest.raises(ValueError, match="route"):
+        chunk_spans(df, route="window")
+    with pytest.raises(ValueError, match="tokenizer"):
+        chunk_spans(df, tokenizer="sentencepiece")
+
+
+def test_big_doc_matches_model(spark):
+    """A 10^5-span document — five times the extraction ceiling, as a
+    stored table may hold — chunks in one linear pass, exactly as the
+    Python model does."""
+    n = 100_000
     spans = []
     for i in range(n):
         if i % 500 == 0:
@@ -315,13 +314,9 @@ def test_big_doc_completes_via_window_route(spark):
             spans.append({"kind": "picture", "text": None, "media_ref": f"media://9/img/{i}", "offset": i})
         else:
             spans.append({"kind": "text", "text": f"a{i} b{i} c{i}", "media_ref": None, "offset": i})
-    df = spark.createDataFrame(
-        [("d-big", spans)],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
-    rows = chunk_spans(df, budget=40, route="auto").collect()  # default ceiling
-    got = {r["chunk_idx"]: (r["heading"], r["chunk_text"], r["n_tokens"], r["n_spans"]) for r in rows}
-    assert got == _ref_chunks(spans, 40)
+    df = spark.createDataFrame([("d-big", spans)], _SPANS_DDL)
+    got = sorted(tuple(r)[1:] for r in chunk_spans(df, budget=40).collect())
+    assert got == _model_chunks(spans, 40)
 
 
 def test_extraction_boundary_enforces_span_ceiling():
@@ -345,42 +340,13 @@ def test_extraction_boundary_enforces_span_ceiling():
         extract_pdf_cells_flat(["pdf_cell"] * m, [prov] * m, [None] * m, 0, m)
 
 
-def test_auto_route_warns_on_unmaterialized_kernel_input(spark, sf_dir):
-    """route='auto' over a fused (non-persisted) extraction plan pays
-    double extraction — the guard must surface it; route='hof', a
-    persisted input, and plain stored tables must stay silent."""
-    import warnings
+def test_corpus_chunks_match_oracle(spark, sf_dir):
+    """The kernel on the real extracted corpus, plus one document with
+    empty spans, against the oracle over documents.parquet at budgets 3,
+    5 and 8 with both tokenizers."""
+    import duckdb
 
-    import pytest
-
-    from docling_fast_server_spark.corpus import docs_raw
-    from docling_fast_server_spark.operators.chunking import chunk_spans
-    from docling_fast_server_spark.operators.dispatch import extract_auto
-
-    fused = extract_auto(docs_raw(spark, sf_dir, which="html").limit(5))
-    with pytest.warns(RuntimeWarning, match="EXECUTE twice"):
-        chunk_spans(fused, route="auto")
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # any warning -> failure
-        chunk_spans(fused, route="hof")  # forced route: no double eval
-        cached = fused.persist()
-        try:
-            chunk_spans(cached, route="auto")  # materialized: safe
-        finally:
-            cached.unpersist()
-
-
-def test_hof_expr_matches_column_reference(spark, sf_dir):
-    """The SQL-string HOF chunker (route='hof') must be row-identical to
-    the engine's other route, the row-window chunker (route='window'),
-    on the real extracted corpus with both tokenizers, over every
-    document with non-empty spans. A document with empty spans, which
-    only the HOF route serves, must yield exactly the whole-doc
-    fallback row."""
-    from pyspark.sql import functions as F
-
-    from docling_fast_server_spark.operators.chunking import chunk_spans
+    from docling_fast_server_spark import queries
     from docling_fast_server_spark.queries import extract_all
 
     base = extract_all(spark, sf_dir).persist()
@@ -393,34 +359,20 @@ def test_hof_expr_matches_column_reference(spark, sf_dir):
             F.lit(None).cast("string").alias("error"),
         )
     )
-    has_spans = F.coalesce(F.size("spans"), F.lit(0)) > 0
-    empty_ids = {r.doc_id for r in with_empty.filter(~has_spans).collect()}
-    for tokenizer, budget in (("ws", 8), ("bpe", 10)):
-        got = sorted(map(tuple, chunk_spans(
-            with_empty, budget=budget, tokenizer=tokenizer, route="hof").collect()))
-        want = sorted(map(tuple, chunk_spans(
-            with_empty.filter(has_spans), budget=budget, tokenizer=tokenizer,
-            route="window").collect()))
-        assert [r for r in got if r[0] not in empty_ids] == want and len(want) > 500
-        assert [r for r in got if r[0] in empty_ids] == [
-            (d, 0, "", "", 0, 0) for d in sorted(empty_ids)
-        ]
-        assert "doc-empty" in empty_ids
-    base.unpersist()  # shared-session hygiene: test_escaping asserts
-    # zero persistent RDDs survive clear_caches
-
-
-def test_tok_sql_rejects_pattern_it_cannot_embed(monkeypatch):
-    """A backslash or quote in BPE_RE would be rewritten by Spark's SQL
-    string-literal parsing but not by the F.lit route."""
-    from docling_fast_server_spark.operators import chunking as C
-    from docling_fast_server_spark.operators import textstats
-
-    assert "regexp_extract_all" in C._tok_sql("t", "bpe")
-    for bad in (r"\w+|[^\w ]", "[A-Za-z']+"):
-        monkeypatch.setattr(textstats, "BPE_RE", bad)
-        with pytest.raises(ValueError, match="SQL literal"):
-            C._tok_sql("t", "bpe")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
+    try:
+        for tokenizer in ("ws", "bpe"):
+            for budget in (3, 5, 8):
+                got = sorted(map(tuple, chunk_spans(
+                    with_empty, budget=budget, tokenizer=tokenizer).collect()))
+                want = con.execute(queries._oracle_chunks(budget, _tok_sql(tokenizer))).fetchall()
+                assert got == sorted(want + [("doc-empty", 0, "", "", 0, 0)]), (budget, tokenizer)
+                assert len(want) > 500
+    finally:
+        con.close()
+        base.unpersist()  # shared-session hygiene: test_escaping asserts
+        # zero persistent RDDs survive clear_caches
 
 
 def _edge_docs():
@@ -464,52 +416,53 @@ def _edge_docs():
     ]
 
 
-def test_chunk_slices_match_window_route_and_oracle(spark, monkeypatch):
-    """The slice-based chunk assembly against the row-window route and the
-    DuckDB chunk oracle on edge documents, at budgets 3 and 8 and with
-    the BPE tokenizer. Empty and NULL spans yield the whole-doc fallback
-    row, which neither the window route nor the oracle emits."""
-    import duckdb
+def _tokenizer_edge_docs():
+    """Texts at the edges of the two tokenizers: leading, trailing and
+    doubled spaces and space-only texts (each space bounds an empty ws
+    token), punctuation runs, non-ASCII and astral characters (one bpe
+    token per code point outside the ASCII alnum class), a header with
+    NULL text (it keeps the previous heading), shuffled offsets, and two
+    media spans sharing an offset (a chunk counts distinct offsets)."""
+    import random
 
-    from docling_fast_server_spark import queries
-    from docling_fast_server_spark.operators.textstats import BPE_RE
-
-    docs = _edge_docs()
-    rows = [
-        (d, None if spans is None else [
-            {"kind": k, "text": t, "media_ref": m, "offset": i} for i, (k, t, m) in enumerate(spans)
-        ])
-        for d, spans in docs
+    rng = random.Random(2024)
+    shuffled = [("section_header", f"S{i}", None) if i % 4 == 0 else ("text", f"u{i} v{i}", None)
+                for i in range(12)]
+    return [
+        ("t-spaces", _spans([
+            ("text", "  lead", None), ("text", "trail  ", None), ("text", "a  b   c", None),
+            ("text", " ", None), ("text", "   ", None), ("text", "x y z w v", None),
+        ])),
+        ("t-punct", _spans([
+            ("text", "a,,b!!?", None), ("text", "...", None), ("text", "--x--", None),
+            ("text", "tab\tand\nnewline", None),
+        ])),
+        ("t-unicode", _spans([
+            ("section_header", "Résumé", None),
+            ("text", "naïve café — ünïcode", None),
+            ("text", "emoji 😀🎉 astral 𝔘𝔫𝔦𝔠𝔬𝔡𝔢", None),
+            ("text", "日本語のテキスト", None),
+        ])),
+        ("t-null-header", _spans([
+            ("section_header", "KEPT", None), ("text", "a b", None),
+            ("section_header", None, None), ("text", "c d e f", None),
+        ])),
+        ("t-shuffled", _spans(shuffled, rng.sample(range(100), len(shuffled)))),
+        ("t-shared-offset", _spans(
+            [("text", "a b", None), ("picture", None, "m1"), ("picture", None, "m2")], [0, 1, 1])),
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    )
-    con = duckdb.connect()
-    con.execute('CREATE TABLE edge_spans (doc_id VARCHAR, kind VARCHAR, text VARCHAR, media_ref VARCHAR, "offset" INTEGER)')
-    con.executemany(
-        "INSERT INTO edge_spans VALUES (?, ?, ?, ?, ?)",
-        [(d, k, t, m, i) for d, spans in docs for i, (k, t, m) in enumerate(spans or [])],
-    )
-    monkeypatch.setattr(
-        queries, "expected_spans_sql", lambda which: 'SELECT doc_id, kind, text, media_ref, "offset" FROM edge_spans'
-    )
-    fallback = [("e-empty", 0, "", "", 0, 0), ("e-null", 0, "", "", 0, 0)]
-    for budget, tokenizer, tok_sql in (
-        (3, "ws", "string_split(text, ' ')"),
-        (8, "ws", "string_split(text, ' ')"),
-        (5, "bpe", f"regexp_extract_all(text, '{BPE_RE}')"),
-    ):
-        got = sorted(map(tuple, chunk_spans(df, budget=budget, tokenizer=tokenizer, route="hof").collect()))
-        window = sorted(map(tuple, chunk_spans(
-            df.filter(F.coalesce(F.size("spans"), F.lit(0)) > 0),
-            budget=budget, tokenizer=tokenizer, route="window").collect()))
-        oracle = sorted(con.execute(queries._oracle_chunks(budget, tok_sql)).fetchall())
-        assert got == sorted(window + fallback), (budget, tokenizer)
-        assert got == sorted(oracle + fallback), (budget, tokenizer)
-        by_doc = {}
-        for r in got:
-            by_doc.setdefault(r[0], []).append(r)
-        if budget == 3:
-            assert by_doc["e-trailing-media"][-1] == ("e-trailing-media", 1, "", "", 0, 1)
-        assert len(by_doc["e-big"]) > 20
-    con.close()
+
+
+def test_edge_docs_match_oracle(spark, monkeypatch):
+    """The chunk assembly and both tokenizers against the oracle on edge
+    documents. Empty and NULL spans yield the whole-doc fallback row."""
+    docs = [(d, None if items is None else _spans(items)) for d, items in _edge_docs()]
+    docs += _tokenizer_edge_docs()
+    _assert_matches_oracle(spark, monkeypatch, docs)
+    got = sorted(map(tuple, chunk_spans(spark.createDataFrame(docs, _SPANS_DDL), budget=3).collect()))
+    by_doc = {}
+    for r in got:
+        by_doc.setdefault(r[0], []).append(r)
+    assert by_doc["e-trailing-media"][-1] == ("e-trailing-media", 1, "", "", 0, 1)
+    assert len(by_doc["e-big"]) > 20
+    assert by_doc["t-null-header"][-1][2] == "KEPT"

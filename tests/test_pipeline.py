@@ -480,3 +480,40 @@ def test_one_task_and_shuffled_aggregates_agree(spark, sf_dir, workdir, monkeypa
     assert len(got["one"][0]) == n_keys and sum(got["one"][1]) == n_keys
     assert sum(r[3] for r in got["one"][2]) == raw.count()  # doc_count counts the doubles
     assert got["one"] == got["shuffled"]
+
+
+def test_resume_survives_a_compaction_after_its_key_snapshot(spark, sf_dir, workdir, monkeypatch):
+    """compact_table between the resume's committed_keys snapshot and its
+    staged write deletes the key files the anti-join reads. The resume
+    takes a fresh snapshot and retries instead of failing with a missing
+    file: every document is committed exactly once, and the lineage
+    counts each once."""
+    from docling_fast_server_spark.plans import pipeline
+    from docling_fast_server_spark.sources.io import compact_table
+
+    raw = docs_raw(spark, sf_dir, which="all").filter(F.col("doc_id") < "doc-000030")
+    out, lin = os.path.join(workdir, "out"), os.path.join(workdir, "lineage")
+    run_extraction(spark, raw.filter(F.col("doc_id") < "doc-000010"), out, lin, run_id="c")
+
+    real = pipeline.committed_keys
+    snapshots = []
+
+    def committed_keys_then_compact(spark_, path, key_field):
+        got = real(spark_, path, key_field)
+        snapshots.append(got)
+        if len(snapshots) == 1:
+            compact_table(spark_, path, 1)
+        return got
+
+    monkeypatch.setattr(pipeline, "committed_keys", committed_keys_then_compact)
+    run_extraction(spark, raw, out, lin, run_id="r")
+    assert len(snapshots) == 2
+    committed = read_table(spark, out)
+    per_doc = {r["doc_id"]: r["n"] for r in committed.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
+    assert per_doc == {f"doc-{i:06d}": 1 for i in range(30)}
+    docs = {r["run_id"]: r["docs"] for r in read_table(spark, lin).groupBy("run_id").agg(
+        F.sum("doc_count").alias("docs")).collect()}
+    assert docs == {"c": 10, "r": 20}
+    # a missing file outside the table is not a stale snapshot
+    lost = "[FAILED_READ_FILE.FILE_NOT_EXIST] file:///elsewhere/raw/part-0.parquet"
+    assert not pipeline._lost_file_under(RuntimeError(lost), out)

@@ -2,7 +2,8 @@
 actual optimized plans (SURVEY §4 discipline):
 
 - extraction is shuffle-free (no Exchange in the plan),
-- exports/chunking add no Python evaluation (JVM-side only),
+- exports add no Python evaluation (JVM-side only); chunking adds one
+  Arrow kernel and no interpreted higher-order function,
 - scans push filters and prune columns,
 - small dims broadcast.
 """
@@ -73,21 +74,25 @@ def test_exports_stay_jvm_side(spark, sf_dir):
 
 
 def test_chunking_is_shuffle_free(spark, sf_dir):
-    """The chunker computes heading propagation, piece explosion, the
-    running token count and chunk grouping WITHIN each document's span
-    array (higher-order functions), so extract -> chunk is one narrow
-    stage: no Exchange, no Window, no Python eval. (Rounds 1-2 exploded
+    """The chunker is one mapInArrow kernel walking each document's span
+    array once, so extract -> chunk is one narrow stage: exactly one
+    MapInArrow node past extraction's; no Exchange, no Window, no Python
+    UDF eval; and no interpreted higher-order function (ArrayAggregate,
+    LambdaFunction — the in-array fold it replaced). (Rounds 1-2 exploded
     to rows and hash-partitioned the full span payload by doc_id.)"""
-    from docling_fast_server_spark.operators.chunking import chunk_spans
+    import __spark_entry__ as e
+
     from docling_fast_server_spark.queries import extract_all
 
-    for kw in ({}, {"budget": 10, "tokenizer": "bpe"}):
-        # route='hof' is what the fused pipeline queries use (kernel-fed
-        # input is span-ceiling-guaranteed, see q_chunks)
-        plan = _plan(chunk_spans(extract_all(spark, sf_dir), route="hof", **kw))
-        assert "BatchEvalPython" not in plan
-        assert "Exchange" not in plan, plan
-        assert "Window" not in plan, plan
+    base = _plan(extract_all(spark, sf_dir)).count("MapInArrow")
+    for name in ("chunks", "chunks_bpe"):
+        executed = e.queries()[name](spark, sf_dir)._jdf.queryExecution().executedPlan()
+        plan, tree = executed.toString(), executed.toJSON()
+        assert plan.count("MapInArrow") == base + 1, plan
+        for node in ("Exchange", "Window", "BatchEvalPython"):
+            assert node not in plan, (name, node, plan)
+        for expr in ("ArrayAggregate", "LambdaFunction"):
+            assert f'.{expr}"' not in tree, (name, expr)
 
 
 def test_scan_pushdown(spark, sf_dir):
