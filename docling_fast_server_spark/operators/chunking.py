@@ -159,8 +159,9 @@ def chunk_spans(
     heading, chunk_text, n_tokens, n_spans): one narrow mapInArrow stage
     (see _chunk_arrow), linear in each document's spans + tokens, so a
     pathological 10^5-span stored document is no straggler and no route
-    splits documents by size. `route` is kept for callers: "auto" and
-    "hof" both run the kernel.
+    splits documents by size. `route` selects nothing: "auto" and "hof"
+    both run the kernel, and it is still accepted and validated only
+    because perfbench/workloads.py passes route="hof".
 
     Ordering contract: a chunk's pieces follow span offsets, which the
     extraction kernels make unique per document (the dense span index,

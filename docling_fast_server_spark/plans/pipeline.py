@@ -5,15 +5,21 @@ The queue lifecycle of the reference (enqueue -> bounded workers ->
 job store -> retention; /root/reference/src/services/queue_manager.py:
 935-1034) becomes one declarative plan:
 
-    raw docs --anti-join committed--> salt/spread --extract_auto-->
+    raw docs --anti-join committed keys--> spread --extract_auto-->
     append output + append lineage
+
+Resume has one route: a left-anti join against the table's manifest key
+set (io.committed_keys), one narrow column. While that fits the broadcast
+threshold the planner broadcasts it, and the raw side is not shuffled to
+skip what is done.
 
 Skew handling (the reference routes big PDFs to bigger worker classes,
 docs/DEPLOYMENT_GUIDE.md:126-129,159-165): AQE cannot split one heavy UDF
 row, so heavy documents are spread explicitly — repartition on doc_id
 hash distributes them uniformly, and sortWithinPartitions by size
 descending gives LPT-style scheduling inside each partition so a straggler
-1000-page doc starts first instead of last. At 1000 executors the same two
+1000-page doc starts first instead of last. The repartition runs only when
+the input has fewer splits than the target. At 1000 executors the same two
 lines are the whole policy; no driver-side loop exists anywhere.
 """
 
@@ -27,7 +33,6 @@ from py4j.protocol import Py4JJavaError
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.bloom import bloom_prune_anti_join
 from ..operators.dispatch import extract_auto
 from ..operators.lineage import anti_join_committed, lineage_summary, with_partition_metrics
 from ..sources.io import (
@@ -147,43 +152,39 @@ def _input_splits(df: DataFrame) -> int:
     return df.rdd.getNumPartitions()
 
 
-def _spread_mode(layout: DataFrame, partitions: int | None, mode: str) -> str:
-    """Resolve mode='auto' to 'always' or 'never' from `layout`'s split
-    count against the target partition count."""
-    if mode not in ("auto", "always", "never"):
-        raise ValueError(f"unknown spread mode {mode!r}")
-    if mode != "auto":
-        return mode
+def _needs_spread(layout: DataFrame, partitions: int | None) -> bool:
+    """Whether `layout` has fewer splits than the target partition count."""
     target = partitions or int(
         layout.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    return "never" if _input_splits(layout) >= target else "always"
+    return _input_splits(layout) < target
 
 
-def spread_by_size(
-    raw: DataFrame, partitions: int | None = None, mode: str = "auto"
-) -> DataFrame:
-    """Hash-spread docs across partitions; heaviest first within each
-    (needs an n_chars size hint column; falls back to span count).
-
-    mode='auto' (default): SKIP the payload repartition when the input
-    already has at least the target number of splits — a well-laid-out
-    ingest (one split per file, the bench's pre-spread layout) should
-    not ship the whole corpus through the shuffle fabric on every run
-    just to get parallelism it already has (round-3 verdict item 3).
-    The narrow LPT sort (heaviest doc first within each partition) is
-    kept either way — it costs no exchange and schedules stragglers
-    first. mode='always' forces the spread (known-skewed or few-split
-    inputs); mode='never' trusts the input layout entirely."""
-    size_col = "n_chars" if "n_chars" in raw.columns else None
-    df = raw if size_col else raw.withColumn("n_chars", F.size("spans"))
-    if _spread_mode(df, partitions, mode) == "always":
+def _spread(df: DataFrame, partitions: int | None, spread: bool) -> DataFrame:
+    """spread_by_size with the repartition decision already made."""
+    if "n_chars" not in df.columns:
+        df = df.withColumn("n_chars", F.size("spans"))
+    if spread:
         df = (
             df.repartition(partitions, F.col("doc_id"))
             if partitions
             else df.repartition(F.col("doc_id"))
         )
     return df.sortWithinPartitions(F.desc("n_chars"))
+
+
+def spread_by_size(raw: DataFrame, partitions: int | None = None) -> DataFrame:
+    """Hash-spread docs across partitions; heaviest first within each
+    (needs an n_chars size hint column; falls back to span count).
+
+    The payload repartition is SKIPPED when the input already has at
+    least the target number of splits — a well-laid-out ingest (one
+    split per file, the bench's pre-spread layout) should not ship the
+    whole corpus through the shuffle fabric on every run just to get
+    parallelism it already has (round-3 verdict item 3). The narrow LPT
+    sort (heaviest doc first within each partition) is kept either way —
+    it costs no exchange and schedules stragglers first."""
+    return _spread(raw, partitions, _needs_spread(raw, partitions))
 
 
 def _commit_readback(spark: SparkSession, out_path: str, commit, run_id: str) -> DataFrame:
@@ -318,10 +319,10 @@ def _lost_file_under(err: Exception, path: str) -> bool:
     )
 
 
-def _todo(spark, raw: DataFrame, out_path: str, resume: bool, resume_strategy: str):
+def _todo(spark, raw: DataFrame, out_path: str):
     """(raw minus the committed documents, the KeySnapshot they were
     anti-joined against or None): the run's input."""
-    if not (resume and table_exists(spark, out_path)):
+    if not table_exists(spark, out_path):
         return raw, None
     snapshot = None
     published = committed_keys(spark, out_path, raw.schema["doc_id"])
@@ -329,8 +330,6 @@ def _todo(spark, raw: DataFrame, out_path: str, resume: bool, resume_strategy: s
         committed_prev = read_table(spark, out_path)
     else:
         committed_prev, snapshot = published
-    if resume_strategy == "bloom":
-        return bloom_prune_anti_join(raw, committed_prev, key="doc_id"), snapshot
     return anti_join_committed(raw, committed_prev), snapshot
 
 
@@ -341,9 +340,6 @@ def run_extraction(
     lineage_path: str,
     run_id: str | None = None,
     partitions: int | None = None,
-    resume: bool = True,
-    spread: str = "auto",
-    resume_strategy: str = "anti",
 ) -> str:
     """Execute (or resume) one extraction run. Returns the run_id.
 
@@ -359,16 +355,10 @@ def run_extraction(
     GC landed in between), the run snapshots again and retries, up to
     _STALE_SNAPSHOT_RETRIES times; any other error is raised as is.
 
-    The spread decision reads `raw`'s scan layout, not the anti-join's:
-    an anti-join only removes rows, and probing the join would execute
-    its shuffle stages once just to count partitions.
-
-    resume_strategy: "anti" (default) is the plain left-anti join;
-    "bloom" routes through operators.bloom.bloom_prune_anti_join — a
-    Bloom pre-filter that lets definitely-new docs bypass the resume
-    shuffle entirely (bit-exact equal result; the right choice when the
-    raw batch dwarfs the committed table, i.e. the mostly-new 100 TB
-    backfill).
+    The input is spread as spread_by_size spreads it, but the decision
+    reads `raw`'s scan layout, once per call, not the anti-join's: an
+    anti-join only removes rows, and probing the join would execute its
+    shuffle stages once just to count partitions.
 
     ONE materialization of the extracted output (the staged commit
     inside merge_append_table). The jobs a run leaves are: the staged
@@ -393,16 +383,16 @@ def run_extraction(
     actually COMMITTED (a raced writer's dropped duplicates are not
     double-counted), which a counter on the staged write cannot know."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    mode = _spread_mode(raw, partitions, spread)  # raw's layout, not the anti-join's
+    spread = _needs_spread(raw, partitions)  # raw's layout, not the anti-join's
     for attempt in range(_STALE_SNAPSHOT_RETRIES + 1):
-        todo, snapshot = _todo(spark, raw, out_path, resume, resume_strategy)
-        extracted = extract_auto(spread_by_size(todo, partitions, mode=mode))
+        todo, snapshot = _todo(spark, raw, out_path)
+        extracted = extract_auto(_spread(todo, partitions, spread))
         with_meta = with_partition_metrics(extracted, run_id)
         # MERGE-grade commit: _todo's anti-join closes the common resume
         # case, but two runs overlapping in time both snapshot the table
         # before either commits — merge_append_table drops the loser's
-        # duplicates at commit time (Iceberg MERGE INTO in production). Both
-        # resume strategies leave exactly the keys outside `snapshot`, so the
+        # duplicates at commit time (Iceberg MERGE INTO in production). The
+        # anti-join leaves exactly the keys outside `snapshot`, so the
         # commit counts the overlap only if a key file was published since.
         try:
             commit = merge_append_table(

@@ -210,8 +210,7 @@ CHUNK_BPE_BUDGET = 10  # BPE tokens per chunk (~1.2x whitespace tokens on
 def q_chunks(spark, sf_dir):
     # the fused extraction kernel feeds the chunking kernel directly:
     # extract -> chunk is one narrow stage (test_plans asserts it).
-    # route='auto' and 'hof' run the same kernel.
-    return chunk_spans(extract_all(spark, sf_dir), budget=CHUNK_BUDGET, route="hof")
+    return chunk_spans(extract_all(spark, sf_dir), budget=CHUNK_BUDGET)
 
 
 def q_chunks_bpe(spark, sf_dir):
@@ -221,7 +220,7 @@ def q_chunks_bpe(spark, sf_dir):
     chunk_text re-serializes the sliced token array (as HybridChunker
     re-serializes through its tokenizer)."""
     return chunk_spans(
-        extract_all(spark, sf_dir), budget=CHUNK_BPE_BUDGET, tokenizer="bpe", route="hof"
+        extract_all(spark, sf_dir), budget=CHUNK_BPE_BUDGET, tokenizer="bpe"
     )
 
 
@@ -486,7 +485,7 @@ def q_pipeline_e2e(spark, sf_dir):
     # survivors (dropped rows must come back empty, proving the keep-set
     # actually gates the downstream stages)
     chunks = (
-        chunk_spans(extracted, budget=CHUNK_BUDGET, route="hof")
+        chunk_spans(extracted, budget=CHUNK_BUDGET)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_chunks"))
     )

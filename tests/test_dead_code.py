@@ -68,7 +68,6 @@ def test_no_unreferenced_library_definitions():
 # (differentials compare an engine route with the DuckDB oracle or with
 # the engine's other route).
 TEST_ONLY_PUBLIC_API = {
-    "bloom_route_counts",
     "bucketed_join",
     "dedup_survivors",
     "expire_snapshots",
@@ -85,6 +84,7 @@ TEST_ONLY_PUBLIC_API = {
     "rollback_table",
     "run_dedup",
     "salted_join",
+    "spread_by_size",
     "stateful_sessionize",
     "stream_extract",
     "streaming_dedup_exact",

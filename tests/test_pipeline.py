@@ -56,6 +56,54 @@ def test_run_resume_idempotent(spark, sf_dir, workdir):
     )
 
 
+
+def _nodes(node, ancestors=()):
+    """(node, its ancestors) for every node of a physical plan."""
+    yield node, ancestors
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i), ancestors + (node,))
+
+
+def _files(node) -> list:
+    """The files a file-scan node reads; [] for any other node."""
+    if node.getClass().getSimpleName() != "FileSourceScanExec":
+        return []
+    return [str(f) for f in node.relation().location().inputFiles()]
+
+
+def test_resume_broadcasts_the_committed_keys(spark, sf_dir, workdir):
+    """The resume's input is raw left-anti joined against the manifest key
+    set: a BroadcastHashJoin LeftAnti whose build side scans only the
+    _commits/keys files, and no Exchange between the raw scan and the
+    plan's root, so skipping the committed documents shuffles no payload."""
+    from docling_fast_server_spark.plans.pipeline import _todo
+
+    raw_path = os.path.join(workdir, "raw")
+    docs_raw(spark, sf_dir, which="all").repartition(8).write.parquet(raw_path)
+    raw = spark.read.parquet(raw_path)
+    out, lin = os.path.join(workdir, "out"), os.path.join(workdir, "lineage")
+    run_extraction(spark, raw.filter(F.col("doc_id") < "doc-000250"), out, lin, run_id="c")
+
+    todo, snapshot = _todo(spark, raw, out)
+    assert snapshot is not None
+    plan = todo._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    nodes = list(_nodes(plan))
+    anti = [
+        n for n, _ in nodes
+        if n.nodeName() == "BroadcastHashJoin" and n.joinType().toString() == "LeftAnti"
+    ]
+    assert len(anti) == 1, plan.toString()
+    build = anti[0].right() if anti[0].buildSide().toString() == "BuildRight" else anti[0].left()
+    keys = [f for n, _ in _nodes(build) for f in _files(n)]
+    assert keys and all("/_commits/keys/" in f for f in keys), keys
+    raw_scans = [up for n, up in nodes if any(raw_path in f for f in _files(n))]
+    assert len(raw_scans) == 1, plan.toString()
+    assert not [a.nodeName() for a in raw_scans[0] if "Exchange" in a.nodeName()], plan.toString()
+    assert todo.count() == raw.count() - 250
+
 def test_spread_by_size_distributes(spark, sf_dir):
     from docling_fast_server_spark.plans.pipeline import spread_by_size
 
@@ -102,7 +150,7 @@ def test_spread_auto_skips_repartition_on_pre_spread_input(spark, sf_dir):
     pre = base.repartition(16)  # the ingest-layout analog: already spread
     n_ex_pre = pre._jdf.queryExecution().executedPlan().toString().count("Exchange")
 
-    auto = spread_by_size(pre, partitions=8, mode="auto")
+    auto = spread_by_size(pre, partitions=8)
     plan_auto = auto._jdf.queryExecution().executedPlan().toString()
     # no NEW exchange beyond the input's own: the payload is not re-shipped
     assert plan_auto.count("Exchange") == n_ex_pre, plan_auto
@@ -111,7 +159,7 @@ def test_spread_auto_skips_repartition_on_pre_spread_input(spark, sf_dir):
 
     few = base.coalesce(1)  # under-split input: the spread must fire
     plan_few = (
-        spread_by_size(few, partitions=8, mode="auto")
+        spread_by_size(few, partitions=8)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
