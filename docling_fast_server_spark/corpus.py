@@ -51,7 +51,9 @@ from .model import (
     K_TABLE,
     K_TEXT,
     doc_id_str,
+    numeric_array,
     spans_array,
+    string_array,
 )
 
 PARA_WORDS = 10
@@ -343,8 +345,8 @@ def _gen_batches_arrow(skew: bool):
                 out_ids.append(doc_id_str(doc_id))
                 out_nchars.append(len(text))
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=pa.string()), spans_array(k_l, t_l, r_l, o_l, cum),
-                 pa.array(out_nchars, type=pa.int32())],
+                [string_array(out_ids), spans_array(k_l, t_l, r_l, o_l, cum),
+                 numeric_array(out_nchars, pa.int32())],
                 names=["doc_id", "spans", "n_chars"],
             )
 

@@ -37,13 +37,14 @@ from __future__ import annotations
 
 import re
 from collections.abc import Iterator
+from itertools import chain
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import types as T
 
-from ..model import K_SECTION_HEADER
+from ..model import K_SECTION_HEADER, list_array, np_values, numeric_array, string_array
 from .textstats import BPE_RE
 
 DEFAULT_BUDGET = 40  # tokens per chunk
@@ -61,9 +62,14 @@ def _tokenizer(tokenizer: str):
         return lambda texts: pc.split_pattern(texts, " ")
     if tokenizer == "bpe":
         findall = re.compile(BPE_RE).findall
-        return lambda texts: pa.array(
-            [None if t is None else findall(t) for t in texts.to_pylist()], pa.list_(pa.string())
-        )
+
+        def bpe(texts):
+            toks = [() if t is None else findall(t) for t in texts.to_pylist()]
+            ends = np.cumsum(np.fromiter(map(len, toks), np.int64, len(toks)))
+            words = string_array(list(chain.from_iterable(toks)))
+            return list_array(np.append(0, ends), words, np_values(texts.is_valid()))
+
+        return bpe
     raise ValueError(f"unknown tokenizer {tokenizer!r}")
 
 
@@ -91,25 +97,26 @@ def _chunk_arrow(budget: int, tokenizer: str):
     tokens = _tokenizer(tokenizer)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        header, blank1 = string_array([K_SECTION_HEADER, ""])  # scalars for pc calls
         for b in batches:
             spans = b.column(1)
-            n_span = pc.fill_null(spans.value_lengths(), 0).to_numpy()
+            n_span = np_values(spans.value_lengths(), fill=0)
             names = (f.name for f in spans.type.value_type)
             fields = dict(zip(names, spans.flatten().flatten()))
             text, kind = fields["text"], fields["kind"]
-            off = fields["offset"].to_numpy(zero_copy_only=False)
+            off = np_values(fields["offset"])
             doc = np.repeat(np.arange(len(b)), n_span)
             if np.any((np.diff(off) < 0) & (doc[1:] == doc[:-1])):
                 order = np.lexsort((off, doc))
-                text, kind, off = text.take(order), kind.take(order), off[order]
+                taken = numeric_array(order, pa.int64())
+                text, kind, off = text.take(taken), kind.take(taken), off[order]
             toks = tokens(text)
-            n = pc.fill_null(toks.value_lengths(), 0).to_numpy().astype(np.int64)
+            n = np_values(toks.value_lengths(), fill=0).astype(np.int64)
             first = np.cumsum(n_span) - n_span  # each document's first span
             tstart = np.cumsum(n) - n  # each span's first token in the batch
             cum_before = tstart - np.append(tstart, 0)[first][doc]
             # heading: the last section_header with text at or before the span
-            is_head = pc.and_(pc.equal(kind, K_SECTION_HEADER), text.is_valid())
-            is_head = pc.fill_null(is_head, False).to_numpy(zero_copy_only=False)
+            is_head = np_values(pc.equal(kind, header), fill=False) & np_values(text.is_valid())
             head = np.maximum.accumulate(np.where(is_head, np.arange(len(n)), -1))
             head = np.where(head >= first[doc], head, -1)
             # pieces, in (offset, piece) order
@@ -127,20 +134,21 @@ def _chunk_arrow(budget: int, tokenizer: str):
             flat = toks.flatten()
             bounds = np.append(tstart[span[firsts]] + p[firsts] * B, len(flat))
             hidx = head[span[firsts]]
-            heading = pc.fill_null(text.take(pa.array(hidx, mask=hidx < 0)), "")
-            words, ends = flat.to_numpy(zero_copy_only=False).tolist(), bounds.tolist()
-            chunk_text = pa.array([" ".join(words[a:z]) for a, z in zip(ends, ends[1:])], pa.string())
+            heading = text.take(numeric_array(np.maximum(hidx, 0), pa.int64(), valid=hidx >= 0))
+            heading = pc.fill_null(heading, blank1)
+            words, ends = flat.to_pylist(), bounds.tolist()
+            chunk_text = string_array([" ".join(words[a:z]) for a, z in zip(ends, ends[1:])])
             empty = np.flatnonzero(n_span == 0)  # documents that get the fallback row
             zeros = np.zeros(len(empty), np.int64)
-            blank = pa.array([""] * len(empty), pa.string())
+            blank = string_array([""] * len(empty))
             yield pa.RecordBatch.from_arrays(
                 [
-                    b.column(0).take(np.concatenate([pdoc[firsts], empty])),
-                    pa.array(np.concatenate([cidx[firsts], zeros]), pa.int32()),
+                    b.column(0).take(numeric_array(np.concatenate([pdoc[firsts], empty]), pa.int64())),
+                    numeric_array(np.concatenate([cidx[firsts], zeros]), pa.int32()),
                     pa.concat_arrays([heading, blank]),
                     pa.concat_arrays([chunk_text, blank]),
-                    pa.array(np.concatenate([_sums(ptok, firsts), zeros])),
-                    pa.array(np.concatenate([_sums(new_off, firsts), zeros])),
+                    numeric_array(np.concatenate([_sums(ptok, firsts), zeros]), pa.int64()),
+                    numeric_array(np.concatenate([_sums(new_off, firsts), zeros]), pa.int64()),
                 ],
                 names=["doc_id", "chunk_idx", "heading", "chunk_text", "n_tokens", "n_spans"],
             )

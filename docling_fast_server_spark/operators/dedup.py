@@ -473,6 +473,28 @@ def _hashset_one(text: str):
     return h[np.sort(first)]
 
 
+def _hashsets_arrow(batches):
+    """The _doc_hashsets kernel: (doc_id, text) -> (doc_id, hs) batches,
+    hs one list<int64> column over the concatenated hash sets."""
+    import numpy as np
+    import pyarrow as pa
+
+    from ..model import list_array, numeric_array
+
+    for batch in batches:
+        ids = batch.column(0)
+        sets = [_hashset_one(t) for t in batch.column(1).to_pylist()]
+        keep = [i for i, s in enumerate(sets) if s is not None]
+        if len(keep) != len(sets):  # filter() upstream makes this rare
+            ids = ids.take(numeric_array(keep, pa.int32()))
+            sets = [sets[i] for i in keep]
+        ends = np.cumsum(np.fromiter(map(len, sets), np.int64, len(sets)))
+        hashes = numeric_array(np.concatenate([np.zeros(0, np.int64), *sets]), pa.int64())
+        yield pa.RecordBatch.from_arrays(
+            [ids, list_array(np.append(0, ends), hashes)], names=["doc_id", "hs"]
+        )
+
+
 def _doc_hashsets(corpus: DataFrame) -> DataFrame:
     """(doc_id, hs): the distinct word-SHINGLE-gram hash set per document
     — the single hottest projection in the dedup family, shared by
@@ -490,7 +512,6 @@ def _doc_hashsets(corpus: DataFrame) -> DataFrame:
     in a few numpy passes per document). Still a NARROW map: no
     repartition, full text never rides any exchange (plan-asserted in
     test_plans), downstream wide ops shuffle only int64 hashes and ids."""
-    import pyarrow as pa
     from pyspark.sql import types as T
 
     filtered = corpus.filter(f"size(split(text, ' ')) >= {SHINGLE}").select(
@@ -502,22 +523,7 @@ def _doc_hashsets(corpus: DataFrame) -> DataFrame:
             T.StructField("hs", T.ArrayType(T.LongType(), False), False),
         ]
     )
-
-    def kernel(batches):
-        for batch in batches:
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            sets = [_hashset_one(t) for t in texts]
-            keep = [i for i, s in enumerate(sets) if s is not None]
-            if len(keep) != len(sets):  # filter() upstream makes this rare
-                ids = ids.take(pa.array(keep, type=pa.int32()))
-                sets = [sets[i] for i in keep]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array([s.tolist() for s in sets], type=pa.list_(pa.int64()))],
-                names=["doc_id", "hs"],
-            )
-
-    return filtered.mapInArrow(kernel, schema=out_schema)
+    return filtered.mapInArrow(_hashsets_arrow, schema=out_schema)
 
 
 _SHINGLE_EXPR_SQL = (

@@ -37,6 +37,7 @@ from ..model import (
     RAW_MARKDOWN,
     doc_id_str,
     spans_array,
+    string_array,
 )
 from .html_extract import extract_html_document
 from .md_ingest import (
@@ -122,10 +123,10 @@ def extracted_batch(ids, k, t, r, o, cum, methods, errors) -> pa.RecordBatch:
     per-document columns; `ids` is a list or an Arrow string array."""
     return pa.RecordBatch.from_arrays(
         [
-            pa.array(ids, type=pa.string()),
+            string_array(ids),
             spans_array(k, t, r, o, cum),
-            pa.array(methods, type=pa.string()),
-            pa.array(errors, type=pa.string()),
+            string_array(methods),
+            string_array(errors),
         ],
         names=["doc_id", "spans", "conversion_method", "error"],
     )
@@ -246,8 +247,7 @@ def _gen_extract_render_arrow(formats: tuple, skew: bool):
                 for fmt in formats
             ]
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.string())]
-                + [pa.array(col, type=pa.string()) for col in rendered],
+                [string_array(ids)] + [string_array(col) for col in rendered],
                 names=["doc_id", *formats],
             )
 

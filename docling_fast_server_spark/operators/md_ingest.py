@@ -191,7 +191,8 @@ def extract_json_document(doc_json: str) -> list[dict]:
     Field TYPES are validated here, inside the per-document boundary: a
     span with e.g. "text": 123 or an offset past int32 would otherwise
     parse fine and then blow up the BATCH-level Arrow conversion
-    (pa.array(..., string/int32) raises outside every per-doc try) —
+    (model.spans_array's string_array/numeric_array raise outside every
+    per-doc try, as pa.array does) —
     one malformed upload must degrade one document, never kill the
     task (ArrowTypeError reproduced in review)."""
     spans = _json.loads(doc_json)

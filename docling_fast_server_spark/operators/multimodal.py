@@ -30,6 +30,8 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..model import numeric_array, string_array
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),
@@ -898,11 +900,11 @@ _IMAGE_DECODERS = (  # magic bytes -> decoder; the prefixes are disjoint
     (b"\xff\xd8", _decode_jpeg_pixels),
 )
 
-_ARROW_TYPES = {
-    "string": pa.string(),
-    "binary": pa.binary(),
-    "integer": pa.int32(),
-    "long": pa.int64(),
+_COLUMN_BUILDERS = {
+    "string": string_array,
+    "binary": lambda c: string_array(c, binary=True),
+    "integer": lambda c: numeric_array(c, pa.int32()),
+    "long": lambda c: numeric_array(c, pa.int64()),
 }
 
 
@@ -910,10 +912,7 @@ def _rows_batch(rows: list, schema: T.StructType) -> pa.RecordBatch:
     """One `schema` Arrow batch from per-row tuples in field order."""
     cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
     return pa.RecordBatch.from_arrays(
-        [
-            pa.array(c, type=_ARROW_TYPES[f.dataType.typeName()])
-            for c, f in zip(cols, schema.fields)
-        ],
+        [_COLUMN_BUILDERS[f.dataType.typeName()](c) for c, f in zip(cols, schema.fields)],
         names=schema.fieldNames(),
     )
 

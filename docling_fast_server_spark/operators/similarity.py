@@ -210,23 +210,24 @@ def _vec_matrix(ids, varr):
     import numpy as np
     import pyarrow.compute as pc
 
+    from ..model import np_values
+
     if ids.null_count:
         raise ValueError("brute_topk: a vec_id is NULL")
-    ids_np = ids.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    lens = pc.list_value_length(varr)
-    bad = pc.fill_null(pc.not_equal(lens, DIM), True)
-    if pc.any(bad).as_py():
-        i = pc.index(bad, True).as_py()
-        n = lens[i].as_py()
+    ids_np = np_values(ids).astype(np.int64, copy=False)
+    lens = np_values(pc.list_value_length(varr), fill=-1)
+    bad = np.flatnonzero(lens != DIM)
+    if len(bad):
+        i, n = bad[0], lens[bad[0]]
         raise ValueError(
             f"brute_topk: vector of vec_id {ids_np[i]} is "
-            f"{'NULL' if n is None else f'{n} long'}, not {DIM} long"
+            f"{'NULL' if n < 0 else f'{n} long'}, not {DIM} long"
         )
     flat = varr.flatten()
     if flat.null_count:
-        i = pc.list_parent_indices(varr)[pc.index(pc.is_null(flat), True).as_py()]
-        raise ValueError(f"brute_topk: vector of vec_id {ids_np[i.as_py()]} holds a NULL")
-    V = flat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+        i = np_values(pc.list_parent_indices(varr))[np.argmin(np_values(flat.is_valid()))]
+        raise ValueError(f"brute_topk: vector of vec_id {ids_np[i]} holds a NULL")
+    V = np_values(flat).astype(np.float64, copy=False)
     return ids_np, V.reshape(len(ids_np), DIM)
 
 
@@ -245,39 +246,13 @@ def _fold_norms(ids, V):
     return nrm
 
 
-def brute_topk(vecs: DataFrame, query_filter, k: int = TOPK) -> DataFrame:
-    """Exact cosine top-k of every query_filter row against the full
-    table. The query rows are collected to the driver once (one job,
-    with toArrow) and ride the kernel's closure; the scan side stays
-    partition-parallel via the input layout (no repartition — a
-    production table is thousands of splits; the bench materializes the
-    same layout).
-
-    One mapInArrow kernel scores each Arrow batch against every query,
-    in query blocks with in-place numpy ops: dot and norms are folded
-    left to right from 0.0 over DIM (never BLAS or np.dot, which
-    reassociate the sum), cos = dot / (qn * nrm), and self pairs are
-    dropped. Per query it emits only the rows within _TOPK_MARGIN of the
-    batch's k-th best, so Spark's round(cos, 3) and the _rank_topk window
-    see a few rows per query and batch instead of every pair. Output
-    (q_id, neighbor_id, rank, cos_sim)."""
+def _topk_kernel(qids, Q, qn, k: int, arrow_id):
+    """The brute_topk scoring kernel against the query rows: ids `qids`,
+    matrix `Q`, norms `qn`; output ids are `arrow_id` (int32|int64)."""
     import numpy as np
     import pyarrow as pa
-    from pyspark.sql import types as T
 
-    sel = vecs.select("vec_id", "v")
-    qt = sel.filter(query_filter).toArrow().combine_chunks()
-    qids, Q = _vec_matrix(qt.column(0).combine_chunks(), qt.column(1).combine_chunks())
-    qn = _fold_norms(qids, Q)
-    id_t = sel.schema["vec_id"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", id_t),
-            T.StructField("neighbor_id", id_t),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-    arrow_id = pa.int32() if isinstance(id_t, T.IntegerType) else pa.int64()
+    from ..model import numeric_array
 
     def _score_topk(batches):
         for batch in batches:
@@ -310,14 +285,51 @@ def brute_topk(vecs: DataFrame, query_filter, k: int = TOPK) -> DataFrame:
                 out_c.append(C[qi, vi])
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.concatenate(out_q), type=arrow_id),
-                    pa.array(np.concatenate(out_v), type=arrow_id),
-                    pa.array(np.concatenate(out_c), type=pa.float64()),
+                    numeric_array(np.concatenate(out_q), arrow_id),
+                    numeric_array(np.concatenate(out_v), arrow_id),
+                    numeric_array(np.concatenate(out_c), pa.float64()),
                 ],
                 names=["q_id", "neighbor_id", "cos"],
             )
 
-    scored = sel.mapInArrow(_score_topk, schema=out_schema).selectExpr(
+    return _score_topk
+
+
+def brute_topk(vecs: DataFrame, query_filter, k: int = TOPK) -> DataFrame:
+    """Exact cosine top-k of every query_filter row against the full
+    table. The query rows are collected to the driver once (one job,
+    with toArrow) and ride the kernel's closure; the scan side stays
+    partition-parallel via the input layout (no repartition — a
+    production table is thousands of splits; the bench materializes the
+    same layout).
+
+    One mapInArrow kernel scores each Arrow batch against every query,
+    in query blocks with in-place numpy ops: dot and norms are folded
+    left to right from 0.0 over DIM (never BLAS or np.dot, which
+    reassociate the sum), cos = dot / (qn * nrm), and self pairs are
+    dropped. Per query it emits only the rows within _TOPK_MARGIN of the
+    batch's k-th best, so Spark's round(cos, 3) and the _rank_topk window
+    see a few rows per query and batch instead of every pair. Output
+    (q_id, neighbor_id, rank, cos_sim)."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    sel = vecs.select("vec_id", "v")
+    qt = sel.filter(query_filter).toArrow().combine_chunks()
+    qids, Q = _vec_matrix(qt.column(0).combine_chunks(), qt.column(1).combine_chunks())
+    qn = _fold_norms(qids, Q)
+    id_t = sel.schema["vec_id"].dataType
+    out_schema = T.StructType(
+        [
+            T.StructField("q_id", id_t),
+            T.StructField("neighbor_id", id_t),
+            T.StructField("cos", T.DoubleType()),
+        ]
+    )
+    arrow_id = pa.int32() if isinstance(id_t, T.IntegerType) else pa.int64()
+
+    kernel = _topk_kernel(qids, Q, qn, k, arrow_id)
+    scored = sel.mapInArrow(kernel, schema=out_schema).selectExpr(
         "q_id", "neighbor_id", "round(cos, 3) AS cos3"
     )
     return _rank_topk(scored, k)
@@ -371,6 +383,43 @@ def planes_sql(n_planes: int) -> str:
     """
 
 
+def _band_keys(planes, bands: int, ppb: int):
+    """The banded_buckets kernel over `planes` (bands*ppb, DIM)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from ..model import list_array, np_values, numeric_array
+
+    def kernel(batches):
+        for batch in batches:
+            ids, varr = batch.column(0), batch.column(1)
+            n = len(ids)
+            if n == 0:
+                continue
+            V = np_values(varr.flatten(), fill=np.nan).reshape(n, DIM)
+            keys = np.zeros((n, bands), dtype=np.int32)
+            for p in range(bands * ppb):
+                acc = V[:, 0] * planes[p, 0]
+                for i in range(1, DIM):
+                    acc = acc + V[:, i] * planes[p, i]
+                keys[:, p // ppb] |= (acc > 0).astype(np.int32) << (p % ppb)
+            idx = numeric_array(np.repeat(np.arange(n, dtype=np.int64), bands), pa.int64())
+            flat_keys = numeric_array(keys.reshape(-1), pa.int32())
+            keys_arr = list_array(np.arange(0, n * bands + 1, bands), flat_keys)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    ids.take(idx),
+                    varr.take(idx),
+                    numeric_array(np.tile(np.arange(bands, dtype=np.int32), n), pa.int32()),
+                    flat_keys,
+                    keys_arr.take(idx),
+                ],
+                names=["vec_id", "v", "band", "key", "keys"],
+            )
+
+    return kernel
+
+
 def banded_buckets(spark, vecs: DataFrame, bands: int, ppb: int) -> DataFrame:
     """(vec_id, v, band, key): per-band sign-bit LSH key over bands*ppb
     deterministic hyperplanes (plane_values: pure literals, no plane
@@ -390,7 +439,6 @@ def banded_buckets(spark, vecs: DataFrame, bands: int, ppb: int) -> DataFrame:
     the mapInArrow boundary also materializes derived vector expressions
     (e.g. the mutated corpus's v*1.01) exactly once."""
     import numpy as np
-    import pyarrow as pa
     from pyspark.sql import types as T
 
     planes = np.array(plane_values(bands * ppb), dtype=np.float64)
@@ -407,35 +455,7 @@ def banded_buckets(spark, vecs: DataFrame, bands: int, ppb: int) -> DataFrame:
             T.StructField("keys", T.ArrayType(T.IntegerType(), False), False),
         ]
     )
-
-    def kernel(batches):
-        for batch in batches:
-            ids, varr = batch.column(0), batch.column(1)
-            n = len(ids)
-            if n == 0:
-                continue
-            flat = varr.flatten().to_numpy(zero_copy_only=False)
-            V = flat.reshape(n, DIM)
-            keys = np.zeros((n, bands), dtype=np.int32)
-            for p in range(bands * ppb):
-                acc = V[:, 0] * planes[p, 0]
-                for i in range(1, DIM):
-                    acc = acc + V[:, i] * planes[p, i]
-                keys[:, p // ppb] |= (acc > 0).astype(np.int32) << (p % ppb)
-            idx = pa.array(np.repeat(np.arange(n, dtype=np.int64), bands))
-            keys_arr = pa.array(keys.tolist(), type=pa.list_(pa.int32()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(idx),
-                    varr.take(idx),
-                    pa.array(np.tile(np.arange(bands, dtype=np.int32), n)),
-                    pa.array(keys.reshape(-1)),
-                    keys_arr.take(idx),
-                ],
-                names=["vec_id", "v", "band", "key", "keys"],
-            )
-
-    return sel.mapInArrow(kernel, schema=out_schema)
+    return sel.mapInArrow(_band_keys(planes, bands, ppb), schema=out_schema)
 
 
 def banded_buckets_sql(bands: int, ppb: int) -> str:

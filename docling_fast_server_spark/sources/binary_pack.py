@@ -34,8 +34,8 @@ from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -52,6 +52,9 @@ from ..model import (
     RAW_PDF_TABLE,
 )
 from ..operators.dispatch import _extract_docs, extracted_batch
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 MAGIC = b"DFSB"
 VERSION = 1
@@ -141,6 +144,8 @@ def unpack_cells(buf: bytes) -> list[dict]:
 
 
 def _pack_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    import pandas as pd  # only the fixture writer: the parse kernel loads no pandas
+
     for pdf in batches:
         ids, payloads, sizes = [], [], []
         for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):

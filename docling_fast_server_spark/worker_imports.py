@@ -20,7 +20,8 @@ when it unpickles a library kernel, so it covers every kernel.
 ``install()`` also hooks the worker's garbage collector. After every task
 of a reused worker pyspark's daemon runs ``gc.collect()``, and a full
 collection walks every object the worker's imports made (pyspark,
-pyarrow, numpy, pandas): ~20 ms of CPU per task, more than a small
+pyarrow, numpy; the library kernels load no pandas, see
+model.string_array): ~20 ms of CPU per task, more than a small
 kernel's own work. ``freeze_between_tasks`` moves what survives that
 between-task collection to the permanent generation, so the next one
 walks only what was allocated since. Collections during a task freeze

@@ -5,6 +5,7 @@ after a full collection between tasks, and only workers get it."""
 
 import gc
 import importlib
+import json
 import subprocess
 import sys
 import zipfile
@@ -71,6 +72,121 @@ def test_extraction_kernel_imports_no_pandas():
         [sys.executable, "-c", probe], cwd=ROOT, capture_output=True, text=True, check=True
     ).stdout
     assert out.strip() == "False"
+
+
+# Runs in a fresh interpreter the way a Spark Python worker runs a task:
+# pyspark.worker imported first, then per kernel family the pickled kernel
+# is loaded (importing its modules), run over Arrow IPC input and its
+# output written back as IPC. Prints, per family, the output row count and
+# whether pandas is loaded by then.
+_WORKER_PROBE = """
+import json, pickle, sys
+import pyspark.worker
+import pyarrow as pa
+
+seen = {}
+for name, blob, data in pickle.loads(sys.stdin.buffer.read()):
+    kernel = pickle.loads(blob)
+    sink, rows = pa.BufferOutputStream(), 0
+    for out in kernel(iter(pa.ipc.open_stream(data))):
+        with pa.ipc.new_stream(sink, out.schema) as w:
+            w.write_batch(out)
+        rows += out.num_rows
+    seen[name] = [rows, "pandas" in sys.modules]
+print(json.dumps(seen))
+"""
+
+
+def _ipc(batch):
+    import pyarrow as pa
+
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, batch.schema) as w:
+        w.write_batch(batch)
+    return sink.getvalue().to_pybytes()
+
+
+def _kernel_families(documents):
+    """(family, kernel, input batch) for every library mapInArrow kernel,
+    each on a few rows."""
+    import numpy as np
+    import pyarrow as pa
+
+    from docling_fast_server_spark.corpus import _gen_batches_arrow
+    from docling_fast_server_spark.model import RAW_MARKDOWN, spans_array, string_array
+    from docling_fast_server_spark.operators import dedup, dispatch, multimodal, similarity
+    from docling_fast_server_spark.operators.chunking import _chunk_arrow
+    from docling_fast_server_spark.sources.binary_pack import _extract_binary_arrow, pack_cells
+
+    docs = pa.RecordBatch.from_pydict(
+        {"doc_id": [d for d, _ in documents], "text": [t for _, t in documents]}
+    )
+    raw = next(_gen_batches_arrow(False)(iter([docs])))
+    md = spans_array([RAW_MARKDOWN], ["# Title\n\nbody text"], [None], [0], [0, 1])
+    raw = pa.RecordBatch.from_arrays(
+        [pa.concat_arrays([raw.column(0), string_array(["doc-md"])]),
+         pa.concat_arrays([raw.column(1), md])],
+        names=["doc_id", "spans"],
+    )
+    extracted = next(dispatch._extract_auto_arrow(iter([raw])))
+    spans = raw.column(1).to_pylist()
+    packed = pa.RecordBatch.from_pydict(
+        {"doc_id": raw.column(0).to_pylist(),
+         "payload": [pack_cells(s) for s in spans[:-1]] + [b"not a container"]}
+    )
+    rng = np.random.default_rng(7)
+    n = 12
+    vecs = pa.RecordBatch.from_pydict(
+        {"vec_id": np.arange(n, dtype=np.int64),
+         "v": list(rng.normal(size=(n, similarity.DIM)))},
+        schema=pa.schema([("vec_id", pa.int64()), ("v", pa.list_(pa.float64()))]),
+    )
+    qids = np.arange(0, n, 5, dtype=np.int64)
+    Q = rng.normal(size=(len(qids), similarity.DIM))
+    planes = np.array(similarity.plane_values(8), dtype=np.float64)
+    refs = pa.RecordBatch.from_pydict(
+        {"media_ref": ["#/pictures/0", "#/pictures/1", "#/pictures/2", "#/pictures/3",
+                       "#/tables/0"],
+         "kind": ["picture"] * 4 + ["table"]}
+    )
+    media = next(multimodal._media_arrow(iter([refs])))
+    return [
+        ("extract_auto", dispatch._extract_auto_arrow, raw),
+        ("extract_binary", _extract_binary_arrow, packed),
+        ("gen_extract", dispatch._gen_extract_arrow(True), docs),
+        ("gen_extract_render", dispatch._gen_extract_render_arrow(("markdown", "html"), False),
+         docs),
+        ("corpus_gen", _gen_batches_arrow(True), docs),
+        ("chunk_ws", _chunk_arrow(8, "ws"), extracted.select(["doc_id", "spans"])),
+        ("chunk_bpe", _chunk_arrow(8, "bpe"), extracted.select(["doc_id", "spans"])),
+        ("brute_topk", similarity._topk_kernel(qids, Q, np.ones(len(qids)), 3, pa.int64()), vecs),
+        ("lsh_bands", similarity._band_keys(planes, 4, 2), vecs),
+        ("hashsets", dedup._hashsets_arrow, docs.select(["doc_id", "text"])),
+        ("media", multimodal._media_arrow, refs),
+        ("media_features", multimodal._features_arrow(multimodal._decode_one), media),
+        ("media_transforms", multimodal._transforms_arrow(multimodal._decode_one), media),
+    ]
+
+
+def test_kernels_load_no_pandas_in_a_fresh_worker(documents_pdf):
+    """Every library mapInArrow kernel runs in a fresh interpreter set up
+    like a Spark Python worker without loading pandas: pyarrow's pa.array,
+    to_numpy and numpy-indexed take would load it on their first call."""
+    from pyspark import cloudpickle
+
+    families = _kernel_families(documents_pdf[:12])
+    payload = cloudpickle.dumps(
+        [(name, cloudpickle.dumps(kernel), _ipc(batch)) for name, kernel, batch in families]
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _WORKER_PROBE],
+        cwd=ROOT, input=payload, capture_output=True, check=True,
+    ).stdout
+    seen = json.loads(out)
+    assert list(seen) == [name for name, _, _ in families]
+    assert all(rows > 0 for rows, _ in seen.values()), seen
+    loaded = [name for name, (_, pandas) in seen.items() if pandas]
+    assert not loaded, f"pandas loaded by the first of: {loaded}"
 
 
 def test_driver_import_system_untouched():
